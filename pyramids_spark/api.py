@@ -856,6 +856,12 @@ class SparkFeatureCollection:
         )
 
     def sjoin(self, zones: list[dict], zoom: int = 8, **kw) -> DataFrame:
+        """Point-in-polygon join of this collection's points (``x``/``y``
+        columns; pass ``x=``/``y=`` to rename) with a zone list →
+        :func:`operators.pip.pip_join`: one cell-pruned cover, broadcast
+        join and refine — a codegen half-plane test for convex parts, a
+        numpy ray-cast for the rest. One row per containing part; parts of
+        a zone must be disjoint."""
         from .operators.pip import pip_join
 
         return pip_join(self.df, zones, zoom=zoom, **kw)

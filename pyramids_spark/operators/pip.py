@@ -1,22 +1,30 @@
 """Cell-pruned point-in-polygon join — the flagship spatial join.
 
 Reference semantics: ``MeshSpatialIndex.locate_faces`` — point × polygon with
-predicate ``within`` (``/root/reference/src/pyramids/netcdf/ugrid/
-spatial.py:195-224``: STRtree bulk query). Our distributed plan:
+predicate ``within`` (pyramids ``netcdf/ugrid/spatial.py:195-224``: STRtree
+bulk query). One pipeline serves both front ends — :func:`pip_join` (zone
+list, sides built on the driver and broadcast) and :func:`pip_join_df` (zone
+DataFrame, sides built distributed):
 
-1. **Cover** (driver/broadcast side): each polygon → covering cells at a
-   pruning zoom, split into *interior* cells (fully inside — candidate rows
-   need NO exact test) and *boundary* cells (need ray-cast refinement).
-   Polygon sets are small (zones/dims); the cover runs in numpy and ships as
-   a broadcast equi-join side. [At 10^12 docs the polygon side stays ≪ the
-   doc side, so broadcast-hash-join avoids shuffling the big table at all.]
-2. **Encode** (distributed, JVM-side): each point row gets ``cell_id`` via
-   pure column arithmetic — no UDF, stays in whole-stage codegen.
-3. **Join**: ``points ⋈ broadcast(zone_cells) ON cell_id`` — Catalyst emits a
-   BroadcastHashJoin; the 10^12-row side is never shuffled.
-4. **Refine**: boundary-cell candidates run a vectorized numpy ray-cast
-   (``cells.points_in_polygon``) inside an Arrow-batched pandas UDF, grouped
-   by zone inside each batch (no per-row Python).
+1. **Cover**: every polygon part → covering cells at a pruning zoom, rows
+   ``(zone_id, part_key, cell_id, boundary, convex)``. ``boundary=False``
+   cells lie fully inside the part (all 4 corners in, no edge crossing) →
+   their candidates need NO exact test. ``convex`` marks ccw-convex parts
+   with at most ``_MAX_EDGE_COLS`` real edges. One batched numpy kernel
+   (:func:`_cover_parts`) builds it, on the driver or inside ``mapInPandas``.
+2. **Encode** (JVM-side): each point row gets ``cell_id`` via pure column
+   arithmetic — no UDF, stays in whole-stage codegen.
+3. **Join**: ``points ⋈ cover ON cell_id``. A zone list's cover is a
+   broadcast side, so the 10^12-row side is never shuffled.
+4. **Refine**, one step in two forms. Interior rows and boundary rows of
+   convex parts join a per-part table of edge coefficients and keep
+   ``~boundary | halfplane`` — K fused multiply-compares in codegen, no
+   Python. Boundary rows of every other part join the ring table and run a
+   vectorized numpy ray-cast (``cells.points_in_polygon``) in an
+   Arrow-batched pandas UDF, grouped by part inside each batch.
+
+Output is the points' columns + ``zone_id``, one row per containing part;
+parts of one zone must be disjoint (the standard multi-polygon contract).
 
 Skew: hot cells (dense doc clusters) inflate single tasks. Because the join
 is broadcast there is no shuffle to skew; the refinement is per-batch
@@ -26,6 +34,9 @@ embarrassingly parallel. For the aggregate-after-join path use
 
 from __future__ import annotations
 
+import hashlib
+from collections import OrderedDict
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -34,64 +45,20 @@ from pyspark.sql import types as T
 
 from .. import cells
 
+# flat half-plane width: ccw-convex parts with more real edges ray-cast
+_MAX_EDGE_COLS = 16
 
-from collections import OrderedDict
+_COVER_SCHEMA = "zone_id long, part_key long, cell_id long, boundary boolean, convex boolean"
 
-_COVER_CACHE: OrderedDict = OrderedDict()
-_COVER_CACHE_MAX = 32  # LRU bound: long-lived sessions must not accumulate
-
-
-def _zones_key(zones: list[dict], zoom: int, mode: str) -> tuple:
-    import hashlib
-
-    h = hashlib.sha1()
-    for z in zones:
-        h.update(str(z["zone_id"]).encode())
-        for p in z["parts"]:
-            h.update(np.ascontiguousarray(p, dtype=np.float64).tobytes())
-    return (zoom, mode, h.hexdigest())
-
-
-def zone_cover_cached(zones: list[dict], zoom: int, mode: str = "center") -> pd.DataFrame:
-    """Plan-once/apply-many (reference ``Reprojector`` discipline,
-    ``reproject.py:35-213``): the driver-side cover of a zone set is pure —
-    cache it so repeated joins against the same zones skip the numpy pass."""
-    k = _zones_key(zones, zoom, mode)
-    if k in _COVER_CACHE:
-        _COVER_CACHE.move_to_end(k)
-    else:
-        _COVER_CACHE[k] = zone_cover(zones, zoom, mode)
-        while len(_COVER_CACHE) > _COVER_CACHE_MAX:
-            _COVER_CACHE.popitem(last=False)
-    return _COVER_CACHE[k]
-
-
-_COVER_SDF_CACHE: OrderedDict = OrderedDict()
-
-
-def zone_cover_sdf_cached(spark, zones: list[dict], zoom: int, mode: str) -> DataFrame:
-    """Spark-side twin of the cover cache: a zoom-11 cover of 10 zones is
-    ~10^5 rows, and re-shipping it driver→JVM (createDataFrame) on every
-    join cost ~150 ms per query build. The LocalRelation is immutable, so
-    caching it per (zones, zoom, mode, application) is pure plan reuse —
-    the Iceberg-production analogue is a persisted index side table."""
-    k = (_zones_key(zones, zoom, mode), spark.sparkContext.applicationId)
-    if k in _COVER_SDF_CACHE:
-        _COVER_SDF_CACHE.move_to_end(k)
-    else:
-        cover = zone_cover_cached(zones, zoom, mode)
-        _COVER_SDF_CACHE[k] = spark.createDataFrame(
-            cover, schema="zone_id long, cell_id long, boundary boolean"
-        )
-        while len(_COVER_SDF_CACHE) > _COVER_CACHE_MAX:
-            _COVER_SDF_CACHE.popitem(last=False)
-    return _COVER_SDF_CACHE[k]
+_SIDES_CACHE: OrderedDict = OrderedDict()
+_SIDES_CACHE_MAX = 32  # LRU bound: long-lived sessions must not accumulate
 
 
 def _part_cover_np(poly: np.ndarray, zoom: int, mode: str) -> tuple[np.ndarray, np.ndarray]:
-    """Covering cells of ONE polygon part → (cell_ids, boundary_mask).
-    ``boundary=False`` cells are fully inside (all 4 corners in, no edge
-    crossing) → candidate rows in them skip exact refinement."""
+    """Covering cells of ONE polygon part → (cell_ids, boundary_mask) — the
+    per-part reference the batched kernel (:func:`_parts_cover_batch`) is
+    tested against. ``boundary=False`` cells are fully inside (all 4
+    corners in, no edge crossing)."""
     cover = cells.cells_covering_polygon(
         poly, zoom, mode="intersects" if mode == "intersects" else "center"
     )
@@ -112,211 +79,6 @@ def _part_cover_np(poly: np.ndarray, zoom: int, mode: str) -> tuple[np.ndarray, 
     ).any(axis=1)
     interior &= ~crossed
     return cover, ~interior
-
-
-def zone_cover(zones: list[dict], zoom: int, mode: str = "center") -> pd.DataFrame:
-    """Covering cells for each zone polygon (driver-side numpy; zones small).
-
-    Returns pandas DF ``(zone_id, cell_id, boundary)``; ``boundary=False``
-    cells are fully inside the polygon (all 4 corners in, no edge crossing)
-    → rows in them skip exact refinement. ``mode`` is the touch duality:
-    'center' ≙ ALL_TOUCHED=FALSE, 'intersects' ≙ allTouched=True (SURVEY §2.7).
-    """
-    zid, cid, bnd = [], [], []
-    for z in zones:
-        for poly in z["parts"]:
-            cover, boundary = _part_cover_np(poly, zoom, mode)
-            if cover.size == 0:
-                continue
-            zid.append(np.full(cover.shape[0], z["zone_id"], dtype=np.int64))
-            cid.append(cover)
-            bnd.append(boundary)
-    if not zid:
-        return pd.DataFrame({"zone_id": [], "cell_id": [], "boundary": []})
-    df = pd.DataFrame(
-        {"zone_id": np.concatenate(zid), "cell_id": np.concatenate(cid),
-         "boundary": np.concatenate(bnd)}
-    )
-    # a multi-part zone may cover the same cell twice
-    return df.sort_values(["zone_id", "cell_id"]).drop_duplicates(["zone_id", "cell_id"]).reset_index(drop=True)
-
-
-def with_cell_id(points: DataFrame, zoom: int, x: str = "x", y: str = "y") -> DataFrame:
-    cx, cy = cells.geo_cell_col(F.col(x), F.col(y), zoom)
-    return points.withColumn("cell_id", cells.cell_id_col(cx, cy, zoom))
-
-
-def _all_convex_ccw(zones: list[dict]) -> bool:
-    for z in zones:
-        for part in z["parts"]:
-            p = np.asarray(part, dtype=np.float64)
-            if np.allclose(p[0], p[-1]):
-                p = p[:-1]
-            e = np.roll(p, -1, axis=0) - p
-            cross = e[:, 0] * np.roll(e, -1, axis=0)[:, 1] - e[:, 1] * np.roll(e, -1, axis=0)[:, 0]
-            if not (cross > 0).all():
-                return False
-    return True
-
-
-def _convex_refine_expr(zones: list[dict], x: str, y: str) -> F.Column:
-    """Strict-interior test for ccw-convex zones as pure column algebra —
-    the 'prepared geometry' JVM fast path: whole-stage codegen, no Python
-    workers in the hot loop. Equals the ray-cast off-boundary.
-
-    Built as ONE SQL string handed to F.expr: constructing the equivalent
-    Column tree operator-by-operator costs >1s of driver time per call
-    (hundreds of py4j gateway round-trips — measured as the dominant serial
-    cost of the flagship query build), while the JVM parses the string in
-    milliseconds. The 'D' suffix forces DOUBLE literals (bare decimals
-    parse as DECIMAL in Spark SQL, which would change the arithmetic)."""
-    branches = []
-    for z in zones:
-        parts_sql = []
-        for part in z["parts"]:
-            p = np.asarray(part, dtype=np.float64)
-            if np.allclose(p[0], p[-1]):
-                p = p[:-1]
-            conds = []
-            for i in range(len(p)):
-                xa, ya = float(p[i][0]), float(p[i][1])
-                xb, yb = float(p[(i + 1) % len(p)][0]), float(p[(i + 1) % len(p)][1])
-                conds.append(
-                    f"(({(xb - xa)!r}D * (`{y}` - {ya!r}D)"
-                    f" - {(yb - ya)!r}D * (`{x}` - {xa!r}D)) > 0D)"
-                )
-            parts_sql.append("(" + " AND ".join(conds) + ")")
-        branches.append(f"WHEN {int(z['zone_id'])} THEN ({' OR '.join(parts_sql)})")
-    return F.expr(f"CASE zone_id {' '.join(branches)} ELSE false END")
-
-
-_MAX_EDGE_COLS = 16
-
-
-def _zone_edges_pdf(zones: list[dict]) -> "pd.DataFrame | None":
-    """Per-zone half-plane coefficients as DATA columns, padded to a fixed
-    edge count by cyclically repeating real edges (AND over duplicates is a
-    no-op). Returns None when any zone is multi-part or has more than
-    ``_MAX_EDGE_COLS`` edges (those fall back to the CASE expr / udf paths).
-
-    Why data, not plan text: baking each zone's edges into a CASE branch
-    (the v1 plan) makes the predicate GROW with the zone count — at 10
-    zones the generated code already fell out of efficient codegen
-    (measured: the CASE refine cost 2.6 s of a 3.8 s / 25M-row join at 16
-    cores), and at 10^3+ zones it would not compile at all. With the
-    coefficients as broadcast-side columns the predicate is a constant-size
-    expression (K fused multiply-compares), independent of zone count."""
-    per_zone = {}
-    max_e = 0
-    for z in zones:
-        if len(z["parts"]) != 1:
-            return None
-        p = np.asarray(z["parts"][0], dtype=np.float64)
-        if np.allclose(p[0], p[-1]):
-            p = p[:-1]
-        if len(p) > _MAX_EDGE_COLS:
-            return None
-        q = np.roll(p, -1, axis=0)
-        # edge k: dx*(y - ya) - dy*(x - xa) > 0  (same arithmetic shape as
-        # the CASE expr so kept rows are bit-identical)
-        edges = np.stack([q[:, 0] - p[:, 0], q[:, 1] - p[:, 1], p[:, 0], p[:, 1]], axis=1)
-        per_zone[int(z["zone_id"])] = edges
-        max_e = max(max_e, len(edges))
-    rows = []
-    for zid, edges in per_zone.items():
-        reps = edges[np.arange(_pad := max_e) % len(edges)]
-        rows.append([zid] + list(reps.reshape(-1)))
-    cols = ["zone_id"]
-    for k in range(max_e):
-        cols += [f"e{k}_dx", f"e{k}_dy", f"e{k}_xa", f"e{k}_ya"]
-    return pd.DataFrame(rows, columns=cols)
-
-
-def _edge_refine_cond(n_edges: int, x: str, y: str) -> F.Column:
-    cond = None
-    for k in range(n_edges):
-        c = (
-            F.col(f"e{k}_dx") * (F.col(y) - F.col(f"e{k}_ya"))
-            - F.col(f"e{k}_dy") * (F.col(x) - F.col(f"e{k}_xa"))
-        ) > 0
-        cond = c if cond is None else (cond & c)
-    return cond
-
-
-def pip_join(
-    points: DataFrame,
-    zones: list[dict],
-    zoom: int = 8,
-    x: str = "x",
-    y: str = "y",
-    refine: str = "auto",
-) -> DataFrame:
-    """points(…, x, y) ⨝ zones → points columns + ``zone_id`` (inner join;
-    misses drop, multi-zone hits duplicate — reference ``locate_faces``
-    returns −1 for misses ≙ left-join variant via ``how='left'`` upstream).
-
-    ``refine``: 'expr' — JVM half-plane test (convex ccw zones only,
-    codegen, no Python; single-part zones carry their edge coefficients as
-    broadcast-side DATA columns, multi-part zones fall back to a CASE
-    expression); 'udf' — vectorized numpy ray-cast (any polygon); 'auto' —
-    expr when all zones are convex ccw, else udf.
-    """
-    spark = points.sparkSession
-    pts = with_cell_id(points, zoom, x, y)
-
-    if refine == "auto":
-        refine = "expr" if _all_convex_ccw(zones) else "udf"
-    if refine == "expr":
-        edges = _zone_edges_pdf(zones)
-        if edges is not None:
-            k = _zones_key(zones, zoom, "intersects+edges")
-            key = (k, spark.sparkContext.applicationId)
-            if key in _COVER_SDF_CACHE:
-                _COVER_SDF_CACHE.move_to_end(key)
-            else:
-                cov = zone_cover_cached(zones, zoom, "intersects").merge(edges, on="zone_id")
-                _COVER_SDF_CACHE[key] = spark.createDataFrame(cov)
-                while len(_COVER_SDF_CACHE) > _COVER_CACHE_MAX:
-                    _COVER_SDF_CACHE.popitem(last=False)
-            cover_edges = F.broadcast(_COVER_SDF_CACHE[key])
-            n_edges = sum(1 for c in cover_edges.columns if c.endswith("_dx"))
-            cand = pts.join(cover_edges, "cell_id")
-            keep = ~F.col("boundary") | _edge_refine_cond(n_edges, x, y)
-            drop = ["boundary", "cell_id"] + [c for c in cover_edges.columns if c.startswith("e")]
-            return cand.where(keep).drop(*drop)
-        cover_df = F.broadcast(zone_cover_sdf_cached(spark, zones, zoom, "intersects"))
-        cand = pts.join(cover_df, "cell_id")
-        keep = ~F.col("boundary") | _convex_refine_expr(zones, x, y)
-        return cand.where(keep).drop("boundary", "cell_id")
-
-    cover_df = F.broadcast(zone_cover_sdf_cached(spark, zones, zoom, "intersects"))
-    cand = pts.join(cover_df, "cell_id")
-
-    zones_b = spark.sparkContext.broadcast(
-        {z["zone_id"]: [p for p in z["parts"]] for z in zones}
-    )
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(px: pd.Series, py: pd.Series, zone: pd.Series, boundary: pd.Series) -> pd.Series:
-        out = np.ones(len(px), dtype=bool)
-        b = boundary.to_numpy()
-        if b.any():
-            xs, ys, zs = px.to_numpy()[b], py.to_numpy()[b], zone.to_numpy()[b]
-            sub = np.zeros(xs.shape[0], dtype=bool)
-            for zk in np.unique(zs):
-                m = zs == zk
-                acc = np.zeros(int(m.sum()), dtype=bool)
-                for part in zones_b.value[int(zk)]:
-                    acc |= cells.points_in_polygon(xs[m], ys[m], np.asarray(part))
-                sub[m] = acc
-            out[b] = sub
-        return pd.Series(out)
-
-    return (
-        cand.withColumn("_in", _pip(F.col(x), F.col(y), F.col("zone_id"), F.col("boundary")))
-        .where(F.col("_in"))
-        .drop("_in", "boundary", "cell_id")
-    )
 
 
 def _pip_multi(px: np.ndarray, py: np.ndarray, X: np.ndarray, Y: np.ndarray) -> np.ndarray:
@@ -396,7 +158,9 @@ def _convex_ccw_batch(X: np.ndarray, Y: np.ndarray, lens: np.ndarray) -> np.ndar
     real-edge pair EXCEPT (last-interior-edge × closing-edge) — zero pad
     edges sit between them — so that one turn is added explicitly with
     per-row fancy indexing (a concave-only-at-the-last-vertex ring was
-    misclassified convex before; code-review r4 finding #1)."""
+    misclassified convex before; code-review r4 finding #1). A zero-length
+    real edge (a repeated vertex, which OGC allows) makes a part
+    non-convex: its half-plane test ``0 > 0`` would reject every point."""
     P, V = X.shape
     nxt = list(range(1, V)) + [0]
     ex, ey = X[:, nxt] - X, Y[:, nxt] - Y
@@ -413,72 +177,154 @@ def _convex_ccw_batch(X: np.ndarray, Y: np.ndarray, lens: np.ndarray) -> np.ndar
     bx = np.where(is_closed, ex[rows, 0], cx_)
     by = np.where(is_closed, ey[rows, 0], cy_)
     extra = ax * by - ay * bx
-    return (cross >= 0).all(axis=1) & (extra >= 0) & (
+    # real edge j runs v_j → v_{(j+1) mod m}, m = real edge count
+    m = np.maximum(lens - is_closed, 1)[:, None]
+    j = np.arange(V)[None, :]
+    nj = (j + 1) % m
+    zero_edge = ((X[rows[:, None], nj] == X) & (Y[rows[:, None], nj] == Y) & (j < m)).any(axis=1)
+    return (cross >= 0).all(axis=1) & (extra >= 0) & ~zero_edge & (
         (cross > 0).any(axis=1) | (extra > 0)
+    )
+
+
+def _real_edges(xs_l: list, ys_l: list) -> np.ndarray:
+    """Edge count per ring: a closed ring's repeated last vertex is not an
+    edge (same exact-equality rule as :func:`_edge_coefs`)."""
+    return np.fromiter(
+        (len(x) - (len(x) > 1 and x[0] == x[-1] and y[0] == y[-1])
+         for x, y in zip(xs_l, ys_l)),
+        np.int64, len(xs_l),
+    )
+
+
+def _cover_parts(zid: np.ndarray, pk: np.ndarray, xs_l: list, ys_l: list,
+                 zoom: int, mode: str) -> pd.DataFrame:
+    """The one cover kernel: ring parts (ids + vertex arrays) → rows
+    ``(zone_id, part_key, cell_id, boundary, convex)``. ``convex`` =
+    ccw-convex with at most ``_MAX_EDGE_COLS`` real edges — the parts the
+    flat half-plane refine handles. Parts are bucketed by padded ring
+    length (next power of two) so one 10^5-vertex coastline doesn't pad
+    every quad in the batch to its width; pad = repeat last vertex (no-op
+    edge). Degenerate empty rings get no cover."""
+    lens = np.fromiter((len(a) for a in xs_l), np.int64, len(xs_l))
+    flat_ok = _real_edges(xs_l, ys_l) <= _MAX_EDGE_COLS
+    buckets = np.maximum(4, 1 << np.ceil(np.log2(np.maximum(lens, 1))).astype(np.int64))
+    buckets[lens == 0] = 0
+    out = []
+    for V in np.unique(buckets[buckets > 0]):
+        sel = np.flatnonzero(buckets == V)
+        X = np.empty((len(sel), V), dtype=np.float64)
+        Y = np.empty((len(sel), V), dtype=np.float64)
+        for i, r in enumerate(sel):
+            lv = lens[r]
+            X[i, :lv], Y[i, :lv] = xs_l[r], ys_l[r]
+            X[i, lv:], Y[i, lv:] = xs_l[r][lv - 1], ys_l[r][lv - 1]
+        prow, cell_id, boundary = _parts_cover_batch(X, Y, zoom, mode)
+        convex = _convex_ccw_batch(X, Y, lens[sel]) & flat_ok[sel]
+        out.append(pd.DataFrame({
+            "zone_id": zid[sel][prow], "part_key": pk[sel][prow],
+            "cell_id": cell_id, "boundary": boundary, "convex": convex[prow],
+        }))
+    if not out:
+        return pd.DataFrame({
+            c: pd.Series(dtype=bool if c in ("boundary", "convex") else np.int64)
+            for c in ("zone_id", "part_key", "cell_id", "boundary", "convex")
+        })
+    return pd.concat(out, ignore_index=True)
+
+
+def _zone_parts(zones: list[dict]) -> tuple[np.ndarray, list, list]:
+    """A zone list as flat per-part columns: zone ids, x and y vertex arrays."""
+    parts = [np.asarray(p, dtype=np.float64).reshape(-1, 2) for z in zones for p in z["parts"]]
+    zid = np.array([z["zone_id"] for z in zones for _ in z["parts"]], dtype=np.int64)
+    return zid, [p[:, 0] for p in parts], [p[:, 1] for p in parts]
+
+
+def zone_cover(zones: list[dict], zoom: int, mode: str = "center") -> pd.DataFrame:
+    """Covering cells for each zone polygon (driver-side numpy; zones small).
+
+    Returns pandas DF ``(zone_id, cell_id, boundary)`` — the projection of
+    the :func:`_cover_parts` kernel onto zones; ``boundary=False`` cells are
+    fully inside the polygon (all 4 corners in, no edge crossing) → rows in
+    them skip exact refinement. ``mode`` is the touch duality: 'center' ≙
+    ALL_TOUCHED=FALSE, 'intersects' ≙ allTouched=True (SURVEY §2.7).
+    """
+    zid, xs, ys = _zone_parts(zones)
+    cov = _cover_parts(zid, np.arange(len(zid), dtype=np.int64), xs, ys, zoom, mode)
+    # a multi-part zone may cover the same cell twice
+    return (
+        cov[["zone_id", "cell_id", "boundary"]]
+        .sort_values(["zone_id", "cell_id"])
+        .drop_duplicates(["zone_id", "cell_id"])
+        .reset_index(drop=True)
     )
 
 
 def zone_cover_df(rings: DataFrame, zoom: int, mode: str = "intersects") -> DataFrame:
     """Distributed twin of :func:`zone_cover`: the polygon side is a
     DataFrame ``(zone_id, part_key, xs, ys)`` — one row per ring part, ring
-    vertex arrays as columns — and the cover runs as ``mapInPandas`` over
-    the partitioned ring table, so a 10^7-face mesh (reference
-    ``locate_faces``, ``ugrid/spatial.py:195-224``) never materializes on
-    the driver. Emits the COMPACT cover ``(zone_id, part_key, cell_id,
-    boundary)`` — ring arrays are NOT carried onto the per-cell rows (a
-    10^5-vertex coastline × 10^4 covering cells would explode the cover by
-    V×); refinement re-joins the ring table by (zone_id, part_key) on
-    boundary candidates only."""
+    vertex arrays as columns — and the :func:`_cover_parts` kernel runs as
+    ``mapInPandas`` over the partitioned ring table, so a 10^7-face mesh
+    (reference ``locate_faces``, ``ugrid/spatial.py:195-224``) never
+    materializes on the driver. Emits the COMPACT cover ``(zone_id,
+    part_key, cell_id, boundary, convex)`` — ring arrays are NOT carried
+    onto the per-cell rows (a 10^5-vertex coastline × 10^4 covering cells
+    would explode the cover by V×); refinement re-joins the ring table by
+    (zone_id, part_key) on boundary candidates of non-convex parts only."""
 
     def gen(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            zid = pdf["zone_id"].to_numpy(dtype=np.int64)
-            pk = pdf["part_key"].to_numpy(dtype=np.int64)
-            xs_l, ys_l = pdf["xs"].to_list(), pdf["ys"].to_list()
-            lens = np.fromiter((len(a) for a in xs_l), np.int64, len(xs_l))
-            if (lens == 0).any():  # degenerate empty rings: no cover
-                keep = np.flatnonzero(lens > 0)
-                zid, pk = zid[keep], pk[keep]
-                xs_l = [xs_l[i] for i in keep]
-                ys_l = [ys_l[i] for i in keep]
-                lens = lens[keep]
-            if len(lens) == 0:
-                continue
-            out = []
-            # bucket parts by padded ring length (next power of two) so one
-            # 10^5-vertex coastline doesn't pad every quad in the batch to
-            # its width; pad = repeat last vertex (no-op edge)
-            buckets = np.maximum(4, 1 << np.ceil(np.log2(np.maximum(lens, 1))).astype(np.int64))
-            for V in np.unique(buckets):
-                sel = np.flatnonzero(buckets == V)
-                X = np.empty((len(sel), V), dtype=np.float64)
-                Y = np.empty((len(sel), V), dtype=np.float64)
-                for i, r in enumerate(sel):
-                    lv = lens[r]
-                    X[i, :lv], Y[i, :lv] = xs_l[r], ys_l[r]
-                    X[i, lv:], Y[i, lv:] = xs_l[r][lv - 1], ys_l[r][lv - 1]
-                prow, cell_id, boundary = _parts_cover_batch(X, Y, zoom, mode)
-                conv = _convex_ccw_batch(X, Y, lens[sel])
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "zone_id": zid[sel][prow],
-                            "part_key": pk[sel][prow],
-                            "cell_id": cell_id,
-                            "boundary": boundary,
-                            "convex": conv[prow],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cov = _cover_parts(
+                pdf["zone_id"].to_numpy(dtype=np.int64),
+                pdf["part_key"].to_numpy(dtype=np.int64),
+                pdf["xs"].to_list(), pdf["ys"].to_list(), zoom, mode,
+            )
+            if len(cov):
+                yield cov
 
-    return rings.select("zone_id", "part_key", "xs", "ys").mapInPandas(
-        gen, "zone_id long, part_key long, cell_id long, boundary boolean, "
-             "convex boolean"
+    return rings.select("zone_id", "part_key", "xs", "ys").mapInPandas(gen, _COVER_SCHEMA)
+
+
+def with_cell_id(points: DataFrame, zoom: int, x: str = "x", y: str = "y") -> DataFrame:
+    cx, cy = cells.geo_cell_col(F.col(x), F.col(y), zoom)
+    return points.withColumn("cell_id", cells.cell_id_col(cx, cy, zoom))
+
+
+def _edge_coefs(rings: DataFrame, K: int) -> DataFrame:
+    """Per-part half-plane coefficients as DATA columns ``e{k}_xa/ya/xb/yb``
+    (k < K): edge k is real edge k mod m of the part, so parts with fewer
+    than K edges repeat real edges cyclically (AND over duplicates is a
+    no-op). As data, not plan text, the refine predicate is constant-size
+    whatever the zone count (a per-zone CASE fell out of efficient codegen
+    at 10 zones; PLANS.md §6b). Built as SQL text: one gateway call instead
+    of hundreds of py4j round-trips per Column operator. Degenerate rings
+    (< 2 vertices) have no interior or convex cover rows, so dropping them
+    changes nothing — and keeps ANSI element_at/pmod from erroring on
+    size-0 arrays."""
+    cols = []
+    for k in range(K):
+        j, jn = f"pmod({k}, _m) + 1", f"pmod({k + 1}, _m) + 1"
+        cols += [f"element_at(xs, {j}) AS e{k}_xa", f"element_at(ys, {j}) AS e{k}_ya",
+                 f"element_at(xs, {jn}) AS e{k}_xb", f"element_at(ys, {jn}) AS e{k}_yb"]
+    return (
+        rings.where(F.size("xs") >= 2)
+        .withColumn("_m", F.expr(
+            "IF(element_at(xs, 1) = element_at(xs, -1)"
+            " AND element_at(ys, 1) = element_at(ys, -1), size(xs) - 1, size(xs))"
+        ))
+        .selectExpr("zone_id", "part_key", *cols)
     )
+
+
+def _halfplane(K: int, x: str, y: str) -> F.Column:
+    """Strict interior of a ccw-convex part: the point lies left of each of
+    its K coefficient edges (``true`` when K is 0 — no part is convex)."""
+    terms = [
+        f"((e{k}_xb - e{k}_xa) * (`{y}` - e{k}_ya)"
+        f" - (e{k}_yb - e{k}_ya) * (`{x}` - e{k}_xa)) > 0D"
+        for k in range(K)
+    ]
+    return F.expr(" AND ".join(terms) or "true")
 
 
 @F.pandas_udf(T.BooleanType())
@@ -510,25 +356,98 @@ def _pip_rows_udf(
     return pd.Series(out)
 
 
-def _convex_refine_cond(px: F.Column, py: F.Column, xs: F.Column, ys: F.Column) -> F.Column:
-    """Strict-interior half-plane test for a ccw-convex ring carried as
-    ARRAY columns — higher-order functions, all JVM, no Python worker
-    (the DataFrame-side analogue of pip_join's edge-coefficient refine;
-    same cross-product arithmetic shape, so kept rows are bit-identical
-    to the oracle's convex SQL). Handles open and closed rings."""
-    n = F.size(xs)
-    closed = (F.element_at(xs, 1) == F.element_at(xs, -1)) & (
-        F.element_at(ys, 1) == F.element_at(ys, -1)
+def _pip_core(points: DataFrame, zoom: int, x: str, y: str, cover: DataFrame,
+              coefs: DataFrame, K: int, rings: "DataFrame | None") -> DataFrame:
+    """cover → join → refine, shared by both front ends. The easy branch
+    (``~boundary | convex``) keeps ``~boundary | halfplane``: ONE scan of
+    the point side serves interior and convex-boundary rows, and every
+    cover row has its coefficient row, so the inner join preserves
+    multiplicity. The hard branch (``boundary & ~convex``) needs its own
+    subtree because Spark evaluates an extracted pandas UDF on every row of
+    its input; ``rings=None`` (no such rows) drops it."""
+    cols = points.columns
+    cand = with_cell_id(points, zoom, x, y).join(cover, "cell_id")
+    easy = (
+        cand.where(~F.col("boundary") | F.col("convex"))
+        .join(coefs, ["zone_id", "part_key"])
+        .where(~F.col("boundary") | _halfplane(K, x, y))
+        .select(*cols, "zone_id")
     )
-    m = F.when(closed, n - 1).otherwise(n)
+    if rings is None:
+        return easy
+    hard = (
+        cand.where(F.col("boundary") & ~F.col("convex"))
+        .join(rings, ["zone_id", "part_key"])
+        .withColumn("_in", _pip_rows_udf(x, y, "part_key", "xs", "ys"))
+        .where(F.col("_in"))
+        .select(*cols, "zone_id")
+    )
+    return easy.unionByName(hard)
 
-    def edge_ok(i):
-        j = (i + 1) % m
-        xa, ya = F.element_at(xs, i + 1), F.element_at(ys, i + 1)
-        xb, yb = F.element_at(xs, j + 1), F.element_at(ys, j + 1)
-        return ((xb - xa) * (py - ya) - (yb - ya) * (px - xa)) > 0
 
-    return F.forall(F.transform(F.sequence(F.lit(0), m - 1), edge_ok), lambda b: b)
+def _list_sides(spark, zones: list[dict], zoom: int) -> tuple:
+    """Broadcast sides of a zone list, built on the driver by the shared
+    kernel: (cover, coefficients, K, rings or None). ``part_key`` is the
+    part's index and K the largest real edge count of a convex part. The
+    sides are pure functions of (zones, zoom), so they are LRU-cached per
+    application: the zoom-11 cover of 10 zones is ~10^5 rows and ~0.3 s of
+    numpy, and checkpointed tiling calls :func:`pip_join` once per chunk."""
+    h = hashlib.sha1()
+    for z in zones:
+        h.update(str(z["zone_id"]).encode())
+        for p in z["parts"]:
+            p = np.ascontiguousarray(p, dtype=np.float64)
+            h.update(str(p.shape).encode() + p.tobytes())
+    key = (h.hexdigest(), zoom, spark.sparkContext.applicationId)
+    if key in _SIDES_CACHE:
+        _SIDES_CACHE.move_to_end(key)
+        return _SIDES_CACHE[key]
+    zid, xs, ys = _zone_parts(zones)
+    pk = np.arange(len(zid), dtype=np.int64)
+    cov = _cover_parts(zid, pk, xs, ys, zoom, "intersects")
+    flat = np.zeros(len(zid), dtype=bool)
+    flat[cov["part_key"][cov["convex"]].to_numpy()] = True
+    K = int(_real_edges(xs, ys)[flat].max(initial=0))
+    rings = spark.createDataFrame(
+        pd.DataFrame({"zone_id": zid, "part_key": pk,
+                      "xs": [a.tolist() for a in xs], "ys": [a.tolist() for a in ys]}),
+        "zone_id long, part_key long, xs array<double>, ys array<double>",
+    )
+    hard = bool((cov["boundary"] & ~cov["convex"]).any())
+    sides = (
+        F.broadcast(spark.createDataFrame(cov, _COVER_SCHEMA)),
+        F.broadcast(_edge_coefs(rings, K)),
+        K,
+        F.broadcast(rings) if hard else None,
+    )
+    _SIDES_CACHE[key] = sides
+    while len(_SIDES_CACHE) > _SIDES_CACHE_MAX:
+        _SIDES_CACHE.popitem(last=False)
+    return sides
+
+
+def pip_join(
+    points: DataFrame,
+    zones: list[dict],
+    zoom: int = 8,
+    x: str = "x",
+    y: str = "y",
+) -> DataFrame:
+    """points(…, x, y) ⨝ zones → points columns + ``zone_id`` (inner join;
+    misses drop — reference ``locate_faces`` returns −1 for misses ≙
+    left-join variant via ``how='left'`` upstream).
+
+    ``zones`` is a list of ``{zone_id, parts: [(V, 2) ring, …]}``. It takes
+    :func:`pip_join_df`'s contract: one output row per containing part, and
+    the parts of one zone must be disjoint. The driver front end of the
+    shared cover → join → refine pipeline: cover, edge coefficients and
+    (only when a non-convex part has boundary cells) ring table are built
+    on the driver and joined as broadcast sides, so the point side is
+    scanned once and never shuffled. Building the DataFrame runs no Spark
+    job.
+    """
+    cover, coefs, K, rings = _list_sides(points.sparkSession, zones, zoom)
+    return _pip_core(points, zoom, x, y, cover, coefs, K, rings)
 
 
 def pip_join_df(
@@ -537,7 +456,6 @@ def pip_join_df(
     zoom: int = 8,
     x: str = "x",
     y: str = "y",
-    refine: str = "auto",
 ) -> DataFrame:
     """DataFrame-native point-in-polygon join (VERDICT r3 next-round #2):
     ``zones_df`` is ``(zone_id: long, xs: array<double>, ys: array<double>)``
@@ -545,135 +463,39 @@ def pip_join_df(
     zone lists to the reference's 10^7-face mesh tables (``locate_faces``,
     ``ugrid/spatial.py:195-224``). Parts of one zone must be disjoint (the
     standard multi-polygon contract); output is the points' columns +
-    ``zone_id``, one row per containing part — identical to
-    :func:`pip_join` on single-part zone sets.
+    ``zone_id``, one row per containing part — the same as :func:`pip_join`
+    on the same zones.
 
-    100-TB plan shape (same decomposition as the broadcast path, with every
-    driver-side step replaced by a distributed twin):
+    The distributed front end of the shared pipeline:
 
     1. cover: ``mapInPandas`` over the ring table → compact
-       ``(zone_id, part_key, cell_id, boundary)`` rows, no driver pass;
+       ``(zone_id, part_key, cell_id, boundary, convex)`` rows, no driver
+       pass, materialized ONCE by ``localCheckpoint`` (both refine branches
+       read it; without truncation each would re-run the cover);
     2. encode: points get ``cell_id`` in pure column math (codegen);
-    3. join: hash equi-join on ``cell_id`` — both sides partition on the
-       key (AQE still broadcasts a genuinely small cover at runtime; for
-       repeated joins bucket both tables by ``cell_id``);
-    4. refine: only BOUNDARY candidates re-join the ring table on
-       ``(zone_id, part_key)`` to pick up vertex arrays, then a vectorized
-       ray-cast batches by part inside each Arrow batch. Interior-cell
-       candidates ship straight to the output — no Python, no ring bytes.
+    3. join: hash equi-join on ``cell_id`` (AQE still broadcasts a
+       genuinely small cover at runtime; for repeated joins bucket both
+       tables by ``cell_id``);
+    4. refine: interior and convex-boundary candidates take the flat
+       half-plane test over ``_MAX_EDGE_COLS`` coefficient columns built
+       from the ring table; boundary candidates of other parts re-join the
+       ring table and ray-cast, batched by part inside each Arrow batch.
+
+    Building the DataFrame runs exactly one Spark job: the cover
+    checkpoint.
 
     ``part_key`` is ``xxhash64(zone_id, xs, ys)`` — deterministic across
     task retries and cluster sizes (a monotonically_increasing_id would
     not be, breaking the resumability contract); collisions only matter
-    WITHIN one zone_id (the refine join is on both columns) so 64 bits is
+    WITHIN one zone_id (the refine joins are on both columns) so 64 bits is
     astronomically safe at 10^7 parts/zone.
-
-    ``refine``: 'auto' — boundary candidates of ccw-CONVEX parts (flagged
-    per part by the cover stage) run the JVM half-plane array test, only
-    concave parts fall back to the vectorized ray-cast UDF; 'udf' — every
-    boundary candidate ray-casts.
     """
-    rings = zones_df.withColumn(
-        "part_key", F.xxhash64(F.col("zone_id"), F.col("xs"), F.col("ys"))
+    rings = zones_df.select(
+        "zone_id", F.xxhash64("zone_id", "xs", "ys").alias("part_key"), "xs", "ys"
     )
-    # materialize the cover ONCE: every union branch below references it, and
-    # without truncation each branch re-runs the whole cover mapInPandas (the
-    # r6 plan showed 3 MapInPandas + 3 point scans for one query — guide §2.4:
-    # one Exchange-side subtree per distinct consumer is honest, three copies
-    # of the same one is not). localCheckpoint spills to disk past memory, and
-    # the cover is O(zones × cells) ≪ points by construction.
     cover = zone_cover_df(rings, zoom, "intersects").localCheckpoint()
-    pts = with_cell_id(points, zoom, x, y)
-    pt_cols = points.columns
-    ringsxy = rings.select("zone_id", "part_key", "xs", "ys")
-    cand = pts.join(cover, "cell_id")
-
-    def raycast(df):
-        return (
-            df.withColumn(
-                "_in",
-                _pip_rows_udf(
-                    F.col(x), F.col(y), F.col("part_key"), F.col("xs"), F.col("ys")
-                ),
-            )
-            .where(F.col("_in"))
-            .select(*pt_cols, "zone_id")
-        )
-
-    if refine == "udf":
-        interior = cand.where(~F.col("boundary")).select(*pt_cols, "zone_id")
-        bnd = cand.where(F.col("boundary")).join(ringsxy, ["zone_id", "part_key"])
-        return interior.unionByName(raycast(bnd))
-    # ONE scan of the point side covers interior AND convex-boundary rows:
-    # every cover row has its ring (cover derives from rings; (zone_id,
-    # part_key) is unique per part), so the inner ring join is multiplicity-
-    # preserving and the half-plane test only gates rows where boundary holds.
-    # The concave-boundary branch keeps its own subtree because its pandas
-    # UDF must not run on convex rows (Spark evaluates extracted Python UDFs
-    # unconditionally); its cover-side filter (boundary & !convex) sits below
-    # the join, so AQE collapses the whole branch to empty when every part is
-    # convex — the common mesh case pays ONE point scan instead of r6's three.
-    #
-    # The half-plane test itself runs as FLAT edge-coefficient columns
-    # (pip_join's broadcast-DATA trick, r7): per-part (xa, ya, xb, yb)
-    # doubles padded cyclically to the ring table's max edge count — the
-    # per-row filter is then K fused multiply-compares in whole-stage
-    # codegen instead of a HOF fold over array columns (measured 1.2 s of
-    # HOF time on 4.4M boundary candidates at bench scale). Cyclic padding
-    # repeats real edges, so the AND is unchanged, and each term is the
-    # SAME arithmetic shape as _convex_refine_cond — kept rows are
-    # bit-identical. Rings with more than _REFINE_MAX_EDGES edges keep the
-    # HOF array path (one extra O(parts) aggregate decides, ≪ the cover).
-    kmax_row = rings.select(F.max(F.size("xs")).alias("k")).first()
-    kmax = int(kmax_row["k"] or 0)
-    closed = (F.element_at("xs", 1) == F.element_at("xs", -1)) & (
-        F.element_at("ys", 1) == F.element_at("ys", -1)
-    )
-    m = F.when(closed, F.size("xs") - 1).otherwise(F.size("xs"))
-    if 0 < kmax - 1 <= _MAX_EDGE_COLS:
-        coefs = []
-        for k in range(kmax):
-            j = F.pmod(F.lit(k), m) + 1
-            jn = F.pmod(F.pmod(F.lit(k), m) + 1, m) + 1
-            coefs += [
-                F.element_at("xs", j).alias(f"e{k}_xa"),
-                F.element_at("ys", j).alias(f"e{k}_ya"),
-                F.element_at("xs", jn).alias(f"e{k}_xb"),
-                F.element_at("ys", jn).alias(f"e{k}_yb"),
-            ]
-        # degenerate (empty/point) rings emit no cover rows, so dropping
-        # them here changes nothing — and keeps ANSI element_at/pmod from
-        # erroring on size-0 arrays
-        ecoef = rings.where(F.size("xs") >= 2).select("zone_id", "part_key", *coefs)
-        halfplane = None
-        for k in range(kmax):
-            c = (
-                (F.col(f"e{k}_xb") - F.col(f"e{k}_xa"))
-                * (F.col(y) - F.col(f"e{k}_ya"))
-                - (F.col(f"e{k}_yb") - F.col(f"e{k}_ya"))
-                * (F.col(x) - F.col(f"e{k}_xa"))
-            ) > 0
-            halfplane = c if halfplane is None else (halfplane & c)
-        easy = (
-            cand.where(~F.col("boundary") | F.col("convex"))
-            .join(ecoef, ["zone_id", "part_key"])
-            .where(~F.col("boundary") | halfplane)
-            .select(*pt_cols, "zone_id")
-        )
-    else:
-        easy = (
-            cand.where(~F.col("boundary") | F.col("convex"))
-            .join(ringsxy, ["zone_id", "part_key"])
-            .where(
-                ~F.col("boundary")
-                | _convex_refine_cond(F.col(x), F.col(y), F.col("xs"), F.col("ys"))
-            )
-            .select(*pt_cols, "zone_id")
-        )
-    hard = cand.where(F.col("boundary") & ~F.col("convex")).join(
-        ringsxy, ["zone_id", "part_key"]
-    )
-    return easy.unionByName(raycast(hard))
+    coefs = _edge_coefs(rings, _MAX_EDGE_COLS)
+    return _pip_core(points, zoom, x, y, cover, coefs, _MAX_EDGE_COLS, rings)
 
 
 def salt_col(n_salt: int = 16, row_source: F.Column | None = None) -> F.Column:

@@ -93,7 +93,7 @@ def crop_polygon(
     fall back to an Arrow-batched ray-cast UDF.
     """
     from .. import cells as _cells
-    from .pip import _all_convex_ccw
+    from .pip import _convex_ccw_batch
 
     p = np.asarray(polygon, dtype=np.float64)
     if np.allclose(p[0], p[-1]):
@@ -101,7 +101,7 @@ def crop_polygon(
     xc = grid.x_center_col(F.col("col"))
     yc = grid.y_center_col(F.col("row"))
     d = cells_df.withColumn("_xc", xc).withColumn("_yc", yc)
-    if _all_convex_ccw([{"zone_id": 0, "parts": [p]}]):
+    if _convex_ccw_batch(p[None, :, 0], p[None, :, 1], np.array([len(p)]))[0]:
         cond = F.lit(True)
         for i in range(len(p)):
             xa, ya = float(p[i][0]), float(p[i][1])

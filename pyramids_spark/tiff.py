@@ -906,7 +906,7 @@ def write_cog_parts(
     )
     keyed = cells_df.where(F.col("value").isNotNull()).select(
         "band",
-        (F.shiftleft(F.col("row"), 32) + F.col("col")).alias("rc"),
+        (F.shiftleft(F.col("row").cast("long"), 32) + F.col("col")).alias("rc"),
         "value",
         (F.shiftleft((F.col("row") / sh).cast("long"), 32)
          + (F.col("col") / sw).cast("long")).alias("_pid"),

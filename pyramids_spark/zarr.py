@@ -468,7 +468,7 @@ def write_zarr(
     # any |coord| < 2³¹, so behaviour on out-of-extent inputs is unchanged
     keyed = cells_df.where(F.col("value").isNotNull()).select(
         "band",
-        (F.shiftleft(F.col("row"), 32) + F.col("col")).alias("rc"),
+        (F.shiftleft(F.col("row").cast("long"), 32) + F.col("col")).alias("rc"),
         "value",
         (F.shiftleft((F.col("row") / div_r).cast("long"), 32)
          + (F.col("col") / div_c).cast("long")).alias("cid"),

@@ -55,12 +55,23 @@ def test_salt_col_spreads_hot_key(spark):
 
 
 def test_pip_join_udf_path_under_extreme_skew(spark):
-    """Force the numpy refinement path with 90% of points in one cell."""
+    """90% of points in one cell, refined by BOTH forms: convex hulls take
+    the flat half-plane test, a concave L over the hot cell ray-casts in
+    the numpy UDF. The count equals the numpy ray-cast oracle."""
+    from pyramids_spark import cells
+
     pts = synth.doc_points(spark, 30_000, hot_frac=0.9)
-    zones = synth.zone_polygons(4, "hull")
-    a = pip.pip_join(pts, zones, zoom=6, refine="udf").count()
-    b = pip.pip_join(pts, zones, zoom=6, refine="expr").count()
-    assert a == b and a > 0
+    L = np.array([[-2.0, -2.0], [2.0, -2.0], [2.0, 0.0], [0.0, 0.0],
+                  [0.0, 2.0], [-2.0, 2.0]])
+    zones = synth.zone_polygons(4, "hull") + [{"zone_id": 50, "parts": [L]}]
+    hits = pip.pip_join(pts, zones, zoom=6)
+    assert "ArrowEvalPython" in hits._jdf.queryExecution().executedPlan().toString()
+    xy = pts.select("x", "y").toPandas()
+    exp = sum(
+        int(cells.points_in_polygon(xy.x.to_numpy(), xy.y.to_numpy(), z["parts"][0]).sum())
+        for z in zones
+    )
+    assert hits.count() == exp and exp > 0
 
 
 def test_ngram_jaccard_df_cap_defuses_hot_shingle(spark):

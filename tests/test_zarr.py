@@ -489,3 +489,26 @@ def test_zarr_v3_inline_consolidated_metadata(spark, tmp_path):
     del cm["metadata"]["pr"]
     json.dump(root, open(os.path.join(store, "zarr.json"), "w"))
     assert Z.list_zarr_arrays(store) == ["time", "x", "y"]
+
+
+def test_int_typed_cells_roundtrip_zarr_and_cog_parts(spark, tmp_path):
+    """An INT-typed (band, row, col) cell table must land every value in
+    its own cell in both packed-key sinks: the row·2³² + col shuffle key
+    is computed in long, not in int (where a 32-bit shift is a no-op and
+    rc collapses to row + col)."""
+    g = Grid(x0=0.0, y0=20.0, cell=1.0, rows=20, cols=12, epsg=4326, nodata=-9999.0)
+    cells_df = grid_df(spark, g, "CAST(row * 100 + col + 1 AS DOUBLE)", bands=2).select(
+        F.col("band").cast("int").alias("band"),
+        F.col("row").cast("int").alias("row"),
+        F.col("col").cast("int").alias("col"),
+        "value",
+    )
+    want = {(r.band, r.row, r.col): r.value for r in cells_df.collect()}
+    assert len(want) == 2 * 20 * 12
+    ds = SparkDataset(cells_df, g)
+    ds.to_zarr(str(tmp_path / "z"), chunks=(8, 8))
+    ds.to_cog_parts(str(tmp_path / "p"), shard=(16, 8), tile=(8, 8))
+    for back in (SparkDataset.from_zarr(spark, str(tmp_path / "z")),
+                 SparkDataset.from_geotiff_parts(spark, str(tmp_path / "p"))):
+        got = {(r.band, r.row, r.col): r.value for r in back.df.collect()}
+        assert got == want
