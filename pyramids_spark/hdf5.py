@@ -79,7 +79,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _blocks, _staged, dtypes as _dt
+from . import _blocks, _staged, dtypes as _dt, keys
 from .grid import Grid
 from .netcdf import derive_grid
 
@@ -746,6 +746,13 @@ def _superblock(eof: int, root_ohdr: int, root_btree: int, root_heap: int
 # writer
 # ---------------------------------------------------------------------------
 
+def _chunk_of(tk, rows: int, cols: int, ch: int, cw: int) -> "tuple[int, int, int]":
+    """Chunk key ``tk = t·n_tiles + tile_key`` → ``(t, ci, cj)``."""
+    ny, nx = keys.n_tiles(rows, cols, ch, cw)
+    t, tid = divmod(int(tk), ny * nx)
+    return (t,) + keys.tile_window(tid, ch, cw, rows, cols)[:2]
+
+
 def write_netcdf4(
     cells_df: DataFrame, grid: Grid, path: str,
     times: "list[float] | None" = None,
@@ -964,49 +971,36 @@ def write_netcdf4(
         "variable", "t", "row", "col", "value")
     if flip_write:
         src = src.withColumn("row", F.lit(rows - 1) - F.col("row"))
-    # packed shuffle keys (guide §2.3 — shuffle fewer bytes): the chunk key
-    # tk = (t·ny + ci)·nx + cj (also the dense slot index) and the cell key
-    # rc = row·2³² + col replace five longs; 2³² (not cols) as the row
-    # multiplier so out-of-extent cols never alias into a neighbouring
-    # valid row — the loud extent guard decodes exactly what was encoded
-    ny_k, nx_k = -(-rows // ch), -(-cols // cw)
-    _RC = 1 << 32
+    # packed shuffle keys (guide §2.3 — shuffle fewer bytes, keys.py): the
+    # chunk key tk = t·n_tiles + tile_key (also the dense slot index) and
+    # the cell key rc replace five longs; rc decodes exactly, so the loud
+    # extent guard sees what was encoded
+    ny_k, nx_k = keys.n_tiles(rows, cols, ch, cw)
     keyed = src.select(
         "variable",
-        ((F.col("t") * ny_k + F.floor(F.col("row") / ch)) * nx_k
-         + F.floor(F.col("col") / cw)).alias("tk"),
-        (F.col("row") * F.lit(_RC) + F.col("col")).alias("rc"),
+        (F.col("t").cast("long") * (ny_k * nx_k)
+         + keys.tile_key("row", "col", ch, cw, nx_k)).alias("tk"),
+        keys.pack_rc("row", "col").alias("rc"),
         "value",
     )
 
     var_set = frozenset(variables)
 
     def encode_chunk(key, pdf: pd.DataFrame) -> bytes:
-        v, tk = str(key[0]), int(key[1])
-        t, rem = divmod(tk, ny_k * nx_k)
-        ci, cj = divmod(rem, nx_k)
+        v = str(key[0])
+        t, ci, cj = _chunk_of(key[1], rows, cols, ch, cw)
         # loud extent guard, like the TIFF / classic-NetCDF sinks: an
         # out-of-extent cell would otherwise become a B-tree key outside
         # the dataspace; t >= nt (e.g. a 3-D table written times=None)
         # would collapse distinct records onto duplicate chunk keys.
+        msg = (f"cell outside file dimensions in {v!r}: t={t} "
+               f"(nt={nt}), grid {rows}x{cols}")
         if v not in var_set or not 0 <= t < nt:
-            raise ValueError(
-                f"cell outside file dimensions in {v!r}: t={t} "
-                f"(nt={nt}), grid {rows}x{cols}"
-            )
-        rc = pdf["rc"].to_numpy(np.int64)
-        rr_abs = rc // _RC
-        cc_abs = rc - rr_abs * _RC
-        if len(pdf):
-            if (rr_abs.min() < 0 or rr_abs.max() >= rows
-                    or cc_abs.min() < 0 or cc_abs.max() >= cols):
-                raise ValueError(
-                    f"cell outside file dimensions in {v!r}: t={t} "
-                    f"(nt={nt}), grid {rows}x{cols}"
-                )
+            raise ValueError(msg)
+        rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy(np.int64))
+        keys.check_extent(rr, cc, rows, cols, msg)
         block = np.full((ch, cw), fill, "<f8")
-        block[rr_abs - int(ci) * ch, cc_abs - int(cj) * cw] = \
-            pdf["value"].to_numpy(np.float64)
+        block[rr - ci * ch, cc - cj * cw] = pdf["value"].to_numpy(np.float64)
         raw = _dt.cast_block(block, dt_name).tobytes()
         if shuffle:
             raw = np.frombuffer(raw, "u1").reshape(-1, esize).T.tobytes()
@@ -1023,8 +1017,7 @@ def write_netcdf4(
 
     def build_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
         data = encode_chunk(key, pdf)  # loud guards fire before decode use
-        t, rem = divmod(int(key[1]), ny_k * nx_k)
-        ci, cj = divmod(rem, nx_k)
+        t, ci, cj = _chunk_of(key[1], rows, cols, ch, cw)
         return pd.DataFrame({
             "variable": [str(key[0])], "t": [t], "ci": [ci], "cj": [cj],
             "data": [data],
@@ -1103,12 +1096,11 @@ def _index_blobs(
     ([(position, blob)], eof). ``entries[v]`` = [(element offsets, data
     address, stored nbytes)] — shared by the serial driver-stream tail
     and the staged two-phase parallel tail."""
-    max_offs = ((nt, -(-rows // ch) * ch, -(-cols // cw) * cw, 0)
-                if three_d else (-(-rows // ch) * ch, -(-cols // cw) * cw,
-                                 0))
+    ny, nx = keys.n_tiles(rows, cols, ch, cw)
+    max_offs = ((nt, ny * ch, nx * cw, 0) if three_d
+                else (ny * ch, nx * cw, 0))
     bblobs = []
     pos = btree_base
-    ny, nx = -(-rows // ch), -(-cols // cw)
     csize = ch * cw * esize
     for v in variables:
         if not entries[v]:
@@ -1119,7 +1111,9 @@ def _index_blobs(
             for offs, at, nb in entries[v]:
                 t0, r0, c0 = (offs[:3] if three_d
                               else (0,) + tuple(offs[:2]))
-                slots[(t0 * ny + r0 // ch) * nx + c0 // cw] = (at, nb, 0)
+                # the same dense slot index as the shuffle key tk
+                slots[t0 * ny * nx
+                      + int(keys.tile_key_np(r0, c0, ch, cw, nx))] = (at, nb, 0)
             if index == "fixed_array":
                 root, blob = _fixed_array_blob(
                     slots, nt * ny * nx, csize, filtered, pos,
@@ -1176,13 +1170,10 @@ def _write_netcdf4_staged_tail(
         return os.path.join(scratch,
                             f"{t}_{ci}_{cj}_{v.encode().hex()}")
 
-    ny_s, nx_s = -(-rows // ch), -(-cols // cw)
-
     def stage_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
         raw = encode_chunk(key, pdf)  # loud var/t/extent guards inside
         v = str(key[0])
-        t, rem = divmod(int(key[1]), ny_s * nx_s)
-        ci, cj = divmod(rem, nx_s)
+        t, ci, cj = _chunk_of(key[1], rows, cols, ch, cw)
         _staged.write_staged(_chunk_file(v, t, ci, cj), raw)
         return pd.DataFrame({
             "variable": [v], "t": [t], "ci": [ci], "cj": [cj],
@@ -1257,7 +1248,7 @@ def _write_netcdf4_parallel_tail(
     file ranges are holes (sparse on any modern fs). Reference
     single-file sink: netcdf-c via
     /root/reference/src/pyramids/netcdf/netcdf.py:849-982."""
-    ny, nx = -(-rows // ch), -(-cols // cw)
+    ny, nx = keys.n_tiles(rows, cols, ch, cw)
     csize = ch * cw * esize
     stored = csize + (4 if fletcher32 else 0)
     nslots = nt * ny * nx
@@ -1286,8 +1277,7 @@ def _write_netcdf4_parallel_tail(
     def pwrite_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
         raw = encode_chunk(key, pdf)  # loud var/t/extent guards inside
         v, tk = str(key[0]), int(key[1])
-        t, rem = divmod(tk, ny * nx)
-        ci, cj = divmod(rem, nx)
+        t, ci, cj = _chunk_of(tk, rows, cols, ch, cw)
         at = base[v] + tk * stored  # tk IS the dense slot index
         fd = os.open(path, os.O_WRONLY)
         try:

@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _blocks, _staged, dtypes as _dt
+from . import _blocks, _staged, dtypes as _dt, keys
 from .grid import Grid
 
 _NC_DIMENSION, _NC_VARIABLE, _NC_ATTRIBUTE = 10, 11, 12
@@ -257,7 +257,7 @@ def write_netcdf(
     begins = {v: by_name[v].begin for v in variables}
     n_blocks = (rows + row_block - 1) // row_block
 
-    keys = (
+    slabs = (
         spark_of(cells_df).range(n_blocks).select(F.col("id").alias("_rb"))
         .crossJoin(
             spark_of(cells_df).createDataFrame(
@@ -273,7 +273,7 @@ def write_netcdf(
     # full outer: cells whose (variable, t) match no key — e.g. t outside
     # range(n_t) — form their own groups and fail loudly in build, instead
     # of silently vanishing from the file (code-review r5 finding).
-    covered = keys.join(keyed, ["variable", "t", "_rb"], "full_outer")
+    covered = slabs.join(keyed, ["variable", "t", "_rb"], "full_outer")
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
         v, t, rb = str(key[0]), int(key[1]), int(key[2])
@@ -283,13 +283,8 @@ def write_netcdf(
                 f"(variables={sorted(begins)}, n_t={n_t})"
             )
         pdf = pdf[pdf["value"].notna()]
-        if len(pdf):
-            rr, cc = pdf["row"].to_numpy(), pdf["col"].to_numpy()
-            if (rr.min() < 0 or rr.max() >= rows
-                    or cc.min() < 0 or cc.max() >= cols):
-                raise ValueError(
-                    f"cell outside grid extent ({rows}x{cols}) in {v!r}"
-                )
+        keys.check_extent(pdf["row"].to_numpy(), pdf["col"].to_numpy(), rows,
+                          cols, f"cell outside grid extent ({rows}x{cols}) in {v!r}")
         r0 = rb * row_block
         bh = min(row_block, rows - r0)
         block = _blocks.dense_block(pdf, bh, cols, r0, 0, fill)

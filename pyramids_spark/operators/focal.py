@@ -14,9 +14,9 @@ Two Spark strategies, both implemented:
    (codegen, exact SQL-oracle parity); shuffle volume = cells × window. Best
    for small r and modest grids.
 2. :func:`focal_tiles` — **halo tiles**: partition the grid into T×T tiles,
-   replicate each cell into every neighbor tile whose halo needs it (≤4
-   extra copies for r ≤ T), ``applyInPandas`` per tile with a vectorized
-   numpy box filter. Shuffle volume = cells × (1 + 4r/T) — the 100-TB path
+   replicate each cell into every neighbor tile whose halo needs it (≤3
+   extra copies for r ≤ T/2, up to 8 for r ≤ T, ``keys.halo_tiles``), ``applyInPandas`` per
+   tile with a vectorized numpy box filter. Shuffle volume = cells × (1 + 4r/T) — the 100-TB path
    (reference ``map_overlap`` ≙ exactly this).
 """
 
@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import keys
 from ..grid import Grid
 
 
@@ -97,46 +98,6 @@ def focal_join(cells_df: DataFrame, grid: Grid, r: int = 1, stat: str = "mean") 
     return out
 
 
-def _tile_halo_frame(cells_df: DataFrame, grid: Grid, tile: int, r: int) -> DataFrame:
-    """Replicate each cell into every tile whose halo contains it.
-
-    A cell belongs to its own tile plus (only near tile edges) up to 3
-    neighbors: replication factor 1 + O(r/tile), not 9. Built as a
-    conditionally-filtered literal array + explode — single pass, no
-    dedup shuffle.
-
-    The exchange carries PACKED keys (guide §2.3 — shuffle fewer bytes):
-    ``rc = row·cols + col`` and ``tid = tile_y·ntx + tile_x`` instead of
-    four longs (44 → 28 bytes/row before compression); the tile task
-    unpacks them in numpy."""
-    assert r <= tile, "halo radius must not exceed tile size"
-    ntx = (grid.cols - 1) // tile + 1
-    ty0 = (F.col("row") / tile).cast("long")
-    tx0 = (F.col("col") / tile).cast("long")
-    near_lo_y = (F.col("row") % tile) < r
-    near_hi_y = (F.col("row") % tile) >= tile - r
-    near_lo_x = (F.col("col") % tile) < r
-    near_hi_x = (F.col("col") % tile) >= tile - r
-    conds = {
-        (-1, 0): near_lo_y, (1, 0): near_hi_y, (0, -1): near_lo_x, (0, 1): near_hi_x,
-        (-1, -1): near_lo_y & near_lo_x, (-1, 1): near_lo_y & near_hi_x,
-        (1, -1): near_hi_y & near_lo_x, (1, 1): near_hi_y & near_hi_x,
-    }
-    max_ty, max_tx = (grid.rows - 1) // tile, (grid.cols - 1) // tile
-    entries = [ty0 * ntx + tx0]
-    for (dy, dx), c in conds.items():
-        ty, tx = ty0 + dy, tx0 + dx
-        ok = c & (ty >= 0) & (ty <= max_ty) & (tx >= 0) & (tx <= max_tx)
-        entries.append(F.when(ok, ty * ntx + tx).otherwise(F.lit(None)))
-    tiles = F.array_compact(F.array(*entries))
-    return cells_df.select(
-        "band",
-        (F.col("row") * grid.cols + F.col("col")).alias("rc"),
-        "value",
-        F.explode(tiles).alias("tid"),
-    )
-
-
 def focal_tiles(
     cells_df: DataFrame, grid: Grid, r: int = 1, stat: str = "mean", tile: int = 256
 ) -> DataFrame:
@@ -144,24 +105,25 @@ def focal_tiles(
     (tile+2r)² window in numpy and runs a vectorized box filter (cumsum
     trick, O(cells) regardless of r). NULL-safe: nodata cells are excluded
     from each window's mean like the reference's nan-ops."""
-    halo = _tile_halo_frame(cells_df, grid, tile, r)
     rows, cols = grid.rows, grid.cols
-    ntx = (cols - 1) // tile + 1
+    # each cell travels to its own tile and to every neighbour tile whose
+    # halo needs it; the exchange carries the packed cell key rc and the
+    # dense tile key (keys.py) — two longs instead of four
+    halo = cells_df.select(
+        "band", keys.pack_rc("row", "col").alias("rc"), "value",
+        F.explode(keys.halo_tiles("row", "col", tile, tile, rows, cols, r)).alias("tid"),
+    )
 
     def per_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
         band, tid = key
-        ty, tx = divmod(int(tid), ntx)
-        r0, c0 = ty * tile, tx * tile
-        h = min(tile, rows - r0)
-        w = min(tile, cols - c0)
+        _, _, r0, c0, h, w = keys.tile_window(tid, tile, tile, rows, cols)
         # local window with halo, reflected at grid edges
-        rc = pdf["rc"].to_numpy()
-        gr = rc // cols - (r0 - r)
-        gc = rc % cols - (c0 - r)
+        gr, gc = keys.unpack_rc_np(pdf["rc"].to_numpy())
+        keys.check_extent(gr, gc, rows, cols)
+        gr, gc = gr - (r0 - r), gc - (c0 - r)
         H, W = h + 2 * r, w + 2 * r
         val = np.full((H, W), np.nan)
-        m = (gr >= 0) & (gr < H) & (gc >= 0) & (gc < W)
-        val[gr[m], gc[m]] = pdf["value"].to_numpy(dtype=np.float64)[m]
+        val[gr, gc] = pdf["value"].to_numpy(dtype=np.float64)
         # reflect at the true grid boundary
         idx_r = np.arange(r0 - r, r0 + h + r)
         idx_c = np.arange(c0 - r, c0 + w + r)

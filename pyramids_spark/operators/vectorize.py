@@ -20,15 +20,25 @@ O(perimeter) ≪ cells but ≫ driver RAM at a 10^6×10^6 grid, so the round-1
 driver union-find was the one real scale-killer here (VERDICT r1 #1).
 The per-tile labeling is recomputed for the final join instead of caching
 the full labeled table — at 100 TB one extra scan beats caching O(cells).
+``cluster`` and ``polygonize`` share that pipeline (:func:`_components`);
+they differ only in the mask (one range mask, 8-connected, vs one mask
+per value, 4-connected).
+
+Every exchange is keyed by ``pyramids_spark.keys``: the packed cell key
+``rc = row·2³² + col`` and the dense tile key, computed on long so int32
+input columns give the same result as int64 ones; each tile task runs
+the extent guard on the cells it decodes. The output label stays the
+dense min cell index ``row·cols + col`` — it is output, not a key.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import keys
 from ..grid import Grid
 
 
@@ -67,45 +77,48 @@ def _local_cc(mask: np.ndarray, base_ids: np.ndarray, conn8: bool) -> np.ndarray
     return np.where(mask, base_ids.ravel()[full].reshape(h, w), np.int64(-1))
 
 
-def _per_tile_cc(cells_df: DataFrame, grid: Grid, predicate, tile: int, conn8: bool):
-    """→ (labeled cell df, border pandas df). predicate: Column -> Column.
+def _label_tiles(cells_df: DataFrame, grid: Grid, tile: int, keep: Column,
+                 by_value: bool) -> DataFrame:
+    """Tile-labeling stage of :func:`cluster` and :func:`polygonize`: the
+    cells passing ``keep`` → (row, col, value, label, border), labeled by
+    per-tile connected components in numpy. ``by_value=False`` labels one
+    mask 8-connected (cluster); ``by_value=True`` labels one mask per
+    value 4-connected (gdal.Polygonize regions). Labels are the
+    component's min cell index ``row·cols + col`` within the tile.
 
-    The exchange carries packed keys (``rc = row·cols + col``, ``tid =
-    tile_y·ntx + tile_x``) instead of four longs — guide §2.3, shuffle
-    fewer bytes; the tile task unpacks in numpy."""
+    The exchange carries the packed cell key ``rc`` and the dense tile key
+    (keys.py) instead of four longs — guide §2.3, shuffle fewer bytes; the
+    tile task unpacks them in numpy and runs the extent guard."""
     rows, cols = grid.rows, grid.cols
-    ntx = (cols - 1) // tile + 1
-    d = cells_df.where(predicate(F.col("value"))).select(
-        (F.col("row") * cols + F.col("col")).alias("rc"),
+    ntj = keys.n_tiles(rows, cols, tile, tile)[1]
+    d = cells_df.where(keep).select(
+        keys.pack_rc("row", "col").alias("rc"),
         "value",
-        ((F.col("row") / tile).cast("long") * ntx
-         + (F.col("col") / tile).cast("long")).alias("tid"),
+        keys.tile_key("row", "col", tile, tile, ntj).alias("tid"),
     )
 
     def per_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = divmod(int(key[0]), ntx)
-        r0, c0 = ty * tile, tx * tile
-        h = min(tile, rows - r0)
-        w = min(tile, cols - c0)
-        rc = pdf["rc"].to_numpy()
-        rr = rc // cols
-        cc = rc % cols
+        _, _, r0, c0, h, w = keys.tile_window(key[0], tile, tile, rows, cols)
+        rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy())
+        keys.check_extent(rr, cc, rows, cols)
         lr = rr - r0
         lc = cc - c0
-        mask = np.zeros((h, w), dtype=bool)
-        mask[lr, lc] = True
+        vals = pdf["value"].to_numpy()
         base = (np.arange(h)[:, None] + r0) * cols + (np.arange(w)[None, :] + c0)
-        lab = _local_cc(mask, base, conn8)
+        label = np.empty(len(pdf), dtype=np.int64)
+        for m in ([vals == v for v in np.unique(vals)] if by_value
+                  else [slice(None)]):
+            mask = np.zeros((h, w), dtype=bool)
+            mask[lr[m], lc[m]] = True
+            label[m] = _local_cc(mask, base, conn8=not by_value)[lr[m], lc[m]]
         return pd.DataFrame(
-            {"row": rr, "col": cc, "value": pdf["value"].to_numpy(),
-             "label": lab[lr, lc],
+            {"row": rr, "col": cc, "value": vals, "label": label,
              "border": (lr == 0) | (lr == h - 1) | (lc == 0) | (lc == w - 1)}
         )
 
-    labeled = d.groupBy("tid").applyInPandas(
+    return d.groupBy("tid").applyInPandas(
         per_tile, schema="row long, col long, value double, label long, border boolean"
     )
-    return labeled
 
 
 EDGE_LOCAL_MAX = 5_000_000  # label-graph size below which one task solves it
@@ -142,25 +155,17 @@ def _edge_cc_np(ea: np.ndarray, eb: np.ndarray) -> pd.DataFrame:
     return pd.DataFrame({"label": uniq[ch], "root": out[ch]})
 
 
-def _merge_labels_df(
-    border: DataFrame, conn8: bool, by_value: bool,
-    max_border: "int | None" = None,
-) -> DataFrame:
+def _merge_labels_df(border: DataFrame, by_value: bool, local: bool) -> DataFrame:
     """Distributed cross-tile merge: CC over the border-label graph.
 
-    Builds the adjacency edge list with an equi-join of shifted border cells
-    (no driver state). The edge list is O(tile-components touching a
-    border) — orders of magnitude smaller than the border-cell set. Two
-    solve paths, chosen by edge count:
-
-    - ≤ :data:`EDGE_LOCAL_MAX`: one executor task runs the vectorized numpy
-      min-propagation (:func:`_edge_cc_np`) via applyInPandas — a single
-      job instead of a multi-round loop (the rounds' fixed job overhead
-      dominated at bench scale), and the data still never touches the
-      driver.
-    - larger: Spark-side min-label propagation + pointer jumping to
-      fixpoint — each round one neighbor-min groupBy and one root-of-root
-      self-join, converging in O(log diameter) rounds.
+    ``local``: one executor task builds the cross-tile edge list from the
+    border cells (sorted-encode + searchsorted over packed cell keys) and
+    solves it — a single job instead of the shift-explode join + distinct
+    + count + solve chain; the data still never touches the driver.
+    Otherwise the adjacency edge list comes from an equi-join of shifted
+    border cells (no driver state) and :func:`edge_components_df` solves
+    it. The edge list is O(tile-components touching a border) — orders of
+    magnitude smaller than the border-cell set.
 
     Returns a small (label, root) DataFrame holding only labels whose
     canonical root differs (the rest keep their tile label via the
@@ -168,34 +173,19 @@ def _merge_labels_df(
     component-min label ≡ min global cell index, identical to the round-1
     driver union-find (oracles pin exact label partitions).
     """
-    shifts = [(0, 1), (1, 0)] + ([(1, 1), (1, -1)] if conn8 else [])
-    # ``max_border``: a caller-provided UPPER BOUND on the border-cell
-    # count (grid geometry: ≤ 4·tile per tile). When the bound already
-    # fits the local path, the exact count() — a full pass over the
-    # labeled table just to pick a branch — is skipped (r7: one fewer
-    # job barrier per cluster/polygonize call).
-    if (max_border is not None and max_border <= BORDER_LOCAL_MAX) or (
-        (max_border is None or max_border > BORDER_LOCAL_MAX)
-        and border.count() <= BORDER_LOCAL_MAX
-    ):
-        # the border is O(perimeter) ≪ cells: one executor task builds the
-        # cross-tile edge list (sorted-encode + searchsorted — the same
-        # kernel as the halo edge extraction) and solves it, replacing the
-        # shift-explode join + distinct + count + solve job chain with a
-        # single job. Data still never touches the driver.
-        big = np.int64(1) << 32
-
+    shifts = [(0, 1), (1, 0)] + ([] if by_value else [(1, 1), (1, -1)])
+    if local:
         def solve_local(pdf: pd.DataFrame) -> pd.DataFrame:
             r = pdf["row"].to_numpy(np.int64)
             c = pdf["col"].to_numpy(np.int64)
             lab = pdf["label"].to_numpy(np.int64)
             val = pdf["value"].to_numpy()
-            enc = r * big + c
+            enc = keys.pack_rc_np(r, c)
             order = np.argsort(enc)
             enc_s, lab_s, val_s = enc[order], lab[order], val[order]
             eas, ebs = [], []
             for dy, dx in shifts:
-                nenc = (r + dy) * big + (c + dx)
+                nenc = keys.pack_rc_np(r + dy, c + dx)
                 idx = np.clip(np.searchsorted(enc_s, nenc), 0, len(enc_s) - 1)
                 hit = (enc_s[idx] == nenc) & (lab_s[idx] != lab)
                 if by_value:
@@ -309,6 +299,33 @@ def edge_components_df(half: DataFrame) -> DataFrame:
         edges.unpersist()
 
 
+def _components(cells_df: DataFrame, grid: Grid, tile: int, keep: Column,
+                by_value: bool, single_pass: bool) -> DataFrame:
+    """The pipeline behind :func:`cluster` and :func:`polygonize`: tile
+    labeling (:func:`_label_tiles`), an optional checkpoint of the labeled
+    table, the cross-tile merge over the border cells, and the relabel
+    join → (row, col, value, label)."""
+    labeled = _label_tiles(cells_df, grid, tile, keep, by_value)
+    if single_pass:
+        # checkpoint the LABELED table (not the relabeled output): the
+        # border pass, the relabel join and any downstream scan all read
+        # the one materialization (r7, guide §5 cache-when-reused)
+        labeled = labeled.localCheckpoint(eager=True)
+    border = labeled.where("border").select("row", "col", "value", "label").persist()
+    try:
+        nti, ntj = keys.n_tiles(grid.rows, grid.cols, tile, tile)
+        # grid geometry bounds the border at 4·tile cells per tile; when
+        # that bound already fits the one-task merge, the exact count() —
+        # a full pass over the labeled table just to pick a branch — is
+        # skipped (r7: one fewer job barrier per call)
+        local = (4 * tile * nti * ntj <= BORDER_LOCAL_MAX
+                 or border.count() <= BORDER_LOCAL_MAX)
+        mapping = _merge_labels_df(border, by_value, local)
+    finally:
+        border.unpersist()
+    return _apply_mapping(labeled, mapping)
+
+
 def cluster(
     cells_df: DataFrame,
     grid: Grid,
@@ -329,25 +346,9 @@ def cluster(
     when the result is garbage-collected), the right mode when the grid
     fits the cluster's storage tier (it halves the wall time at bench
     scale)."""
-    labeled = _per_tile_cc(
-        cells_df, grid, lambda v: v.isNotNull() & (v >= lo) & (v <= hi), tile, conn8=True
-    )
-    if single_pass:
-        # checkpoint the LABELED table (not the relabeled output): the
-        # border pass, the relabel join and any downstream scan all read
-        # the one materialization, where the r6 shape (persist labeled +
-        # eagerly checkpoint out + unpersist) wrote the 4M-cell table
-        # twice (r7, guide §5 cache-when-reused)
-        labeled = labeled.localCheckpoint(eager=True)
-    border = labeled.where("border").select("row", "col", "value", "label").persist()
-    try:
-        ntiles = ((grid.rows - 1) // tile + 1) * ((grid.cols - 1) // tile + 1)
-        mapping = _merge_labels_df(
-            border, conn8=True, by_value=False, max_border=4 * tile * ntiles
-        )
-    finally:
-        border.unpersist()
-    return _apply_mapping(labeled, mapping)
+    v = F.col("value")
+    return _components(cells_df, grid, tile, v.isNotNull() & (v >= lo) & (v <= hi),
+                       by_value=False, single_pass=single_pass)
 
 
 def _apply_mapping(labeled: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -371,55 +372,8 @@ def polygonize(
     consumers (the ring pipeline) scan it without re-running the tile CC
     — one execution, O(cells) block-manager storage; default False stays
     the two-scan O(1)-storage mode."""
-    rows, cols = grid.rows, grid.cols
-    ntx = (cols - 1) // tile + 1
-    d = cells_df.where(F.col("value").isNotNull()).select(
-        (F.col("row") * cols + F.col("col")).alias("rc"),
-        "value",
-        ((F.col("row") / tile).cast("long") * ntx
-         + (F.col("col") / tile).cast("long")).alias("tid"),
-    )
-
-    def per_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ty, tx = divmod(int(key[0]), ntx)
-        r0, c0 = ty * tile, tx * tile
-        h = min(tile, rows - r0)
-        w = min(tile, cols - c0)
-        rc = pdf["rc"].to_numpy()
-        rr = rc // cols
-        cc = rc % cols
-        lr = rr - r0
-        lc = cc - c0
-        vals = pdf["value"].to_numpy()
-        base = (np.arange(h)[:, None] + r0) * cols + (np.arange(w)[None, :] + c0)
-        label = np.empty(len(pdf), dtype=np.int64)
-        for v in np.unique(vals):
-            m = vals == v
-            mask = np.zeros((h, w), dtype=bool)
-            mask[lr[m], lc[m]] = True
-            lab = _local_cc(mask, base, conn8=False)
-            label[m] = lab[lr[m], lc[m]]
-        return pd.DataFrame(
-            {"row": rr, "col": cc, "value": vals, "label": label,
-             "border": (lr == 0) | (lr == h - 1) | (lc == 0) | (lc == w - 1)}
-        )
-
-    labeled = d.groupBy("tid").applyInPandas(
-        per_tile, schema="row long, col long, value double, label long, border boolean"
-    )
-    if single_pass:
-        # one materialization serves border pass + relabel join + any
-        # downstream scan (see cluster(); r7)
-        labeled = labeled.localCheckpoint(eager=True)
-    border = labeled.where("border").select("row", "col", "value", "label").persist()
-    try:
-        ntiles = ((rows - 1) // tile + 1) * ((cols - 1) // tile + 1)
-        mapping = _merge_labels_df(
-            border, conn8=False, by_value=True, max_border=4 * tile * ntiles
-        )
-    finally:
-        border.unpersist()
-    return _apply_mapping(labeled, mapping)
+    return _components(cells_df, grid, tile, F.col("value").isNotNull(),
+                       by_value=True, single_pass=single_pass)
 
 
 # The four cell sides as (neighbor offset, directed ccw edge in integer
@@ -432,87 +386,32 @@ _SIDE_EDGES = (
 )
 
 
-def _turn_key(din, cur):
-    """Leftmost-turn comparator in MAP space; with y flipped the map cross
-    product sign equals (dvr1·dvc2 − dvc1·dvr2)."""
-    def turn(v):
-        dout = (v[0] - cur[0], v[1] - cur[1])
-        return din[0] * dout[1] - din[1] * dout[0]
-
-    return turn
-
-
-def _walk_edges(ea: np.ndarray, eb: np.ndarray, is_cut) -> tuple[list, list]:
-    """Chain directed boundary edges into (open chains, closed rings).
-
-    ``is_cut(v)`` marks vertices where chains must be cut (tile-boundary
-    vertices — the turn decision there may involve edges from another
-    tile).  Open chains run cut-vertex → cut-vertex; closed rings never
-    touch a cut vertex (every out-edge at a cut vertex starts a chain, so
-    by in/out balance none remain).  At interior pinch vertices the
-    leftmost-turn rule picks the outgoing edge — the same rule the stitch
-    applies at cut vertices, so the distributed decomposition matches the
-    monolithic walk."""
-    out_edges: dict[tuple, list] = {}
-    edges = sorted(
-        (
-            (int(a[0]), int(a[1])), (int(b[0]), int(b[1]))
-        )
-        for a, b in zip(ea, eb)
-    )
-    remaining = set(edges)
-    for a, b in edges:
-        out_edges.setdefault(a, []).append(b)
-
-    def advance(path, cur, prev, stop):
-        while True:
-            if stop(cur):
-                return
-            cand = [v for v in out_edges.get(cur, ()) if (cur, v) in remaining]
-            if len(cand) == 1:
-                nxt = cand[0]
-            else:
-                nxt = min(cand, key=_turn_key((cur[0] - prev[0], cur[1] - prev[1]), cur))
-            remaining.discard((cur, nxt))
-            path.append(nxt)
-            prev, cur = cur, nxt
-
-    chains, rings = [], []
-    for a, b in edges:  # open chains first: every cut-vertex out-edge starts one
-        if not is_cut(a) or (a, b) not in remaining:
-            continue
-        remaining.discard((a, b))
-        path = [a, b]
-        advance(path, b, a, stop=is_cut)
-        chains.append(path)
-    while remaining:  # interior rings: deterministic min-edge start
-        a, b = min(remaining)
-        remaining.discard((a, b))
-        path = [a, b]  # advance appends up to and including the closing `a`
-        advance(path, b, a, stop=lambda v: v == a)
-        rings.append(path)
-    return chains, rings
-
-
 def _walk_edges_batch(ea: np.ndarray, eb: np.ndarray, el: np.ndarray, is_cut_v):
-    """Vectorized :func:`_walk_edges` over ALL labels of a tile at once.
+    """Chain directed boundary edges of ALL labels of a tile at once into
+    open chains and closed rings.
 
     ``ea``/``eb``: (E, 2) int64 directed-edge endpoints in (vc, vr) vertex
     coords; ``el``: (E,) labels; ``is_cut_v(xs, ys) -> bool array`` marks
-    cut (tile-border) vertices. Returns ``(labels, kinds, paths)`` parallel
-    lists — ``paths[i]`` an (n, 2) int64 vertex array, kind 1 = open chain
-    (cut vertex → cut vertex), 2 = closed ring (never touches a cut vertex).
+    cut (tile-border) vertices, where chains are cut because the turn
+    decision there may involve edges from another tile. Returns
+    ``(labels, kinds, paths)`` parallel lists — ``paths[i]`` an (n, 2)
+    int64 vertex array, kind 1 = open chain (cut vertex → cut vertex),
+    2 = closed ring (never touches a cut vertex). At interior pinch
+    vertices the leftmost-turn rule picks the outgoing edge — the rule the
+    stitch applies at cut vertices, so the distributed decomposition
+    matches a monolithic walk.
 
     Why a successor ARRAY is exact: every edge is a unit axis step, a grid
     vertex has at most 2 out-edges of one label (only the diagonal-pinch
     cell pattern yields 2), and there the two in-directions are opposite,
     so the leftmost-turn rule pairs each in-edge with a DISTINCT out-edge —
-    a proper matching, making the walk order-independent. That property is
-    asserted (successor injectivity); any violation falls back to the
-    per-label python walk rather than guessing. [r7: the per-label
-    _walk_edges calls — ~740 per 256² tile on the bench raster — spent the
-    fragment stage in python dict/set churn; this replaces them with a few
-    argsorts + batched pointer chasing.]"""
+    a proper matching, making the walk order-independent. In/out balance
+    gives every non-cut vertex a successor. Both properties are asserted;
+    a violation is an ``AssertionError``, never a guess. [r7: this
+    replaced a per-label python walk — ~740 calls per 256² tile on the
+    bench raster, spent in dict/set churn — with a few argsorts + batched
+    pointer chasing; that walk is the parity oracle in
+    tests/test_vectorize.py.]"""
     E = len(el)
     _, lab_idx = np.unique(el, return_inverse=True)
     vx0 = min(int(ea[:, 0].min()), int(eb[:, 0].min()))
@@ -543,30 +442,10 @@ def _walk_edges_batch(ea: np.ndarray, eb: np.ndarray, el: np.ndarray, is_cut_v):
         t1 = din[:, 0] * (eb[j1, 1] - ea[j1, 1]) - din[:, 1] * (eb[j1, 0] - ea[j1, 0])
         t2 = din[:, 0] * (eb[j2, 1] - ea[j2, 1]) - din[:, 1] * (eb[j2, 0] - ea[j2, 0])
         suc[m2] = np.where(t1 <= t2, j1, j2)  # leftmost turn; first wins ties
-    ok = True
     if ((~end_cut) & ((deg == 0) | (deg > 2))).any():
-        ok = False  # missing/overfull successor: not a well-formed boundary
-    if ok:
-        tgt = suc[suc >= 0]
-        cnt = np.bincount(tgt, minlength=E)
-        if (cnt > 1).any():
-            ok = False  # matching conflict: two in-edges chose one out-edge
-    if not ok:  # exact fallback, label by label (never observed; kept loud-safe)
-        labels, kinds, paths = [], [], []
-        lorder = np.argsort(el, kind="stable")
-        el_s, ea_s, eb_s = el[lorder], ea[lorder], eb[lorder]
-        bnds = np.flatnonzero(np.diff(el_s)) + 1
-        for s0, e0 in zip(np.r_[0, bnds], np.r_[bnds, E]):
-            chains, rings = _walk_edges(
-                ea_s[s0:e0], eb_s[s0:e0],
-                lambda v: bool(is_cut_v(np.array([v[0]]), np.array([v[1]]))[0]),
-            )
-            for kind, ps in ((1, chains), (2, rings)):
-                for p in ps:
-                    labels.append(int(el_s[s0]))
-                    kinds.append(kind)
-                    paths.append(np.asarray(p, dtype=np.int64))
-        return labels, kinds, paths
+        raise AssertionError("boundary vertex with no or >2 successors")
+    if (np.bincount(suc[suc >= 0], minlength=E) > 1).any():
+        raise AssertionError("two in-edges chose one out-edge")
 
     def follow(starts: np.ndarray, stop_start: np.ndarray | None):
         """Batched pointer chase: step every active path at once. Records
@@ -661,9 +540,8 @@ def _merge_chains(chains: list, scut) -> tuple[list, list]:
     lasts = np.stack([c[-1] for c in chains])
     pens = np.stack([c[-2] for c in chains])
     order = np.lexsort((seconds[:, 1], seconds[:, 0], firsts[:, 1], firsts[:, 0]))
-    _BIG = np.int64(1) << 32
-    skey = firsts[:, 0] * _BIG + firsts[:, 1]
-    ekey = lasts[:, 0] * _BIG + lasts[:, 1]
+    skey = keys.pack_rc_np(firsts[:, 0], firsts[:, 1])
+    ekey = keys.pack_rc_np(lasts[:, 0], lasts[:, 1])
     by_start: dict[int, list] = {}
     for i in order:
         by_start.setdefault(int(skey[i]), []).append(int(i))
@@ -846,7 +724,7 @@ def polygonize_rings(
     rows, cols = grid.rows, grid.cols
     x0, y0, cs = grid.x0, grid.y0, grid.cell
     frags = _ring_fragments(comp, grid, tile)
-    n_ty, n_tx = (rows - 1) // tile + 1, (cols - 1) // tile + 1
+    n_ty, n_tx = keys.n_tiles(rows, cols, tile, tile)
     if super_factor and (n_ty > super_factor or n_tx > super_factor):
         frags = _super_merge(frags, grid, tile, super_factor)
     return _final_stitch(frags, x0, y0, cs)
@@ -856,41 +734,24 @@ def _ring_fragments(comp: DataFrame, grid: Grid, tile: int) -> DataFrame:
     """Per-tile boundary-edge extraction + chaining (stage 1 of
     polygonize_rings): chains cut at tile-border vertices, plus per-
     (tile, label) cell counts riding along so the labeled table is
-    scanned once. Paths travel as packed int32 vertex-pair blobs."""
+    scanned once. Each tile receives its own cells plus a 1-cell halo
+    (``keys.halo_tiles``, r = 1) and tells them apart by its window; the
+    halo's 4 diagonal corner cells are never a 4-neighbour of an owned
+    cell, so they never change an edge. Paths travel as packed int32
+    vertex-pair blobs."""
     rows, cols = grid.rows, grid.cols
     assert max(rows, cols) < (1 << 31) - 1, "vertex coords exceed int32 packing"
-    big = np.int64(1) << 32
-    nty, ntx = (rows - 1) // tile + 1, (cols - 1) // tile + 1
-
-    ty = (F.col("row") / tile).cast("long")
-    tx = (F.col("col") / tile).cast("long")
-    # packed (tile, halo) key: tk = (ty·ntx + tx)·2 + halo — one long
-    # through the exchange instead of a 3-field struct (guide §2.3; the
-    # bounds filter folds into the whens, so no post-explode where)
-    entries = F.array_compact(F.array(
-        (ty * ntx + tx) * 2,
-        F.when((F.col("row") % tile == 0) & (ty > 0), ((ty - 1) * ntx + tx) * 2 + 1),
-        F.when((F.col("row") % tile == tile - 1) & (ty < nty - 1),
-               ((ty + 1) * ntx + tx) * 2 + 1),
-        F.when((F.col("col") % tile == 0) & (tx > 0), (ty * ntx + tx - 1) * 2 + 1),
-        F.when((F.col("col") % tile == tile - 1) & (tx < ntx - 1),
-               (ty * ntx + tx + 1) * 2 + 1),
-    ))
     spread = comp.select(
-        (F.col("row") * cols + F.col("col")).alias("rc"),
-        "value", "label", F.explode(entries).alias("tk"),
+        keys.pack_rc("row", "col").alias("rc"), "value", "label",
+        F.explode(keys.halo_tiles("row", "col", tile, tile, rows, cols, 1)).alias("tid"),
     )
 
     def per_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        t_y, t_x = divmod(int(key[0]), ntx)
-        r0, c0 = t_y * tile, t_x * tile
-        h, w = min(tile, rows - r0), min(tile, cols - c0)
-        halo = (pdf["tk"].to_numpy() & 1) == 1
-        rc_all = pdf["rc"].to_numpy()
-        r_all = rc_all // cols
-        c_all = rc_all % cols
+        t_y, t_x, r0, c0, h, w = keys.tile_window(key[0], tile, tile, rows, cols)
+        r_all, c_all = keys.unpack_rc_np(pdf["rc"].to_numpy())
+        keys.check_extent(r_all, c_all, rows, cols)
         lab_all = pdf["label"].to_numpy(np.int64)
-        own = ~halo
+        own = (r_all >= r0) & (r_all < r0 + h) & (c_all >= c0) & (c_all < c0 + w)
         out = {"label": [], "kind": [], "value": [], "n_own": [], "verts": []}
         if not own.any():  # empty float64 columns break Arrow's binary cast
             return pd.DataFrame({"tile_y": [], "tile_x": [], **out}).astype(
@@ -910,7 +771,7 @@ def _ring_fragments(comp: DataFrame, grid: Grid, tile: int) -> DataFrame:
         out["n_own"].extend(int(v) for v in ucnt)
         out["verts"].extend([None] * len(ulab))
         # label lookup over owner + halo cells (sorted-encode + searchsorted)
-        enc_all = r_all * big + c_all
+        enc_all = keys.pack_rc_np(r_all, c_all)
         order = np.argsort(enc_all)
         enc_s = enc_all[order]
         lab_s = lab_all[order]
@@ -919,7 +780,7 @@ def _ring_fragments(comp: DataFrame, grid: Grid, tile: int) -> DataFrame:
         lab = lab_own
         eas, ebs, elab = [], [], []
         for (dr, dc), (a_off, b_off) in _SIDE_EDGES:
-            nenc = (r + dr) * big + (c + dc)
+            nenc = keys.pack_rc_np(r + dr, c + dc)
             idx = np.clip(np.searchsorted(enc_s, nenc), 0, len(enc_s) - 1)
             same = (enc_s[idx] == nenc) & (lab_s[idx] == lab)
             keep = ~same
@@ -933,9 +794,9 @@ def _ring_fragments(comp: DataFrame, grid: Grid, tile: int) -> DataFrame:
         def is_cut_v(xs, ys):
             return (xs == c0) | (xs == c0 + w) | (ys == r0) | (ys == r0 + h)
 
-        # one batched walk over every label's edges at once (r7: the
-        # per-label _walk_edges loop — ~740 tiny python walks per dense
-        # 256² tile — dominated this stage; see _walk_edges_batch)
+        # one batched walk over every label's edges at once (r7: a
+        # per-label walk — ~740 tiny python walks per dense 256² tile —
+        # dominated this stage; see _walk_edges_batch)
         if len(el):
             wl, wk, wp = _walk_edges_batch(ea, eb, el, is_cut_v)
             out["label"].extend(wl)
@@ -948,7 +809,7 @@ def _ring_fragments(comp: DataFrame, grid: Grid, tile: int) -> DataFrame:
         res.insert(1, "tile_x", np.int64(t_x))
         return res
 
-    return spread.groupBy(F.shiftright(F.col("tk"), 1).alias("tid")).applyInPandas(
+    return spread.groupBy("tid").applyInPandas(
         per_tile,
         schema="tile_y long, tile_x long, label long, kind int, value double, "
                "n_own long, verts binary",

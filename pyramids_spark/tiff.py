@@ -56,7 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _blocks, _staged, dtypes as _dt
+from . import _blocks, _staged, dtypes as _dt, keys
 from .grid import Grid
 
 # TIFF tag ids
@@ -104,17 +104,13 @@ class _Variant:
         return struct.pack(self.entry_fmt, tag, typ, count, val)
 
 
-def _ntiles(rows: int, cols: int, th: int, tw: int) -> tuple[int, int]:
-    return (rows + th - 1) // th, (cols + tw - 1) // tw
-
-
 class _Ifd:
     """One IFD's layout: tags + external arrays + its tile data extent."""
 
     def __init__(self, rows, cols, th, tw, is_overview: bool, itemsize: int = 8):
         self.rows, self.cols, self.th, self.tw = rows, cols, th, tw
         self.is_overview = is_overview
-        self.nty, self.ntx = _ntiles(rows, cols, th, tw)
+        self.nty, self.ntx = keys.n_tiles(rows, cols, th, tw)
         self.n_tiles = self.nty * self.ntx
         self.tile_bytes = th * tw * itemsize
 
@@ -519,23 +515,17 @@ def write_geotiff(
         )
         cur = data_start
         for li, (cdf, g) in enumerate(per_level):
-            nty, ntx = _ntiles(g.rows, g.cols, th, tw)
+            nty, ntx = keys.n_tiles(g.rows, g.cols, th, tw)
 
             def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                bb, ti, tj = int(key[0]), int(key[1]), int(key[2])
-                rr, cc = pdf["row"].to_numpy(), pdf["col"].to_numpy()
-                if (
-                    rr.min() < 0 or rr.max() >= g.rows
-                    or cc.min() < 0 or cc.max() >= g.cols
-                ):
-                    # out-of-extent cells would either wrap via fancy
-                    # indexing (negative) or desync the sequential merge
-                    # stream (beyond-grid ti/tj) — fail loudly instead
-                    raise ValueError(
-                        f"cell outside grid extent ({g.rows}x{g.cols}): "
-                        f"rows [{rr.min()},{rr.max()}] cols [{cc.min()},{cc.max()}]"
-                    )
-                block = _blocks.dense_block(pdf, th, tw, ti * th, tj * tw, fill)
+                bb = int(key[0])
+                # out-of-extent cells would either wrap via fancy
+                # indexing (negative) or desync the sequential merge
+                # stream (beyond-grid ti/tj) — fail loudly instead
+                keys.check_extent(pdf["row"].to_numpy(), pdf["col"].to_numpy(),
+                                  g.rows, g.cols)
+                ti, tj, r0, c0 = keys.tile_window(key[1], th, tw, g.rows, g.cols)[:4]
+                block = _blocks.dense_block(pdf, th, tw, r0, c0, fill)
                 # codec runs in the EXECUTORS — the driver only streams
                 # the ready bytes
                 data = _encode_tile(
@@ -547,11 +537,10 @@ def write_geotiff(
 
             keyed = cdf.where(F.col("value").isNotNull()).select(
                 "band", "row", "col", "value",
-                (F.col("row") / th).cast("long").alias("_ti"),
-                (F.col("col") / tw).cast("long").alias("_tj"),
+                keys.tile_key("row", "col", th, tw, ntx).alias("_tk"),
             )
             blocks = (
-                keyed.groupBy("band", "_ti", "_tj")
+                keyed.groupBy("band", "_tk")
                 .applyInPandas(build, "band long, ti long, tj long, data binary")
                 .orderBy("band", "ti", "tj")
             )
@@ -616,24 +605,18 @@ def _write_geotiff_staged(
     try:
         manifests = []
         for li, (cdf, g) in enumerate(per_level):
-            nty, ntx = _ntiles(g.rows, g.cols, th, tw)
+            nty, ntx = keys.n_tiles(g.rows, g.cols, th, tw)
 
             def make_stage(_li: int, _g: Grid):
                 # applyInPandas requires exactly (key, pdf) — bind the
                 # level loop variables through a factory, not defaults
                 def stage(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                    bb, ti, tj = int(key[0]), int(key[1]), int(key[2])
-                    rr, cc = pdf["row"].to_numpy(), pdf["col"].to_numpy()
-                    if (rr.min() < 0 or rr.max() >= _g.rows
-                            or cc.min() < 0 or cc.max() >= _g.cols):
-                        raise ValueError(
-                            f"cell outside grid extent "
-                            f"({_g.rows}x{_g.cols}): "
-                            f"rows [{rr.min()},{rr.max()}] "
-                            f"cols [{cc.min()},{cc.max()}]"
-                        )
-                    block = _blocks.dense_block(pdf, th, tw, ti * th,
-                                                tj * tw, fill)
+                    bb = int(key[0])
+                    keys.check_extent(pdf["row"].to_numpy(),
+                                      pdf["col"].to_numpy(), _g.rows, _g.cols)
+                    ti, tj, r0, c0 = keys.tile_window(
+                        key[1], th, tw, _g.rows, _g.cols)[:4]
+                    block = _blocks.dense_block(pdf, th, tw, r0, c0, fill)
                     data = _encode_tile(
                         _dt.cast_block(block, dt_name), compress, predictor
                     )
@@ -649,11 +632,10 @@ def _write_geotiff_staged(
 
             keyed = cdf.where(F.col("value").isNotNull()).select(
                 "band", "row", "col", "value",
-                (F.col("row") / th).cast("long").alias("_ti"),
-                (F.col("col") / tw).cast("long").alias("_tj"),
+                keys.tile_key("row", "col", th, tw, ntx).alias("_tk"),
             )
             man = (
-                keyed.groupBy("band", "_ti", "_tj")
+                keyed.groupBy("band", "_tk")
                 .applyInPandas(
                     stage, "band long, ti long, tj long, nbytes long")
                 .orderBy("band", "ti", "tj")
@@ -821,7 +803,7 @@ def write_cog_parts(
     fill = _dt.check_fill(dt_name, grid.nodata)
     rows, cols = grid.rows, grid.cols
     os.makedirs(out_dir, exist_ok=True)
-    npi, npj = _ntiles(rows, cols, sh, sw)
+    npi, npj = keys.n_tiles(rows, cols, sh, sw)
     manifest_meta = {
         "x0": grid.x0, "y0": grid.y0, "cell": grid.cell, "rows": rows,
         "cols": cols, "epsg": grid.epsg, "nodata": grid.nodata,
@@ -832,23 +814,16 @@ def write_cog_parts(
     lvls = list(levels)
 
     def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pi, pj = divmod(int(key[0]), 1 << 32)
-        r0, c0 = pi * sh, pj * sw
-        prows, pcols = min(sh, rows - r0), min(sw, cols - c0)
+        pi, pj, r0, c0, prows, pcols = keys.tile_window(key[0], sh, sw, rows, cols)
         pdf = pdf[pdf["value"].notna()]
         n_cells = len(pdf)
         if n_cells:
-            rc = pdf["rc"].to_numpy(np.int64)
-            rr = rc >> 32
-            cc = rc - (rr << 32)
+            rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy(np.int64))
             bb = pdf["band"].to_numpy(np.int64)
-            if (rr.min() < 0 or rr.max() >= rows
-                    or cc.min() < 0 or cc.max() >= cols
-                    or bb.min() < 0 or bb.max() >= n_bands):
-                raise ValueError(
-                    f"cell outside grid extent ({n_bands} bands, "
-                    f"{rows}x{cols})"
-                )
+            msg = f"cell outside grid extent ({n_bands} bands, {rows}x{cols})"
+            keys.check_extent(rr, cc, rows, cols, msg)
+            if bb.min() < 0 or bb.max() >= n_bands:
+                raise ValueError(msg)
         dense = np.full((n_bands, prows, pcols), np.nan, dtype="<f8")
         if n_cells:
             dense[bb, rr - r0, cc - c0] = pdf["value"].to_numpy(np.float64)
@@ -859,7 +834,7 @@ def write_cog_parts(
         )
         arrs, grids = [dense], [pgrid]
         for lv in lvls:
-            orow, ocol = _ntiles(prows, pcols, lv, lv)
+            orow, ocol = keys.n_tiles(prows, pcols, lv, lv)
             ov = np.full((n_bands, orow, ocol), np.nan, dtype="<f8")
             for b in range(n_bands):
                 pad = np.full((orow * lv, ocol * lv), np.nan)
@@ -897,21 +872,28 @@ def write_cog_parts(
         )
 
     spark = cells_df.sparkSession
-    # packed shuffle keys (guide §2.3): rc = row·2³² + col and pid =
-    # pi·2³² + pj replace four longs; 2³² multipliers decode exactly for
-    # any |coord| < 2³¹ so the extent guard sees the original cells
-    keys = spark.createDataFrame(
-        [((i << 32) + j,) for i in range(npi) for j in range(npj)],
-        "_pid long",
+    # packed shuffle keys (guide §2.3, keys.py): the cell key rc and the
+    # dense part key _pid replace four longs. One placeholder row per part
+    # id (unioned, not joined: no second exchange) gives empty parts a
+    # file; cells whose _pid names no part (row < 0, say) form their own
+    # group, and the build tasks decode rc exactly, so the extent guard
+    # sees every cell
+    # placeholder key columns are non-null: a null in the long rc column
+    # would make Arrow hand every part's rc to pandas as float64, which
+    # rounds rc past 2⁵³ (row ≥ 2²¹) onto a neighbouring cell
+    parts = spark.range(npi * npj).select(
+        F.col("id").alias("_pid"),
+        F.lit(0).cast("long").alias("band"),
+        F.lit(0).cast("long").alias("rc"),
+        F.lit(None).cast("double").alias("value"),
     )
     keyed = cells_df.where(F.col("value").isNotNull()).select(
         "band",
-        (F.shiftleft(F.col("row").cast("long"), 32) + F.col("col")).alias("rc"),
+        keys.pack_rc("row", "col").alias("rc"),
         "value",
-        (F.shiftleft((F.col("row") / sh).cast("long"), 32)
-         + (F.col("col") / sw).cast("long")).alias("_pid"),
+        keys.tile_key("row", "col", sh, sw, npj).alias("_pid"),
     )
-    covered = keys.join(keyed, ["_pid"], "left")
+    covered = keyed.unionByName(parts)
     manifest = (
         covered.groupBy("_pid")
         .applyInPandas(

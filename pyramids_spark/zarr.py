@@ -51,7 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _blocks, blosc as _bl, dtypes as _dt
+from . import _blocks, blosc as _bl, dtypes as _dt, keys
 from .grid import Grid
 
 _UNDEF64 = (1 << 64) - 1  # sharding index sentinel: inner chunk missing
@@ -401,18 +401,17 @@ def write_zarr(
             json.dump(meta, f)
 
     def _unpack(pdf: pd.DataFrame) -> pd.DataFrame:
-        rc = pdf["rc"].to_numpy(np.int64)
-        rr = rc >> 32
+        rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy(np.int64))
+        keys.check_extent(rr, cc, rows, cols)
         return pd.DataFrame(
-            {"row": rr, "col": rc - (rr << 32),
-             "value": pdf["value"].to_numpy(np.float64)}
+            {"row": rr, "col": cc, "value": pdf["value"].to_numpy(np.float64)}
         )
 
     def write_chunks(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        b, cid = int(key[0]), int(key[1])
-        ci, cj = divmod(cid, 1 << 32)
+        b = int(key[0])
+        ci, cj, r0, c0, _, _ = keys.tile_window(key[1], ch, cw, rows, cols)
         pdf = _unpack(pdf)
-        block = _blocks.dense_block(pdf, ch, cw, ci * ch, cj * cw, fill)
+        block = _blocks.dense_block(pdf, ch, cw, r0, c0, fill)
         data = _dt.cast_block(block, dt_name).tobytes(order="C")
         if zarr_format == 2:
             name = f"{b}.{ci}.{cj}"
@@ -431,13 +430,12 @@ def write_zarr(
     def write_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
         import struct
 
-        b, cid = int(key[0]), int(key[1])
-        si, sj = divmod(cid, 1 << 32)
+        b = int(key[0])
+        si, sj, r0, c0, _, _ = keys.tile_window(key[1], sh, sw, rows, cols)
         pdf = _unpack(pdf)
         niy, nix = sh // ch, sw // cw
         index = np.full((niy * nix, 2), _UNDEF64, np.uint64)
         blobs, cur = [], 0
-        r0, c0 = si * sh, sj * sw
         grp = pdf.groupby(
             [(pdf["row"] - r0) // ch, (pdf["col"] - c0) // cw], sort=True
         )
@@ -463,15 +461,15 @@ def write_zarr(
         )
 
     div_r, div_c = (ch, cw) if shards is None else (sh, sw)
-    # packed shuffle keys (guide §2.3): rc = row·2³² + col and cid =
-    # ci·2³² + cj replace four longs; 2³² multipliers decode exactly for
-    # any |coord| < 2³¹, so behaviour on out-of-extent inputs is unchanged
+    # packed shuffle keys (guide §2.3, keys.py): the cell key rc and the
+    # dense chunk/shard key cid replace four longs; the write tasks decode
+    # rc exactly and fail loudly on a cell outside the grid
     keyed = cells_df.where(F.col("value").isNotNull()).select(
         "band",
-        (F.shiftleft(F.col("row").cast("long"), 32) + F.col("col")).alias("rc"),
+        keys.pack_rc("row", "col").alias("rc"),
         "value",
-        (F.shiftleft((F.col("row") / div_r).cast("long"), 32)
-         + (F.col("col") / div_c).cast("long")).alias("cid"),
+        keys.tile_key("row", "col", div_r, div_c,
+                      keys.n_tiles(rows, cols, div_r, div_c)[1]).alias("cid"),
     )
     manifest = (
         keyed.groupBy("band", "cid")

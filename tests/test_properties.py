@@ -1,7 +1,9 @@
-"""Hypothesis property tests over the pure-numpy kernels (no Spark session
-— these fuzz the math the distributed operators are built on)."""
+"""Hypothesis property tests over the kernels the distributed operators
+are built on — mostly pure numpy; the raster key tests also evaluate the
+Column forms in Spark to check them against their numpy twins."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyramids_spark import cells
@@ -269,3 +271,87 @@ def test_g711_idempotent_on_representable_levels(n, law, seed):
     out, _ = C.decode_wav(C.encode_wav_g711(s, 8000, law=law))
     # encoding a representable level must return exactly that level
     np.testing.assert_array_equal(out[:, 0], s)
+
+
+# --- raster key formats (pyramids_spark.keys) ------------------------------
+
+_I31 = 2**31 - 1
+_coord = st.one_of(st.integers(-_I31, _I31), st.sampled_from([-_I31, _I31, -1, 0, 1]))
+
+
+@settings(deadline=None, max_examples=15)
+@given(st.lists(st.tuples(_coord, _coord), min_size=1, max_size=40))
+def test_pack_rc_roundtrips_int_and_long_columns(spark, cells_rc):
+    """pack_rc/unpack_rc round-trip exactly for int AND long inputs over
+    the whole signed 32-bit range, and the Column forms are bit-equal to
+    their numpy twins."""
+    from pyspark.sql import functions as F
+
+    from pyramids_spark import keys
+
+    r = np.array([a for a, _ in cells_rc], np.int64)
+    c = np.array([b for _, b in cells_rc], np.int64)
+    rc_np = keys.pack_rc_np(r, c)
+    rr_np, cc_np = keys.unpack_rc_np(rc_np)
+    assert (rr_np == r).all() and (cc_np == c).all()
+    df = spark.createDataFrame([(int(a), int(b)) for a, b in zip(r, c)], "row long, col long")
+    for typ in ("int", "long"):
+        typed = df.select(F.col("row").cast(typ).alias("row"), F.col("col").cast(typ).alias("col"))
+        rc = keys.pack_rc("row", "col")
+        rr, cc = keys.unpack_rc(rc)
+        got = typed.select(rc.alias("rc"), rr.alias("rr"), cc.alias("cc")).collect()
+        assert [x.rc for x in got] == rc_np.tolist()
+        assert [x.rr for x in got] == r.tolist()
+        assert [x.cc for x in got] == c.tolist()
+
+
+@settings(deadline=None, max_examples=15)
+@given(
+    st.integers(1, 40), st.integers(1, 40), st.integers(1, 9), st.integers(1, 9),
+    st.integers(0, 9), st.randoms(use_true_random=False),
+)
+def test_tile_key_and_halo_tiles_match_numpy_and_brute_force(spark, rows, cols, th, tw, r, rnd):
+    """tile_key equals numpy floor division at and beyond the grid edges;
+    tile_window inverts it; halo_tiles (Column and numpy twin) equals the
+    brute-force set of tiles whose window, grown by r, holds the cell."""
+    from pyramids_spark import keys
+
+    r = min(r, th, tw)
+    nti, ntj = keys.n_tiles(rows, cols, th, tw)
+    edges_r = [-th, -1, 0, th - 1, th, rows - 1, rows, rows + th]
+    edges_c = [-tw, -1, 0, tw - 1, tw, cols - 1, cols, cols + tw]
+    cells_rc = [(a, b) for a in edges_r for b in edges_c] + [
+        (rnd.randrange(rows), rnd.randrange(cols)) for _ in range(30)]
+    row = np.array([a for a, _ in cells_rc], np.int64)
+    col = np.array([b for _, b in cells_rc], np.int64)
+    df = spark.createDataFrame([(int(a), int(b)) for a, b in cells_rc], "row int, col int")
+    got = df.select(keys.tile_key("row", "col", th, tw, ntj).alias("k"),
+                    keys.halo_tiles("row", "col", th, tw, rows, cols, r).alias("h")).collect()
+    tk_np = keys.tile_key_np(row, col, th, tw, ntj)
+    assert [x.k for x in got] == tk_np.tolist()
+    assert tk_np.tolist() == [(a // th) * ntj + b // tw for a, b in cells_rc]
+    halo_np = keys.halo_tiles_np(row, col, th, tw, rows, cols, r)
+    assert [list(x.h) for x in got] == [h.tolist() for h in halo_np]
+    for (a, b), k, h in zip(cells_rc, tk_np, halo_np):
+        if not (0 <= a < rows and 0 <= b < cols):
+            continue
+        ti, tj, r0, c0, hh, ww = keys.tile_window(k, th, tw, rows, cols)
+        assert (ti, tj) == (a // th, b // tw)
+        assert r0 <= a < r0 + hh and c0 <= b < c0 + ww
+        want = {
+            ki * ntj + kj for ki in range(nti) for kj in range(ntj)
+            if ki * th - r <= a < ki * th + min(th, rows - ki * th) + r
+            and kj * tw - r <= b < kj * tw + min(tw, cols - kj * tw) + r
+        }
+        assert h[0] == k and len(set(h.tolist())) == len(h)
+        assert set(h.tolist()) == want, (a, b)
+
+
+def test_check_extent_rejects_each_edge():
+    from pyramids_spark import keys
+
+    keys.check_extent(np.array([0, 4]), np.array([0, 6]), 5, 7)
+    keys.check_extent(np.array([], np.int64), np.array([], np.int64), 5, 7)
+    for rr, cc in ((-1, 0), (5, 0), (0, -1), (0, 7)):
+        with pytest.raises(ValueError, match="outside grid extent"):
+            keys.check_extent(np.array([rr]), np.array([cc]), 5, 7)

@@ -291,6 +291,70 @@ def test_cluster_single_component_spanning_many_tiles(spark):
     assert got.label.min() == 0  # canonical min cell index
 
 
+def _turn_key(din, cur):
+    """Leftmost-turn comparator in MAP space; with y flipped the map cross
+    product sign equals (dvr1·dvc2 − dvc1·dvr2)."""
+    def turn(v):
+        dout = (v[0] - cur[0], v[1] - cur[1])
+        return din[0] * dout[1] - din[1] * dout[0]
+
+    return turn
+
+
+def _walk_edges(ea: np.ndarray, eb: np.ndarray, is_cut) -> tuple[list, list]:
+    """Per-label python walk — the parity oracle for
+    ``vectorize._walk_edges_batch``. Chain directed boundary edges into
+    (open chains, closed rings).
+
+    ``is_cut(v)`` marks vertices where chains must be cut (tile-boundary
+    vertices — the turn decision there may involve edges from another
+    tile).  Open chains run cut-vertex → cut-vertex; closed rings never
+    touch a cut vertex (every out-edge at a cut vertex starts a chain, so
+    by in/out balance none remain).  At interior pinch vertices the
+    leftmost-turn rule picks the outgoing edge — the same rule the stitch
+    applies at cut vertices, so the distributed decomposition matches the
+    monolithic walk."""
+    out_edges: dict[tuple, list] = {}
+    edges = sorted(
+        (
+            (int(a[0]), int(a[1])), (int(b[0]), int(b[1]))
+        )
+        for a, b in zip(ea, eb)
+    )
+    remaining = set(edges)
+    for a, b in edges:
+        out_edges.setdefault(a, []).append(b)
+
+    def advance(path, cur, prev, stop):
+        while True:
+            if stop(cur):
+                return
+            cand = [v for v in out_edges.get(cur, ()) if (cur, v) in remaining]
+            if len(cand) == 1:
+                nxt = cand[0]
+            else:
+                nxt = min(cand, key=_turn_key((cur[0] - prev[0], cur[1] - prev[1]), cur))
+            remaining.discard((cur, nxt))
+            path.append(nxt)
+            prev, cur = cur, nxt
+
+    chains, rings = [], []
+    for a, b in edges:  # open chains first: every cut-vertex out-edge starts one
+        if not is_cut(a) or (a, b) not in remaining:
+            continue
+        remaining.discard((a, b))
+        path = [a, b]
+        advance(path, b, a, stop=is_cut)
+        chains.append(path)
+    while remaining:  # interior rings: deterministic min-edge start
+        a, b = min(remaining)
+        remaining.discard((a, b))
+        path = [a, b]  # advance appends up to and including the closing `a`
+        advance(path, b, a, stop=lambda v: v == a)
+        rings.append(path)
+    return chains, rings
+
+
 @pytest.mark.parametrize("seed", [0, 1, 2, 7])
 def test_walk_edges_batch_matches_per_label_walk(seed):
     """r7: the vectorized successor-array walk must reproduce the per-label
@@ -348,7 +412,7 @@ def test_walk_edges_batch_matches_per_label_walk(seed):
     bnds = np.flatnonzero(np.diff(el_s)) + 1
     n_edges = 0
     for s0, e0 in zip(np.r_[0, bnds], np.r_[bnds, len(el_s)]):
-        chains, rings = vectorize._walk_edges(
+        chains, rings = _walk_edges(
             ea_s[s0:e0], eb_s[s0:e0],
             lambda v: v[0] == 0 or v[0] == W or v[1] == 0 or v[1] == H,
         )
@@ -361,3 +425,34 @@ def test_walk_edges_batch_matches_per_label_walk(seed):
     assert n_edges > 100  # the grid actually produced boundary work
     assert got_chains == exp_chains
     assert got_rings == exp_rings
+
+
+def test_int_typed_cells_match_long_typed_on_huge_grid(spark):
+    """Results must not depend on int32 vs int64 (row, col) columns. On a
+    70000² grid, ``row·cols`` passes 2³¹, so a key computed in int32
+    overflows; the same 9 cells typed int and typed long must give
+    identical focal, cluster, polygonize and ring output."""
+    from pyspark.sql import functions as F
+
+    from pyramids_spark.operators import focal
+
+    n = 70_000
+    g = Grid(x0=0.0, y0=float(n), cell=1.0, rows=n, cols=n)
+    rc = [(69990, 69990), (69990, 69991), (69991, 69990), (69992, 69992),
+          (69993, 69995), (69994, 69995), (69997, 69999), (69999, 69999),
+          (69999, 69996)]
+    pdf = pd.DataFrame({"band": 0, "row": [r for r, _ in rc], "col": [c for _, c in rc],
+                        "value": [1.0, 1.0, 2.0, 1.0, 3.0, 3.0, 2.0, 2.0, 2.0]})
+    longs = spark.createDataFrame(pdf.astype({"row": "int64", "col": "int64"}))
+    ints = longs.select("band", F.col("row").cast("int").alias("row"),
+                        F.col("col").cast("int").alias("col"), "value")
+    ops = {
+        "focal": lambda df: focal.focal_tiles(df, g, r=1, tile=64),
+        "cluster": lambda df: vectorize.cluster(df, g, lo=0.0, hi=9.0),
+        "polygonize": lambda df: vectorize.polygonize(df, g),
+        "rings": lambda df: vectorize.polygonize_rings(df, g),
+    }
+    for name, op in ops.items():
+        want = sorted(tuple(r) for r in op(longs).collect())
+        assert want, name
+        assert sorted(tuple(r) for r in op(ints).collect()) == want, name

@@ -512,3 +512,46 @@ def test_int_typed_cells_roundtrip_zarr_and_cog_parts(spark, tmp_path):
                  SparkDataset.from_geotiff_parts(spark, str(tmp_path / "p"))):
         got = {(r.band, r.row, r.col): r.value for r in back.df.collect()}
         assert got == want
+
+
+@pytest.mark.parametrize("bad", [(-1, 3), (20, 3), (3, 12)])
+def test_out_of_extent_cell_fails_loudly_in_zarr_and_cog_parts(spark, tmp_path, bad):
+    """A cell at row = -1, row = rows or col = cols must raise in every
+    packed-key sink — zarr v2, v3 and v3-sharded, and the COG parts —
+    instead of landing in a wrapped or neighbouring cell of some chunk."""
+    from pyramids_spark import tiff, zarr
+
+    g = Grid(x0=0.0, y0=20.0, cell=1.0, rows=20, cols=12, epsg=4326, nodata=-9999.0)
+    extra = spark.createDataFrame(
+        [(0, bad[0], bad[1], 7.0)], "band long, row long, col long, value double")
+    cells_df = grid_df(spark, g).unionByName(extra)
+    writes = {
+        "v2": lambda p: zarr.write_zarr(cells_df, g, p, chunks=(4, 4)),
+        "v3": lambda p: zarr.write_zarr(cells_df, g, p, chunks=(4, 4), zarr_format=3),
+        "v3_sharded": lambda p: zarr.write_zarr(
+            cells_df, g, p, chunks=(4, 4), zarr_format=3, shards=(8, 8)),
+        "cog_parts": lambda p: tiff.write_cog_parts(
+            cells_df, g, 1, p, shard=(8, 8), tile=(4, 4), levels=()),
+    }
+    for name, write in writes.items():
+        with pytest.raises(Exception, match="outside grid extent"):
+            write(str(tmp_path / name))
+
+
+def test_cog_parts_keep_cells_past_row_2_21(spark, tmp_path):
+    """A cell at row ≥ 2²¹ packs to rc ≥ 2⁵³. The parts writer must hand
+    rc to its build tasks as int64: as float64 it rounds onto a
+    neighbouring cell of the same part, which the extent guard cannot
+    see."""
+    from pyramids_spark import tiff
+
+    rows = (1 << 21) + 4
+    g = Grid(x0=0.0, y0=float(rows), cell=1.0, rows=rows, cols=2, epsg=4326,
+             nodata=-9999.0)
+    cells_df = spark.createDataFrame(
+        [(0, (1 << 21) + 1, 1, 7.0)], "band long, row long, col long, value double")
+    tiff.write_cog_parts(cells_df, g, 1, str(tmp_path / "p"),
+                         shard=(1 << 19, 2), tile=(256, 16), levels=())
+    back, _, _ = tiff.read_geotiff_parts(spark, str(tmp_path / "p"))
+    got = [(r.band, r.row, r.col, r.value) for r in back.collect()]
+    assert got == [(0, (1 << 21) + 1, 1, 7.0)]
