@@ -2737,7 +2737,9 @@ _MERC_GRID = reproj_op.reproject_plan(CROP_GRID, 3857)
 def q_reproject_3857(spark, sf_dir):
     """to_crs 4326→3857 (maintain_alignment=False corner-transform grid)."""
     g = grid_df(spark, CROP_GRID)
-    return reproj_op.to_crs_nearest(g, CROP_GRID, _MERC_GRID)
+    return reproj_op.to_crs_nearest(
+        g, CROP_GRID, _MERC_GRID, inverse=reproj_op.resolve_crs(3857).inverse
+    )
 
 
 def sql_reproject_3857():
@@ -2764,8 +2766,7 @@ def q_reproject_4087(spark, sf_dir):
     y=Rφ; extends the to_crs dispatch beyond 3857/UTM, VERDICT r1 #10)."""
     g = grid_df(spark, CROP_GRID)
     return reproj_op.to_crs_nearest(
-        g, CROP_GRID, _EQC_GRID,
-        inverse=(reproj_op.inv_eqc_lon, reproj_op.inv_eqc_lat),
+        g, CROP_GRID, _EQC_GRID, inverse=reproj_op.resolve_crs(4087).inverse
     )
 
 
@@ -2789,10 +2790,7 @@ def q_reproject_sinusoidal(spark, sf_dir):
     axes: λ = x/(R·cos(y/R)))."""
     g = grid_df(spark, CROP_GRID)
     return reproj_op.to_crs_nearest(
-        g, CROP_GRID, _SINU_GRID,
-        inverse=lambda dx, dy: (
-            reproj_op.inv_sinu_lon(dx, dy), reproj_op.inv_sinu_lat(dy)
-        ),
+        g, CROP_GRID, _SINU_GRID, inverse=reproj_op.resolve_crs(54008).inverse
     )
 
 
@@ -2822,7 +2820,7 @@ def q_reproject_lcc(spark, sf_dir):
     ``feature/crs.py:162-268``)."""
     g = grid_df(spark, CROP_GRID)
     return reproj_op.to_crs_nearest(
-        g, CROP_GRID, _LCC_GRID, inverse=reproj_op.conic_inverse_cols(2154)
+        g, CROP_GRID, _LCC_GRID, inverse=reproj_op.resolve_crs(2154).inverse
     )
 
 
@@ -2846,7 +2844,7 @@ def q_reproject_albers(spark, sf_dir):
     form, authalic-series inverse latitude)."""
     g = grid_df(spark, CROP_GRID)
     return reproj_op.to_crs_nearest(
-        g, CROP_GRID, _ALBERS_GRID, inverse=reproj_op.conic_inverse_cols(5070)
+        g, CROP_GRID, _ALBERS_GRID, inverse=reproj_op.resolve_crs(5070).inverse
     )
 
 

@@ -293,65 +293,19 @@ class SparkDataset:
 
     def to_crs(self, epsg: int | str) -> "SparkDataset":
         """Target as an EPSG int, a PROJ4 string ('+proj=lcc +lat_1=…'), or
-        OGC WKT1 (.prj) / WKT2 (ISO 19162) CRS text; strings parse via
-        ``reproject.parse_proj4`` / ``parse_wkt_crs`` (reference accepts
-        any CRS input through OSR, ``feature/crs.py:162-268``)."""
-        if isinstance(epsg, str):
-            code = 0
-            if epsg.lstrip().startswith(
-                ("PROJCRS", "PROJCS", "GEOGCRS", "GEOGCS", "GEODCRS")
-            ):
-                fam, arg = _reproject.parse_wkt_crs(epsg)
-                # carry the WKT's own authority onto the output grid so a
-                # later to_cog writes real GeoKey CRS metadata
-                code = _reproject.get_epsg_from_prj(epsg) or 0
-            else:
-                fam, arg = _reproject.parse_proj4(epsg)
-            if fam == "merc":
-                return self.to_crs(3857)
-            if fam == "eqc":
-                return self.to_crs(4087)
-            if fam == "sinu":
-                return self.to_crs(54008)
-            if fam == "utm":
-                return self.to_crs(arg)
-            if fam == "longlat":
-                return self
-            p = arg  # lcc / albers with explicit ellipsoidal params
-            dst = _reproject.reproject_plan_conic(self.grid, fam, p, epsg=code)
-            return SparkDataset(
-                _reproject.to_crs_nearest(
-                    self.df, self.grid, dst,
-                    inverse=_reproject.conic_inverse_params(fam, p),
-                ),
-                dst,
-            )
-        closed_form = {
-            3857: (_reproject.inv_merc_lon, _reproject.inv_merc_lat),
-            4087: (_reproject.inv_eqc_lon, _reproject.inv_eqc_lat),
-            54008: lambda dx, dy: (
-                _reproject.inv_sinu_lon(dx, dy), _reproject.inv_sinu_lat(dy)
-            ),
-        }
-        if epsg in _reproject.CONIC_EPSG:  # LCC / Albers ellipsoidal closed forms
-            closed_form[epsg] = _reproject.conic_inverse_cols(epsg)
-        if epsg in closed_form:
-            dst = _reproject.reproject_plan(self.grid, epsg)
-            return SparkDataset(
-                _reproject.to_crs_nearest(
-                    self.df, self.grid, dst, inverse=closed_form[epsg]
-                ),
-                dst,
-            )
-        if 32601 <= epsg <= 32760:  # UTM zones via the Krüger-series UDF
-            dst = _reproject.reproject_plan_utm(self.grid, epsg)
-            return SparkDataset(
-                _reproject.to_crs_nearest_utm(self.df, self.grid, dst), dst
-            )
-        raise NotImplementedError(
-            f"supported targets: 3857, 4087, 54008 (sinusoidal), "
-            f"LCC/Albers {sorted(_reproject.CONIC_EPSG)}, "
-            f"UTM 326xx/327xx (got {epsg})"
+        OGC WKT1 (.prj) / WKT2 (ISO 19162) CRS text (reference accepts any
+        CRS input through OSR, ``feature/crs.py:162-268``). The target
+        resolves to one entry of the CRS table
+        (``reproject.resolve_crs``); its forward transform plans the output
+        grid from the corners and its inverse drives the nearest gather. A
+        geographic target returns the dataset unchanged."""
+        crs = _reproject.resolve_crs(epsg)
+        if crs is None:
+            return self
+        dst = _reproject.reproject_plan(self.grid, crs)
+        return SparkDataset(
+            _reproject.to_crs_nearest(self.df, self.grid, dst, inverse=crs.inverse),
+            dst,
         )
 
     def algebra(self, other: "SparkDataset", op: str = "+") -> "SparkDataset":

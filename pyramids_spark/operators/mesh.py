@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..grid import Grid
 from .knn import knn_join
+from .reproject import dst_cells
 
 
 def face_centroids(nodes: DataFrame, faces: DataFrame) -> DataFrame:
@@ -51,18 +52,6 @@ def locate_nearest_node(nodes: DataFrame, queries: list[tuple[int, float, float]
     return knn_join(nodes.withColumnRenamed("node_id", "key"), queries, k=k)
 
 
-def _grid_centres(spark, grid: Grid) -> DataFrame:
-    return (
-        spark.range(grid.rows * grid.cols)
-        .select(
-            (F.col("id") / grid.cols).cast("long").alias("row"),
-            (F.col("id") % grid.cols).cast("long").alias("col"),
-        )
-        .withColumn("qx", grid.x_center_col(F.col("col")))
-        .withColumn("qy", grid.y_center_col(F.col("row")))
-    )
-
-
 def mesh_to_grid_nearest(
     nodes: DataFrame, grid: Grid, value: str = "data",
     max_distance: float | None = None,
@@ -82,7 +71,12 @@ def mesh_to_grid_nearest(
     max_distance away, so it can only be the argmin when the answer is
     NULL anyway.  The per-cell argmin is a decomposable struct-min
     (map-side partial agg), not a window; a per-centre sentinel keeps
-    no-candidate cells in the output without a second join."""
+    no-candidate cells in the output without a second join.
+
+    Building the plan runs the ``limit(…).count()`` probe that decides
+    whether the node side is broadcast: one action, two Spark jobs under
+    adaptive execution on a multi-partition node table (the limit's
+    shuffle-map stage, then the count)."""
     spark = nodes.sparkSession
     max_distance = 2 * grid.cell if max_distance is None else max_distance
     import math
@@ -90,7 +84,7 @@ def mesh_to_grid_nearest(
     bsize = max(1, int(math.ceil(max_distance / grid.cell)))
     bw = bsize * grid.cell
     centres = (
-        _grid_centres(spark, grid)
+        dst_cells(spark, grid)
         .withColumn("_bx", F.floor(F.col("col") / bsize).cast("long"))
         .withColumn("_by", F.floor(F.col("row") / bsize).cast("long"))
     )
@@ -117,7 +111,7 @@ def mesh_to_grid_nearest(
     _BROADCAST_NODES_MAX = 300_000
     nodes_small = nodes.limit(_BROADCAST_NODES_MAX + 1).count() <= _BROADCAST_NODES_MAX
     cand = centres.join(F.broadcast(nb) if nodes_small else nb, ["_bx", "_by"])
-    d2 = (F.col("qx") - F.col("x")) ** 2 + (F.col("qy") - F.col("y")) ** 2
+    d2 = (F.col("_dx") - F.col("x")) ** 2 + (F.col("_dy") - F.col("y")) ** 2
     vtype = nodes.schema[value].dataType.simpleString()
     scored = cand.select(
         "row", "col",
@@ -260,7 +254,7 @@ def mesh_to_grid_linear(
             F.col(value).alias(f"_v{i}"),
         )
         tri = tri.join(nd, f"_n{i}")
-    centres = _grid_centres(spark, grid)
+    centres = dst_cells(spark, grid)
     c = lambda s: F.col(s)  # noqa: E731
     # face bbox → covering col/row span, clamped to the grid; a face whose
     # bbox misses the grid entirely is dropped (sequence(a,b) with a>b would
@@ -287,14 +281,14 @@ def mesh_to_grid_linear(
     # join partitions both sides on (row, col); AQE may still choose to
     # broadcast a genuinely small mesh at runtime.
     j = centres.join(tric, ["row", "col"]).where(
-        (c("qx") >= F.least(c("_x0"), c("_x1"), c("_x2")))
-        & (c("qx") <= F.greatest(c("_x0"), c("_x1"), c("_x2")))
-        & (c("qy") >= F.least(c("_y0"), c("_y1"), c("_y2")))
-        & (c("qy") <= F.greatest(c("_y0"), c("_y1"), c("_y2")))
+        (c("_dx") >= F.least(c("_x0"), c("_x1"), c("_x2")))
+        & (c("_dx") <= F.greatest(c("_x0"), c("_x1"), c("_x2")))
+        & (c("_dy") >= F.least(c("_y0"), c("_y1"), c("_y2")))
+        & (c("_dy") <= F.greatest(c("_y0"), c("_y1"), c("_y2")))
     )
     det = (c("_y1") - c("_y2")) * (c("_x0") - c("_x2")) + (c("_x2") - c("_x1")) * (c("_y0") - c("_y2"))
-    w0 = ((c("_y1") - c("_y2")) * (c("qx") - c("_x2")) + (c("_x2") - c("_x1")) * (c("qy") - c("_y2"))) / det
-    w1 = ((c("_y2") - c("_y0")) * (c("qx") - c("_x2")) + (c("_x0") - c("_x2")) * (c("qy") - c("_y2"))) / det
+    w0 = ((c("_y1") - c("_y2")) * (c("_dx") - c("_x2")) + (c("_x2") - c("_x1")) * (c("_dy") - c("_y2"))) / det
+    w1 = ((c("_y2") - c("_y0")) * (c("_dx") - c("_x2")) + (c("_x0") - c("_x2")) * (c("_dy") - c("_y2"))) / det
     w2 = F.lit(1.0) - w0 - w1
     cand = (
         j.where(det != 0.0)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..grid import Grid
+from .reproject import dst_cells, to_crs_nearest
 
 
 def to_xyz(cells_df: DataFrame, grid: Grid) -> DataFrame:
@@ -177,27 +178,10 @@ def align_nearest(src: DataFrame, src_grid: Grid, dst_grid: Grid) -> DataFrame:
     containing its centre — nearest-neighbour always, the reference's
     ``Dataset.align`` contract (``spatial.py:642-761``, GRA_NearestNeighbour).
 
-    Implemented as: generate dst cells → arithmetic map centre→(src_row,
-    src_col) → equi-join src. The generate side is ``spark.range`` (cheap,
-    parallel); the join hash-partitions on dense int keys — no skew.
+    The same-CRS case of the warp gather :func:`reproject.to_crs_nearest`
+    (destination cells → centre → ``(src_row, src_col)`` → equi-join src).
     """
-    spark = src.sparkSession
-    ncells = dst_grid.rows * dst_grid.cols
-    out = (
-        spark.range(ncells)
-        .select(
-            (F.col("id") / F.lit(dst_grid.cols)).cast("long").alias("row"),
-            (F.col("id") % F.lit(dst_grid.cols)).cast("long").alias("col"),
-        )
-        .withColumn("_x", dst_grid.x_center_col(F.col("col")))
-        .withColumn("_y", dst_grid.y_center_col(F.col("row")))
-        .withColumn("src_row", src_grid.row_of_col(F.col("_y")))
-        .withColumn("src_col", src_grid.col_of_col(F.col("_x")))
-    )
-    s = src.select(
-        "band", F.col("row").alias("src_row"), F.col("col").alias("src_col"), "value"
-    )
-    return out.join(s, ["src_row", "src_col"]).select("band", "row", "col", "value")
+    return to_crs_nearest(src, src_grid, dst_grid)
 
 
 def resample_bilinear(src: DataFrame, src_grid: Grid, dst_grid: Grid) -> DataFrame:
@@ -206,18 +190,12 @@ def resample_bilinear(src: DataFrame, src_grid: Grid, dst_grid: Grid) -> DataFra
     interpolates the 4 surrounding source CELL CENTRES (edge-clamped);
     NULL if any contributing corner is nodata. Four shifted equi-joins —
     pure DataFrame algebra, SQL-twinnable."""
-    spark = src.sparkSession
-    ncells = dst_grid.rows * dst_grid.cols
-    fx = (dst_grid.x_center_col(F.col("col")) - F.lit(src_grid.x0)) / F.lit(src_grid.cell) - 0.5
-    fy = (F.lit(src_grid.y0) - dst_grid.y_center_col(F.col("row"))) / F.lit(src_grid.cell) - 0.5
+    fx = (F.col("_dx") - F.lit(src_grid.x0)) / F.lit(src_grid.cell) - 0.5
+    fy = (F.lit(src_grid.y0) - F.col("_dy")) / F.lit(src_grid.cell) - 0.5
     clampc = lambda c: F.greatest(F.lit(0), F.least(F.lit(src_grid.cols - 1), c))  # noqa: E731
     clampr = lambda c: F.greatest(F.lit(0), F.least(F.lit(src_grid.rows - 1), c))  # noqa: E731
     out = (
-        spark.range(ncells)
-        .select(
-            (F.col("id") / F.lit(dst_grid.cols)).cast("long").alias("row"),
-            (F.col("id") % F.lit(dst_grid.cols)).cast("long").alias("col"),
-        )
+        dst_cells(src.sparkSession, dst_grid)
         .withColumn("_fx", fx)
         .withColumn("_fy", fy)
         .withColumn("_c0", clampc(F.floor("_fx").cast("long")))
@@ -272,10 +250,8 @@ def resample_cubic(src: DataFrame, src_grid: Grid, dst_grid: Grid) -> DataFrame:
     at 10^12 cells this beats the 16-way join chain the bilinear path uses
     for its 4 taps, and the fixed-order sum keeps the doubles bit-stable
     for the oracle."""
-    spark = src.sparkSession
-    ncells = dst_grid.rows * dst_grid.cols
-    fx = (dst_grid.x_center_col(F.col("col")) - F.lit(src_grid.x0)) / F.lit(src_grid.cell) - 0.5
-    fy = (F.lit(src_grid.y0) - dst_grid.y_center_col(F.col("row"))) / F.lit(src_grid.cell) - 0.5
+    fx = (F.col("_dx") - F.lit(src_grid.x0)) / F.lit(src_grid.cell) - 0.5
+    fy = (F.lit(src_grid.y0) - F.col("_dy")) / F.lit(src_grid.cell) - 0.5
     offsets = [(i, j) for i in (-1, 0, 1, 2) for j in (-1, 0, 1, 2)]
     taps = F.array(*[
         F.struct(
@@ -286,11 +262,7 @@ def resample_cubic(src: DataFrame, src_grid: Grid, dst_grid: Grid) -> DataFrame:
         for t, (i, j) in enumerate(offsets)
     ])
     base = (
-        spark.range(ncells)
-        .select(
-            (F.col("id") / F.lit(dst_grid.cols)).cast("long").alias("row"),
-            (F.col("id") % F.lit(dst_grid.cols)).cast("long").alias("col"),
-        )
+        dst_cells(src.sparkSession, dst_grid)
         .withColumn("_fx", fx)
         .withColumn("_fy", fy)
         .withColumn("_tx", F.col("_fx") - F.floor("_fx"))
@@ -331,7 +303,7 @@ def resample(src: DataFrame, src_grid: Grid, cell: float) -> tuple[DataFrame, Gr
     """Reference ``Dataset.resample`` nearest method (``spatial.py:238-358``):
     same extent, new cell size, rows = round(extent/cell)."""
     dst = src_grid.with_cell(cell)
-    return align_nearest(src, src_grid, dst), dst
+    return to_crs_nearest(src, src_grid, dst), dst
 
 
 def overview_rollup(cells_df: DataFrame, level: int = 2, stat: str = "avg") -> DataFrame:

@@ -1,52 +1,56 @@
-"""Reprojection: raster to_crs / align across CRSes, and coordinate math.
+"""The raster warp: ``to_crs``, ``resample`` and ``align`` as one gather.
 
 Reference: ``Dataset.to_crs`` (``/root/reference/src/pyramids/dataset/ops/
-spatial.py:65-157``; manual corner-transform path ``:360-457``) and the
-plan-once ``Reprojector`` (``reproject.py:35-213``). Without GDAL/pyproj we
-implement the closed-form spherical Web-Mercator transform (EPSG:4326 ↔
-3857) — the projection the reference's own tile math uses
-(``basemap/tiles.py``, mercantile) — as pure column expressions, and express
-to_crs as the standard distributed gather:
+spatial.py:65-157``; manual corner-transform path ``:360-457``), the
+plan-once ``Reprojector`` (``reproject.py:35-213``), ``resample``
+(``spatial.py:238-358``) and ``align`` (``spatial.py:642-761``). Every
+nearest-neighbour warp here is one plan (SURVEY §2.8):
 
-    generate dst grid cells → inverse-project dst centres to src CRS →
-    floor-map to src (row, col) → equi-join the src cell table.
+    :func:`dst_cells` (one row per destination cell, centre ``_dx, _dy``)
+    → inverse-transform the centre into the source CRS
+    → floor-map to the source ``(src_row, src_col)``
+    → equi-join the source cell table (:func:`to_crs_nearest`).
 
-That plan is projection-agnostic: any (inverse-)transform expressible as
-column math or a pandas UDF slots into the same join. ``convert_longitude``
+``align`` and ``resample`` are the same-CRS case (no inverse). The
+bilinear and cubic resamplers in ``raster.py`` start from the same
+:func:`dst_cells` frame.
+
+Without GDAL/pyproj the target CRS comes from one table: :func:`resolve_crs`
+turns an EPSG code, a PROJ4 string or OGC WKT text into a :class:`Crs` — a
+numpy forward transform (for :func:`reproject_plan`'s corner transform) and
+a Column inverse (for the per-cell gather). The families are spherical
+web-mercator (3857), world equidistant cylindrical (4087), sinusoidal
+(54008), ellipsoidal Lambert conformal conic and Albers equal-area (the
+registered :data:`CONIC_EPSG` codes or explicit :class:`ConicParams`) as
+codegen column math, and UTM, whose Krüger series runs once per cell in an
+Arrow-batched pandas UDF (``utm.reproject_udf``). ``convert_longitude``
 (0..360 → −180..180, ``spatial.py:192-236``) is the degenerate affine case.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from functools import partial
+from typing import Callable
+
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..grid import Grid
+from . import utm
 
 R = 6378137.0  # WGS84 spherical radius used by Web-Mercator
 
 
-def merc_x(lon: Column) -> Column:
-    return F.lit(R) * F.radians(lon)
+def merc_xy_np(lon: np.ndarray, lat: np.ndarray):
+    return R * np.radians(lon), R * np.log(np.tan(np.radians(lat) / 2 + np.pi / 4))
 
 
-def merc_y(lat: Column) -> Column:
-    return F.lit(R) * F.log(F.tan(F.radians(lat) / 2 + F.lit(np.pi / 4)))
-
-
-def inv_merc_lon(x: Column) -> Column:
-    return F.degrees(x / F.lit(R))
-
-
-def inv_merc_lat(y: Column) -> Column:
-    return F.degrees(2 * F.atan(F.exp(y / F.lit(R))) - F.lit(np.pi / 2))
-
-
-def merc_sql(lon: str, lat: str) -> tuple[str, str]:
+def inv_merc_cols(x: Column, y: Column) -> tuple[Column, Column]:
     return (
-        f"({R!r} * radians({lon}))",
-        f"({R!r} * ln(tan(radians({lat}) / 2 + {np.pi / 4!r})))",
+        F.degrees(x / F.lit(R)),
+        F.degrees(2 * F.atan(F.exp(y / F.lit(R))) - F.lit(np.pi / 2)),
     )
 
 
@@ -61,20 +65,12 @@ def inv_merc_sql(x: str, y: str) -> tuple[str, str]:
 # x = R·λ, y = R·φ; exactly invertible, the closed-form workhorse for
 # distance-preserving meridians (reference reprojects via pyproj,
 # feature/crs.py:162; this is the same formula pyproj uses for +proj=eqc)
-def eqc_x(lon: Column) -> Column:
-    return F.lit(R) * F.radians(lon)
+def eqc_xy_np(lon: np.ndarray, lat: np.ndarray):
+    return R * np.radians(lon), R * np.radians(lat)
 
 
-def eqc_y(lat: Column) -> Column:
-    return F.lit(R) * F.radians(lat)
-
-
-def inv_eqc_lon(x: Column) -> Column:
-    return F.degrees(x / F.lit(R))
-
-
-def inv_eqc_lat(y: Column) -> Column:
-    return F.degrees(y / F.lit(R))
+def inv_eqc_cols(x: Column, y: Column) -> tuple[Column, Column]:
+    return F.degrees(x / F.lit(R)), F.degrees(y / F.lit(R))
 
 
 def inv_eqc_sql(x: str, y: str) -> tuple[str, str]:
@@ -82,20 +78,15 @@ def inv_eqc_sql(x: str, y: str) -> tuple[str, str]:
 
 
 # --- sinusoidal (ESRI:54008), equal-area: x = R·λ·cos(φ), y = R·φ
-def sinu_x(lon: Column, lat: Column) -> Column:
-    return F.lit(R) * F.radians(lon) * F.cos(F.radians(lat))
+def sinu_xy_np(lon: np.ndarray, lat: np.ndarray):
+    return R * np.radians(lon) * np.cos(np.radians(lat)), R * np.radians(lat)
 
 
-def sinu_y(lat: Column) -> Column:
-    return F.lit(R) * F.radians(lat)
-
-
-def inv_sinu_lon(x: Column, y: Column) -> Column:
-    return F.degrees(x / (F.lit(R) * F.cos(y / F.lit(R))))
-
-
-def inv_sinu_lat(y: Column) -> Column:
-    return F.degrees(y / F.lit(R))
+def inv_sinu_cols(x: Column, y: Column) -> tuple[Column, Column]:
+    return (
+        F.degrees(x / (F.lit(R) * F.cos(y / F.lit(R)))),
+        F.degrees(y / F.lit(R)),
+    )
 
 
 def inv_sinu_sql(x: str, y: str) -> tuple[str, str]:
@@ -118,8 +109,6 @@ def inv_sinu_sql(x: str, y: str) -> tuple[str, str]:
 # in BOTH forms so the two engines compute bit-equal doubles. Series
 # truncation error is O(e¹⁰) ≈ 1e-12 rad for GRS80 — micrometres.
 
-from dataclasses import dataclass as _dataclass
-
 #: GRS80 ellipsoid (EPSG:7019) — the datum ellipsoid of RGF93 / NAD83
 GRS80_A = 6378137.0
 GRS80_RF = 298.257222101
@@ -141,7 +130,7 @@ ELLIPSOIDS: dict[str, tuple[float, float]] = {
 }
 
 
-@_dataclass(frozen=True)
+@dataclass(frozen=True)
 class ConicParams:
     phi1: float  # first standard parallel (deg)
     phi2: float  # second standard parallel (deg)
@@ -636,152 +625,144 @@ def get_epsg_from_prj(s: str) -> "int | None":
     return None
 
 
-def conic_inverse_params(fam: str, p: ConicParams):
-    """(dx, dy) → (lon, lat) for explicit conic params (false origin is
-    carried in ``p`` and subtracted inside the inverse)."""
-    inv = inv_lcc_cols if fam == "lcc" else inv_albers_cols
-    return lambda dx, dy: inv(dx, dy, p)
-
-
-def reproject_plan_conic(src_grid: Grid, fam: str, p: ConicParams, epsg: int = 0) -> Grid:
-    """Corner-transform grid derivation for explicit conic params."""
-    xmin, ymin, xmax, ymax = src_grid.bounds
-    fwd = lcc_xy_np if fam == "lcc" else albers_xy_np
-    xs, ys = fwd(np.array([xmin, xmax]), np.array([ymax, ymax]), p)
-    cell = (xs[1] - xs[0]) / src_grid.cols
-    return Grid(
-        x0=float(xs[0]), y0=float(ys[0]), cell=float(cell),
-        rows=src_grid.rows, cols=src_grid.cols, epsg=epsg,
-        nodata=src_grid.nodata,
-    )
-
-
-def conic_inverse_cols(epsg: int):
-    """(dx, dy) → (lon, lat) Column transform for a registered conic EPSG —
-    plugs straight into :func:`to_crs_nearest`'s callable ``inverse``."""
-    fam, p = CONIC_EPSG[epsg]
-    inv = inv_lcc_cols if fam == "lcc" else inv_albers_cols
-    return lambda dx, dy: inv(dx, dy, p)
-
-
 def conic_inverse_sql(epsg: int, x: str, y: str) -> tuple[str, str]:
     fam, p = CONIC_EPSG[epsg]
     return (inv_lcc_sql if fam == "lcc" else inv_albers_sql)(x, y, p)
 
 
-def to_crs_nearest(
-    src: DataFrame, src_grid: Grid, dst_grid: Grid,
-    inverse: tuple = (inv_merc_lon, inv_merc_lat),
-) -> DataFrame:
-    """Reproject src (4326 cell table) onto dst_grid (3857 by default):
-    nearest-neighbour gather join. ``inverse`` maps dst coords → src coords:
-    either a (inv_x_fn, inv_y_fn) pair of single-column transforms, or one
-    callable (dx, dy) → (sx, sy) for projections whose inverse couples the
-    axes (e.g. sinusoidal).
-    """
-    spark = src.sparkSession
-    ncells = dst_grid.rows * dst_grid.cols
-    out = (
-        spark.range(ncells)
-        .select(
-            (F.col("id") / F.lit(dst_grid.cols)).cast("long").alias("row"),
-            (F.col("id") % F.lit(dst_grid.cols)).cast("long").alias("col"),
+# --- the CRS table ------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class Crs:
+    """One target of the warp from EPSG:4326. ``forward`` maps numpy
+    (lon, lat) → (x, y) and projects the grid corners; ``inverse`` maps
+    destination Columns (x, y) → source (lon, lat) for every cell; ``epsg``
+    labels the output grid (0 when the CRS has no registered code)."""
+
+    forward: Callable
+    inverse: Callable[[Column, Column], tuple[Column, Column]]
+    epsg: int
+
+
+#: closed-form family → (numpy forward, Column inverse); the conic pair takes
+#: its ConicParams as a third argument
+_FAMILIES = {
+    "merc": (merc_xy_np, inv_merc_cols),
+    "eqc": (eqc_xy_np, inv_eqc_cols),
+    "sinu": (sinu_xy_np, inv_sinu_cols),
+    "lcc": (lcc_xy_np, inv_lcc_cols),
+    "albers": (albers_xy_np, inv_albers_cols),
+}
+
+#: registered closed-form codes → (family, ConicParams or None); UTM zones
+#: (326xx/327xx) resolve by range
+EPSG: dict[int, tuple[str, "ConicParams | None"]] = {
+    3857: ("merc", None),
+    4087: ("eqc", None),
+    54008: ("sinu", None),
+    **CONIC_EPSG,
+}
+
+_WKT_ROOTS = ("PROJCRS", "PROJCS", "GEOGCRS", "GEOGCS", "GEODCRS")
+
+
+def _closed_form(fam: str, p: "ConicParams | None", epsg: int) -> Crs:
+    fwd, inv = _FAMILIES[fam]
+    if p is None:
+        return Crs(fwd, inv, epsg)
+    return Crs(partial(fwd, p=p), partial(inv, p=p), epsg)
+
+
+def _utm(epsg: int) -> Crs:
+    conv = utm.reproject_udf(epsg, 4326)
+
+    def inverse(x: Column, y: Column) -> tuple[Column, Column]:
+        s = conv(x, y)  # both coordinates share one extracted UDF call
+        return s["x"], s["y"]
+
+    return Crs(partial(utm.wgs84_to_utm, epsg=epsg), inverse, epsg)
+
+
+def resolve_crs(target: "int | str") -> "Crs | None":
+    """The table entry for a ``to_crs`` target: an EPSG int, a PROJ4 string
+    (:func:`parse_proj4`) or OGC WKT1/WKT2 text (:func:`parse_wkt_crs`).
+    None for a geographic (longlat) string, which needs no warp. A string
+    naming a registered family resolves to its code; explicit conic
+    parameters keep the WKT's own EPSG authority (0 without one) so a later
+    ``to_cog`` writes real GeoKey CRS metadata."""
+    if isinstance(target, str):
+        wkt = target.lstrip().startswith(_WKT_ROOTS)
+        fam, arg = parse_wkt_crs(target) if wkt else parse_proj4(target)
+        if fam == "longlat":
+            return None
+        if isinstance(arg, ConicParams):
+            return _closed_form(fam, arg, (get_epsg_from_prj(target) or 0) if wkt else 0)
+        target = arg if fam == "utm" else next(
+            code for code, (f, p) in EPSG.items() if f == fam and p is None
         )
-        .withColumn("_dx", dst_grid.x_center_col(F.col("col")))
-        .withColumn("_dy", dst_grid.y_center_col(F.col("row")))
+    if target in EPSG:
+        return _closed_form(*EPSG[target], target)
+    if 32601 <= target <= 32760:
+        return _utm(target)
+    raise NotImplementedError(
+        f"supported targets: 3857, 4087, 54008 (sinusoidal), "
+        f"LCC/Albers {sorted(CONIC_EPSG)}, "
+        f"UTM 326xx/327xx (got {target})"
     )
-    if callable(inverse):
-        sx, sy = inverse(F.col("_dx"), F.col("_dy"))
-    else:
-        inv_x, inv_y = inverse
-        sx, sy = inv_x(F.col("_dx")), inv_y(F.col("_dy"))
-    out = (
-        out.withColumn("_sx", sx)
-        .withColumn("_sy", sy)
-        .withColumn("src_row", src_grid.row_of_col(F.col("_sy")))
-        .withColumn("src_col", src_grid.col_of_col(F.col("_sx")))
-    )
-    s = src.select(
-        "band", F.col("row").alias("src_row"), F.col("col").alias("src_col"), "value"
-    )
-    return out.join(s, ["src_row", "src_col"]).select("band", "row", "col", "value")
 
 
-def reproject_plan(src_grid: Grid, target_epsg: int) -> Grid:
+def reproject_plan(src_grid: Grid, target: "int | Crs") -> Grid:
     """The ``maintain_alignment=False`` corner-transform grid derivation
-    (``spatial.py:360-457``): project the 4 corners, new cell =
-    |x1' - x0'| / cols; rows/cols preserved."""
+    (``spatial.py:360-457``): project the top corners with the target's
+    forward transform, new cell = |x1' - x0'| / cols; rows/cols preserved."""
     if src_grid.epsg != 4326:
         raise NotImplementedError("closed-form path reprojects FROM 4326")
+    crs = target if isinstance(target, Crs) else resolve_crs(target)
     xmin, ymin, xmax, ymax = src_grid.bounds
-    if target_epsg == 3857:
-        x0p = R * np.radians(xmin)
-        x1p = R * np.radians(xmax)
-        y0p = R * np.log(np.tan(np.radians(ymax) / 2 + np.pi / 4))
-    elif target_epsg == 4087:  # world equidistant cylindrical
-        x0p = R * np.radians(xmin)
-        x1p = R * np.radians(xmax)
-        y0p = R * np.radians(ymax)
-    elif target_epsg == 54008:  # sinusoidal (equal-area); corner at ymax
-        x0p = R * np.radians(xmin) * np.cos(np.radians(ymax))
-        x1p = R * np.radians(xmax) * np.cos(np.radians(ymax))
-        y0p = R * np.radians(ymax)
-    elif target_epsg in CONIC_EPSG:  # LCC / Albers, ellipsoidal (GRS80)
-        fam, p = CONIC_EPSG[target_epsg]
-        fwd = lcc_xy_np if fam == "lcc" else albers_xy_np
-        xs, ys = fwd(np.array([xmin, xmax]), np.array([ymax, ymax]), p)
-        x0p, x1p, y0p = xs[0], xs[1], ys[0]
-    else:
-        raise NotImplementedError(
-            "closed-form targets: 3857, 4087, 54008, "
-            f"{sorted(CONIC_EPSG)} (got {target_epsg})"
-        )
-    cell = (x1p - x0p) / src_grid.cols
-    return Grid(
-        x0=float(x0p), y0=float(y0p), cell=float(cell),
-        rows=src_grid.rows, cols=src_grid.cols, epsg=target_epsg,
-        nodata=src_grid.nodata,
-    )
-
-
-def reproject_plan_utm(src_grid: Grid, target_epsg: int) -> Grid:
-    """Corner-transform grid derivation for 4326 → UTM (same rule as
-    reproject_plan: project corners, cell = |x1'−x0'|/cols)."""
-    import numpy as np
-
-    from . import utm
-
-    xmin, ymin, xmax, ymax = src_grid.bounds
-    xs, ys = utm.wgs84_to_utm(
-        np.array([xmin, xmax]), np.array([ymax, ymax]), target_epsg
-    )
+    xs, ys = crs.forward(np.array([xmin, xmax]), np.array([ymax, ymax]))
     cell = (xs[1] - xs[0]) / src_grid.cols
     return Grid(
         x0=float(xs[0]), y0=float(ys[0]), cell=float(cell),
-        rows=src_grid.rows, cols=src_grid.cols, epsg=target_epsg,
+        rows=src_grid.rows, cols=src_grid.cols, epsg=crs.epsg,
         nodata=src_grid.nodata,
     )
 
 
-def to_crs_nearest_utm(src: DataFrame, src_grid: Grid, dst_grid: Grid) -> DataFrame:
-    """4326 cell table → UTM dst grid, nearest gather; the inverse transform
-    runs as an Arrow-batched pandas UDF (pure-numpy Krüger series)."""
-    from . import utm
+# --- the gather ----------------------------------------------------------------
 
-    spark = src.sparkSession
-    conv = utm.reproject_udf(dst_grid.epsg, 4326)
-    ncells = dst_grid.rows * dst_grid.cols
-    out = (
-        spark.range(ncells)
+
+def dst_cells(spark: SparkSession, grid: Grid) -> DataFrame:
+    """The destination-cell frame of every warp: one ``(row, col, _dx, _dy)``
+    row per cell of ``grid``, ``_dx``/``_dy`` its centre. Generated by
+    ``spark.range`` (cheap, parallel, no scan)."""
+    return (
+        spark.range(grid.rows * grid.cols)
         .select(
-            (F.col("id") / F.lit(dst_grid.cols)).cast("long").alias("row"),
-            (F.col("id") % F.lit(dst_grid.cols)).cast("long").alias("col"),
+            (F.col("id") / F.lit(grid.cols)).cast("long").alias("row"),
+            (F.col("id") % F.lit(grid.cols)).cast("long").alias("col"),
         )
-        .withColumn("_dx", dst_grid.x_center_col(F.col("col")))
-        .withColumn("_dy", dst_grid.y_center_col(F.col("row")))
-        .withColumn("_p", conv(F.col("_dx"), F.col("_dy")))
-        .withColumn("src_row", src_grid.row_of_col(F.col("_p.y")))
-        .withColumn("src_col", src_grid.col_of_col(F.col("_p.x")))
+        .withColumn("_dx", grid.x_center_col(F.col("col")))
+        .withColumn("_dy", grid.y_center_col(F.col("row")))
+    )
+
+
+def to_crs_nearest(
+    src: DataFrame, src_grid: Grid, dst_grid: Grid,
+    inverse: "Callable[[Column, Column], tuple[Column, Column]] | None" = None,
+) -> DataFrame:
+    """Nearest-neighbour warp of ``src`` onto ``dst_grid``: each destination
+    cell takes the value of the source cell containing its inverse-projected
+    centre. ``inverse`` maps destination (x, y) Columns to source (x, y)
+    Columns (:attr:`Crs.inverse`); None means both grids share a CRS
+    (``align``/``resample``). The destination side is :func:`dst_cells`; the
+    join hash-partitions on dense int keys — no skew."""
+    out = dst_cells(src.sparkSession, dst_grid)
+    sx, sy = F.col("_dx"), F.col("_dy")
+    if inverse is not None:
+        sx, sy = inverse(sx, sy)
+    out = out.withColumns(
+        {"src_row": src_grid.row_of_col(sy), "src_col": src_grid.col_of_col(sx)}
     )
     s = src.select(
         "band", F.col("row").alias("src_row"), F.col("col").alias("src_col"), "value"

@@ -120,15 +120,12 @@ def zone_label_cells_df(spark, zones: list[dict], grid: Grid) -> DataFrame:
 
     @F.pandas_udf(T.BooleanType())
     def _inside(zone: pd.Series, part: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
-        zs = zone.to_numpy()
-        ps = part.to_numpy()
         xs = px.to_numpy()
         ys = py.to_numpy()
-        out = np.zeros(len(zs), dtype=bool)
-        key = zs * 1000 + ps
-        for kk in np.unique(key):
-            m = key == kk
-            poly = polys_b.value[(int(kk // 1000), int(kk % 1000))]
+        out = np.zeros(len(xs), dtype=bool)
+        groups = pd.DataFrame({"z": zone, "p": part}).groupby(["z", "p"]).indices
+        for (z, pi), m in groups.items():
+            poly = polys_b.value[(int(z), int(pi))]
             out[m] = cells.points_in_polygon(xs[m], ys[m], poly)
         return pd.Series(out)
 

@@ -15,3 +15,22 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def build_jobs(spark):
+    """``build_jobs(build, group)``: the number of Spark jobs started while
+    ``build()`` constructs a DataFrame, read from the status tracker under a
+    job group."""
+
+    def count(build, group):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "build-time job audit")
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

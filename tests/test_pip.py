@@ -389,19 +389,7 @@ def test_flat_refine_cap_counts_real_edges(spark):
         assert ("ArrowEvalPython" in plan) == (not flat), name
 
 
-def _build_jobs(spark, build, group):
-    """Spark jobs started while ``build()`` constructs a DataFrame."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "build-time job audit")
-    try:
-        build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_pip_build_job_audit(spark):
+def test_pip_build_job_audit(spark, build_jobs):
     """Building the plan: pip_join runs no Spark job (cache miss or hit);
     pip_join_df runs exactly one, the cover checkpoint."""
     pts = synth.doc_points(spark, 1000)
@@ -410,5 +398,5 @@ def test_pip_build_job_audit(spark):
     zones = synth.zone_polygons(5, "hex", seed=11) + [{"zone_id": 50, "parts": [L]}]
     zdf = _zones_as_df(spark, zones)
     for i in range(2):  # the first call builds the driver sides, the second hits the cache
-        assert _build_jobs(spark, lambda: pip.pip_join(pts, zones, zoom=7), f"audit-list-{i}") == 0
-    assert _build_jobs(spark, lambda: pip.pip_join_df(pts, zdf, zoom=7), "audit-df") == 1
+        assert build_jobs(lambda: pip.pip_join(pts, zones, zoom=7), f"audit-list-{i}") == 0
+    assert build_jobs(lambda: pip.pip_join_df(pts, zdf, zoom=7), "audit-df") == 1

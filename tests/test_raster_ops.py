@@ -46,7 +46,9 @@ def test_reproject_3857_roundtrip_values(spark):
     back-projects into (numpy oracle)."""
     g = grid_df(spark, CROP_GRID)
     dst = reproject.reproject_plan(CROP_GRID, 3857)
-    out = reproject.to_crs_nearest(g, CROP_GRID, dst).toPandas()
+    out = reproject.to_crs_nearest(
+        g, CROP_GRID, dst, inverse=reproject.resolve_crs(3857).inverse
+    ).toPandas()
     assert len(out) > 0
     R = reproject.R
     for _, r in out.iterrows():
@@ -60,19 +62,20 @@ def test_reproject_3857_roundtrip_values(spark):
 
 
 def test_conic_forward_inverse_consistency(spark):
-    """LCC + Albers ellipsoidal closed forms: Column inverse ∘ numpy forward
-    is identity to series precision (authalic series is O(e⁸) ≈ 1e-8 deg),
-    over a lat/lon cloud inside each projection's sane band."""
+    """Every registered closed form (cylindrical, LCC + Albers ellipsoidal):
+    the CRS table's Column inverse ∘ its numpy forward is identity to
+    series precision (authalic series is O(e⁸) ≈ 1e-8 deg), over a lat/lon
+    cloud inside each projection's sane band."""
     lon = np.linspace(-10.0, 15.0, 40)
     lat = np.linspace(35.0, 55.0, 40)
-    for epsg in (2154, 102004, 5070, 102008):
-        fam, p = reproject.CONIC_EPSG[epsg]
-        fwd = reproject.lcc_xy_np if fam == "lcc" else reproject.albers_xy_np
-        x, y = fwd(lon, lat, p)
+    assert set(reproject.CONIC_EPSG) < set(reproject.EPSG)
+    for epsg in reproject.EPSG:
+        crs = reproject.resolve_crs(epsg)
+        x, y = crs.forward(lon, lat)
         df = spark.createDataFrame(
             pd.DataFrame({"x": x, "y": y}), "x double, y double"
         )
-        ilon, ilat = reproject.conic_inverse_cols(epsg)(F.col("x"), F.col("y"))
+        ilon, ilat = crs.inverse(F.col("x"), F.col("y"))
         got = df.select(ilon.alias("lon"), ilat.alias("lat")).toPandas()
         assert np.allclose(got["lon"], lon, atol=1e-7)
         assert np.allclose(got["lat"], lat, atol=1e-7)
@@ -380,6 +383,70 @@ def test_align_preserves_reference_grid_contract(spark):
     assert out[(out.row == 0) & (out.col == 0)].value.iloc[0] == 1.0
 
 
+def test_warp_build_job_and_plan_audit(spark, build_jobs):
+    """Building a warp runs no Spark job; the closed-form plans are pure
+    codegen and the UTM plan calls its pandas UDF once per Python node.
+    mesh_to_grid_nearest runs exactly its documented broadcast probe."""
+    from pyramids_spark.api import SparkDataset
+    from pyramids_spark.operators import mesh
+
+    src = grid_df(spark, COELLO)
+    up = COELLO.with_cell(2000.0)
+    geo = SparkDataset(grid_df(spark, CROP_GRID), CROP_GRID)
+    france = Grid(x0=2.0, y0=47.0, cell=0.05, rows=20, cols=30)
+    fr = SparkDataset(grid_df(spark, france), france)
+    levant = Grid(x0=31.0, y0=31.0, cell=0.05, rows=20, cols=40)
+    lv = SparkDataset(grid_df(spark, levant), levant)
+    _, p = reproject.CONIC_EPSG[2154]
+    lcc = (f"+proj=lcc +lat_1={p.phi1} +lat_2={p.phi2} +lat_0={p.phi0} "
+           f"+lon_0={p.lam0} +x_0={p.x0f} +y_0={p.y0f} +ellps=GRS80")
+    cases = {
+        "align_nearest": lambda: raster.align_nearest(src, COELLO, up),
+        "resample": lambda: raster.resample(src, COELLO, 2000.0)[0],
+        "resample_bilinear": lambda: raster.resample_bilinear(src, COELLO, up),
+        "resample_cubic": lambda: raster.resample_cubic(src, COELLO, up),
+        "to_crs_3857": lambda: geo.to_crs(3857).df,
+        "to_crs_54008": lambda: geo.to_crs(54008).df,
+        "to_crs_2154": lambda: fr.to_crs(2154).df,
+        "to_crs_proj4_lcc": lambda: fr.to_crs(lcc).df,
+        "to_crs_prj": lambda: fr.to_crs(_PRJ_2154).df,
+        "to_crs_32636": lambda: lv.to_crs(32636).df,
+    }
+    built = {}
+    for name, build in cases.items():
+        n = build_jobs(lambda: built.__setitem__(name, build()), f"warp-{name}")
+        assert n == 0, (name, n)
+    for name, df in built.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if name == "to_crs_32636":
+            # both coordinates share one UDF call per node; the second node
+            # is the join's inferred isnotnull(src_row, src_col) filter,
+            # which Spark pushes below the projection and re-evaluates
+            assert plan.count("ArrowEvalPython") == 2, plan
+            assert "pythonUDF0" in plan and "pythonUDF1" not in plan, plan
+        else:
+            python_nodes = ("EvalPython", "InPandas", "InArrow")
+            assert not any(k in plan for k in python_nodes), (name, plan)
+    nodes = spark.createDataFrame(
+        [(i, COELLO.x0 + 3000.0 * i, COELLO.y0 - 2500.0 * i, float(i)) for i in range(20)],
+        "node_id long, x double, y double, data double",
+    )
+    # the broadcast probe: the limit's shuffle-map stage, then the count
+    n = build_jobs(lambda: mesh.mesh_to_grid_nearest(nodes, COELLO), "warp-mesh")
+    assert n == 2
+
+
+def test_to_crs_rejects_projected_source(spark):
+    """The closed forms and the UTM series start from EPSG:4326; a projected
+    source grid fails loudly instead of reading metres as degrees."""
+    from pyramids_spark.api import SparkDataset
+
+    ds = SparkDataset(grid_df(spark, COELLO), COELLO)
+    for target in (32636, 3857, "+proj=utm +zone=36", _PRJ_2154):
+        with pytest.raises(NotImplementedError, match="FROM 4326"):
+            ds.to_crs(target)
+
+
 def test_media_plumbing_deterministic(spark):
     from pyramids_spark import media
 
@@ -488,11 +555,23 @@ def test_zone_label_cells_distributed_equals_driver(spark):
             ], axis=1)
             for p in z["parts"]
         ]
-    a = zonal.zone_label_cells(zones, COELLO)
-    got_a = {(int(r.row), int(r.col)): int(r.zone_id) for _, r in a.iterrows()}
-    b = zonal.zone_label_cells_df(spark, zones, COELLO).collect()
-    got_b = {(r["row"], r["col"]): r["zone_id"] for r in b}
-    assert got_a == got_b and len(got_a) > 0
+    # a zone with more than 1000 parts: part 1000 of zone 0 must not be
+    # confused with part 0 of zone 1
+    wide = Grid(x0=0.0, y0=100.0, cell=1.0, rows=100, cols=2100)
+    sq = lambda x0, y0, x1, y1: np.array(  # noqa: E731
+        [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+    )
+    many = [
+        {"zone_id": 0, "parts": [sq(c + 0.25, 99.25, c + 0.75, 99.75) for c in range(1001)]},
+        {"zone_id": 1, "parts": [sq(50.1, 45.1, 54.9, 49.9)]},
+    ]
+    for zs, grid, n in ((zones, COELLO, None), (many, wide, 1026)):
+        a = zonal.zone_label_cells(zs, grid)
+        got_a = {(int(r.row), int(r.col)): int(r.zone_id) for _, r in a.iterrows()}
+        b = zonal.zone_label_cells_df(spark, zs, grid).collect()
+        got_b = {(r["row"], r["col"]): r["zone_id"] for r in b}
+        assert got_a == got_b and len(got_a) > 0
+        assert n is None or len(got_b) == n
 
 
 _WKT2_2154 = (
