@@ -858,19 +858,20 @@ def sql_geotiff_roundtrip():
 
 
 def q_geotiff_roundtrip_i16(spark, sf_dir):
-    """Container dtype gate (VERDICT r4 #2; rotated r6 to the STAGED
-    parallel tail): int16 storage — DEFLATE tiled GeoTIFF with a
-    rounded-average overview IFD, written via distributed encode+stage →
-    driver metadata layout → distributed pwrite (absent tiles share one
-    fill tile), read back distributed and widened to float64; the oracle
-    is the grid generator, so any cast or tag defect shows as a value
-    mismatch. Reference dtype table ``base/_utils.py:16-56``."""
+    """Container dtype gate (VERDICT r4 #2): int16 storage — DEFLATE
+    tiled GeoTIFF with a rounded-average overview IFD, written through the
+    one single-file tail (distributed encode+stage of every level in one
+    job → driver metadata layout → one distributed pwrite job; absent
+    tiles share one fill tile), read back distributed and widened to
+    float64; the oracle is the grid generator, so any cast or tag defect
+    shows as a value mismatch. Reference dtype table
+    ``base/_utils.py:16-56``."""
     from pyramids_spark.api import SparkDataset
 
     ds = SparkDataset(grid_df(spark, COELLO), COELLO)
     ds.to_cog(
         "/tmp/pyramids_q_cog_i16.tif", levels=(2,), tile=(8, 8),
-        compress=3, dtype="int16", parallel=True,
+        compress=3, dtype="int16",
     )
     back = SparkDataset.from_geotiff(spark, "/tmp/pyramids_q_cog_i16.tif")
     return back.df.select("band", "row", "col", "value")
@@ -931,10 +932,11 @@ def q_netcdf4_roundtrip(spark, sf_dir):
     'latest'-format EXTENSIBLE ARRAY chunk index (v4 layout message,
     EAHD/EAIB/EADB, unlimited time dim, lookup3 checksums) — the layout
     netCDF-4 1.10+ time-series files use in the wild — written through
-    the STAGED two-phase parallel tail (distributed compress+stage →
-    driver metadata layout → distributed pwrite; byte-identical to the
-    serial stream, no driver byte bottleneck). The read decodes chunks
-    by byte range in executors. Oracle is the grid generator (reference
+    the one single-file tail (distributed compress+stage → driver
+    metadata layout → one distributed pwrite job; byte-identical to the
+    driver-stream oracle in ``tests/test_hdf5.py``, no driver byte
+    bottleneck; ``parallel=True`` is accepted and has no effect). The
+    read decodes chunks by byte range in executors. Oracle is the grid generator (reference
     ``netcdf/netcdf.py:849-982`` via netcdf-c)."""
     from pyramids_spark.api import SparkNetCDF
 

@@ -1,7 +1,10 @@
-"""Shared plumbing for the TWO-PHASE staged parallel single-file sinks
-(netCDF-4 in ``hdf5.py``, GeoTIFF in ``tiff.py``): atomic executor-side
-staging of encoded chunks/tiles, and the distributed ``pwrite`` copy of
-the staged bytes into the laid-out target. One implementation so a
+"""Shared plumbing for the single-file sinks (netCDF-4 in ``hdf5.py``,
+GeoTIFF in ``tiff.py``), which both write through one tail: encode and
+stage each chunk or tile in the executors, collect the ``(key, nbytes)``
+manifest, lay the file out on the driver, then place the staged bytes.
+This module holds the two executor-side steps: atomic staging of one
+encoded chunk/tile, and the one-job distributed ``pwrite`` copy of the
+staged bytes into the laid-out target. One implementation so a
 robustness fix (full-write loop, retry atomicity) cannot diverge
 between the containers.
 
@@ -13,9 +16,7 @@ from __future__ import annotations
 
 import os
 
-import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 
 def write_staged(fn: str, data: bytes) -> None:
@@ -46,38 +47,35 @@ def copy_staged(
     spark: SparkSession, path: str,
     triples: "list[tuple[str, int, int]]", what: str,
 ) -> None:
-    """Distributed copy of staged files into ``path``: ``triples`` =
-    [(staged file, target offset, expected nbytes)] — metadata scale.
-    Verifies per-file sizes and the total copied count; ``what`` names
+    """Copy staged files into ``path`` in one Spark job: ``triples`` =
+    [(staged file, target offset, expected nbytes)], metadata scale,
+    spread over ``min(defaultParallelism, len(triples))`` partitions.
+    Verifies each file's size and the total copied count; ``what`` names
     the unit ("chunks"/"tiles") in errors."""
     if not triples:
         return
 
-    def copy_parts(pdfs):
+    def copy(part):
         fd = os.open(path, os.O_WRONLY)
         n = 0
         try:
-            for pdf in pdfs:
-                for fn, at, nb in zip(pdf["file"], pdf["addr"],
-                                      pdf["nbytes"]):
-                    with open(str(fn), "rb") as f:
-                        raw = f.read()
-                    if len(raw) != int(nb):
-                        raise ValueError(
-                            f"staged file {fn} is {len(raw)} bytes, "
-                            f"manifest says {int(nb)}")
-                    _pwrite_all(fd, raw, int(at))
-                    n += 1
+            for fn, at, nb in part:
+                with open(fn, "rb") as f:
+                    raw = f.read()
+                if len(raw) != nb:
+                    raise ValueError(
+                        f"staged file {fn} is {len(raw)} bytes, "
+                        f"manifest says {nb}")
+                _pwrite_all(fd, raw, at)
+                n += 1
         finally:
             os.close(fd)
-        yield pd.DataFrame({"n": [n]})
+        yield n
 
-    pairs = spark.createDataFrame(
-        triples, "file string, addr long, nbytes long")
-    par = spark.sparkContext.defaultParallelism
-    wrote = (pairs.repartition(min(par, len(triples)))
-             .mapInPandas(copy_parts, "n long")
-             .agg(F.sum("n").alias("n")).collect()[0]["n"])
+    sc = spark.sparkContext
+    wrote = sum(sc.parallelize(triples, min(sc.defaultParallelism,
+                                            len(triples)))
+                .mapPartitions(copy).collect())
     if wrote != len(triples):
         raise ValueError(
             f"staged copy wrote {wrote} {what}, expected {len(triples)}")

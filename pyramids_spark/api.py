@@ -133,14 +133,17 @@ class SparkDataset:
         self, path: str, levels: tuple[int, ...] = (2, 4),
         tile: tuple[int, int] = (256, 256), compress: "int | None" = None,
         dtype: str = "float64", bigtiff: "bool | None" = None,
-        predictor: int = 1, parallel: bool = False,
+        predictor: int = 1,
     ) -> int:
         """Export a REAL tiled GeoTIFF with an embedded averaged overview
         pyramid (COG-shaped; ``pyramids_spark.tiff`` — pure struct/numpy,
         no GDAL). ``dtype`` picks the storage dtype from the reference's
         GDAL dtype table (``pyramids_spark.dtypes``; reference
-        ``base/_utils.py:16-56``). Tiles build distributed, stream to the
-        one output file in order. Returns bytes written."""
+        ``base/_utils.py:16-56``). Tiles encode and stage distributed, the
+        driver lays out the header and offset arrays from the tile-size
+        manifest, and one distributed job ``pwrite``\\ s the tiles into
+        the one output file (``tiff.write_geotiff``). Returns bytes
+        written."""
         from dataclasses import replace as _replace
 
         from . import tiff as _tiff
@@ -168,7 +171,6 @@ class SparkDataset:
             per.append((ov, g))
         return _tiff.write_geotiff(
             per, n_bands, path, tile, compress, dtype, bigtiff, predictor,
-            parallel=parallel,
         )
 
     def to_cog_parts(
@@ -177,9 +179,9 @@ class SparkDataset:
         compress: "int | None" = None, dtype: str = "float64",
         predictor: int = 1,
     ):
-        """The PARALLEL GeoTIFF sink (the scale path past the single-file
-        driver stream): one standalone COG per aligned super-tile shard,
-        written executor-side, plus a mosaic.json manifest
+        """The sharded GeoTIFF sink (the scale path: no single-file
+        layout step on the driver): one standalone COG per aligned
+        super-tile shard, written executor-side, plus a mosaic.json manifest
         (``pyramids_spark.tiff.write_cog_parts``; reference COG export
         ``dataset/ops/cog.py:65-238``). Returns the part manifest
         (lineage)."""
@@ -367,8 +369,10 @@ class SparkDataset:
         ``to_file`` driver dispatch (``dataset/ops/io.py:673-799``):
         6-line header (ncols/nrows/xllcorner/yllcorner/cellsize/
         NODATA_value — corner is the BOTTOM-left) + one text line per
-        raster row. Lines build in the executors (groupBy row), stream to
-        the driver top-to-bottom — O(row) driver memory; a .asc is a
+        raster row. Lines build in the executors (groupBy row over a
+        range partitioning on row, so the exchange both groups and orders
+        them and each line builds once), stream to the driver
+        top-to-bottom — O(row) driver memory; a .asc is a
         small legacy interop artifact (single band; CRS travels in a
         sidecar .prj in the wild, carried here by the read-side ``epsg``
         parameter). Returns bytes written."""
@@ -395,11 +399,15 @@ class SparkDataset:
                 {"row": [r], "line": [" ".join(f"{v:.17g}" for v in vals)]}
             )
 
+        # range-partition BEFORE the UDF: the exchange satisfies the
+        # grouping, so the row order costs no sort after the UDF (an
+        # orderBy there would run every build a second time in its sampler)
         lines = (
             self.df.where(F.col("value").isNotNull())
+            .repartitionByRange("row")
             .groupBy("row")
             .applyInPandas(build, "row long, line string")
-            .orderBy("row")
+            .sortWithinPartitions("row")
         )
         # .17g = shortest exact double representation family: the header
         # coordinates and cell values survive the text round trip bit-exact
@@ -1037,9 +1045,10 @@ class SparkNetCDF:
         """Write a REAL netCDF-4 (HDF5) file — pure struct/numpy,
         ``pyramids_spark.hdf5``; reference ``NetCDF.to_file`` through the
         netcdf-c/HDF5 stack (``netcdf/netcdf.py:849-982``). Chunks build
-        and deflate DISTRIBUTED, then stream ordered through the driver
-        (compressed sizes are not plan-time-known, unlike
-        :meth:`to_netcdf`'s parallel pwrite). ``index``: ``"btree1"``
+        and deflate DISTRIBUTED and stage as files; the driver lays out the
+        front matter and chunk indexes from the ``(key, nbytes)`` manifest
+        and one distributed job ``pwrite``\\ s the chunks
+        (``hdf5.write_netcdf4``). ``index``: ``"btree1"``
         (the 1.8 default), ``"fixed_array"``, ``"extensible"`` or
         ``"btree2"`` (the 1.10 'latest' layouts; extras like
         ``ea_params`` / ``b2_node_size`` / ``fa_page_bits`` pass

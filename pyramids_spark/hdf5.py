@@ -47,24 +47,25 @@ so they cost nothing.
 
 The WRITER exists for the same reason ``tiff.py`` writes GeoTIFFs: the
 engine's own export path plus the fixture generator for the reader
-(this container has no other in-sandbox producer). Three tails share
-the front-matter builder:
+(this container has no other in-sandbox producer). Every write takes
+one tail:
 
-- serial driver stream (default): chunks build and deflate DISTRIBUTED,
-  then stream ordered through the driver at O(chunk) memory;
-- ``parallel=True`` + uncompressed + fixed-array: every chunk address
-  is plan-time-known — executors ``pwrite`` directly (single pass);
-- ``parallel=True`` + compression (or a sparse index): compressed sizes
-  are unknowable at plan time, so a TWO-PHASE staged tail compresses
-  and stages chunks distributed, lays out addresses on the driver from
-  the key+size manifest (metadata scale), and ``pwrite``\\ s the staged
-  bytes distributed — byte-identical output to the serial stream, with
-  no driver byte bottleneck at any cluster size.
+1. **encode** — one ``groupBy(variable, chunk key).applyInPandas`` builds,
+   filters (shuffle, deflate/zstd, fletcher32) and stages each chunk as
+   one file under ``<path>._chunks/``, returning only ``(key, nbytes)``;
+2. **manifest** — ``toPandas`` with no ``orderBy`` (a range sort after the
+   UDF would run every encode a second time in its sampler);
+3. **layout** — the driver sorts the metadata-scale manifest into
+   ``(variable, t, ci, cj)`` order, assigns packed chunk addresses, and
+   writes the superblock, the front matter and the chunk indexes;
+4. **place** — one Spark job ``pwrite``\\ s each staged chunk at its
+   address.
 
-The chunk B-trees land after the data so nothing in the front region
-depends on compressed sizes. The ``pwrite`` tails assume the target is
-reachable from every executor (local fs here; NFS/Lustre on a real
-cluster); the parquet/zarr cell tables remain the 100-TB storage paths.
+The chunk indexes land after the data so nothing in the front region
+depends on compressed sizes, and the data bytes never visit the driver.
+The tail assumes the target is reachable from every executor (local fs
+here; NFS/Lustre on a real cluster); the parquet/zarr cell tables remain
+the 100-TB storage paths.
 """
 
 from __future__ import annotations
@@ -783,13 +784,74 @@ def write_netcdf4(
     sup_blk_min_data_ptrs, page_bits), default the hardcoded H5Dearray
     values (32, 4, 16, 4, 10) every real file uses), or ``"btree2"``
     (v4 + version-2 B-tree; ``b2_node_size`` forces its depth).
-    ``parallel=True`` removes the driver byte stream entirely: direct
-    executor ``pwrite`` when uncompressed with the dense fixed-array
-    index, else the two-phase staged tail (distributed compress+stage →
-    driver metadata layout → distributed ``pwrite``); output is
-    byte-identical to the serial stream. Returns the chunk
-    manifest (lineage). See the module docstring for the distributed
-    write shape."""
+    ``parallel`` is accepted for older callers and has no effect: every
+    write takes the one tail in the module docstring (encode and stage
+    distributed → ``(key, nbytes)`` manifest → driver layout →
+    distributed ``pwrite``), and the data bytes never visit the driver.
+    Runs the variable listing job when ``variables`` is None, the encode
+    job and the placement job. Returns the chunk manifest (lineage):
+    ``variable, t, ci, cj, addr, nbytes`` in file order."""
+    keyed, encode_chunk, data_start, write_meta = _netcdf4_plan(
+        cells_df, grid, times, variables, dtype, compress, shuffle,
+        fletcher32, chunk, georef, btree_cap, index, fa_page_bits,
+        ea_params, b2_node_size)
+    scratch = path + "._chunks"
+    shutil.rmtree(scratch, ignore_errors=True)
+    os.makedirs(scratch)
+
+    def chunk_file(v: str, tk: int) -> str:
+        # variable names may hold path-hostile chars — hex-encode them
+        return os.path.join(scratch, f"{tk}_{v.encode().hex()}")
+
+    def stage(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        raw = encode_chunk(key, pdf)  # loud var/t/extent guards inside
+        v, tk = str(key[0]), int(key[1])
+        _staged.write_staged(chunk_file(v, tk), raw)
+        return pd.DataFrame(
+            {"variable": [v], "tk": [tk], "nbytes": [len(raw)]})
+
+    try:
+        # no orderBy after the UDF: its range sampler would run every
+        # encode twice — the manifest is metadata scale, sort it here
+        man = keyed.groupBy("variable", "tk").applyInPandas(
+            stage, "variable string, tk long, nbytes long",
+        ).toPandas().sort_values(["variable", "tk"], ignore_index=True)
+        nb = man["nbytes"].to_numpy(np.int64)
+        man["addr"] = data_start + np.cumsum(nb) - nb
+        with open(path, "wb") as fh:
+            out = write_meta(fh, man)
+        _staged.copy_staged(
+            keyed.sparkSession, path,
+            [(chunk_file(v, tk), at, n) for v, tk, at, n in zip(
+                man["variable"], man["tk"].tolist(), man["addr"].tolist(),
+                nb.tolist())],
+            "chunks")
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+    return out
+
+
+def _netcdf4_plan(
+    cells_df: DataFrame, grid: Grid, times, variables, dtype: str,
+    compress, shuffle: bool, fletcher32: bool, chunk, georef: str,
+    btree_cap: int, index: str, fa_page_bits: int, ea_params,
+    b2_node_size: int,
+):
+    """The set-up of :func:`write_netcdf4` (same arguments, no defaults):
+    validation, the front-matter renderer and its address map, the keyed
+    chunk table and the chunk encoder. Returns ``(keyed, encode_chunk,
+    data_start, write_meta)``:
+
+    - ``keyed``: ``(variable, tk, rc, value)`` — ``tk`` is the chunk key
+      ``t·n_tiles + tile_key`` (also the dense slot index), so ``(variable,
+      tk)`` order is the file's ``(variable, t, ci, cj)`` chunk order;
+    - ``encode_chunk(key, pdf)``: the stored bytes of one ``(variable,
+      tk)`` group, behind the loud variable / ``t`` / extent guards;
+    - ``data_start``: the address of the first chunk;
+    - ``write_meta(fh, man)``: given the chunks' ``variable, tk, addr,
+      nbytes`` in file order, writes the superblock, the front matter and
+      the chunk indexes (after the data) and returns the lineage
+      manifest ``variable, t, ci, cj, addr, nbytes``."""
     if index not in ("btree1", "fixed_array", "extensible", "btree2"):
         raise ValueError("index must be btree1, fixed_array, extensible "
                          f"or btree2, got {index}")
@@ -963,7 +1025,7 @@ def write_netcdf4(
     addrs["heap_data"] = addrs["heap_hdr"] + 32  # data follows its header
     data_start = _align8(pos)
 
-    # ---- distributed chunk build, ordered driver stream -------------------
+    # ---- keyed chunk table ------------------------------------------------
     # NULL cells are absent rows (nodata contract shared with the TIFF /
     # zarr / classic-NetCDF sinks): they stay at the fill value instead of
     # becoming NaN (float) or crashing the integer cast (int dtypes).
@@ -1015,63 +1077,69 @@ def write_netcdf4(
             raw += struct.pack("<I", _fletcher32(raw))
         return raw
 
-    def build_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        data = encode_chunk(key, pdf)  # loud guards fire before decode use
-        t, ci, cj = _chunk_of(key[1], rows, cols, ch, cw)
-        return pd.DataFrame({
-            "variable": [str(key[0])], "t": [t], "ci": [ci], "cj": [cj],
-            "data": [data],
-        })
+    filtered = bool(shuffle or compress is not None or fletcher32
+                    or zstd_level is not None)
 
-    if parallel:
-        if compress is None and zstd_level is None \
-                and index == "fixed_array":
-            # uncompressed + dense index: every chunk address and the
-            # index position are plan-time-known — single-pass pwrite
-            return _write_netcdf4_parallel_tail(
-                keyed, variables, path, addrs, order, build, nt, rows,
-                cols, ch, cw, esize, fletcher32,
-                bool(shuffle or fletcher32), fa_page_bits, data_start,
-                encode_chunk)
-        # compressed (sizes unknown at plan time) or a sparse index:
-        # two-phase staged tail — distributed compress+stage, driver
-        # metadata layout, distributed pwrite
-        return _write_netcdf4_staged_tail(
-            keyed, variables, path, addrs, order, build, nt, rows, cols,
-            ch, cw, esize, three_d, index, ea_params, b2_node_size,
-            btree_cap, fa_page_bits,
-            bool(shuffle or compress is not None or fletcher32
-                 or zstd_level is not None),
-            data_start, encode_chunk)
-
-    chunks = keyed.groupBy("variable", "tk").applyInPandas(
-        build_chunk,
-        "variable string, t long, ci long, cj long, data binary",
-    ).orderBy("variable", "t", "ci", "cj")
-
-    entries: "dict[str, list]" = {v: [] for v in variables}
-    manifest = []
-    with open(path, "wb") as fh:
-        fh.seek(data_start)
-        cur = data_start
-        for r in chunks.toLocalIterator():
-            offs = ((r.t, r.ci * ch, r.cj * cw, 0) if three_d
-                    else (r.ci * ch, r.cj * cw, 0))
-            fh.write(r.data)
-            entries[r.variable].append((offs, cur, len(r.data)))
-            manifest.append((r.variable, r.t, r.ci, r.cj, cur, len(r.data)))
-            cur += len(r.data)
-        # ---- chunk B-trees after the data ---------------------------------
-        bblobs, eof = _index_blobs(
-            entries, variables, addrs, index, three_d, nt, rows, cols,
-            ch, cw, esize,
-            shuffle or compress is not None or fletcher32
-            or zstd_level is not None,
-            _align8(cur), ea_params, b2_node_size, btree_cap, fa_page_bits)
-        # ---- now every address is known: render + write front & B-trees ---
+    def write_meta(fh, man: pd.DataFrame) -> pd.DataFrame:
+        t, tid = np.divmod(man["tk"].to_numpy(np.int64), ny_k * nx_k)
+        ci, cj = np.divmod(tid, nx_k)
+        out = pd.DataFrame({"variable": man["variable"], "t": t, "ci": ci,
+                            "cj": cj, "addr": man["addr"],
+                            "nbytes": man["nbytes"]})
+        entries: "dict[str, list]" = {v: [] for v in variables}
+        for v, t_, ci_, cj_, at, nb in zip(
+                out["variable"], *(out[c].tolist() for c in
+                                   ("t", "ci", "cj", "addr", "nbytes"))):
+            offs = ((t_, ci_ * ch, cj_ * cw, 0) if three_d
+                    else (ci_ * ch, cj_ * cw, 0))
+            entries[v].append((offs, at, nb))
+        end = int(out["addr"].iloc[-1] + out["nbytes"].iloc[-1]) \
+            if len(out) else data_start
+        # ---- chunk indexes after the data, any of the four types ----------
+        max_offs = ((nt, ny_k * ch, nx_k * cw, 0) if three_d
+                    else (ny_k * ch, nx_k * cw, 0))
+        csize = ch * cw * esize
+        bblobs = []
+        pos = _align8(end)
+        for v in variables:
+            if not entries[v]:
+                addrs[f"btree_{v}"] = UNDEF
+                continue
+            if index in ("fixed_array", "extensible"):
+                slots = {}
+                for offs, at, nb in entries[v]:
+                    t0, r0, c0 = (offs[:3] if three_d
+                                  else (0,) + tuple(offs[:2]))
+                    # the same dense slot index as the shuffle key tk
+                    slots[t0 * ny_k * nx_k + int(keys.tile_key_np(
+                        r0, c0, ch, cw, nx_k))] = (at, nb, 0)
+                if index == "fixed_array":
+                    root, blob = _fixed_array_blob(
+                        slots, nt * ny_k * nx_k, csize, filtered, pos,
+                        page_bits=fa_page_bits)
+                else:
+                    mb, ie, me, mp, pb = ea_params or (32, 4, 16, 4, 10)
+                    root, blob = _extensible_array_blob(
+                        slots, nt * ny_k * nx_k, csize, filtered, pos,
+                        max_bits=mb, idx_elmts=ie, min_elmts=me,
+                        min_ptrs=mp, page_bits=pb)
+            elif index == "btree2":
+                recs = sorted(
+                    (((offs[0], offs[1] // ch, offs[2] // cw) if three_d
+                      else (offs[0] // ch, offs[1] // cw)), at, nb, 0)
+                    for offs, at, nb in entries[v])
+                root, blob = _btree2_blob(recs, csize, filtered, pos,
+                                          node_size=b2_node_size)
+            else:
+                root, blob = _chunk_btree(entries[v], max_offs, pos,
+                                          cap=btree_cap)
+            addrs[f"btree_{v}"] = root
+            bblobs.append((pos, blob))
+            pos += len(blob)
+        # ---- now every address is known: render + write front & indexes --
         comp = build(addrs)
         fh.seek(0)
-        fh.write(_superblock(eof, addrs["ohdr_/"], addrs["gbtree"],
+        fh.write(_superblock(pos, addrs["ohdr_/"], addrs["gbtree"],
                              addrs["heap_hdr"]))
         for k in order:
             fh.seek(addrs[k])
@@ -1079,236 +1147,10 @@ def write_netcdf4(
         for at, blob in bblobs:
             fh.seek(at)
             fh.write(blob)
-        fh.truncate(eof)
-    return pd.DataFrame(
-        manifest, columns=["variable", "t", "ci", "cj", "addr", "nbytes"]
-    )
+        fh.truncate(pos)
+        return out
 
-
-def _index_blobs(
-    entries: "dict[str, list]", variables, addrs: dict, index: str,
-    three_d: bool, nt: int, rows: int, cols: int, ch: int, cw: int,
-    esize: int, filtered: bool, btree_base: int, ea_params,
-    b2_node_size: int, btree_cap: int, fa_page_bits: int,
-) -> "tuple[list[tuple[int, bytes]], int]":
-    """Render every variable's chunk index (any of the four index types)
-    at ``btree_base``, setting ``addrs['btree_<v>']`` per variable →
-    ([(position, blob)], eof). ``entries[v]`` = [(element offsets, data
-    address, stored nbytes)] — shared by the serial driver-stream tail
-    and the staged two-phase parallel tail."""
-    ny, nx = keys.n_tiles(rows, cols, ch, cw)
-    max_offs = ((nt, ny * ch, nx * cw, 0) if three_d
-                else (ny * ch, nx * cw, 0))
-    bblobs = []
-    pos = btree_base
-    csize = ch * cw * esize
-    for v in variables:
-        if not entries[v]:
-            addrs[f"btree_{v}"] = UNDEF
-            continue
-        if index in ("fixed_array", "extensible"):
-            slots = {}
-            for offs, at, nb in entries[v]:
-                t0, r0, c0 = (offs[:3] if three_d
-                              else (0,) + tuple(offs[:2]))
-                # the same dense slot index as the shuffle key tk
-                slots[t0 * ny * nx
-                      + int(keys.tile_key_np(r0, c0, ch, cw, nx))] = (at, nb, 0)
-            if index == "fixed_array":
-                root, blob = _fixed_array_blob(
-                    slots, nt * ny * nx, csize, filtered, pos,
-                    page_bits=fa_page_bits)
-            else:
-                mb, ie, me, mp, pb = ea_params or (32, 4, 16, 4, 10)
-                root, blob = _extensible_array_blob(
-                    slots, nt * ny * nx, csize, filtered, pos,
-                    max_bits=mb, idx_elmts=ie, min_elmts=me,
-                    min_ptrs=mp, page_bits=pb)
-        elif index == "btree2":
-            recs = sorted(
-                (((offs[0], offs[1] // ch, offs[2] // cw) if three_d
-                  else (offs[0] // ch, offs[1] // cw)), at, nb, 0)
-                for offs, at, nb in entries[v])
-            root, blob = _btree2_blob(recs, csize, filtered, pos,
-                                      node_size=b2_node_size)
-        else:
-            root, blob = _chunk_btree(entries[v], max_offs, pos,
-                                      cap=btree_cap)
-        addrs[f"btree_{v}"] = root
-        bblobs.append((pos, blob))
-        pos += len(blob)
-    return bblobs, pos
-
-
-def _write_netcdf4_staged_tail(
-    keyed: DataFrame, variables, path: str, addrs: dict, order, build,
-    nt: int, rows: int, cols: int, ch: int, cw: int, esize: int,
-    three_d: bool, index: str, ea_params, b2_node_size: int,
-    btree_cap: int, fa_page_bits: int, filtered: bool, data_start: int,
-    encode_chunk,
-) -> pd.DataFrame:
-    """Two-phase executor-parallel tail for COMPRESSED (or non-dense-
-    index) ``write_netcdf4(parallel=True)``: compressed chunk sizes are
-    unknown at plan time, so (1) a distributed job encodes+compresses
-    every chunk and STAGES it as one file under ``<path>._chunks/``,
-    returning only (chunk key, nbytes) — metadata scale; (2) the driver
-    assigns cumulative addresses in (variable, t, ci, cj) order, renders
-    the front matter + chunk indexes, and leaves the data region as
-    holes; (3) a second distributed job ``os.pwrite``\\ s each staged
-    chunk at its assigned address. The bytes never visit the driver, and
-    the result is byte-identical to the serial driver-stream sink. Same
-    filesystem model as the uncompressed pwrite tail: the target (and
-    scratch dir) must be reachable from every executor — local fs here,
-    NFS/Lustre on a real cluster. Reference single-file sink: netcdf-c
-    via /root/reference/src/pyramids/netcdf/netcdf.py:849-982."""
-    scratch = path + "._chunks"
-    shutil.rmtree(scratch, ignore_errors=True)
-    os.makedirs(scratch)
-
-    def _chunk_file(v: str, t: int, ci: int, cj: int) -> str:
-        # variable names may hold path-hostile chars — hex-encode them
-        return os.path.join(scratch,
-                            f"{t}_{ci}_{cj}_{v.encode().hex()}")
-
-    def stage_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        raw = encode_chunk(key, pdf)  # loud var/t/extent guards inside
-        v = str(key[0])
-        t, ci, cj = _chunk_of(key[1], rows, cols, ch, cw)
-        _staged.write_staged(_chunk_file(v, t, ci, cj), raw)
-        return pd.DataFrame({
-            "variable": [v], "t": [t], "ci": [ci], "cj": [cj],
-            "nbytes": [len(raw)],
-        })
-
-    try:
-        man = keyed.groupBy("variable", "tk").applyInPandas(
-            stage_chunk,
-            "variable string, t long, ci long, cj long, nbytes long",
-        ).orderBy("variable", "t", "ci", "cj").toPandas()
-
-        # ---- driver: metadata-only layout ---------------------------------
-        entries: "dict[str, list]" = {v: [] for v in variables}
-        cur = data_start
-        addr_col = []
-        for v, t, ci, cj, nb in zip(man["variable"], man["t"], man["ci"],
-                                    man["cj"], man["nbytes"]):
-            offs = ((int(t), int(ci) * ch, int(cj) * cw, 0) if three_d
-                    else (int(ci) * ch, int(cj) * cw, 0))
-            entries[str(v)].append((offs, cur, int(nb)))
-            addr_col.append(cur)
-            cur += int(nb)
-        man["addr"] = addr_col
-        bblobs, eof = _index_blobs(
-            entries, variables, addrs, index, three_d, nt, rows, cols,
-            ch, cw, esize, filtered, _align8(cur), ea_params,
-            b2_node_size, btree_cap, fa_page_bits)
-        comp = build(addrs)
-        with open(path, "wb") as fh:
-            fh.write(_superblock(eof, addrs["ohdr_/"], addrs["gbtree"],
-                                 addrs["heap_hdr"]))
-            for k in order:
-                fh.seek(addrs[k])
-                fh.write(comp[k])
-            for at, blob in bblobs:
-                fh.seek(at)
-                fh.write(blob)
-            fh.truncate(eof)
-
-        # ---- distributed pwrite of the staged chunks ----------------------
-        _staged.copy_staged(
-            keyed.sparkSession, path,
-            [(_chunk_file(str(v), int(t), int(ci), int(cj)), int(at),
-              int(nb))
-             for v, t, ci, cj, at, nb in zip(
-                 man["variable"], man["t"], man["ci"], man["cj"],
-                 man["addr"], man["nbytes"])],
-            "chunks")
-    finally:
-        shutil.rmtree(scratch, ignore_errors=True)
-    return man[["variable", "t", "ci", "cj", "addr", "nbytes"]]
-
-
-def _write_netcdf4_parallel_tail(
-    keyed: DataFrame, variables, path: str, addrs: dict, order, build,
-    nt: int, rows: int, cols: int, ch: int, cw: int, esize: int,
-    fletcher32: bool, filtered: bool, fa_page_bits: int, data_start: int,
-    encode_chunk,
-) -> pd.DataFrame:
-    """Executor-parallel pwrite tail for ``write_netcdf4(parallel=True)``:
-    with no compression every chunk's stored size is ``ch*cw*esize`` (+4
-    for the fletcher32 suffix) — plan-time-known, so every chunk slot has
-    a computed address and the fixed-array index a computed position
-    (its dense blob size is slot-occupancy-invariant). The front matter
-    is written up front, one Spark job ``os.pwrite``\\ s each existing
-    chunk at its slot address — the classic-NetCDF sink pattern
-    (``write_netcdf``), scaled out instead of streamed through the
-    driver — and the index is patched in afterwards from the collected
-    manifest (chunk KEYS only; the data bytes never visit the driver).
-    Absent slots stay UNDEF in the index → readers see fill, and their
-    file ranges are holes (sparse on any modern fs). Reference
-    single-file sink: netcdf-c via
-    /root/reference/src/pyramids/netcdf/netcdf.py:849-982."""
-    ny, nx = keys.n_tiles(rows, cols, ch, cw)
-    csize = ch * cw * esize
-    stored = csize + (4 if fletcher32 else 0)
-    nslots = nt * ny * nx
-    base = {v: data_start + vi * nslots * stored
-            for vi, v in enumerate(variables)}
-    # the dense FAHD+FADB blob always carries all nslots entries (absent
-    # → UNDEF), so its size — and every index root — is known NOW
-    blob_size = len(_fixed_array_blob({}, nslots, csize, filtered, 0,
-                                      page_bits=fa_page_bits)[1])
-    pos = _align8(data_start + len(variables) * nslots * stored)
-    blob_at = {}
-    for v in variables:
-        addrs[f"btree_{v}"] = pos  # FAHD root = blob start
-        blob_at[v] = pos
-        pos += blob_size
-    eof = pos
-    comp = build(addrs)
-    with open(path, "wb") as fh:
-        fh.write(_superblock(eof, addrs["ohdr_/"], addrs["gbtree"],
-                             addrs["heap_hdr"]))
-        for k in order:
-            fh.seek(addrs[k])
-            fh.write(comp[k])
-        fh.truncate(eof)
-
-    def pwrite_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        raw = encode_chunk(key, pdf)  # loud var/t/extent guards inside
-        v, tk = str(key[0]), int(key[1])
-        t, ci, cj = _chunk_of(tk, rows, cols, ch, cw)
-        at = base[v] + tk * stored  # tk IS the dense slot index
-        fd = os.open(path, os.O_WRONLY)
-        try:
-            _staged._pwrite_all(fd, raw, at)  # pwrite may write short on NFS
-        finally:
-            os.close(fd)
-        return pd.DataFrame({
-            "variable": [v], "t": [t], "ci": [ci], "cj": [cj],
-            "addr": [at], "nbytes": [len(raw)],
-        })
-
-    man = keyed.groupBy("variable", "tk").applyInPandas(
-        pwrite_chunk,
-        "variable string, t long, ci long, cj long, addr long, nbytes long",
-    ).orderBy("variable", "t", "ci", "cj").toPandas()
-
-    with open(path, "r+b") as fh:
-        for v in variables:
-            mv = man[man["variable"] == v]
-            slots = {
-                (int(t) * ny + int(ci)) * nx + int(cj): (int(at), stored, 0)
-                for t, ci, cj, at in zip(mv["t"], mv["ci"], mv["cj"],
-                                         mv["addr"])
-            }
-            root, blob = _fixed_array_blob(
-                slots, nslots, csize, filtered, blob_at[v],
-                page_bits=fa_page_bits)
-            assert root == blob_at[v] and len(blob) == blob_size
-            fh.seek(blob_at[v])
-            fh.write(blob)
-    return man
+    return keyed, encode_chunk, data_start, write_meta
 
 
 # ---------------------------------------------------------------------------

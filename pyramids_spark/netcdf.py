@@ -19,9 +19,9 @@ PUBLIC, compression-free binary spec simple enough to implement directly
   starts at ``begin_v + r * recsize`` where ``recsize`` is the sum of the
   record variables' (padded) per-record sizes.
 
-Distributed shape — BETTER than the GeoTIFF driver-stream sink, because
-classic NetCDF has NO compression: every slab's byte offset is computable
-at plan time. The WRITE pre-truncates the file to its final size, then a
+Distributed shape — simpler than the GeoTIFF / netCDF-4 staged tail,
+because classic NetCDF has NO compression: every slab's byte offset is
+computable at plan time. The WRITE pre-truncates the file to its final size, then a
 single Spark job covers every (variable, record, row-block) key (a
 generated key frame LEFT-joined with the cells, so all-fill slabs are
 written too) and each task ``os.pwrite``-s its slab at its precomputed

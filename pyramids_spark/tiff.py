@@ -17,19 +17,21 @@ dtype table) is directly writable:
   ModelTiepoint, GeoKeyDirectory with the EPSG code) and GDAL's ASCII
   nodata tag;
 - tile payloads: raw little-endian storage-dtype bytes, edge tiles padded
-  with nodata, ALL tiles materialized (no sparse offset-0 tiles — maximum
-  reader compatibility).
+  with nodata, EVERY tile slot pointing at real bytes (absent tiles
+  share one fill tile; no sparse offset-0 tiles — maximum reader
+  compatibility).
 
 Two write shapes:
 
-1. **Single file** (``write_geotiff``): tile blocks (and their optional
-   deflation) build DISTRIBUTED (groupBy tile + applyInPandas, same shape
-   as the zarr chunk writer), then stream to the driver in (band, level,
-   tile) order via ``toLocalIterator`` — O(tile) driver memory — and
-   append sequentially; the offset/count arrays live at layout-time-fixed
-   positions and are patched once streaming ends. Rasters past the
-   classic 4 GiB cap auto-switch to BigTIFF. One .tif is an EXPORT
-   artifact; the serial driver stream is its inherent cost.
+1. **Single file** (``write_geotiff``): one tail, the same as the
+   netCDF-4 sink's — one distributed job (groupBy level, band, tile +
+   applyInPandas) encodes every occupied tile of every level and stages
+   it as a file, ``toPandas`` collects the ``(key, nbytes)`` manifest
+   with no ``orderBy``, the driver lays it out in (level, band, ti, tj)
+   order (absent tiles share ONE fill tile) and writes the header, IFDs
+   and offset/count arrays, and one distributed job ``pwrite``\\ s the
+   staged tiles. Rasters past the classic 4 GiB cap auto-switch to
+   BigTIFF. The target must be reachable from every executor.
 2. **Sharded COG mosaic** (``write_cog_parts``): the scale path — the
    grid splits into aligned super-tile shards, one task per shard
    serializes a COMPLETE standalone COG (``serialize_geotiff``, the same
@@ -47,8 +49,10 @@ file by byte range, the binaryFile-with-offsets pattern.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import shutil
 import struct
 
 import numpy as np
@@ -354,7 +358,7 @@ def _write_ifd_headers(
     bits, sfmt, compress, nod_ascii, predictor: int = 1,
 ):
     """Emit every IFD's tag block + georeferencing arrays; record where
-    the offset/count fields live for post-stream patching."""
+    the offset/count fields live for patching once the layout is known."""
     for k, f_ in enumerate(ifds):
         li = k % n_levels
         g = per_level_grids[li]
@@ -371,7 +375,7 @@ def _write_ifd_headers(
             (_TW, _T_SHORT, 1, f_.tw),
             (_TH, _T_SHORT, 1, f_.th),
             # value 0 for single-tile IFDs: the real offset/count is
-            # patched into the tag's value field after streaming
+            # patched into the tag's value field once laid out
             (_TOFF, v.arr_type, f_.n_tiles,
              0 if f_.n_tiles == 1 else f_.off_arr_at),
             (_TCNT, v.arr_type, f_.n_tiles,
@@ -433,7 +437,6 @@ def write_geotiff(
     dtype: str = "float64",
     bigtiff: "bool | None" = None,
     predictor: int = 1,
-    parallel: bool = False,
 ) -> int:
     """Write bands × pyramid levels as one tiled GeoTIFF. ``per_level`` is
     [(cells_df, grid)] — full resolution first, then each overview (all
@@ -444,18 +447,17 @@ def write_geotiff(
     stores require a representable nodata and integral in-range values
     (loud guards). ``bigtiff`` True/False forces the variant; None
     auto-switches to BigTIFF past the classic 4 GiB cap (GDAL's
-    BIGTIFF=IF_NEEDED). Raw tiles have a constant size so every offset is
-    precomputable; deflated tiles stream sequentially and the offset/count
-    arrays (whose POSITIONS are fixed either way) are patched at the end.
-    ``parallel=True`` takes the two-phase staged tail instead (the same
-    shape as the staged netCDF-4 sink): tiles encode and stage
-    distributed, the driver lays out offsets from the key+size manifest
-    (metadata scale) and writes header/IFDs/offset arrays, and a second
-    distributed job ``pwrite``\\ s the staged bytes — no driver byte
-    stream, and every ABSENT tile's offset points at ONE shared fill
-    tile instead of the serial stream's per-slot fill copy (legal TIFF;
-    sparse rasters get smaller, not just faster). Returns total bytes
-    written."""
+    BIGTIFF=IF_NEEDED). One tail writes the file, the same shape as the
+    netCDF-4 sink (``hdf5.py``): (1) one distributed job encodes every
+    occupied tile of every level and stages it as one file under
+    ``<path>._tiles/``, returning only ``(level, band, tile, nbytes)``;
+    (2) the driver lays the manifest out in (level, band, ti, tj) order,
+    pointing every ABSENT slot at ONE shared fill tile (legal TIFF; a
+    sparse raster stores one fill tile, not one per slot), and writes
+    header + IFDs + offset/count arrays; (3) one distributed job
+    ``pwrite``\\ s the staged bytes. No driver byte stream, and the same
+    filesystem model as every pwrite sink: the target must be reachable
+    from all executors. Returns total bytes written."""
     th, tw = int(tile[0]), int(tile[1])
     base_grid = per_level[0][1]
     nodata = base_grid.nodata
@@ -496,210 +498,95 @@ def write_geotiff(
     nod_ascii = _nodata_ascii(nodata, v.inline)
     ifd_pos, data_start = _layout(ifds, len(nod_ascii), v, predictor)
 
-    if parallel:
-        return _write_geotiff_staged(
-            per_level, n_bands, path, th, tw, compress, dt_name, predictor,
-            fill, v, bits, sfmt, nod_ascii, ifds, ifd_pos, data_start)
-
-    with open(path, "wb") as fh:
-        fh.write(v.header(ifd_pos[0]))
-        _write_ifd_headers(
-            fh, ifds, ifd_pos, [g for _, g in per_level], len(per_level), v,
-            bits, sfmt, compress, nod_ascii, predictor,
-        )
-
-        # ---- tile payloads: distributed block build, streamed in order ----
-        fill_tile = _encode_tile(
-            _dt.cast_block(np.full((th, tw), fill, dtype="<f8"), dt_name),
-            compress, predictor,
-        )
-        cur = data_start
-        for li, (cdf, g) in enumerate(per_level):
-            nty, ntx = keys.n_tiles(g.rows, g.cols, th, tw)
-
-            def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                bb = int(key[0])
-                # out-of-extent cells would either wrap via fancy
-                # indexing (negative) or desync the sequential merge
-                # stream (beyond-grid ti/tj) — fail loudly instead
-                keys.check_extent(pdf["row"].to_numpy(), pdf["col"].to_numpy(),
-                                  g.rows, g.cols)
-                ti, tj, r0, c0 = keys.tile_window(key[1], th, tw, g.rows, g.cols)[:4]
-                block = _blocks.dense_block(pdf, th, tw, r0, c0, fill)
-                # codec runs in the EXECUTORS — the driver only streams
-                # the ready bytes
-                data = _encode_tile(
-                    _dt.cast_block(block, dt_name), compress, predictor
-                )
-                return pd.DataFrame(
-                    {"band": [bb], "ti": [ti], "tj": [tj], "data": [data]}
-                )
-
-            keyed = cdf.where(F.col("value").isNotNull()).select(
-                "band", "row", "col", "value",
-                keys.tile_key("row", "col", th, tw, ntx).alias("_tk"),
-            )
-            blocks = (
-                keyed.groupBy("band", "_tk")
-                .applyInPandas(build, "band long, ti long, tj long, data binary")
-                .orderBy("band", "ti", "tj")
-            )
-            it = blocks.toLocalIterator()
-            nxt_row = next(it, None)
-            for b in range(n_bands):
-                f_ = ifds[b * len(per_level) + li]
-                for t in range(nty * ntx):
-                    ti, tj = t // ntx, t % ntx
-                    if (
-                        nxt_row is not None
-                        and (nxt_row["band"], nxt_row["ti"], nxt_row["tj"]) == (b, ti, tj)
-                    ):
-                        data = nxt_row["data"]  # already deflated executor-side
-                        nxt_row = next(it, None)
-                    else:  # empty tile: all nodata
-                        data = fill_tile
-                    fh.seek(cur)
-                    fh.write(data)
-                    f_.offs.append(cur)
-                    f_.cnts.append(len(data))
-                    cur += len(data)
-            if nxt_row is not None:
-                # a block the merge never matched means its (band, ti, tj)
-                # is outside the declared layout — the file written so far
-                # is silently fill-padded, so fail loudly
-                raise ValueError(
-                    "unconsumed tile block after streaming level "
-                    f"{li}: band={nxt_row['band']} ti={nxt_row['ti']} "
-                    f"tj={nxt_row['tj']} (outside {n_bands}x{nty}x{ntx})"
-                )
-        _patch_arrays(fh, ifds, v)
-        fh.truncate(cur)
-    return cur
-
-
-def _write_geotiff_staged(
-    per_level, n_bands: int, path: str, th: int, tw: int, compress,
-    dt_name: str, predictor: int, fill, v: _Variant, bits: int, sfmt: int,
-    nod_ascii: bytes, ifds: "list[_Ifd]", ifd_pos, data_start: int,
-) -> int:
-    """Two-phase staged tail for ``write_geotiff(parallel=True)`` —
-    identical shape to the staged netCDF-4 sink (``hdf5.py``): (1) a
-    distributed job per pyramid level encodes every occupied tile and
-    stages it as one file under ``<path>._tiles/``, returning only
-    (band, ti, tj, nbytes); (2) the driver assigns cumulative offsets in
-    the serial stream's (level, band, ti, tj) order, pointing every
-    ABSENT slot at one shared fill tile, and writes header + IFDs +
-    offset/count arrays; (3) a second distributed job ``pwrite``\\ s the
-    staged bytes. Same filesystem model as every pwrite sink: the target
-    must be reachable from all executors."""
-    import shutil
-
     scratch = path + "._tiles"
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch)
-    n_levels = len(per_level)
+    grids = [g for _, g in per_level]
+    n_levels = len(grids)
 
-    def _tile_file(li: int, b: int, ti: int, tj: int) -> str:
-        return os.path.join(scratch, f"{li}_{b}_{ti}_{tj}")
+    def tile_file(li: int, b: int, tk: int) -> str:
+        return os.path.join(scratch, f"{li}_{b}_{tk}")
 
+    def stage(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        li, bb, tk = (int(k) for k in key)
+        g = grids[li]
+        if not 0 <= bb < n_bands:
+            raise ValueError(
+                f"tile block outside the declared layout at level {li}: "
+                f"band={bb} (outside {n_bands} bands)")
+        # out-of-extent cells would wrap via fancy indexing (negative) or
+        # land in another tile's slot (beyond the grid) — fail loudly
+        keys.check_extent(pdf["row"].to_numpy(), pdf["col"].to_numpy(),
+                          g.rows, g.cols)
+        r0, c0 = keys.tile_window(tk, th, tw, g.rows, g.cols)[2:4]
+        block = _blocks.dense_block(pdf, th, tw, r0, c0, fill)
+        data = _encode_tile(_dt.cast_block(block, dt_name), compress,
+                            predictor)
+        _staged.write_staged(tile_file(li, bb, tk), data)
+        return pd.DataFrame({"level": [li], "band": [bb], "tk": [tk],
+                             "nbytes": [len(data)]})
+
+    # every level in ONE encode job: the levels' keyed cells union under
+    # a level column
+    keyed = functools.reduce(DataFrame.unionByName, [
+        cdf.where(F.col("value").isNotNull()).select(
+            F.lit(li).cast("long").alias("level"), "band", "row", "col",
+            "value",
+            keys.tile_key("row", "col", th, tw, ifds[li].ntx).alias("_tk"))
+        for li, (cdf, _) in enumerate(per_level)])
     try:
-        manifests = []
-        for li, (cdf, g) in enumerate(per_level):
-            nty, ntx = keys.n_tiles(g.rows, g.cols, th, tw)
-
-            def make_stage(_li: int, _g: Grid):
-                # applyInPandas requires exactly (key, pdf) — bind the
-                # level loop variables through a factory, not defaults
-                def stage(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                    bb = int(key[0])
-                    keys.check_extent(pdf["row"].to_numpy(),
-                                      pdf["col"].to_numpy(), _g.rows, _g.cols)
-                    ti, tj, r0, c0 = keys.tile_window(
-                        key[1], th, tw, _g.rows, _g.cols)[:4]
-                    block = _blocks.dense_block(pdf, th, tw, r0, c0, fill)
-                    data = _encode_tile(
-                        _dt.cast_block(block, dt_name), compress, predictor
-                    )
-                    _staged.write_staged(_tile_file(_li, bb, ti, tj), data)
-                    return pd.DataFrame(
-                        {"band": [bb], "ti": [ti], "tj": [tj],
-                         "nbytes": [len(data)]}
-                    )
-
-                return stage
-
-            stage = make_stage(li, g)
-
-            keyed = cdf.where(F.col("value").isNotNull()).select(
-                "band", "row", "col", "value",
-                keys.tile_key("row", "col", th, tw, ntx).alias("_tk"),
-            )
-            man = (
-                keyed.groupBy("band", "_tk")
-                .applyInPandas(
-                    stage, "band long, ti long, tj long, nbytes long")
-                .orderBy("band", "ti", "tj")
-                .toPandas()
-            )
-            bad = man[(man["band"] < 0) | (man["band"] >= n_bands)
-                      | (man["ti"] >= nty) | (man["tj"] >= ntx)]
-            if len(bad):
-                r = bad.iloc[0]
-                raise ValueError(
-                    "tile block outside the declared layout at level "
-                    f"{li}: band={int(r['band'])} ti={int(r['ti'])} "
-                    f"tj={int(r['tj'])} (outside {n_bands}x{nty}x{ntx})"
-                )
-            manifests.append((li, nty, ntx, man))
-
-        # ---- driver: metadata-only layout; empties share ONE fill tile ----
-        # (encoded and written ONLY if some slot is actually absent)
-        n_absent = sum(n_bands * nty * ntx - len(man)
-                       for _, nty, ntx, man in manifests)
-        fill_tile = b"" if not n_absent else _encode_tile(
+        # no orderBy after the UDF: its range sampler would run every
+        # encode twice — the manifest is metadata scale, lay it out here
+        man = keyed.groupBy("level", "band", "_tk").applyInPandas(
+            stage, "level long, band long, tk long, nbytes long",
+        ).toPandas()
+        # ---- driver: slots in (level, band, ti, tj) file order -----------
+        per_band = [ifds[li].n_tiles for li in range(n_levels)]  # tiles
+        first = np.cumsum([0] + [n_bands * n for n in per_band])
+        sizes = np.full(first[-1], -1, np.int64)
+        lv = man["level"].to_numpy(np.int64)
+        slot = (first[lv] + man["band"].to_numpy(np.int64)
+                * np.asarray(per_band, np.int64)[lv]
+                + man["tk"].to_numpy(np.int64))
+        sizes[slot] = man["nbytes"].to_numpy(np.int64)
+        present = sizes >= 0
+        # empties share ONE fill tile, encoded only if some slot is absent
+        fill_tile = b"" if present.all() else _encode_tile(
             _dt.cast_block(np.full((th, tw), fill, dtype="<f8"), dt_name),
             compress, predictor,
         )
-        fill_at = data_start
+        nb = np.where(present, sizes, 0)
+        at = data_start + len(fill_tile) + np.cumsum(nb) - nb
+        offs = np.where(present, at, data_start).tolist()
+        cnts = np.where(present, sizes, len(fill_tile)).tolist()
+        cur = data_start + len(fill_tile) + int(nb.sum())
         with open(path, "wb") as fh:
             fh.write(v.header(ifd_pos[0]))
-            # header write comes FIRST (it resets f_.offs/f_.cnts); the
-            # layout loop below then populates them, like the serial path
+            # header write comes FIRST (it resets f_.offs/f_.cnts)
             _write_ifd_headers(
-                fh, ifds, ifd_pos, [g for _, g in per_level], n_levels, v,
+                fh, ifds, ifd_pos, grids, n_levels, v,
                 bits, sfmt, compress, nod_ascii, predictor,
             )
-            cur = data_start + len(fill_tile)
-            triples = []  # (staged file, target offset, nbytes)
-            for li, nty, ntx, man in manifests:
-                sizes = {
-                    (int(b), int(ti), int(tj)): int(nb)
-                    for b, ti, tj, nb in zip(man["band"], man["ti"],
-                                             man["tj"], man["nbytes"])
-                }
+            for li in range(n_levels):
                 for b in range(n_bands):
                     f_ = ifds[b * n_levels + li]
-                    for t in range(nty * ntx):
-                        ti, tj = t // ntx, t % ntx
-                        nb = sizes.get((b, ti, tj))
-                        if nb is None:
-                            f_.offs.append(fill_at)
-                            f_.cnts.append(len(fill_tile))
-                        else:
-                            f_.offs.append(cur)
-                            f_.cnts.append(nb)
-                            triples.append(
-                                (_tile_file(li, b, ti, tj), cur, nb))
-                            cur += nb
+                    s0 = first[li] + b * per_band[li]
+                    f_.offs = offs[s0:s0 + per_band[li]]
+                    f_.cnts = cnts[s0:s0 + per_band[li]]
             if fill_tile:
-                fh.seek(fill_at)
+                fh.seek(data_start)
                 fh.write(fill_tile)
             _patch_arrays(fh, ifds, v)
             fh.truncate(cur)
 
         # ---- distributed pwrite of the staged tiles ------------------------
-        _staged.copy_staged(per_level[0][0].sparkSession, path, triples,
-                            "tiles")
+        _staged.copy_staged(
+            keyed.sparkSession, path,
+            [(tile_file(li, b, tk), a, n) for li, b, tk, a, n in zip(
+                man["level"].tolist(), man["band"].tolist(),
+                man["tk"].tolist(), at[slot].tolist(),
+                man["nbytes"].tolist())],
+            "tiles")
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
     return cur

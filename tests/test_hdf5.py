@@ -660,11 +660,10 @@ def test_netcdf4_btree2_depth1_and_unfiltered(spark, tmp_path):
 
 
 def test_netcdf4_parallel_pwrite_roundtrip(spark, tmp_path):
-    """parallel=True: uncompressed chunk sizes are plan-time-known, so
-    the front matter is written up front and executors pwrite chunks
-    directly at computed slot addresses (no driver byte stream); the
-    fixed-array index is patched in afterwards from the key-only
-    manifest. Shuffle + fletcher32 both keep sizes known."""
+    """Uncompressed chunks through the one tail: every stored size is the
+    same, so the packed addresses are contiguous per variable. Shuffle +
+    fletcher32 keep sizes fixed. ``parallel=True`` is still accepted and
+    has no effect."""
     from dataclasses import replace
 
     g = replace(G, nodata=-9999.0)
@@ -678,7 +677,7 @@ def test_netcdf4_parallel_pwrite_roundtrip(spark, tmp_path):
     assert len(man) == 2 * 3 * 4 * 2  # vars × t × ceil(13/4) × ceil(7/4)
     stored = 4 * 4 * 2 + 4  # csize + fletcher suffix
     assert set(man["nbytes"]) == {stored}
-    # addresses are the plan-time dense layout: contiguous per variable
+    # addresses are the dense layout: contiguous per variable
     m0 = man[man["variable"] == "precip"].sort_values(["t", "ci", "cj"])
     a = m0["addr"].to_numpy()
     assert np.array_equal(np.diff(a), np.full(len(a) - 1, stored))
@@ -690,17 +689,19 @@ def test_netcdf4_parallel_pwrite_roundtrip(spark, tmp_path):
 
 def test_netcdf4_parallel_empty_slots_and_2d(spark, tmp_path):
     """A variable with data in two corner chunks leaves the other slots
-    UNDEF in the index (readers see fill; file ranges stay holes), and
-    the 2-D (times=None) shape works unfiltered."""
+    UNDEF in the index (readers see fill) and packs the two chunks back
+    to back; the 2-D (times=None) shape works unfiltered."""
     rows = [("z", 0, 0, 0, 7.0), ("z", 0, 12, 6, 9.0)]
     df = spark.createDataFrame(
         rows, "variable string, t long, row long, col long, value double")
     p = str(tmp_path / "p2.nc")
     man = hdf5.write_netcdf4(
         df, G, p, times=None, compress=None, shuffle=False,
-        chunk=(4, 4), index="fixed_array", parallel=True,
+        chunk=(4, 4), index="fixed_array",
     )
     assert len(man) == 2  # only the two occupied slots ever write
+    assert list(zip(man["ci"], man["cj"])) == [(0, 0), (3, 1)]
+    assert man["addr"].iloc[1] == man["addr"].iloc[0] + 4 * 4 * 8
     back, _, _ = SparkNetCDF.read_file(spark, p)
     got = {(r.variable, r.t, r.row, r.col): r.value
            for r in back.df.collect()}
@@ -708,65 +709,99 @@ def test_netcdf4_parallel_empty_slots_and_2d(spark, tmp_path):
 
 
 def test_netcdf4_parallel_guards(spark, tmp_path):
-    """Out-of-range t fails loudly inside the distributed job on both
-    parallel tails (direct pwrite and staged)."""
+    """Out-of-range t fails loudly inside the distributed encode, raw or
+    compressed, and leaves no scratch directory behind."""
     df, _ = _cells(spark, variables=("z",), nt=1)
     from pyspark.sql import functions as F
 
     bad = df.withColumn("t", F.lit(5).cast("long"))
-    with pytest.raises(Exception, match="outside file dimensions"):
-        hdf5.write_netcdf4(bad, G, str(tmp_path / "x.nc"), times=[0.0],
-                           compress=None, index="fixed_array",
-                           parallel=True)
-    with pytest.raises(Exception, match="outside file dimensions"):
-        hdf5.write_netcdf4(bad, G, str(tmp_path / "y.nc"), times=[0.0],
-                           compress=4, parallel=True)
-    assert not os.path.exists(str(tmp_path / "y.nc") + "._chunks")
+    for name, kw in (("x.nc", dict(compress=None, index="fixed_array")),
+                     ("y.nc", dict(compress=4))):
+        p = str(tmp_path / name)
+        with pytest.raises(Exception, match="outside file dimensions"):
+            hdf5.write_netcdf4(bad, G, p, times=[0.0], **kw)
+        assert not os.path.exists(p + "._chunks")
+
+
+def _stream_netcdf4(cells_df, grid, path, **kw):
+    """Driver-stream netCDF-4 writer, the byte-identity oracle of
+    ``hdf5.write_netcdf4``: the same set-up (``hdf5._netcdf4_plan``), but
+    the encoded chunks stream through the driver in (variable, t, ci, cj)
+    order and are appended from the first data address; the front matter
+    and the chunk indexes are written last."""
+    import inspect
+
+    import pandas as pd
+
+    args = inspect.signature(hdf5.write_netcdf4).bind(
+        cells_df, grid, path, **kw)
+    args.apply_defaults()
+    opts = {k: v for k, v in args.arguments.items()
+            if k not in ("path", "parallel")}
+    keyed, encode_chunk, data_start, write_meta = hdf5._netcdf4_plan(**opts)
+
+    def build_chunk(key, pdf):
+        return pd.DataFrame({"variable": [str(key[0])], "tk": [int(key[1])],
+                             "data": [encode_chunk(key, pdf)]})
+
+    chunks = keyed.groupBy("variable", "tk").applyInPandas(
+        build_chunk, "variable string, tk long, data binary",
+    ).orderBy("variable", "tk")
+    placed, cur = [], data_start
+    with open(path, "wb") as fh:
+        fh.seek(data_start)
+        for r in chunks.toLocalIterator():
+            fh.write(r.data)
+            placed.append((r.variable, r.tk, cur, len(r.data)))
+            cur += len(r.data)
+        return write_meta(fh, pd.DataFrame(
+            placed, columns=["variable", "tk", "addr", "nbytes"]))
 
 
 def test_netcdf4_parallel_staged_byte_identical(spark, tmp_path):
-    """parallel=True with compression (or a sparse chunk index) takes
-    the two-phase staged tail — distributed compress+stage, driver
-    metadata-only layout, distributed pwrite — and produces a file
-    BYTE-IDENTICAL to the serial driver-stream sink, across deflate /
-    zstd+fletcher32 / uncompressed-btree2 and all four index types."""
+    """The one tail (distributed encode+stage, driver metadata layout,
+    distributed pwrite) writes a file BYTE-IDENTICAL to the driver-stream
+    oracle, with the same manifest, across deflate / zstd+fletcher32 /
+    uncompressed, all four index types and the 2-D shape."""
     df, exp = _cells(spark)
-    last = None
-    for i, kw in enumerate([
-        dict(compress=4, shuffle=True, index="btree1"),
-        dict(compress="zstd:5", shuffle=False, fletcher32=True,
-             index="extensible"),
-        dict(compress=None, shuffle=True, index="btree2"),
-        # compressed fixed_array routes through the STAGED tail (the
-        # direct pwrite tail takes fixed_array only when uncompressed)
-        dict(compress=4, shuffle=True, index="fixed_array"),
+    d2 = df.where("t = 0")
+    t3 = dict(times=[10.0, 20.0, 30.0])
+    for i, (cells, kw) in enumerate([
+        (df, dict(t3, compress=4, shuffle=True, index="btree1")),
+        (df, dict(t3, compress="zstd:5", shuffle=False, fletcher32=True,
+                  index="extensible")),
+        (df, dict(t3, compress=None, shuffle=True, index="btree2")),
+        (df, dict(t3, compress=4, shuffle=True, index="fixed_array")),
+        (df, dict(t3, compress=None, shuffle=True, index="fixed_array")),
+        (d2, dict(times=None, compress=4, shuffle=True, index="btree1")),
     ]):
         ps = str(tmp_path / f"s{i}.nc")
         pp = str(tmp_path / f"p{i}.nc")
-        hdf5.write_netcdf4(df, G, ps, times=[10.0, 20.0, 30.0],
-                           chunk=(4, 4), **kw)
-        man = hdf5.write_netcdf4(df, G, pp, times=[10.0, 20.0, 30.0],
-                                 chunk=(4, 4), parallel=True, **kw)
+        want = _stream_netcdf4(cells, G, ps, chunk=(4, 4), **kw)
+        man = hdf5.write_netcdf4(cells, G, pp, chunk=(4, 4), **kw)
         with open(ps, "rb") as a, open(pp, "rb") as b:
             assert a.read() == b.read(), f"config {i} diverged"
         assert list(man.columns) == ["variable", "t", "ci", "cj",
                                      "addr", "nbytes"]
+        assert man.equals(want)
         assert not os.path.exists(pp + "._chunks")  # scratch cleaned
-        last = pp
-    # the 2-D (times=None) staged layout branch
-    d2 = df.where("t = 0")
-    ps2, pp2 = str(tmp_path / "s2d.nc"), str(tmp_path / "p2d.nc")
-    hdf5.write_netcdf4(d2, G, ps2, times=None, chunk=(4, 4),
-                       compress=4, shuffle=True, index="btree1")
-    hdf5.write_netcdf4(d2, G, pp2, times=None, chunk=(4, 4),
-                       compress=4, shuffle=True, index="btree1",
-                       parallel=True)
-    with open(ps2, "rb") as a, open(pp2, "rb") as b:
-        assert a.read() == b.read(), "2-D config diverged"
-    back, _, meta = SparkNetCDF.read_file(spark, last)
+    back, _, meta = SparkNetCDF.read_file(spark, str(tmp_path / "p4.nc"))
     got = {(r.variable, r.t, r.row, r.col): r.value
            for r in back.df.collect()}
     assert got == exp and meta["times"] == [10.0, 20.0, 30.0]
+
+
+def test_netcdf4_write_job_audit(spark, tmp_path, build_jobs):
+    """``write_netcdf4`` runs the encode job and the placement job (a
+    range sort after the encode UDF would add a sampler job that encodes
+    every chunk again); ``variables=None`` adds the variable listing."""
+    df, _ = _cells(spark)
+    kw = dict(times=[10.0, 20.0, 30.0], chunk=(4, 4))
+    p = str(tmp_path / "j.nc")
+    assert build_jobs(lambda: hdf5.write_netcdf4(
+        df, G, p, variables=["precip", "temp"], **kw), "nc4-vars") == 3
+    assert build_jobs(lambda: hdf5.write_netcdf4(df, G, p, **kw),
+                      "nc4-novars") == 5
 
 
 def test_hdf5_dense_attributes_and_links(tmp_path):

@@ -776,6 +776,19 @@ def test_ascii_grid_roundtrip_and_guards(spark, tmp_path):
         two_band.to_ascii_grid(str(tmp_path / "b.asc"))
 
 
+def test_ascii_grid_job_audit(spark, tmp_path, build_jobs):
+    """``to_ascii_grid`` range-partitions on row before its row builder,
+    so rows come back in order with no sort after the UDF: 2 jobs for the
+    single-band probe, then the range sampler, the shuffle and the
+    streamed rows — an ``orderBy`` after the UDF would add a sampler job
+    that builds every line again."""
+    from pyramids_spark.api import SparkDataset
+
+    ds = SparkDataset(grid_df(spark, COELLO).where("NOT (row = 2)"), COELLO)
+    assert build_jobs(lambda: ds.to_ascii_grid(str(tmp_path / "j.asc")),
+                      "ascii") == 5
+
+
 def _png_file(w, h, depth, ctype, interlace, idat, plte=None):
     import struct as _struct
     import zlib as _zlib

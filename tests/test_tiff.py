@@ -1159,54 +1159,71 @@ def test_geotiff_oldstyle_jpeg_rejects(spark, tmp_path):
 
 
 def test_geotiff_parallel_staged_roundtrip(spark, tmp_path):
-    """write_geotiff(parallel=True): the two-phase staged tail (encode+
-    stage distributed -> driver metadata layout -> distributed pwrite)
-    round-trips identically to the serial stream, across deflate +
-    predictor and int16, with overviews. Absent tiles all point at ONE
-    shared fill tile, so sparse rasters come out SMALLER than the serial
-    per-slot fill copies."""
+    """write_geotiff's one tail (encode+stage distributed -> driver
+    metadata layout -> distributed pwrite) is byte-identical to
+    ``serialize_geotiff`` on a fully populated multi-tile raster, with one
+    level and with an overview, across raw, deflate + predictor 3 float32
+    and int16 deflate + predictor 2. On a sparse raster every absent
+    tile's offset is ONE shared fill tile and the values equal the grid."""
     import os
 
-    g = COELLO
-    src = grid_df(spark, g)
-    ds = SparkDataset(src.where((F.col("row") < 5) | (F.col("col") > 10)), g)
-    for i, kw in enumerate([
-        dict(compress=6, predictor=2, dtype="int16"),
-        dict(compress=None),
-    ]):
-        ps = str(tmp_path / f"s{i}.tif")
-        pp = str(tmp_path / f"p{i}.tif")
-        ds.to_cog(ps, levels=(2,), tile=(4, 4), **kw)
-        ds.to_cog(pp, levels=(2,), tile=(4, 4), parallel=True, **kw)
-        assert not os.path.exists(pp + "._tiles")  # scratch cleaned
-        a = {(r.band, r.row, r.col): r.value
-             for r in SparkDataset.from_geotiff(spark, ps).df.collect()}
-        b = {(r.band, r.row, r.col): r.value
-             for r in SparkDataset.from_geotiff(spark, pp).df.collect()}
-        assert a == b and len(b) > 0
-        ov_a = {(r.band, r.row, r.col): r.value
-                for r in SparkDataset.from_geotiff(spark, ps,
-                                                   overview=1).df.collect()}
-        ov_b = {(r.band, r.row, r.col): r.value
-                for r in SparkDataset.from_geotiff(spark, pp,
-                                                   overview=1).df.collect()}
-        assert ov_a == ov_b and len(ov_b) > 0
-        assert os.path.getsize(pp) < os.path.getsize(ps)  # shared fill tile
-
-    # every empty slot's offset is the SAME shared fill tile
     from pyramids_spark import tiff as T
 
-    ifds = T._read_ifds(str(tmp_path / "p1.tif"))
-    offs = ifds[0]["offsets"]
-    counts: dict = {}
-    for o in offs:
-        counts[o] = counts.get(o, 0) + 1
-    shared = [o for o, n in counts.items() if n > 1]
-    assert len(shared) == 1  # one fill tile, many pointers
+    g2 = Grid(x0=COELLO.x0, y0=COELLO.y0, cell=COELLO.cell * 2, rows=7,
+              cols=7, epsg=COELLO.epsg, nodata=COELLO.nodata)
+    levels = [(grid_df(spark, COELLO), COELLO), (grid_df(spark, g2), g2)]
+    arrs = [(np.arange(g.rows * g.cols, dtype="<f8") + 1).reshape(
+        1, g.rows, g.cols) for _, g in levels]
+    for i, kw in enumerate([
+        dict(compress=None),
+        dict(compress=6, predictor=3, dtype="float32"),
+        dict(compress=6, predictor=2, dtype="int16"),
+    ]):
+        for n in (1, 2):
+            p = str(tmp_path / f"f{i}_{n}.tif")
+            size = T.write_geotiff(levels[:n], 1, p, tile=(4, 4), **kw)
+            want = T.serialize_geotiff(arrs[:n], [g for _, g in levels[:n]],
+                                       tile=(4, 4), **kw)
+            got = open(p, "rb").read()
+            assert got == want and size == len(want), f"config {i}/{n}"
+            assert not os.path.exists(p + "._tiles")  # scratch cleaned
+
+    src = grid_df(spark, COELLO).where((F.col("row") < 5) | (F.col("col") > 10))
+    a = {(r.band, r.row, r.col): r.value for r in src.collect()}
+    for i, kw in enumerate([dict(compress=6, predictor=2, dtype="int16"),
+                            dict(compress=None)]):
+        p = str(tmp_path / f"sparse{i}.tif")
+        SparkDataset(src, COELLO).to_cog(p, levels=(2,), tile=(4, 4), **kw)
+        b = {(r.band, r.row, r.col): r.value
+             for r in SparkDataset.from_geotiff(spark, p).df.collect()}
+        assert a == b and len(b) > 0
+        # every empty slot's offset is the SAME shared fill tile
+        offs = T._read_ifds(p)[0]["offsets"]
+        counts: dict = {}
+        for o in offs:
+            counts[o] = counts.get(o, 0) + 1
+        shared = [o for o, n in counts.items() if n > 1]
+        assert len(shared) == 1  # one fill tile, many pointers
+
+
+def test_geotiff_write_job_audit(spark, tmp_path, build_jobs):
+    """``write_geotiff`` runs the encode job (every level in one job) and
+    the placement job — the same count for one level and two; a range sort
+    after the encode UDF would add a sampler job that encodes every tile
+    again."""
+    from pyramids_spark import tiff as T
+
+    g2 = Grid(x0=COELLO.x0, y0=COELLO.y0, cell=COELLO.cell * 2, rows=7,
+              cols=7, epsg=COELLO.epsg, nodata=COELLO.nodata)
+    levels = [(grid_df(spark, COELLO), COELLO), (grid_df(spark, g2), g2)]
+    p = str(tmp_path / "j.tif")
+    for n in (1, 2):
+        assert build_jobs(lambda: T.write_geotiff(
+            levels[:n], 1, p, tile=(4, 4), compress=6), f"tif-{n}") == 3
 
 
 def test_geotiff_parallel_staged_guards(spark, tmp_path):
-    """Out-of-extent cells fail loudly inside the staged job and leave
+    """Out-of-extent cells fail loudly inside the encode job and leave
     no scratch directory behind."""
     import os
 
@@ -1216,6 +1233,5 @@ def test_geotiff_parallel_staged_guards(spark, tmp_path):
         [(0, 0, 99, 1.0)], "band long, row long, col long, value double")
     p = str(tmp_path / "bad.tif")
     with pytest.raises(Exception, match="outside grid extent"):
-        SparkDataset(bad, g).to_cog(p, levels=(), tile=(4, 4),
-                                    parallel=True)
+        SparkDataset(bad, g).to_cog(p, levels=(), tile=(4, 4))
     assert not os.path.exists(p + "._tiles")
