@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -375,18 +377,20 @@ class SparkDataset:
         top-to-bottom — O(row) driver memory; a .asc is a
         small legacy interop artifact (single band; CRS travels in a
         sidecar .prj in the wild, carried here by the read-side ``epsg``
-        parameter). Returns bytes written."""
+        parameter). A cell of band > 0 makes the row builder raise; it
+        surfaces as ``ValueError`` while the lines stream, so earlier lines
+        may already be in the file. Returns bytes written."""
         g = self.grid
         nod = -9999.0 if g.nodata is None else float(g.nodata)
-        if self.df.where(F.col("band") > 0).limit(1).count():
-            raise ValueError("ASCII grid is single-band (band 0 only)")
-
+        one_band = "ASCII grid is single-band (band 0 only)"
         cols = g.cols
 
         def build(key, pdf):
             import numpy as np
             import pandas as pd
 
+            if (pdf["band"] > 0).any():
+                raise ValueError(one_band)
             r = int(key[0])
             vals = np.full(cols, nod, dtype="<f8")
             pdf = pdf[pdf["value"].notna()]
@@ -403,12 +407,21 @@ class SparkDataset:
         # grouping, so the row order costs no sort after the UDF (an
         # orderBy there would run every build a second time in its sampler)
         lines = (
-            self.df.where(F.col("value").isNotNull())
+            self.df.where(F.col("value").isNotNull() | (F.col("band") > 0))
             .repartitionByRange("row")
             .groupBy("row")
             .applyInPandas(build, "row long, line string")
             .sortWithinPartitions("row")
         )
+
+        def rows_in_order():
+            try:
+                yield from lines.toLocalIterator()
+            except (Py4JJavaError, PythonException) as e:  # wrapped worker error
+                if one_band in str(e):
+                    raise ValueError(one_band) from e
+                raise
+
         # .17g = shortest exact double representation family: the header
         # coordinates and cell values survive the text round trip bit-exact
         hdr = (
@@ -421,7 +434,7 @@ class SparkDataset:
         with open(path, "w") as fh:
             fh.write(hdr)
             n += len(hdr)
-            it = lines.toLocalIterator()
+            it = rows_in_order()
             nxt = next(it, None)
             for r in range(g.rows):
                 if nxt is not None and nxt["row"] == r:

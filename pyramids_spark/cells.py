@@ -322,47 +322,212 @@ def _segment_intersects_rect(
     return ok & (t0 <= t1)
 
 
+def expand_ranges(lo: np.ndarray, hi: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(owner, value) for every integer of each inclusive range ``[lo, hi]``
+    (empty when ``hi < lo``), owners ascending, values ascending per owner."""
+    n = np.maximum(hi - lo + 1, 0)
+    own = np.repeat(np.arange(len(n)), n)
+    return own, lo[own] + np.arange(n.sum()) - np.repeat(np.cumsum(n) - n, n)
+
+
+def ring_batches(xs_l: list, ys_l: list):
+    """Yield ``(sel, X, Y)``: ring indices ``sel`` and their ``(len(sel), V)``
+    vertex arrays. Rings are bucketed by padded length (next power of two,
+    at least 4) so one 10^5-vertex coastline doesn't pad every quad in the
+    batch to its width; pad = repeat the last vertex (a zero-length edge:
+    no crossing, no extra cell). Empty rings are skipped."""
+    lens = np.fromiter((len(a) for a in xs_l), np.int64, len(xs_l))
+    buckets = np.maximum(4, 1 << np.ceil(np.log2(np.maximum(lens, 1))).astype(np.int64))
+    buckets[lens == 0] = 0
+    for V in np.unique(buckets[buckets > 0]):
+        sel = np.flatnonzero(buckets == V)
+        X = np.empty((len(sel), V), dtype=np.float64)
+        Y = np.empty((len(sel), V), dtype=np.float64)
+        for i, r in enumerate(sel):
+            lv = lens[r]
+            X[i, :lv], Y[i, :lv] = xs_l[r], ys_l[r]
+            X[i, lv:], Y[i, lv:] = xs_l[r][lv - 1], ys_l[r][lv - 1]
+        yield sel, X, Y
+
+
+def _ray_cast_rows(px: np.ndarray, py: np.ndarray, X: np.ndarray, Y: np.ndarray) -> np.ndarray:
+    """Even-odd ray-cast where EVERY point has its own ring: px/py (T,),
+    X/Y (T, V) padded ring vertices. Same arithmetic as
+    :func:`points_in_polygon`, vectorized over the (point, ring) pairs."""
+    acc = np.zeros(px.shape[0], dtype=bool)
+    V = X.shape[1]
+    for j in range(V):
+        xa, ya = X[:, j], Y[:, j]
+        xb, yb = X[:, (j + 1) % V], Y[:, (j + 1) % V]
+        cond = (ya > py) != (yb > py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = xa + (py - ya) * (xb - xa) / (yb - ya)
+        acc ^= cond & (px < xint)
+    return acc
+
+
+def _row_pairs(box, yi: np.ndarray):
+    """Every (part, row) pair of the parts' boxes, ordered by part then row:
+    (part, row, position of the row on the axis ``yi``)."""
+    c0, c1, r0, r1 = box
+    part, row = expand_ranges(r0, np.where(c1 >= c0, r1, r0 - 1))
+    return part, row, np.searchsorted(yi, row)
+
+
+def _scan(X, Y, box, xi, xm, ym, pairs):
+    """Centre-line scan of every (part, row) pair: the even-odd crossings of
+    the row's centre line, sorted, pair up into ``[x_2i, x_2i+1)``
+    intervals; a centre is inside iff it lies in one (the same
+    ``xint = xa + (py - ya)(xb - xa)/(yb - ya)`` values and the same
+    comparison as :func:`points_in_polygon`, so the answer is identical).
+    Returns (pair index, first, stop) column positions on ``xi``."""
+    part, _, rpos = pairs
+    py = ym[rpos]
+    Xp, Yp = X[part], Y[part]
+    V = X.shape[1]
+    xint = np.full((len(part), V + V % 2), np.inf)
+    for j in range(V):
+        xa, ya = Xp[:, j], Yp[:, j]
+        xb, yb = Xp[:, (j + 1) % V], Yp[:, (j + 1) % V]
+        cond = (ya > py) != (yb > py)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint[cond, j] = (xa + (py - ya) * (xb - xa) / (yb - ya))[cond]
+    xint.sort(axis=1)
+    # a closed ring crosses every line an even number of times
+    k, i = np.nonzero(np.isfinite(xint[:, 1::2]))
+    lo = np.maximum(np.searchsorted(xm, xint[k, 2 * i]),
+                    np.searchsorted(xi, box[0])[part[k]])
+    hi = np.minimum(np.searchsorted(xm, xint[k, 2 * i + 1]),
+                    np.searchsorted(xi, box[1], "right")[part[k]])
+    ok = lo < hi
+    return k[ok], lo[ok], hi[ok]
+
+
+def polygon_runs(X: np.ndarray, Y: np.ndarray, box, xaxis, yaxis):
+    """THE polygon → cells kernel, as centre-inside row runs.
+
+    ``X``/``Y`` are (P, V) ring vertices, each ring padded by repeating its
+    last vertex (open or closed rings both work). ``box`` = ``(c0, c1, r0,
+    r1)``: per-part inclusive column/row index ranges, clamped to the grid
+    by the caller. ``xaxis``/``yaxis`` = ``(idx, mid)``: ascending column/row
+    indices covering every box and each cell's centre coordinate along the
+    axis, computed with the caller's own grid arithmetic — so the kept
+    cells are exactly the cells whose centre the even-odd ray-cast puts
+    inside. Vectorized over all (part, row) pairs; the only Python loop
+    runs over the V ring vertices. Work is O(pairs × V), not O(area).
+
+    Returns ``(part, row, c_first, c_last)``: disjoint inclusive runs, in
+    (part, row, column) order.
+    """
+    pairs = _row_pairs(box, yaxis[0])
+    k, lo, hi = _scan(X, Y, box, xaxis[0], xaxis[1], yaxis[1], pairs)
+    return pairs[0][k], pairs[1][k], xaxis[0][lo], xaxis[0][hi - 1]
+
+
+def polygon_cells(X: np.ndarray, Y: np.ndarray, box, xaxis, yaxis, mode: str = "center"):
+    """Covering cells of each part with a boundary flag, from the row runs
+    of :func:`polygon_runs`. Axes here are ``(idx, lo, hi, mid)``: the
+    cells' lower and upper edges and centre along the axis (for rows,
+    ``lo`` is the south edge).
+
+    ``boundary=False`` cells lie fully inside the part (all 4 corners in,
+    no edge crossing). ``mode='center'`` keeps centre-inside cells;
+    ``mode='intersects'`` adds cells holding a vertex (half-open) or
+    crossed by an edge (closed cell, Liang-Barsky). Only cells within one
+    cell of an edge can be a boundary cell or an intersects-only cell: per
+    (part, row), the candidates are the columns each edge spans inside the
+    row's band widened by one row, plus one column on each side, and the
+    exact per-cell predicates decide them. Every other run cell is
+    interior.
+
+    Returns ``(part, row, col, boundary)`` in (part, row, col) order.
+    """
+    xi, xlo, xhi, xm = xaxis
+    yi, ylo, yhi, ym = yaxis
+    pairs = _row_pairs(box, yi)
+    part, _, rpos = pairs
+    rk, rlo, rhi = _scan(X, Y, box, xi, xm, ym, pairs)
+    ncol = len(xi)
+    own, cpos = expand_ranges(rlo, rhi - 1)
+    run_key = rk[own] * ncol + cpos
+    # candidates: each edge's x-extent inside the widened row band
+    V = X.shape[1]
+    nxt = list(range(1, V)) + [0]
+    Xa, Ya = X[part], Y[part]
+    Xb, Yb = Xa[:, nxt], Ya[:, nxt]
+    h = (yhi - ylo)[rpos][:, None]
+    b0, b1 = ylo[rpos][:, None] - h, yhi[rpos][:, None] + h
+    ymin, ymax = np.minimum(Ya, Yb), np.maximum(Ya, Yb)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        s = (Xb - Xa) / (Yb - Ya)
+        flat = Ya == Yb
+        xs0 = np.where(flat, Xa, Xa + (np.clip(b0, ymin, ymax) - Ya) * s)
+        xs1 = np.where(flat, Xb, Xa + (np.clip(b1, ymin, ymax) - Ya) * s)
+    k, j = np.nonzero((ymax >= b0) & (ymin <= b1))
+    a = np.maximum(np.searchsorted(xhi, np.minimum(xs0, xs1)[k, j]) - 1,
+                   np.searchsorted(xi, box[0])[part[k]])
+    b = np.minimum(np.searchsorted(xlo, np.maximum(xs0, xs1)[k, j], "right") + 1,
+                   np.searchsorted(xi, box[1], "right")[part[k]])
+    own, cpos = expand_ranges(a, b - 1)
+    cand_key = np.unique(k[own] * ncol + cpos)
+    ck, cpos = cand_key // ncol, cand_key % ncol
+    # exact per-cell predicates on the candidates
+    Xc, Yc = X[part[ck]], Y[part[ck]]
+    bx0, bx1, by0, by1 = xlo[cpos], xhi[cpos], ylo[rpos[ck]], yhi[rpos[ck]]
+    center_in = _ray_cast_rows(xm[cpos], ym[rpos[ck]], Xc, Yc)
+    interior = center_in.copy()
+    for qx, qy in ((bx0, by0), (bx0, by1), (bx1, by0), (bx1, by1)):
+        interior &= _ray_cast_rows(qx, qy, Xc, Yc)
+    crossed = _segment_intersects_rect(
+        Xc, Yc, Xc[:, nxt], Yc[:, nxt],
+        bx0[:, None], by0[:, None], bx1[:, None], by1[:, None],
+    ).any(axis=1)
+    interior &= ~crossed
+    keep = center_in
+    if mode == "intersects":
+        vert_in = (
+            (bx0[:, None] <= Xc) & (Xc < bx1[:, None])
+            & (by0[:, None] <= Yc) & (Yc < by1[:, None])
+        ).any(axis=1)
+        keep = center_in | vert_in | crossed
+    inner = ~np.isin(run_key, cand_key, assume_unique=True)
+    key = np.concatenate([run_key[inner], cand_key[keep]])
+    boundary = np.concatenate([np.zeros(int(inner.sum()), dtype=bool), ~interior[keep]])
+    order = np.argsort(key, kind="stable")
+    key, boundary = key[order], boundary[order]
+    pk = key // ncol
+    return part[pk], yi[rpos[pk]], xi[key % ncol], boundary
+
+
+def polygon_cover(X: np.ndarray, Y: np.ndarray, zoom: int, mode: str = "center"):
+    """:func:`polygon_cells` on the geo grid at ``zoom``: a padded ring batch
+    → ``(part, cell_id, boundary)`` in (part, cell_id) order. Box and cell
+    bounds use :func:`geo_cell_np`'s floor rule and :func:`cell_bounds_np`;
+    the axes hold only the rows and columns some box touches."""
+    c0, r0 = geo_cell_np(X.min(axis=1), Y.max(axis=1), zoom)
+    c1, r1 = geo_cell_np(X.max(axis=1), Y.min(axis=1), zoom)
+    xi = np.unique(expand_ranges(c0, c1)[1])
+    yi = np.unique(expand_ranges(r0, r1)[1])
+    x0, _, x1, _ = cell_bounds_np(xi, 0, zoom)
+    _, y0, _, y1 = cell_bounds_np(0, yi, zoom)
+    part, row, col, boundary = polygon_cells(
+        X, Y, (c0, c1, r0, r1),
+        (xi, x0, x1, (x0 + x1) / 2.0), (yi, y0, y1, (y0 + y1) / 2.0), mode,
+    )
+    return part, pack(col, row, zoom), boundary
+
+
 def cells_covering_polygon(
     poly: np.ndarray, zoom: int, mode: str = "center"
 ) -> np.ndarray:
-    """Cell ids whose cells are covered by ``poly`` (geo space).
+    """Cell ids whose cells are covered by ``poly`` (geo space), ascending.
 
     ``mode='center'``  ≙ reference zonal rasterize ``ALL_TOUCHED=FALSE``
     (``_zonal.py:98-103``): cell CENTRE inside polygon.
     ``mode='intersects'`` ≙ ``allTouched=True`` burn / crop ``touch=True``
     (``dataset/dataset.py:959-1003``, ``ops/spatial.py:888-1000``): any
     overlap counts — cell centre inside, OR a polygon vertex inside the cell,
-    OR a polygon edge crossing the cell.
+    OR a polygon edge crossing the cell. A one-part :func:`polygon_cover`.
     """
-    n = 1 << zoom
-    if np.allclose(poly[0], poly[-1]):
-        poly = poly[:-1]
-    lon0, lon1 = poly[:, 0].min(), poly[:, 0].max()
-    lat0, lat1 = poly[:, 1].min(), poly[:, 1].max()
-    cx0 = max(0, int(np.floor((lon0 - LON_MIN) / LON_SPAN * n)))
-    cx1 = min(n - 1, int(np.floor((lon1 - LON_MIN) / LON_SPAN * n)))
-    cy0 = max(0, int(np.floor((90.0 - lat1) / 180.0 * n)))
-    cy1 = min(n - 1, int(np.floor((90.0 - lat0) / 180.0 * n)))
-    gx, gy = np.meshgrid(np.arange(cx0, cx1 + 1), np.arange(cy0, cy1 + 1))
-    gx, gy = gx.ravel().astype(np.int64), gy.ravel().astype(np.int64)
-    bx0, by0, bx1, by1 = cell_bounds_np(gx, gy, zoom)
-    ccx, ccy = (bx0 + bx1) / 2.0, (by0 + by1) / 2.0
-    center_in = points_in_polygon(ccx, ccy, poly)
-    if mode == "center":
-        return pack(gx[center_in], gy[center_in], zoom)
-    # intersects: add vertex-in-cell and edge-crossing tests
-    vx, vy = poly[:, 0], poly[:, 1]
-    vert_in = (
-        (bx0[:, None] <= vx[None, :])
-        & (vx[None, :] < bx1[:, None])
-        & (by0[:, None] <= vy[None, :])
-        & (vy[None, :] < by1[:, None])
-    ).any(axis=1)
-    ex0, ey0 = vx, vy
-    ex1, ey1 = np.roll(vx, -1), np.roll(vy, -1)
-    edge_x = _segment_intersects_rect(
-        ex0[None, :], ey0[None, :], ex1[None, :], ey1[None, :],
-        bx0[:, None], by0[:, None], bx1[:, None], by1[:, None],
-    ).any(axis=1)
-    keep = center_in | vert_in | edge_x
-    return pack(gx[keep], gy[keep], zoom)
+    p = np.asarray(poly, dtype=np.float64)
+    return polygon_cover(p[None, :, 0], p[None, :, 1], zoom, mode)[1]

@@ -803,7 +803,7 @@ def write_netcdf4(
         # variable names may hold path-hostile chars — hex-encode them
         return os.path.join(scratch, f"{tk}_{v.encode().hex()}")
 
-    def stage(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def stage(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         raw = encode_chunk(key, pdf)  # loud var/t/extent guards inside
         v, tk = str(key[0]), int(key[1])
         _staged.write_staged(chunk_file(v, tk), raw)
@@ -1048,7 +1048,7 @@ def _netcdf4_plan(
 
     var_set = frozenset(variables)
 
-    def encode_chunk(key, pdf: pd.DataFrame) -> bytes:
+    def encode_chunk(key: tuple, pdf: pd.DataFrame) -> bytes:
         v = str(key[0])
         t, ci, cj = _chunk_of(key[1], rows, cols, ch, cw)
         # loud extent guard, like the TIFF / classic-NetCDF sinks: an

@@ -275,7 +275,7 @@ def write_netcdf(
     # of silently vanishing from the file (code-review r5 finding).
     covered = slabs.join(keyed, ["variable", "t", "_rb"], "full_outer")
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         v, t, rb = str(key[0]), int(key[1]), int(key[2])
         if v not in begins or not (0 <= t < n_t) or not (0 <= rb < n_blocks):
             raise ValueError(

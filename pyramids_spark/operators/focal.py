@@ -114,7 +114,7 @@ def focal_tiles(
         F.explode(keys.halo_tiles("row", "col", tile, tile, rows, cols, r)).alias("tid"),
     )
 
-    def per_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         band, tid = key
         _, _, r0, c0, h, w = keys.tile_window(tid, tile, tile, rows, cols)
         # local window with halo, reflected at grid edges

@@ -10,8 +10,12 @@ DataFrame, sides built distributed):
    ``(zone_id, part_key, cell_id, boundary, convex)``. ``boundary=False``
    cells lie fully inside the part (all 4 corners in, no edge crossing) →
    their candidates need NO exact test. ``convex`` marks ccw-convex parts
-   with at most ``_MAX_EDGE_COLS`` real edges. One batched numpy kernel
-   (:func:`_cover_parts`) builds it, on the driver or inside ``mapInPandas``.
+   with at most ``_MAX_EDGE_COLS`` real edges. :func:`_cover_parts` builds
+   it, on the driver or inside ``mapInPandas``, by expanding the row runs
+   of the engine's one polygon → cells kernel (``cells.polygon_cover``, a
+   vectorized scanline shared with ``cells_covering_polygon``, zonal
+   labels and polygon crop): only cells within one cell of an edge get the
+   exact per-cell boundary tests, every other run cell is interior.
 2. **Encode** (JVM-side): each point row gets ``cell_id`` via pure column
    arithmetic — no UDF, stays in whole-stage codegen.
 3. **Join**: ``points ⋈ cover ON cell_id``. A zone list's cover is a
@@ -52,104 +56,6 @@ _COVER_SCHEMA = "zone_id long, part_key long, cell_id long, boundary boolean, co
 
 _SIDES_CACHE: OrderedDict = OrderedDict()
 _SIDES_CACHE_MAX = 32  # LRU bound: long-lived sessions must not accumulate
-
-
-def _part_cover_np(poly: np.ndarray, zoom: int, mode: str) -> tuple[np.ndarray, np.ndarray]:
-    """Covering cells of ONE polygon part → (cell_ids, boundary_mask) — the
-    per-part reference the batched kernel (:func:`_parts_cover_batch`) is
-    tested against. ``boundary=False`` cells are fully inside (all 4
-    corners in, no edge crossing)."""
-    cover = cells.cells_covering_polygon(
-        poly, zoom, mode="intersects" if mode == "intersects" else "center"
-    )
-    if cover.size == 0:
-        return cover, np.zeros(0, dtype=bool)
-    cx, cy = cells.unpack(cover, zoom)
-    x0, y0, x1, y1 = cells.cell_bounds_np(cx, cy, zoom)
-    interior = np.ones(cover.shape[0], dtype=bool)
-    for qx, qy in ((x0, y0), (x0, y1), (x1, y0), (x1, y1)):
-        interior &= cells.points_in_polygon(qx, qy, poly)
-    # an edge crossing makes a cell non-interior even if corners are in
-    p = poly[:-1] if np.allclose(poly[0], poly[-1]) else poly
-    ex0, ey0 = p[:, 0], p[:, 1]
-    ex1, ey1 = np.roll(ex0, -1), np.roll(ey0, -1)
-    crossed = cells._segment_intersects_rect(
-        ex0[None, :], ey0[None, :], ex1[None, :], ey1[None, :],
-        x0[:, None], y0[:, None], x1[:, None], y1[:, None],
-    ).any(axis=1)
-    interior &= ~crossed
-    return cover, ~interior
-
-
-def _pip_multi(px: np.ndarray, py: np.ndarray, X: np.ndarray, Y: np.ndarray) -> np.ndarray:
-    """Even-odd ray-cast where EVERY row has its own polygon: px/py (T,),
-    X/Y (T, V) ring vertices (closed or open; padded rows repeat the last
-    vertex — a zero-length edge contributes nothing to the crossing count).
-    Same arithmetic as :func:`cells.points_in_polygon`, vectorized over the
-    (row, polygon) pairs instead of one polygon."""
-    acc = np.zeros(px.shape[0], dtype=bool)
-    V = X.shape[1]
-    for j in range(V):
-        xa, ya = X[:, j], Y[:, j]
-        xb, yb = X[:, (j + 1) % V], Y[:, (j + 1) % V]
-        cond = (ya > py) != (yb > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = xa + (py - ya) * (xb - xa) / (yb - ya)
-        acc ^= cond & (px < xint)
-    return acc
-
-
-def _parts_cover_batch(X: np.ndarray, Y: np.ndarray, zoom: int, mode: str):
-    """Cover of a BATCH of polygon parts at once: X/Y are (P, V) padded ring
-    arrays (pad = repeat last vertex). Returns (part_row, cell_id,
-    boundary) int/bool arrays. Semantics identical to
-    :func:`_part_cover_np` per part, but every loop here is over the V ring
-    vertices (small), vectorized over all part×cell pairs — ~50× the
-    per-part-Python-call path, which is what makes a 10^7-face cover a
-    numpy job instead of 10^7 interpreter round-trips."""
-    n = 1 << zoom
-    P, V = X.shape
-    lon0, lon1 = X.min(axis=1), X.max(axis=1)
-    lat0, lat1 = Y.min(axis=1), Y.max(axis=1)
-    cx0 = np.clip(np.floor((lon0 - cells.LON_MIN) / cells.LON_SPAN * n).astype(np.int64), 0, n - 1)
-    cx1 = np.clip(np.floor((lon1 - cells.LON_MIN) / cells.LON_SPAN * n).astype(np.int64), 0, n - 1)
-    cy0 = np.clip(np.floor((90.0 - lat1) / 180.0 * n).astype(np.int64), 0, n - 1)
-    cy1 = np.clip(np.floor((90.0 - lat0) / 180.0 * n).astype(np.int64), 0, n - 1)
-    w = cx1 - cx0 + 1
-    counts = w * (cy1 - cy0 + 1)
-    offs = np.concatenate([[0], np.cumsum(counts)])
-    T = int(offs[-1])
-    if T == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return z, z, np.zeros(0, dtype=bool)
-    part = np.repeat(np.arange(P, dtype=np.int64), counts)
-    k = np.arange(T, dtype=np.int64) - offs[part]
-    gx = cx0[part] + k % w[part]
-    gy = cy0[part] + k // w[part]
-    bx0, by0, bx1, by1 = cells.cell_bounds_np(gx, gy, zoom)
-    Xp, Yp = X[part], Y[part]
-    center_in = _pip_multi((bx0 + bx1) / 2.0, (by0 + by1) / 2.0, Xp, Yp)
-    # interior = all 4 corners in AND no edge crossing (→ boundary = ~interior)
-    interior = center_in.copy()
-    for qx, qy in ((bx0, by0), (bx0, by1), (bx1, by0), (bx1, by1)):
-        interior &= _pip_multi(qx, qy, Xp, Yp)
-    ex0, ey0 = Xp, Yp
-    ex1 = Xp[:, list(range(1, V)) + [0]]
-    ey1 = Yp[:, list(range(1, V)) + [0]]
-    crossed = cells._segment_intersects_rect(
-        ex0, ey0, ex1, ey1,
-        bx0[:, None], by0[:, None], bx1[:, None], by1[:, None],
-    ).any(axis=1)
-    interior &= ~crossed
-    if mode == "intersects":
-        vert_in = (
-            (bx0[:, None] <= Xp) & (Xp < bx1[:, None])
-            & (by0[:, None] <= Yp) & (Yp < by1[:, None])
-        ).any(axis=1)
-        keep = center_in | vert_in | crossed
-    else:
-        keep = center_in
-    return part[keep], cells.pack(gx[keep], gy[keep], zoom), ~interior[keep]
 
 
 def _convex_ccw_batch(X: np.ndarray, Y: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -199,27 +105,16 @@ def _real_edges(xs_l: list, ys_l: list) -> np.ndarray:
 
 def _cover_parts(zid: np.ndarray, pk: np.ndarray, xs_l: list, ys_l: list,
                  zoom: int, mode: str) -> pd.DataFrame:
-    """The one cover kernel: ring parts (ids + vertex arrays) → rows
-    ``(zone_id, part_key, cell_id, boundary, convex)``. ``convex`` =
+    """The one cover step: ring parts (ids + vertex arrays) → rows
+    ``(zone_id, part_key, cell_id, boundary, convex)``, one
+    :func:`cells.polygon_cover` call per padded ring bucket. ``convex`` =
     ccw-convex with at most ``_MAX_EDGE_COLS`` real edges — the parts the
-    flat half-plane refine handles. Parts are bucketed by padded ring
-    length (next power of two) so one 10^5-vertex coastline doesn't pad
-    every quad in the batch to its width; pad = repeat last vertex (no-op
-    edge). Degenerate empty rings get no cover."""
+    flat half-plane refine handles. Degenerate empty rings get no cover."""
     lens = np.fromiter((len(a) for a in xs_l), np.int64, len(xs_l))
     flat_ok = _real_edges(xs_l, ys_l) <= _MAX_EDGE_COLS
-    buckets = np.maximum(4, 1 << np.ceil(np.log2(np.maximum(lens, 1))).astype(np.int64))
-    buckets[lens == 0] = 0
     out = []
-    for V in np.unique(buckets[buckets > 0]):
-        sel = np.flatnonzero(buckets == V)
-        X = np.empty((len(sel), V), dtype=np.float64)
-        Y = np.empty((len(sel), V), dtype=np.float64)
-        for i, r in enumerate(sel):
-            lv = lens[r]
-            X[i, :lv], Y[i, :lv] = xs_l[r], ys_l[r]
-            X[i, lv:], Y[i, lv:] = xs_l[r][lv - 1], ys_l[r][lv - 1]
-        prow, cell_id, boundary = _parts_cover_batch(X, Y, zoom, mode)
+    for sel, X, Y in cells.ring_batches(xs_l, ys_l):
+        prow, cell_id, boundary = cells.polygon_cover(X, Y, zoom, mode)
         convex = _convex_ccw_batch(X, Y, lens[sel]) & flat_ok[sel]
         out.append(pd.DataFrame({
             "zone_id": zid[sel][prow], "part_key": pk[sel][prow],

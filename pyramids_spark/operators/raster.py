@@ -13,12 +13,12 @@ ranges map to partition/file pruning (min-max stats on row/col), joins on
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..grid import Grid
 from .reproject import dst_cells, to_crs_nearest
+from .zonal import zone_labels
 
 
 def to_xyz(cells_df: DataFrame, grid: Grid) -> DataFrame:
@@ -78,8 +78,11 @@ def crop_polygon(
     ``dataset/ops/spatial.py:795-886``; golden contract
     ``tests/dataset/test_dataset.py:918-1127``).
 
-    Keep rule: cell CENTRE strictly inside the polygon (GDAL warp's cutline
-    pixel-centre rule). Window rule:
+    Keep rule: cell CENTRE inside the polygon by the even-odd ray-cast
+    that zonal labels use (GDAL warp's cutline pixel-centre rule). A centre
+    exactly on an edge is inside where the polygon lies to its right (above
+    it, on a horizontal edge) and outside otherwise — one rule for every
+    ring, convex or not. Window rule:
 
     - ``touch=True`` (warp + wrap-correction): trim every all-nodata
       row/col, i.e. the window is the bbox of kept cells — computed as a
@@ -89,43 +92,14 @@ def crop_polygon(
       polygon are still NULL.
 
     Returns (band, row, col, src_row, src_col, value) re-origined to the
-    window, value NULL where the centre is outside the polygon.
-    Convex ccw polygons use the codegen half-plane test; arbitrary rings
-    fall back to an Arrow-batched ray-cast UDF.
+    window, value NULL where the centre is outside the polygon. The
+    polygon's centre-inside row runs (:func:`zonal.zone_runs`) are
+    broadcast and left-joined to the cells, so no Python runs per cell.
     """
-    from .. import cells as _cells
-    from .pip import _convex_ccw_batch
-
     p = np.asarray(polygon, dtype=np.float64)
-    if np.allclose(p[0], p[-1]):
-        p = p[:-1]
-    xc = grid.x_center_col(F.col("col"))
-    yc = grid.y_center_col(F.col("row"))
-    d = cells_df.withColumn("_xc", xc).withColumn("_yc", yc)
-    if _convex_ccw_batch(p[None, :, 0], p[None, :, 1], np.array([len(p)]))[0]:
-        cond = F.lit(True)
-        for i in range(len(p)):
-            xa, ya = float(p[i][0]), float(p[i][1])
-            xb, yb = float(p[(i + 1) % len(p)][0]), float(p[(i + 1) % len(p)][1])
-            cond = cond & (
-                (F.lit(xb - xa) * (F.col("_yc") - F.lit(ya))
-                 - F.lit(yb - ya) * (F.col("_xc") - F.lit(xa))) > 0
-            )
-        d = d.withColumn("_ins", cond)
-    else:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("boolean")
-        def _ins(xs: pd.Series, ys: pd.Series) -> pd.Series:
-            return pd.Series(
-                _cells.points_in_polygon(xs.to_numpy(), ys.to_numpy(), p)
-            )
-
-        d = d.withColumn("_ins", _ins("_xc", "_yc"))
-
-    masked = d.select(
+    masked = zone_labels(cells_df, grid, [{"zone_id": 0, "parts": [p]}]).select(
         "band", "row", "col",
-        F.when(F.col("_ins"), F.col("value")).alias("value"),
+        F.when(F.col("zone_id").isNotNull(), F.col("value")).alias("value"),
     )
     if touch:
         ext = masked.where(F.col("value").isNotNull()).agg(

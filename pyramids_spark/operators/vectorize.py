@@ -97,7 +97,7 @@ def _label_tiles(cells_df: DataFrame, grid: Grid, tile: int, keep: Column,
         keys.tile_key("row", "col", tile, tile, ntj).alias("tid"),
     )
 
-    def per_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         _, _, r0, c0, h, w = keys.tile_window(key[0], tile, tile, rows, cols)
         rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy())
         keys.check_extent(rr, cc, rows, cols)
@@ -746,7 +746,7 @@ def _ring_fragments(comp: DataFrame, grid: Grid, tile: int) -> DataFrame:
         F.explode(keys.halo_tiles("row", "col", tile, tile, rows, cols, 1)).alias("tid"),
     )
 
-    def per_tile(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         t_y, t_x, r0, c0, h, w = keys.tile_window(key[0], tile, tile, rows, cols)
         r_all, c_all = keys.unpack_rc_np(pdf["rc"].to_numpy())
         keys.check_extent(r_all, c_all, rows, cols)

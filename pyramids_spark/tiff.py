@@ -507,7 +507,7 @@ def write_geotiff(
     def tile_file(li: int, b: int, tk: int) -> str:
         return os.path.join(scratch, f"{li}_{b}_{tk}")
 
-    def stage(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def stage(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         li, bb, tk = (int(k) for k in key)
         g = grids[li]
         if not 0 <= bb < n_bands:
@@ -700,7 +700,7 @@ def write_cog_parts(
 
     lvls = list(levels)
 
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def build(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pi, pj, r0, c0, prows, pcols = keys.tile_window(key[0], sh, sw, rows, cols)
         pdf = pdf[pdf["value"].notna()]
         n_cells = len(pdf)

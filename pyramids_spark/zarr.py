@@ -407,7 +407,7 @@ def write_zarr(
             {"row": rr, "col": cc, "value": pdf["value"].to_numpy(np.float64)}
         )
 
-    def write_chunks(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_chunks(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         b = int(key[0])
         ci, cj, r0, c0, _, _ = keys.tile_window(key[1], ch, cw, rows, cols)
         pdf = _unpack(pdf)
@@ -427,7 +427,7 @@ def write_zarr(
              "n_bytes": [len(data)], "file": [name]}
         )
 
-    def write_shard(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import struct
 
         b = int(key[0])

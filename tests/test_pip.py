@@ -203,10 +203,12 @@ def test_pip_join_df_convex_refine_is_jvm_and_concave_falls_back(spark):
 
 
 def test_pip_join_df_batch_cover_matches_per_part(spark):
-    """zone_cover_df's batched kernel ≡ _part_cover_np per part, cell for
-    cell, boundary flag for boundary flag, in both touch modes (mixed ring
-    lengths across the pad buckets: boxes V=4, hexagons V=6); the driver
-    projection zone_cover ≡ the same reference."""
+    """zone_cover_df's batched kernel ≡ the per-cell oracle _part_cover_np
+    per part, cell for cell, boundary flag for boundary flag, in both touch
+    modes (mixed ring lengths across the pad buckets: boxes V=4, hexagons
+    V=6); the driver projection zone_cover ≡ the same reference."""
+    from cover_oracles import _part_cover_np
+
     zones = synth.zone_polygons(6, "hex") + [
         {"zone_id": 100 + z["zone_id"], "parts": z["parts"]}
         for z in synth.zone_polygons(5, "box")
@@ -219,7 +221,7 @@ def test_pip_join_df_batch_cover_matches_per_part(spark):
         exp = []
         for z in zones:
             for part in z["parts"]:
-                cover, bnd = pip._part_cover_np(np.asarray(part, dtype=np.float64), 8, mode)
+                cover, bnd = _part_cover_np(np.asarray(part, dtype=np.float64), 8, mode)
                 for cid, bb in zip(cover, bnd):
                     exp.append((z["zone_id"], cid, bb))
         exp = pd.DataFrame(exp, columns=cols).sort_values(cols[:2]).reset_index(drop=True)

@@ -4,7 +4,7 @@ Column forms in Spark to check them against their numpy twins."""
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyramids_spark import cells
 from pyramids_spark.operators import utm
@@ -355,3 +355,114 @@ def test_check_extent_rejects_each_edge():
     for rr, cc in ((-1, 0), (5, 0), (0, -1), (0, 7)):
         with pytest.raises(ValueError, match="outside grid extent"):
             keys.check_extent(np.array([rr]), np.array([cc]), 5, 7)
+
+
+# one ring vertex coordinate: a cell edge, a cell centre (computed as the
+# kernels' callers compute it) or an eighth-cell offset, in cell units from
+# two cells before the grid to two cells past it (clamping)
+_COORD = st.tuples(st.integers(min_value=-2, max_value=9),
+                   st.sampled_from(["edge", "centre", 1, 3, 5, 7]))
+_RING = st.tuples(
+    st.lists(st.tuples(_COORD, _COORD), min_size=1, max_size=7),
+    st.booleans(),  # close the ring (repeat the first vertex)
+    st.integers(min_value=-1, max_value=6),  # vertex to repeat in place (-1: none)
+)
+
+
+def _ring_coords(ring, lo, hi):
+    """Map drawn (cell, kind) pairs through an axis's own cell bounds."""
+    pts, close, rep = ring
+
+    def coord(c, kind, axis):
+        a, b = lo[axis](c), hi[axis](c)
+        if kind == "edge":
+            return a
+        return (a + b) / 2.0 if kind == "centre" else a + (b - a) * kind / 8.0
+
+    v = [(coord(cx, kx, 0), coord(cy, ky, 1)) for (cx, kx), (cy, ky) in pts]
+    if 0 <= rep < len(v):
+        v.insert(rep, v[rep])
+    if close:
+        v.append(v[0])
+    return np.asarray(v, dtype=np.float64)
+
+
+# a closed concave L with a repeated vertex, a ring partly outside the
+# grid, a single vertex and a closed segment
+_PINNED_RINGS = [
+    ([((0, "edge"), (6, "centre")), ((5, "centre"), (6, "centre")), ((5, "centre"), (3, 3)),
+      ((2, 5), (3, 3)), ((2, 5), (0, "edge")), ((0, "edge"), (0, "edge"))], True, 2),
+    ([((-2, 3), (1, "centre")), ((9, "edge"), (2, 1)), ((4, "centre"), (9, 7))], False, -1),
+    ([((3, "centre"), (3, "centre"))], False, -1),
+    ([((1, "edge"), (1, "edge")), ((6, "centre"), (2, 5))], True, -1),
+]
+
+
+@settings(deadline=None, max_examples=150)
+@example(3, _PINNED_RINGS)
+@given(st.integers(min_value=2, max_value=3), st.lists(_RING, min_size=1, max_size=5))
+def test_polygon_kernel_matches_per_cell_oracle(zoom, rings):
+    """The row-run kernel ≡ the per-cell references it replaced, cells and
+    boundary flags, in both modes: concave and self-crossing rings, repeated
+    vertices, open and closed rings, vertices on cell centres and edges,
+    rings partly outside the grid and rings of fewer than 3 vertices (a
+    point or a segment still touches cells in intersects mode)."""
+    from cover_oracles import _part_cover_np, _parts_cover_batch
+
+    n = 1 << zoom
+    w, h = cells.LON_SPAN / n, 180.0 / n
+    geo = [_ring_coords(r, (lambda c: cells.LON_MIN + c * w, lambda c: 90.0 - c * h - h),
+                        (lambda c: cells.LON_MIN + c * w + w, lambda c: 90.0 - c * h))
+           for r in rings]
+    xs, ys = [p[:, 0] for p in geo], [p[:, 1] for p in geo]
+    for mode in ("center", "intersects"):
+        for sel, X, Y in cells.ring_batches(xs, ys):
+            got = cells.polygon_cover(X, Y, zoom, mode)
+            exp = _parts_cover_batch(X, Y, zoom, mode)
+            for g, e in zip(got, exp):
+                assert g.tolist() == e.tolist(), mode
+            for i, r in enumerate(sel):
+                # the per-part oracle fails on a ring of one distinct vertex
+                # (its ray-cast drops the closing vertex twice)
+                if len(geo[r]) - np.allclose(geo[r][0], geo[r][-1]) < 2:
+                    continue
+                c, b = _part_cover_np(geo[r], zoom, mode)
+                m = got[0] == i
+                assert got[1][m].tolist() == c.tolist(), mode
+                assert got[2][m].tolist() == b.tolist(), mode
+            assert cells.cells_covering_polygon(geo[sel[0]], zoom, mode).tolist() == \
+                got[1][got[0] == 0].tolist()
+
+
+@settings(deadline=None, max_examples=100)
+@example(_PINNED_RINGS + _PINNED_RINGS[:1])
+@given(st.lists(_RING, min_size=1, max_size=5))
+def test_zone_runs_match_per_cell_labels(rings):
+    """Zone label runs ≡ the driver meshgrid labels (centre inside, lowest
+    zone id wins) on a raster grid, with overlapping zones listed out of
+    id order; the runs come out disjoint and in (row, c0) order."""
+    from cover_oracles import zone_label_cells
+
+    from pyramids_spark.grid import Grid
+    from pyramids_spark.operators import zonal
+
+    grid = Grid(x0=10.0, y0=20.0, cell=0.5, rows=8, cols=8)
+    polys = [_ring_coords(r, (lambda c: grid.x0 + c * grid.cell,
+                              lambda c: grid.y0 - c * grid.cell - grid.cell),
+                          (lambda c: grid.x0 + c * grid.cell + grid.cell,
+                           lambda c: grid.y0 - c * grid.cell))
+             for r in rings]
+    zones = [{"zone_id": len(polys) - i, "parts": [p]} for i, p in enumerate(polys)]
+    runs = zonal.zone_runs(zones, grid)
+    got = {(int(r.row), c): int(r.zone_id)
+           for r in runs.itertuples() for c in range(r.c0, r.c1 + 1)}
+    assert len(got) == int((runs.c1 - runs.c0 + 1).sum())  # disjoint
+    key = (runs.row * grid.cols + runs.c0).to_numpy()
+    assert (np.diff(key) > 0).all()
+    # the oracle's ray-cast drops a closing vertex and fails on the empty
+    # ring that leaves behind; such a ring covers no centre anyway
+    exp = zone_label_cells(
+        [{"zone_id": z["zone_id"], "parts": [p for p in z["parts"]
+                                             if len(p) - np.allclose(p[0], p[-1]) >= 1]}
+         for z in zones], grid)
+    assert got == {(int(r.row), int(r.col)): int(r.zone_id) for r in exp.itertuples()}

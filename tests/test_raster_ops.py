@@ -317,6 +317,83 @@ def test_crop_polygon_concave_raycast_fallback(spark):
             assert pd.isna(r.value)
 
 
+def test_crop_polygon_convex_centre_on_edge_follows_ray_cast(spark):
+    """A convex ccw square whose edges run through cell centres: crop keeps
+    a centre on its left or bottom edge and drops one on its right or top
+    edge — the even-odd ray-cast zonal labels use, the same for every ring.
+    The former strict half-plane rule for convex rings
+    (``cover_oracles.crop_inside``) dropped every on-edge centre."""
+    from cover_oracles import crop_inside
+
+    from pyramids_spark import cells as pscells
+
+    xc, yc = CROP_GRID.x_centers(), CROP_GRID.y_centers()
+    sq = np.array([[xc[2], yc[6]], [xc[5], yc[6]], [xc[5], yc[3]], [xc[2], yc[3]]])
+    want = {(r, c) for r in range(4, 7) for c in range(2, 5)}
+    g = grid_df(spark, CROP_GRID)
+    for touch, n in ((True, 9), (False, 16)):
+        out = raster.crop_polygon(g, CROP_GRID, sq, touch=touch).toPandas()
+        kept = {(int(r.src_row), int(r.src_col)) for r in out.itertuples() if not pd.isna(r.value)}
+        assert kept == want and len(out) == n, touch
+    ins = pscells.points_in_polygon(np.tile(xc, CROP_GRID.rows), np.repeat(yc, CROP_GRID.cols), sq)
+    assert {divmod(int(i), CROP_GRID.cols) for i in np.flatnonzero(ins)} == want
+    old = crop_inside(CROP_GRID, sq)
+    assert {(int(r), int(c)) for r, c in zip(*np.nonzero(old))} == {(4, 3), (4, 4), (5, 3), (5, 4)}
+
+
+def test_polygon_ops_build_job_and_plan_audit(spark, build_jobs):
+    """zonal_stats_raster and crop_polygon (both touch modes, convex and
+    concave rings) build with no Spark job, and their plans hold no Python
+    evaluation node: the run table is built on the driver and joined as a
+    broadcast side. (pip_join's 0 and pip_join_df's 1 build job are pinned
+    by test_pip_build_job_audit.)"""
+    from pyramids_spark import synth
+    from pyramids_spark.operators import zonal
+
+    g = grid_df(spark, CROP_GRID)
+    ell = np.array([[0.02, -0.48], [0.33, -0.48], [0.33, -0.27], [0.18, -0.27],
+                    [0.18, -0.07], [0.02, -0.07]])
+    zones = [{"zone_id": z["zone_id"], "parts": [p * 0.002 + [0.25, -0.25] for p in z["parts"]]}
+             for z in synth.zone_polygons(8, "hex", seed=5)] + [{"zone_id": 99, "parts": [ell]}]
+    hexa = zones[0]["parts"][0]
+    cases = {
+        "zonal_stats_raster": lambda: zonal.zonal_stats_raster(g, CROP_GRID, zones),
+        "crop_touch": lambda: raster.crop_polygon(g, CROP_GRID, hexa, touch=True),
+        "crop_clip": lambda: raster.crop_polygon(g, CROP_GRID, hexa, touch=False),
+        "crop_touch_concave": lambda: raster.crop_polygon(g, CROP_GRID, ell, touch=True),
+        "crop_clip_concave": lambda: raster.crop_polygon(g, CROP_GRID, ell, touch=False),
+    }
+    built = {}
+    for name, build in cases.items():
+        assert build_jobs(lambda: built.__setitem__(name, build()), f"poly-{name}") == 0, name
+    for name, df in built.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (name, plan)
+        assert "BroadcastHashJoin" in plan, (name, plan)
+    assert built["zonal_stats_raster"].where("count > 0").count() >= 2
+
+
+def test_applyinpandas_sites_emit_no_type_hint_warning(spark, tmp_path):
+    """Functions handed to applyInPandas annotate both the key and the frame
+    (or nothing): annotating only the frame makes PySpark warn that it
+    cannot infer the eval type on every call."""
+    import warnings
+
+    from pyramids_spark import hdf5
+    from pyramids_spark.operators import focal
+
+    g = grid_df(spark, COELLO)
+    nc = g.select(F.lit("v").alias("variable"), F.lit(0).cast("long").alias("t"),
+                  "row", "col", "value")
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        focal.focal_tiles(g, COELLO, r=1, stat="mean", tile=6).count()
+        vectorize.cluster(g, COELLO, lo=10.0, hi=90.0, tile=6).count()
+        hdf5.write_netcdf4(nc, COELLO, str(tmp_path / "w.nc"), times=[0.0], chunk=(8, 8))
+    msgs = [str(w.message) for w in seen]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs
+
+
 def test_resample_cubic_identity_and_numpy_kernel(spark):
     """Keys kernel is interpolating (W(0)=1, W(±1)=W(±2)=0): resampling to
     the SAME grid must reproduce the input exactly; an offset grid must
@@ -537,10 +614,13 @@ def test_frame_sample_counts(spark):
 
 
 def test_zone_label_cells_distributed_equals_driver(spark):
-    """The distributed label rasterizer (bbox explode + Arrow ray-cast +
-    min(zone_id) first-win) must produce bit-identical (row, col, zone_id)
-    rows to the driver numpy path it replaces above
-    ZONE_LABEL_DRIVER_MAX."""
+    """The distributed labels (driver-built run table, broadcast and joined
+    on row with col BETWEEN c0 AND c1) must produce bit-identical
+    (row, col, zone_id) rows to the per-cell driver meshgrid oracle
+    (``cover_oracles.zone_label_cells``: bbox cells × ray-cast, first zone
+    wins); the third case has overlapping zones and overlapping parts."""
+    from cover_oracles import zone_label_cells
+
     from pyramids_spark import synth
     from pyramids_spark.grid import COELLO
     from pyramids_spark.operators import zonal
@@ -565,13 +645,24 @@ def test_zone_label_cells_distributed_equals_driver(spark):
         {"zone_id": 0, "parts": [sq(c + 0.25, 99.25, c + 0.75, 99.75) for c in range(1001)]},
         {"zone_id": 1, "parts": [sq(50.1, 45.1, 54.9, 49.9)]},
     ]
-    for zs, grid, n in ((zones, COELLO, None), (many, wide, 1026)):
-        a = zonal.zone_label_cells(zs, grid)
+    # overlapping zones (listed out of id order; lowest id wins) and a zone
+    # whose two parts overlap each other and a concave L-shape
+    ell = np.array([[0.02, -0.48], [0.33, -0.48], [0.33, -0.27], [0.18, -0.27],
+                    [0.18, -0.07], [0.02, -0.07]])
+    over = [
+        {"zone_id": 3, "parts": [sq(0.1, -0.9, 0.4, -0.1)]},
+        {"zone_id": 1, "parts": [sq(0.25, -0.45, 0.45, -0.05)]},
+        {"zone_id": 2, "parts": [ell, np.array([[0.3, -0.3], [0.49, -0.3], [0.49, -0.01]]),
+                                 sq(0.05, -0.2, 0.15, -0.1)]},
+    ]
+    for zs, grid, n in ((zones, COELLO, None), (many, wide, 1026), (over, CROP_GRID, None)):
+        a = zone_label_cells(zs, grid)
         got_a = {(int(r.row), int(r.col)): int(r.zone_id) for _, r in a.iterrows()}
-        b = zonal.zone_label_cells_df(spark, zs, grid).collect()
+        b = zonal.zone_labels(grid_df(spark, grid), grid, zs).where("zone_id IS NOT NULL").collect()
         got_b = {(r["row"], r["col"]): r["zone_id"] for r in b}
         assert got_a == got_b and len(got_a) > 0
         assert n is None or len(got_b) == n
+    assert set(got_b.values()) == {1, 2, 3}  # every overlapping zone wins somewhere
 
 
 _WKT2_2154 = (
@@ -778,15 +869,15 @@ def test_ascii_grid_roundtrip_and_guards(spark, tmp_path):
 
 def test_ascii_grid_job_audit(spark, tmp_path, build_jobs):
     """``to_ascii_grid`` range-partitions on row before its row builder,
-    so rows come back in order with no sort after the UDF: 2 jobs for the
-    single-band probe, then the range sampler, the shuffle and the
-    streamed rows — an ``orderBy`` after the UDF would add a sampler job
-    that builds every line again."""
+    so rows come back in order with no sort after the UDF: the range
+    sampler, the shuffle and the streamed rows — an ``orderBy`` after the
+    UDF would add a sampler job that builds every line again, and the
+    single-band guard runs inside the row builder, not as a probe job."""
     from pyramids_spark.api import SparkDataset
 
     ds = SparkDataset(grid_df(spark, COELLO).where("NOT (row = 2)"), COELLO)
     assert build_jobs(lambda: ds.to_ascii_grid(str(tmp_path / "j.asc")),
-                      "ascii") == 5
+                      "ascii") == 3
 
 
 def _png_file(w, h, depth, ctype, interlace, idat, plte=None):
