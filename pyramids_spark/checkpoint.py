@@ -32,7 +32,8 @@ import shutil
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def _pid_alive(pid: int) -> bool:
@@ -153,8 +154,13 @@ class CheckpointedJob:
             tmp = os.path.join(self.dir, "data", f"_tmp_chunk={cid}")
             final = os.path.join(self.dir, "data", f"chunk={cid}")
             shutil.rmtree(tmp, ignore_errors=True)
-            df.write.mode("overwrite").parquet(tmp)
-            n_out = self.spark.read.parquet(tmp).count()
+            # the row count rides on the write's own job: an Observation at
+            # the top of the written plan runs in the result stage, whose
+            # accumulator updates count each task once (a re-read of the
+            # chunk cost 3 more jobs)
+            obs = Observation()
+            df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(tmp)
+            n_out = obs.get["rows"]
             shutil.rmtree(final, ignore_errors=True)
             os.rename(tmp, final)
             lineage = {
@@ -209,8 +215,6 @@ class CheckpointedJob:
 
     def metrics_df(self) -> DataFrame:
         """Job-level metrics derived from lineage (rows/sec per chunk etc.)."""
-        from pyspark.sql import functions as F
-
         l = self.lineage_df()
         return l.select(
             "chunk",

@@ -109,11 +109,19 @@ def _cover_parts(zid: np.ndarray, pk: np.ndarray, xs_l: list, ys_l: list,
     ``(zone_id, part_key, cell_id, boundary, convex)``, one
     :func:`cells.polygon_cover` call per padded ring bucket. ``convex`` =
     ccw-convex with at most ``_MAX_EDGE_COLS`` real edges — the parts the
-    flat half-plane refine handles. Degenerate empty rings get no cover."""
+    flat half-plane refine handles. Parts with fewer than 3 distinct
+    vertices (empty rings included) have no area and get no cover — the
+    ray-cast refine could not even take a 1-vertex part."""
     lens = np.fromiter((len(a) for a in xs_l), np.int64, len(xs_l))
     flat_ok = _real_edges(xs_l, ys_l) <= _MAX_EDGE_COLS
     out = []
     for sel, X, Y in cells.ring_batches(xs_l, ys_l):
+        z = np.sort(X + 1j * Y, axis=1)  # the pad repeats a vertex: no new one
+        ok = (z[:, 1:] != z[:, :-1]).sum(axis=1) >= 2
+        if not ok.all():
+            sel, X, Y = sel[ok], X[ok], Y[ok]
+            if not len(sel):
+                continue
         prow, cell_id, boundary = cells.polygon_cover(X, Y, zoom, mode)
         convex = _convex_ccw_batch(X, Y, lens[sel]) & flat_ok[sel]
         out.append(pd.DataFrame({

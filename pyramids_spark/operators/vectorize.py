@@ -24,6 +24,15 @@ the full labeled table — at 100 TB one extra scan beats caching O(cells).
 they differ only in the mask (one range mask, 8-connected, vs one mask
 per value, 4-connected).
 
+Ring assembly (:func:`polygonize_rings`) runs ONE leftmost-turn walk,
+:func:`_walk_paths_batch`, batched over every group of a task, at three
+levels: per tile on the boundary edges (cut at tile borders), per (label,
+super-tile) when a grid axis spans more than :data:`SUPER_FACTOR` tiles
+(cut at super-tile lines), and per label with no cut. The per-label rings
+then become one WKT polygon, rings ordered exterior first, then holes by
+(−|area|, first vertex) — a total order, so the text never depends on
+partitioning.
+
 Every exchange is keyed by ``pyramids_spark.keys``: the packed cell key
 ``rc = row·2³² + col`` and the dense tile key, computed on long so int32
 input columns give the same result as int64 ones; each tile task runs
@@ -386,359 +395,202 @@ _SIDE_EDGES = (
 )
 
 
-def _walk_edges_batch(ea: np.ndarray, eb: np.ndarray, el: np.ndarray, is_cut_v):
-    """Chain directed boundary edges of ALL labels of a tile at once into
-    open chains and closed rings.
+def _walk_paths_batch(verts: np.ndarray, off: np.ndarray, grp: np.ndarray, is_cut_v):
+    """The one leftmost-turn ring walk of :func:`polygonize_rings`: chain
+    directed vertex paths of MANY groups at once into open paths and
+    closed rings. Every level runs it: per tile on the unit boundary edges
+    (2-vertex paths), then per (label, super-tile) and per label on the
+    paths the level below emitted.
 
-    ``ea``/``eb``: (E, 2) int64 directed-edge endpoints in (vc, vr) vertex
-    coords; ``el``: (E,) labels; ``is_cut_v(xs, ys) -> bool array`` marks
-    cut (tile-border) vertices, where chains are cut because the turn
-    decision there may involve edges from another tile. Returns
-    ``(labels, kinds, paths)`` parallel lists — ``paths[i]`` an (n, 2)
-    int64 vertex array, kind 1 = open chain (cut vertex → cut vertex),
-    2 = closed ring (never touches a cut vertex). At interior pinch
-    vertices the leftmost-turn rule picks the outgoing edge — the rule the
-    stitch applies at cut vertices, so the distributed decomposition
-    matches a monolithic walk.
+    ``verts``: (V, 2) int64 vertices in (vc, vr) coords, path ``i`` being
+    ``verts[off[i]:off[i + 1]]`` (≥ 2 vertices); ``grp``: (P,) group ids.
+    A path's successor is the path of its group whose first vertex is its
+    last vertex. ``is_cut_v(xs, ys) -> bool array`` marks cut vertices,
+    where the turn decision may involve paths outside the group: a path
+    that starts at one begins an open path, one that ends at one ends it.
+    Returns ``(grp, kind, verts, off)`` of the output paths in the same
+    layout: kind 1 = open path (cut vertex → cut vertex), 2 = closed ring
+    (first vertex repeated last; never touches a cut vertex).
 
-    Why a successor ARRAY is exact: every edge is a unit axis step, a grid
-    vertex has at most 2 out-edges of one label (only the diagonal-pinch
-    cell pattern yields 2), and there the two in-directions are opposite,
-    so the leftmost-turn rule pairs each in-edge with a DISTINCT out-edge —
-    a proper matching, making the walk order-independent. In/out balance
-    gives every non-cut vertex a successor. Both properties are asserted;
-    a violation is an ``AssertionError``, never a guess. [r7: this
-    replaced a per-label python walk — ~740 calls per 256² tile on the
-    bench raster, spent in dict/set churn — with a few argsorts + batched
-    pointer chasing; that walk is the parity oracle in
-    tests/test_vectorize.py.]"""
-    E = len(el)
-    _, lab_idx = np.unique(el, return_inverse=True)
-    vx0 = min(int(ea[:, 0].min()), int(eb[:, 0].min()))
-    vy0 = min(int(ea[:, 1].min()), int(eb[:, 1].min()))
-    sx = max(int(ea[:, 0].max()), int(eb[:, 0].max())) - vx0 + 1
-    sy = max(int(ea[:, 1].max()), int(eb[:, 1].max())) - vy0 + 1
-
-    def key(v):
-        return (lab_idx * sx + (v[:, 0] - vx0)) * sy + (v[:, 1] - vy0)
-
-    ka, kb = key(ea), key(eb)
-    # sort by (start key, end key): candidate order at a 2-out vertex then
-    # matches the per-label walk's sorted-edge insertion order
-    order = np.lexsort((kb, ka))
+    Why a successor ARRAY is exact: a path starts and ends with a unit
+    boundary edge, a grid vertex has at most 2 out-edges of one label (only
+    the diagonal-pinch cell pattern yields 2), and there the two
+    in-directions are opposite, so the leftmost-turn rule — the path's last
+    step in against each candidate's first step out — pairs each in-path
+    with a DISTINCT out-path. That proper matching makes the walk
+    order-independent, and a junction pairs the same way at whichever
+    level it resolves, so the distributed decomposition matches a
+    monolithic walk. In/out balance gives every non-cut end a successor.
+    Both properties are asserted; a violation is an ``AssertionError``,
+    never a guess. The per-label python walks this replaced, per tile and
+    per stitch group, are the parity oracles in tests/test_vectorize.py."""
+    P = len(grp)
+    if P == 0:
+        return grp[:0], np.zeros(0, np.int64), verts[:0], np.zeros(1, np.int64)
+    first, second = verts[off[:-1]], verts[off[:-1] + 1]
+    last, pen = verts[off[1:] - 1], verts[off[1:] - 2]
+    # vertex keys: dense ranks of (group, x, y) over every path end (a
+    # packed (group·sx + x)·sy + y product overflows int64 on big grids)
+    g2 = np.concatenate([grp, grp])
+    v2 = np.concatenate([first, last])
+    o = np.lexsort((v2[:, 1], v2[:, 0], g2))
+    g2, v2 = g2[o], v2[o]
+    new = np.ones(2 * P, dtype=bool)
+    new[1:] = (g2[1:] != g2[:-1]) | (v2[1:] != v2[:-1]).any(axis=1)
+    rank = np.empty(2 * P, dtype=np.int64)
+    rank[o] = np.cumsum(new)
+    ka, kb = rank[:P], rank[P:]
+    order = np.argsort(ka, kind="stable")
     ka_s = ka[order]
     lo = np.searchsorted(ka_s, kb, side="left")
-    hi = np.searchsorted(ka_s, kb, side="right")
-    deg = hi - lo
-    end_cut = np.asarray(is_cut_v(eb[:, 0], eb[:, 1]), dtype=bool)
-    suc = np.full(E, -1, dtype=np.int64)
+    deg = np.searchsorted(ka_s, kb, side="right") - lo
+    end_cut = np.asarray(is_cut_v(last[:, 0], last[:, 1]), dtype=bool)
+    suc = np.full(P, -1, dtype=np.int64)
     m1 = (~end_cut) & (deg == 1)
     suc[m1] = order[lo[m1]]
     m2 = (~end_cut) & (deg == 2)
     if m2.any():
-        din = eb[m2] - ea[m2]
-        j1 = order[lo[m2]]
-        j2 = order[lo[m2] + 1]
-        t1 = din[:, 0] * (eb[j1, 1] - ea[j1, 1]) - din[:, 1] * (eb[j1, 0] - ea[j1, 0])
-        t2 = din[:, 0] * (eb[j2, 1] - ea[j2, 1]) - din[:, 1] * (eb[j2, 0] - ea[j2, 0])
-        suc[m2] = np.where(t1 <= t2, j1, j2)  # leftmost turn; first wins ties
+        din = last[m2] - pen[m2]
+
+        def turn(j):
+            dout = second[j] - first[j]
+            return din[:, 0] * dout[:, 1] - din[:, 1] * dout[:, 0]
+
+        j1, j2 = order[lo[m2]], order[lo[m2] + 1]
+        suc[m2] = np.where(turn(j1) <= turn(j2), j1, j2)  # leftmost turn
     if ((~end_cut) & ((deg == 0) | (deg > 2))).any():
         raise AssertionError("boundary vertex with no or >2 successors")
-    if (np.bincount(suc[suc >= 0], minlength=E) > 1).any():
-        raise AssertionError("two in-edges chose one out-edge")
+    if (np.bincount(suc[suc >= 0], minlength=P) > 1).any():
+        raise AssertionError("two in-paths chose one out-path")
 
-    def follow(starts: np.ndarray, stop_start: np.ndarray | None):
-        """Batched pointer chase: step every active path at once. Records
-        are step-major; a stable argsort by path id restores per-path edge
-        order. ``stop_start`` (rings): stop when the next edge would be the
-        path's own start; None (chains): stop at suc == -1."""
-        pids = np.arange(len(starts), dtype=np.int64)
-        cur = starts.copy()
+    def follow(starts: np.ndarray, ring: bool):
+        """Batched pointer chase: step every output path at once. Records
+        are step-major; a stable argsort by output path restores each
+        one's input order. Rings stop before their own start comes round
+        again, open paths at suc == -1."""
+        pids, cur, stop = np.arange(len(starts), dtype=np.int64), starts, starts
         rec_p, rec_e = [pids], [cur]
-        s0 = stop_start
         while True:
             nxt = suc[cur]
-            act = (nxt != s0) if s0 is not None else (nxt >= 0)
+            act = (nxt != stop) if ring else (nxt >= 0)
             if not act.any():
                 break
-            pids, cur = pids[act], nxt[act]
-            if s0 is not None:
-                s0 = s0[act]
+            pids, cur, stop = pids[act], nxt[act], stop[act]
             rec_p.append(pids)
             rec_e.append(cur)
         allp = np.concatenate(rec_p)
-        alle = np.concatenate(rec_e)
         o = np.argsort(allp, kind="stable")
-        return allp[o], alle[o]
+        return allp[o], np.concatenate(rec_e)[o]
 
     def assemble(allp, alle):
-        bnds = np.flatnonzero(np.diff(allp)) + 1
-        out = []
-        for s0, e0 in zip(np.r_[0, bnds], np.r_[bnds, len(allp)]):
-            es = alle[s0:e0]
-            verts = np.empty((e0 - s0 + 1, 2), dtype=np.int64)
-            verts[0] = ea[es[0]]
-            verts[1:] = eb[es]
-            out.append(verts)
-        return out
+        # an output path is its first input path whole, then every later
+        # one without its first vertex (the previous one's last)
+        head = np.ones(len(allp), dtype=bool)
+        head[1:] = allp[1:] != allp[:-1]
+        s = off[alle] + ~head
+        n = off[alle + 1] - s
+        ends = np.cumsum(n)
+        idx = np.arange(ends[-1]) + np.repeat(s - (ends - n), n)
+        return verts[idx], np.add.reduceat(n, np.flatnonzero(head))
 
-    labels, kinds, paths = [], [], []
-    consumed = np.zeros(E, dtype=bool)
-    start_cut = np.asarray(is_cut_v(ea[:, 0], ea[:, 1]), dtype=bool)
-    cstarts = np.flatnonzero(start_cut)
+    out = []  # (starts, kind, verts, lengths) per kind
+    consumed = np.zeros(P, dtype=bool)
+    cstarts = np.flatnonzero(is_cut_v(first[:, 0], first[:, 1]))
     if cstarts.size:
-        allp, alle = follow(cstarts, None)
+        allp, alle = follow(cstarts, ring=False)
         consumed[alle] = True
-        for p in assemble(allp, alle):
-            paths.append(p)
-            kinds.append(1)
-        labels.extend(int(v) for v in el[cstarts])
+        out.append((cstarts, 1, *assemble(allp, alle)))
     rem = np.flatnonzero(~consumed)
     if rem.size:
-        # cycle representatives (min edge index per cycle) by pointer doubling
-        pos = np.full(E, -1, dtype=np.int64)
+        # cycle representatives (min path index per cycle) by pointer doubling
+        pos = np.full(P, -1, dtype=np.int64)
         pos[rem] = np.arange(rem.size)
         s = pos[suc[rem]]
         if (s < 0).any():
-            raise AssertionError("ring edge escapes the remaining set")
+            raise AssertionError("ring path escapes the remaining set")
         m = rem.copy()
         while True:
-            m2 = np.minimum(m, m[s])
-            if (m2 == m).all():
+            mn = np.minimum(m, m[s])
+            if (mn == m).all():
                 break
-            m, s = m2, s[s]
-        rstarts = rem[m[pos[rem]] == rem]
-        allp, alle = follow(rstarts, rstarts.copy())
-        for p in assemble(allp, alle):
-            paths.append(p)
-            kinds.append(2)
-        labels.extend(int(v) for v in el[rstarts])
-    return labels, kinds, paths
+            m, s = mn, s[s]
+        rstarts = rem[m == rem]
+        out.append((rstarts, 2, *assemble(*follow(rstarts, ring=True))))
+    starts = np.concatenate([o[0] for o in out])
+    kinds = np.concatenate([np.full(len(o[0]), o[1], np.int64) for o in out])
+    lens = np.concatenate([o[3] for o in out])
+    return (grp[starts], kinds, np.concatenate([o[2] for o in out]),
+            np.r_[0, np.cumsum(lens)])
 
 
-def _merge_chains(chains: list, scut) -> tuple[list, list]:
-    """Walk the chain graph: merge chain fragments end-to-start, cutting
-    merged paths at ``scut`` vertices. Returns (open_paths, rings): paths
-    start and end at scut vertices; rings are cycles that never touch one.
-    Pinch vertices resolve with the SAME leftmost-turn rule the per-tile
-    walk applies at interior vertices, so the pairing is identical no
-    matter at which level (tile, super-tile, global) a junction resolves.
-
-    Chains are (n, 2) int64 vertex arrays (r7: tuple-list chains cost a
-    per-vertex python loop at every level; arrays make each merge step an
-    O(1) index append + one final concatenate). Input order does not
-    matter — chains are processed in (first, second) vertex order, which
-    equals the full lexicographic sequence sort the callers used to apply
-    (the first edge of a fragment is a directed unit edge, unique per
-    fragment, so the first two vertices already total-order the set)."""
-    n = len(chains)
-    if n == 0:
-        return [], []
-    chains = [np.asarray(c, dtype=np.int64) for c in chains]
-    firsts = np.stack([c[0] for c in chains])
-    seconds = np.stack([c[1] for c in chains])
-    lasts = np.stack([c[-1] for c in chains])
-    pens = np.stack([c[-2] for c in chains])
-    order = np.lexsort((seconds[:, 1], seconds[:, 0], firsts[:, 1], firsts[:, 0]))
-    skey = keys.pack_rc_np(firsts[:, 0], firsts[:, 1])
-    ekey = keys.pack_rc_np(lasts[:, 0], lasts[:, 1])
-    by_start: dict[int, list] = {}
-    for i in order:
-        by_start.setdefault(int(skey[i]), []).append(int(i))
-    start_cut = np.asarray(scut(firsts[:, 0], firsts[:, 1]), dtype=bool)
-    end_cut = np.asarray(scut(lasts[:, 0], lasts[:, 1]), dtype=bool)
-    used = np.zeros(n, dtype=bool)
-
-    def pick(cur_key: int, din) -> int:
-        cand = [j for j in by_start.get(cur_key, ()) if not used[j]]
-        if len(cand) == 1:
-            return cand[0]
-        best, bestt = cand[0], None
-        for j in cand:
-            t = din[0] * (seconds[j, 1] - firsts[j, 1]) - din[1] * (
-                seconds[j, 0] - firsts[j, 0]
-            )
-            if bestt is None or t < bestt:
-                best, bestt = j, t
-        return best
-
-    def cat(idxs: list) -> np.ndarray:
-        if len(idxs) == 1:
-            return chains[idxs[0]]
-        return np.concatenate([chains[idxs[0]]] + [chains[j][1:] for j in idxs[1:]])
-
-    open_paths, rings = [], []
-    for i in order:
-        if used[i] or not start_cut[i]:
-            continue
-        used[i] = True
-        idxs = [int(i)]
-        while not end_cut[idxs[-1]]:
-            k = idxs[-1]
-            j = pick(int(ekey[k]), (lasts[k, 0] - pens[k, 0], lasts[k, 1] - pens[k, 1]))
-            used[j] = True
-            idxs.append(j)
-        open_paths.append(cat(idxs))
-    for i in order:
-        if used[i]:
-            continue
-        used[i] = True
-        idxs = [int(i)]
-        start_key = int(skey[i])
-        while int(ekey[idxs[-1]]) != start_key:
-            k = idxs[-1]
-            j = pick(int(ekey[k]), (lasts[k, 0] - pens[k, 0], lasts[k, 1] - pens[k, 1]))
-            used[j] = True
-            idxs.append(j)
-        rings.append(cat(idxs))
-    return open_paths, rings
+def _pack_paths(verts: np.ndarray, off: np.ndarray) -> list:
+    """Paths → packed int32 (vc, vr) byte blobs, one per path: one binary
+    cell per path (list<long> columns cost ~9 µs/row through the stitch
+    exchanges)."""
+    buf = verts.astype(np.int32).tobytes()
+    return [buf[8 * a:8 * b] for a, b in zip(off[:-1].tolist(), off[1:].tolist())]
 
 
-def _super_merge(frags: DataFrame, grid: Grid, tile: int, super_factor: int) -> DataFrame:
-    """Intermediate stitch level: merge each (label, super-tile)'s chain
-    fragments, cutting only at super-tile borders; closed rings and counts
-    aggregate per group. Output schema = fragment schema, so the global
-    stitch is unchanged. Grouping is repartition + mapInPandas + pandas
-    groupby (one Arrow setup per PARTITION — applyInPandas with one tiny
-    group per component paid ~10 s of per-group setup at bench scale).
-
-    The cut predicate is INTERIOR super border lines only: a vertex on the
-    grid edge has all its incident cells inside this super-tile, so a
-    boundary running along the grid edge (the common continent-touches-
-    domain-edge case) merges here instead of staying one fragment per
-    cell edge."""
-    M = tile * super_factor
-    grows, gcols = grid.rows, grid.cols
-
-    def scut(xs, ys):  # vectorized over vertex arrays (r7)
-        return ((xs % M == 0) & (xs > 0) & (xs < gcols)) | (
-            (ys % M == 0) & (ys > 0) & (ys < grows)
-        )
-
-    def merge_partition(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        if not len(pdf):  # all-empty Arrow frames: starts/ends would
-            return        # still yield one (0, 0) slice below
-        out = {k: [] for k in ("tile_y", "tile_x", "label", "kind", "value",
-                               "n_own", "verts")}
-
-        def emit(sty, stx, lab, kind, value, n_own, verts):
-            out["tile_y"].append(sty)
-            out["tile_x"].append(stx)
-            out["label"].append(lab)
-            out["kind"].append(kind)
-            out["value"].append(value)
-            out["n_own"].append(n_own)
-            out["verts"].append(verts)
-
-        # argsort + slices, not a pandas groupby: ~1 group per component
-        # made the per-group frame machinery the dominant cost (measured
-        # ~2× the real merge work at bench scale — r6 profiling pass)
-        lab_a = pdf["label"].to_numpy(np.int64)
-        sty_a = pdf["tile_y"].to_numpy(np.int64) // super_factor
-        stx_a = pdf["tile_x"].to_numpy(np.int64) // super_factor
-        kind_a = pdf["kind"].to_numpy(np.int64)
-        val_a = pdf["value"].to_numpy(np.float64)
-        own_a = pdf["n_own"].to_numpy(np.float64)
-        verts_a = pdf["verts"].to_numpy()
-        order = np.lexsort((stx_a, sty_a, lab_a))
-        ks = np.stack([lab_a[order], sty_a[order], stx_a[order]])
-        change = np.any(ks[:, 1:] != ks[:, :-1], axis=0)
-        bounds = np.flatnonzero(change) + 1
-        starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [len(order)]])
-        for s0, e0 in zip(starts, ends):
-            idx = order[s0:e0]
-            lab, sty, stx = int(lab_a[idx[0]]), int(sty_a[idx[0]]), \
-                int(stx_a[idx[0]])
-            kinds = kind_a[idx]
-            csel = idx[kinds == 0]
-            if len(csel):
-                emit(sty, stx, lab, 0, float(val_a[csel[0]]),
-                     int(own_a[csel].sum()), None)
-            for i in idx[kinds == 2]:
-                # untouched rings pass their packed bytes straight through
-                # (r7: no decode, no per-vertex loop)
-                emit(sty, stx, lab, 2, None, None, verts_a[i])
-            chains = [
-                np.frombuffer(verts_a[i], np.int32).reshape(-1, 2)
-                for i in idx[kinds == 1]
-            ]
-            if chains:
-                open_paths, rings = _merge_chains(chains, scut)
-                for kind, paths in ((1, open_paths), (2, rings)):
-                    for p in paths:
-                        emit(sty, stx, lab, kind, None, None,
-                             p.astype(np.int32).tobytes())
-        if out["label"]:
-            yield pd.DataFrame(out)
-
-    n_parts = frags.sparkSession.sparkContext.defaultParallelism * 2
-    sf = frags.withColumn("_sty", (F.col("tile_y") / super_factor).cast("long")) \
-              .withColumn("_stx", (F.col("tile_x") / super_factor).cast("long"))
-    return sf.repartition(n_parts, "label", "_sty", "_stx").drop("_sty", "_stx").mapInPandas(
-        merge_partition,
-        schema="tile_y long, tile_x long, label long, kind int, value double, "
-               "n_own long, verts binary",
-    )
+def _unpack_paths(blobs) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`_pack_paths` inverse → (verts, off). Vertices widen to int64:
+    the shoelace products reach coord² and must not wrap in 32 bits."""
+    n = np.fromiter(map(len, blobs), np.int64, len(blobs)) // 8
+    verts = np.frombuffer(b"".join(blobs), np.int32).reshape(-1, 2).astype(np.int64)
+    return verts, np.r_[0, np.cumsum(n)]
 
 
-def polygonize_rings(
-    cells_df: DataFrame, grid: Grid, tile: int = 256, super_factor: int = 8
-) -> DataFrame:
-    """Full cluster2 semantics: per-region exterior ring as WKT + value
-    (``_band_to_polygon``, reference ``vectorize.py:802-879``).
+SUPER_FACTOR = 8  # super-tile edge, in tiles, of the two-level stitch
 
-    Distributed ring assembly (VERDICT r2 #4 — v2 walked the whole
-    component's CELLS in one task): boundary edges survive cancellation iff
-    the 4-neighbor across them has a different label, a test that only
-    needs a 1-cell HALO of labels, so edge extraction + chaining run per
-    TILE (parallel, each O(tile perimeter)).  Chains are cut at
-    tile-boundary vertices and shipped as packed int32 (vc, vr) byte
-    blobs (one binary cell per path — list<long> columns cost ~9 µs/row
-    through the stitch exchanges, r7 measurement); the
-    per-component stitch then walks the CHAIN graph — O(#tile crossings)
-    steps + numpy concatenation — so a continent-sized region costs one
-    task O(perimeter), never O(area).
+_FRAG_SCHEMA = ("tile_y long, tile_x long, label long, kind int, value double, "
+                "n_own long, verts binary")
 
-    TWO-LEVEL stitch (VERDICT r3 #3): when the grid spans more than
-    ``super_factor`` tiles per axis, chains first merge WITHIN super-tiles
-    of ``super_factor × super_factor`` tiles (grouped by (label,
-    super-tile), cut only at super-tile borders), so the global stitch
-    holds O(super-tile-border crossings) fragments per component instead
-    of O(tile crossings) — a continent-sized component can no longer
-    concentrate its whole perimeter's fragment list in one task's input.
-    A vertex interior to a super-tile has all four incident tiles inside
-    it, so the super-level candidate set at every junction it resolves is
-    complete, and the leftmost-turn pairing makes the output rings
-    identical to the single-level stitch (asserted by the equivalence
-    test)."""
+
+def polygonize_rings(cells_df: DataFrame, grid: Grid, tile: int = 256) -> DataFrame:
+    """Full cluster2 semantics: per-region polygon as WKT + value + cell
+    count (``_band_to_polygon``, reference ``vectorize.py:802-879``).
+
+    Distributed ring assembly, in three levels of ONE walk
+    (:func:`_walk_paths_batch`), so a continent-sized region costs one
+    task O(perimeter), never O(area):
+
+    1. per tile (:func:`_ring_fragments`): boundary edges survive
+       cancellation iff the 4-neighbour across them has a different label,
+       a test that needs only a 1-cell halo of labels; the walk chains
+       them, cut at tile-border vertices;
+    2. per (label, super-tile), when the grid spans more than
+       :data:`SUPER_FACTOR` tiles per axis (:func:`_stitch_level`): the
+       chains merge within super-tiles of ``SUPER_FACTOR²`` tiles, cut
+       only at super-tile lines, so the last level holds O(super-tile
+       crossings) fragments per component, not O(tile crossings). A vertex
+       interior to a super-tile has all four incident tiles inside it, so
+       its junction resolves exactly as the single-level stitch would;
+    3. per label, with no cut: every path closes into a ring.
+
+    Rings then become one ``POLYGON`` per label (:func:`_polygon_rows`):
+    each ring starts at its smallest (x, y) vertex, the exterior comes
+    first and the holes follow by (−|area|, first vertex). The order is
+    total, so the WKT depends neither on the stitch level nor on
+    partitioning."""
     # single_pass: the labeled table is consumed TWICE downstream (border
     # merge inside polygonize + the fragment scan here) — materializing it
     # runs the 4M-cell tile CC once instead of twice (measured ~1 s of the
     # bench query; guide §5 cache-when-reused rule)
     comp = polygonize(cells_df, grid, tile, single_pass=True)
-    rows, cols = grid.rows, grid.cols
-    x0, y0, cs = grid.x0, grid.y0, grid.cell
     frags = _ring_fragments(comp, grid, tile)
-    n_ty, n_tx = keys.n_tiles(rows, cols, tile, tile)
-    if super_factor and (n_ty > super_factor or n_tx > super_factor):
-        frags = _super_merge(frags, grid, tile, super_factor)
-    return _final_stitch(frags, x0, y0, cs)
+    if max(keys.n_tiles(grid.rows, grid.cols, tile, tile)) > SUPER_FACTOR:
+        frags = _stitch_level(frags, grid, tile, SUPER_FACTOR)
+    return _stitch_level(frags, grid, tile, None)
 
 
 def _ring_fragments(comp: DataFrame, grid: Grid, tile: int) -> DataFrame:
-    """Per-tile boundary-edge extraction + chaining (stage 1 of
+    """Per-tile boundary-edge extraction + chaining (level 1 of
     polygonize_rings): chains cut at tile-border vertices, plus per-
     (tile, label) cell counts riding along so the labeled table is
     scanned once. Each tile receives its own cells plus a 1-cell halo
     (``keys.halo_tiles``, r = 1) and tells them apart by its window; the
     halo's 4 diagonal corner cells are never a 4-neighbour of an owned
     cell, so they never change an edge. Paths travel as packed int32
-    vertex-pair blobs."""
+    vertex-pair blobs (:func:`_pack_paths`)."""
     rows, cols = grid.rows, grid.cols
     assert max(rows, cols) < (1 << 31) - 1, "vertex coords exceed int32 packing"
     spread = comp.select(
@@ -794,118 +646,148 @@ def _ring_fragments(comp: DataFrame, grid: Grid, tile: int) -> DataFrame:
         def is_cut_v(xs, ys):
             return (xs == c0) | (xs == c0 + w) | (ys == r0) | (ys == r0 + h)
 
-        # one batched walk over every label's edges at once (r7: a
-        # per-label walk — ~740 tiny python walks per dense 256² tile —
-        # dominated this stage; see _walk_edges_batch)
-        if len(el):
-            wl, wk, wp = _walk_edges_batch(ea, eb, el, is_cut_v)
-            out["label"].extend(wl)
-            out["kind"].extend(wk)
-            out["value"].extend([None] * len(wl))
-            out["n_own"].extend([None] * len(wl))
-            out["verts"].extend(p.astype(np.int32).tobytes() for p in wp)
+        # one batched walk over every label's edges at once, each edge a
+        # 2-vertex path
+        wl, wk, wv, wo = _walk_paths_batch(
+            np.stack([ea, eb], axis=1).reshape(-1, 2),
+            np.arange(0, 2 * len(el) + 1, 2), el, is_cut_v)
+        out["label"].extend(wl.tolist())
+        out["kind"].extend(wk.tolist())
+        out["value"].extend([None] * len(wl))
+        out["n_own"].extend([None] * len(wl))
+        out["verts"].extend(_pack_paths(wv, wo))
         res = pd.DataFrame(out)
         res.insert(0, "tile_y", np.int64(t_y))
         res.insert(1, "tile_x", np.int64(t_x))
         return res
 
-    return spread.groupBy("tid").applyInPandas(
-        per_tile,
-        schema="tile_y long, tile_x long, label long, kind int, value double, "
-               "n_own long, verts binary",
-    )
+    return spread.groupBy("tid").applyInPandas(per_tile, schema=_FRAG_SCHEMA)
 
 
-def _final_stitch(frags: DataFrame, x0: float, y0: float, cs: float) -> DataFrame:
-    """Global per-component stitch (stage 3): close every component's rings
-    from its (already super-merged) chain fragments and emit WKT."""
+def _stitch_level(frags: DataFrame, grid: Grid, tile: int, factor: "int | None") -> DataFrame:
+    """One stitch level of :func:`polygonize_rings`: repartition the
+    fragment rows by group, then one ``mapInPandas`` whose task runs ONE
+    :func:`_walk_paths_batch` over the chains of every group in its
+    partition (one Arrow setup per partition and no per-group python loop:
+    with ~1 group per component, per-group setup used to dominate).
 
-    def stitch_one(label, kinds, vals, owns, verts) -> dict:
-        # rings live as (n, 2) int64 arrays here: the per-vertex python
-        # loops (and especially f-strings over NUMPY scalars — ~30× the
-        # cost of formatting python floats) dominated this stage in the
-        # r6 profiling pass
-        csel = kinds == 0
-        n_cells = int(owns[csel].sum())
-        value = float(vals[csel][0])
-        # int64 from the packed int32 pairs: the shoelace products below
-        # reach coord² and must not wrap in 32 bits
-        rings = [
-            np.frombuffer(b, np.int32).reshape(-1, 2).astype(np.int64)
-            for b in verts[kinds == 2]
-        ]
-        chains = [
-            np.frombuffer(b, np.int32).reshape(-1, 2).astype(np.int64)
-            for b in verts[kinds == 1]
-        ]
-        # chain-graph walk (shared _merge_chains, scut=never → every merged
-        # path is a closed ring)
-        rings.extend(
-            _merge_chains(chains, lambda xs, ys: np.zeros(len(xs), bool))[1]
-        )
+    ``factor`` (super-tile edge in tiles): group = (label, super-tile) —
+    keyed by ``keys.tile_key`` over the tile indices — cut at INTERIOR
+    super-tile lines only (a vertex on the grid edge has all its incident
+    cells inside this super-tile, so a boundary running along the grid
+    edge merges here instead of staying one fragment per cell edge).
+    Output = fragment rows with the super-tile in tile_y/tile_x: cell
+    counts summed per group, untouched rings passed through as bytes.
+    ``factor=None``: group = label, no cut, output = one polygon row per
+    label (:func:`_polygon_rows`)."""
+    rows, cols = grid.rows, grid.cols
+    n_sx = -(-keys.n_tiles(rows, cols, tile, tile)[1] // factor) if factor else 1
+    edge = tile * (factor or 1)
 
-        def canon(rg):
-            # rotate the closed ring to start at its smallest (x, y)
-            # vertex: the emitted WKT is then independent of the stitch
-            # level and of which fragment a walk happened to start from
-            # (determinism across partitionings/cluster sizes)
-            core = rg[:-1] if (rg[0] == rg[-1]).all() else rg
-            i = int(np.lexsort((core[:, 1], core[:, 0]))[0])
-            return np.concatenate([core[i:], core[:i], core[i:i + 1]])
-
-        rings = [canon(rg) for rg in rings]
-
-        def shoelace_int(rg):
-            # translation-invariant: |map area| = cs² · |integer shoelace|
-            x, y = rg[:, 0], rg[:, 1]
-            return int(np.sum(x[:-1] * y[1:] - x[1:] * y[:-1]))
-
-        rings.sort(key=lambda rg: -abs(shoelace_int(rg)))  # exterior first
-        parts = []
-        for rg in rings:
-            xs = (x0 + rg[:, 0] * cs).tolist()
-            ys = (y0 - rg[:, 1] * cs).tolist()
-            parts.append(
-                "(" + ", ".join(f"{x} {y}" for x, y in zip(xs, ys)) + ")")
-        return {"label": int(label), "value": value, "n_cells": n_cells,
-                "wkt": f"POLYGON ({', '.join(parts)})"}
+    def is_cut_v(xs, ys):
+        if not factor:
+            return np.zeros(len(xs), dtype=bool)
+        return ((xs % edge == 0) & (xs > 0) & (xs < cols)) | (
+            (ys % edge == 0) & (ys > 0) & (ys < rows))
 
     def stitch_partition(batches):
-        # MANY components per task: repartition("label") co-locates each
-        # component's fragments, one Arrow setup per PARTITION, then
-        # argsort + slices over raw numpy columns — the pandas groupby
-        # this replaces paid per-group frame setup on ~47k 2-row groups
-        # (measured ~2.5× the real stitch work at bench scale; r6
-        # profiling pass, like the per-tile edge grouping before it)
         pdfs = list(batches)
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True)
         if not len(pdf):
             return
-        lab_a = pdf["label"].to_numpy(np.int64)
-        kind_a = pdf["kind"].to_numpy(np.int64)
-        val_a = pdf["value"].to_numpy(np.float64)
-        own_a = pdf["n_own"].to_numpy(np.float64)
-        verts_a = pdf["verts"].to_numpy()
-        order = np.argsort(lab_a, kind="stable")
-        lab_s = lab_a[order]
-        bounds = np.flatnonzero(np.diff(lab_s)) + 1
-        starts = np.concatenate([[0], bounds])
-        ends = np.concatenate([bounds, [len(order)]])
-        rows = [
-            stitch_one(int(lab_s[s0]), kind_a[idx], val_a[idx], own_a[idx],
-                       verts_a[idx])
-            for s0, e0 in zip(starts, ends)
-            for idx in (order[s0:e0],)
-        ]
-        if rows:
-            yield pd.DataFrame(rows)
+        lab = pdf["label"].to_numpy(np.int64)
+        kind = pdf["kind"].to_numpy(np.int64)
+        sid = (keys.tile_key_np(pdf["tile_y"], pdf["tile_x"], factor, factor, n_sx)
+               if factor else np.zeros(len(lab), np.int64))
+        # dense group ids, ordered by (label, super-tile)
+        o = np.lexsort((sid, lab))
+        new = np.ones(len(o), dtype=bool)
+        new[1:] = (lab[o][1:] != lab[o][:-1]) | (sid[o][1:] != sid[o][:-1])
+        gid = np.empty(len(o), dtype=np.int64)
+        gid[o] = np.cumsum(new) - 1
+        g_lab, g_sid, G = lab[o][new], sid[o][new], int(new.sum())
+        c = kind == 0
+        has = np.bincount(gid[c], minlength=G) > 0
+        n_cells = np.bincount(gid[c], weights=pdf["n_own"].to_numpy(np.float64)[c],
+                              minlength=G)
+        value = np.full(G, np.nan)
+        value[gid[c]] = pdf["value"].to_numpy(np.float64)[c]
+        blobs = pdf["verts"].to_numpy()
+        k1, k2 = kind == 1, np.flatnonzero(kind == 2)
+        wg, wk, wv, wo = _walk_paths_batch(*_unpack_paths(blobs[k1]), gid[k1], is_cut_v)
+        if factor is None:
+            pv, po = _unpack_paths(blobs[k2])
+            yield _polygon_rows(
+                g_lab, value, n_cells.astype(np.int64), np.concatenate([gid[k2], wg]),
+                np.concatenate([pv, wv]), np.r_[po, po[-1] + wo[1:]], grid)
+            return
+        hg = np.flatnonzero(has)
+        rg = np.concatenate([hg, gid[k2], wg])
+        n_pass = len(k2) + len(wg)
+        yield pd.DataFrame({
+            "tile_y": g_sid[rg] // n_sx, "tile_x": g_sid[rg] % n_sx, "label": g_lab[rg],
+            "kind": np.concatenate([np.zeros(len(hg), np.int64), kind[k2], wk]).astype(np.int32),
+            "value": np.r_[value[hg], np.full(n_pass, np.nan)],
+            "n_own": np.r_[n_cells[hg], np.full(n_pass, np.nan)],
+            "verts": [None] * len(hg) + list(blobs[k2]) + _pack_paths(wv, wo),
+        })
 
     n_parts = frags.sparkSession.sparkContext.defaultParallelism * 2
-    return frags.repartition(n_parts, "label").mapInPandas(
-        stitch_partition, schema="label long, value double, n_cells long, wkt string"
+    if factor:
+        parts = frags.repartition(
+            n_parts, "label", keys.tile_key("tile_y", "tile_x", factor, factor, n_sx))
+    else:
+        parts = frags.repartition(n_parts, "label")
+    return parts.mapInPandas(
+        stitch_partition,
+        schema=_FRAG_SCHEMA if factor else
+        "label long, value double, n_cells long, wkt string",
     )
+
+
+def _polygon_rows(lab, value, n_cells, rgrp, verts, off, grid: Grid) -> pd.DataFrame:
+    """Closed rings (grouped by ``rgrp``, an index into the per-group
+    ``lab``/``value``/``n_cells``) → one ``POLYGON`` WKT row per group.
+
+    Each ring is rotated to start at its smallest (x, y) vertex, and a
+    group's rings are ordered by (−|area|, first vertex): the exterior —
+    strictly the largest ring, as it encloses every hole and at least one
+    cell — comes first, then the holes. Two rings of one label never share
+    their smallest vertex (at a pinch vertex only a ring that never goes
+    left of it can start there), so the order is total and the text
+    depends on neither the stitch level nor the order fragments arrive in.
+    Vertices are formatted as python floats: f-strings over numpy scalars
+    cost ~30× more."""
+    n = np.diff(off)
+    rid = np.repeat(np.arange(len(n)), n)
+    start = np.repeat(off[:-1], n)
+    x, y = verts[:, 0], verts[:, 1]
+    # translation-invariant: |map area| = cs² · |integer shoelace|
+    cr = x[:-1] * y[1:] - x[1:] * y[:-1]
+    cr[rid[:-1] != rid[1:]] = 0
+    area = np.abs(np.add.reduceat(cr, off[:-1]))
+    # rotate each ring (closing vertex dropped) to its smallest (x, y) vertex
+    core = n - 1
+    ci = np.flatnonzero(np.arange(len(x)) != np.repeat(off[1:] - 1, n))
+    lo = np.lexsort((y[ci], x[ci], rid[ci]))[np.r_[0, np.cumsum(core)[:-1]]]
+    i0 = np.repeat(ci[lo] - off[:-1], n)
+    rv = verts[start + (i0 + np.arange(len(x)) - start) % np.repeat(core, n)]
+    order = np.lexsort((rv[off[:-1], 1], rv[off[:-1], 0], -area, rgrp))
+    xs = (grid.x0 + rv[:, 0] * grid.cell).tolist()
+    ys = (grid.y0 - rv[:, 1] * grid.cell).tolist()
+    pts = [f"{a} {b}" for a, b in zip(xs, ys)]
+    ol = off.tolist()
+    txt = ["(" + ", ".join(pts[ol[r]:ol[r + 1]]) + ")" for r in order.tolist()]
+    gs = rgrp[order]
+    heads = np.flatnonzero(np.r_[True, gs[1:] != gs[:-1]])
+    g = gs[heads]
+    return pd.DataFrame({
+        "label": lab[g], "value": value[g], "n_cells": n_cells[g],
+        "wkt": ["POLYGON (" + ", ".join(txt[a:b]) + ")"
+                for a, b in zip(heads.tolist(), np.r_[heads[1:], len(txt)].tolist())],
+    })
 
 
 def footprint(cells_df: DataFrame, grid: Grid, tile: int = 256) -> DataFrame:

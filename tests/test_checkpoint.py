@@ -82,6 +82,37 @@ def test_rerun_is_idempotent(spark, tmp_path):
     assert cp.result().count() == n1
 
 
+def test_chunk_row_count_rides_on_the_write_job(spark, tmp_path, build_jobs):
+    """A committed chunk runs only the jobs of its own parquet write: the
+    row count comes from an Observation on the written plan, not from
+    re-reading the chunk. ``rows_out`` equals the rows on disk, an empty
+    chunk included, and the lineage file keeps its fields."""
+    import json
+    import os
+
+    zones = synth.zone_polygons(5, "hex")
+    chunks = key_range_chunks(3000, 3) + [{"id": 3, "lo": 5000, "hi": 5000}]
+    job = _job(zones)
+    plain = sum(
+        build_jobs(lambda: job(spark, c).write.parquet(str(tmp_path / f"plain{c['id']}")),
+                   f"ckpt-plain-{c['id']}")
+        for c in chunks
+    )
+    cp = CheckpointedJob(spark, str(tmp_path), "observed")
+    lineage = {}
+    n = build_jobs(lambda: lineage.update(cp.run(chunks, job)), "ckpt-observed")
+    assert n == plain
+    for c in chunks:
+        cid = str(c["id"])
+        on_disk = spark.read.parquet(os.path.join(cp.dir, "data", f"chunk={cid}")).count()
+        assert lineage[cid]["rows_out"] == on_disk
+        with open(os.path.join(cp.dir, "lineage", f"chunk={cid}.json")) as f:
+            assert set(json.load(f)) == {"chunk", "input", "rows_out", "wall_s",
+                                         "attempt", "committed_at"}
+    assert lineage["3"]["rows_out"] == 0 and lineage["0"]["rows_out"] > 0
+    cp.close()
+
+
 def test_writer_lock_blocks_second_live_writer(spark, tmp_path):
     import os
     import pytest

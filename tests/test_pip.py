@@ -280,6 +280,28 @@ def test_pip_join_df_tolerates_empty_rings(spark):
     assert ka == kb and len(ka) > 0
 
 
+def test_pip_joins_ignore_parts_under_three_distinct_vertices(spark):
+    """A part with fewer than 3 distinct vertices has no area: it gets no
+    cover, so both joins return the same rows with or without it (a
+    1-vertex part once reached the ray-cast refine and crashed it). The
+    degenerate parts sit on a doc point, so their cell has candidates."""
+    pts = synth.doc_points(spark, 500)
+    zones = synth.zone_polygons(3, "hex")
+    _, lon, lat = _oracle_points(500)
+    x, y = float(lon[0]), float(lat[0])
+    bad = [
+        {"zone_id": 97, "parts": [np.array([[x, y]])]},
+        {"zone_id": 98, "parts": [np.array([[x, y], [x + 1e-3, y], [x, y]])]},
+        {"zone_id": 99, "parts": [np.array([[x, y], [x, y], [x, y], [x, y]])]},
+    ]
+    assert len(pip._cover_parts(np.array([0]), np.array([0]), [np.array([10.3])],
+                                [np.array([20.7])], 8, "intersects")) == 0
+    want = _pairs(pip.pip_join(pts, zones, zoom=7))
+    assert len(want) > 0
+    assert _pairs(pip.pip_join(pts, zones + bad, zoom=7)) == want
+    assert _pairs(pip.pip_join_df(pts, _zones_as_df(spark, zones + bad), zoom=7)) == want
+
+
 def test_zone_cover_interior_flag_sound(spark):
     """boundary=False cells must be fully inside their zone."""
     zones = synth.zone_polygons(6, "hex")

@@ -8,6 +8,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from pyramids_spark import keys
 from pyramids_spark.grid import Grid, grid_df
 from pyramids_spark.operators import vectorize
 
@@ -156,10 +157,11 @@ def test_polygonize_rings_snake_across_tiles(spark):
     assert _shoelace(rings[0]) == float(r.n_cells) == 34.0
 
 
-def test_polygonize_rings_two_level_equals_single_level(spark):
+def test_polygonize_rings_two_level_equals_single_level(spark, monkeypatch):
     """VERDICT r3 #3: the super-tile merge must not change a single output
     byte — donut + separate blob on a 12x12-tile grid, two-level
-    (super_factor=4 → 3x3 supers) vs single-level (super_factor=None)."""
+    (SUPER_FACTOR=4 → 3x3 supers) vs single-level (SUPER_FACTOR=12, no
+    axis spans more tiles)."""
     rows, cols = 24, 24
     vals = np.full((rows, cols), np.nan)
     vals[2:22, 2:22] = 3.0
@@ -171,12 +173,14 @@ def test_polygonize_rings_two_level_equals_single_level(spark):
     ).dropna()
     g = Grid(x0=0.0, y0=24.0, cell=1.0, rows=rows, cols=cols)
     df = spark.createDataFrame(pdf.astype({"row": "int64", "col": "int64"}))
+    monkeypatch.setattr(vectorize, "SUPER_FACTOR", 4)
     two = (
-        vectorize.polygonize_rings(df, g, tile=2, super_factor=4)
+        vectorize.polygonize_rings(df, g, tile=2)
         .toPandas().sort_values("label").reset_index(drop=True)
     )
+    monkeypatch.setattr(vectorize, "SUPER_FACTOR", 12)
     one = (
-        vectorize.polygonize_rings(df, g, tile=2, super_factor=None)
+        vectorize.polygonize_rings(df, g, tile=2)
         .toPandas().sort_values("label").reset_index(drop=True)
     )
     assert len(two) == len(one) == 2
@@ -184,7 +188,7 @@ def test_polygonize_rings_two_level_equals_single_level(spark):
         assert (two[c] == one[c]).all(), c
 
 
-def test_super_merge_caps_final_stitch_fragments(spark):
+def test_super_merge_caps_final_stitch_fragments(spark, monkeypatch):
     """The giant-component straggler cap: a solid 64x64 component (every
     boundary vertex on the grid edge — worst case for the old one-level
     stitch) must reach the final stitch with ≥4x fewer chain fragments
@@ -198,15 +202,16 @@ def test_super_merge_caps_final_stitch_fragments(spark):
     df = spark.createDataFrame(pdf.astype({"row": "int64", "col": "int64"}))
     comp = vectorize.polygonize(df, g, tile=4)
     frags = vectorize._ring_fragments(comp, g, tile=4).toPandas()
-    merged = vectorize._super_merge(
-        vectorize._ring_fragments(comp, g, tile=4), g, tile=4, super_factor=4
+    merged = vectorize._stitch_level(
+        vectorize._ring_fragments(comp, g, tile=4), g, tile=4, factor=4
     ).toPandas()
     n_before = int((frags["kind"] == 1).sum())
     n_after = int((merged["kind"] == 1).sum())
     assert n_before >= 4 * max(n_after, 1)
     # counts survive aggregation and rings still come out right
     assert merged.loc[merged["kind"] == 0, "n_own"].sum() == rows * cols
-    out = vectorize.polygonize_rings(df, g, tile=4, super_factor=4).toPandas()
+    monkeypatch.setattr(vectorize, "SUPER_FACTOR", 4)
+    out = vectorize.polygonize_rings(df, g, tile=4).toPandas()
     assert len(out) == 1 and out.iloc[0].n_cells == rows * cols
     rings = _parse_wkt_rings(out.iloc[0].wkt)
     assert len(rings) == 1 and rings[0][0] == rings[0][-1]
@@ -355,16 +360,89 @@ def _walk_edges(ea: np.ndarray, eb: np.ndarray, is_cut) -> tuple[list, list]:
     return chains, rings
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2, 7])
-def test_walk_edges_batch_matches_per_label_walk(seed):
-    """r7: the vectorized successor-array walk must reproduce the per-label
-    python walk exactly — open chains as identical sequences, rings as
-    identical cycles up to rotation — on random multi-label grids dense
-    with diagonal pinch vertices (the 2-out case the turn rule resolves)."""
+def _merge_chains(chains: list, scut) -> tuple[list, list]:
+    """Per-group python chain walk — the parity oracle for the stitch
+    levels of ``vectorize._walk_paths_batch``. Walk the chain graph: merge
+    chain fragments end-to-start, cutting merged paths at ``scut``
+    vertices. Returns (open_paths, rings): paths start and end at scut
+    vertices; rings are cycles that never touch one. Pinch vertices
+    resolve with the SAME leftmost-turn rule the per-tile walk applies at
+    interior vertices, so the pairing is identical no matter at which
+    level (tile, super-tile, global) a junction resolves.
+
+    Chains are (n, 2) int64 vertex arrays. Input order does not matter —
+    chains are processed in (first, second) vertex order (the first edge
+    of a fragment is a directed unit edge, unique per fragment, so the
+    first two vertices already total-order the set)."""
+    n = len(chains)
+    if n == 0:
+        return [], []
+    chains = [np.asarray(c, dtype=np.int64) for c in chains]
+    firsts = np.stack([c[0] for c in chains])
+    seconds = np.stack([c[1] for c in chains])
+    lasts = np.stack([c[-1] for c in chains])
+    pens = np.stack([c[-2] for c in chains])
+    order = np.lexsort((seconds[:, 1], seconds[:, 0], firsts[:, 1], firsts[:, 0]))
+    skey = keys.pack_rc_np(firsts[:, 0], firsts[:, 1])
+    ekey = keys.pack_rc_np(lasts[:, 0], lasts[:, 1])
+    by_start: dict[int, list] = {}
+    for i in order:
+        by_start.setdefault(int(skey[i]), []).append(int(i))
+    start_cut = np.asarray(scut(firsts[:, 0], firsts[:, 1]), dtype=bool)
+    end_cut = np.asarray(scut(lasts[:, 0], lasts[:, 1]), dtype=bool)
+    used = np.zeros(n, dtype=bool)
+
+    def pick(cur_key: int, din) -> int:
+        cand = [j for j in by_start.get(cur_key, ()) if not used[j]]
+        if len(cand) == 1:
+            return cand[0]
+        best, bestt = cand[0], None
+        for j in cand:
+            t = din[0] * (seconds[j, 1] - firsts[j, 1]) - din[1] * (
+                seconds[j, 0] - firsts[j, 0]
+            )
+            if bestt is None or t < bestt:
+                best, bestt = j, t
+        return best
+
+    def cat(idxs: list) -> np.ndarray:
+        if len(idxs) == 1:
+            return chains[idxs[0]]
+        return np.concatenate([chains[idxs[0]]] + [chains[j][1:] for j in idxs[1:]])
+
+    open_paths, rings = [], []
+    for i in order:
+        if used[i] or not start_cut[i]:
+            continue
+        used[i] = True
+        idxs = [int(i)]
+        while not end_cut[idxs[-1]]:
+            k = idxs[-1]
+            j = pick(int(ekey[k]), (lasts[k, 0] - pens[k, 0], lasts[k, 1] - pens[k, 1]))
+            used[j] = True
+            idxs.append(j)
+        open_paths.append(cat(idxs))
+    for i in order:
+        if used[i]:
+            continue
+        used[i] = True
+        idxs = [int(i)]
+        start_key = int(skey[i])
+        while int(ekey[idxs[-1]]) != start_key:
+            k = idxs[-1]
+            j = pick(int(ekey[k]), (lasts[k, 0] - pens[k, 0], lasts[k, 1] - pens[k, 1]))
+            used[j] = True
+            idxs.append(j)
+        rings.append(cat(idxs))
+    return open_paths, rings
+
+
+def _region_labels(seed: int, H: int, W: int) -> np.ndarray:
+    """Random 3-valued grid (checkerboard for seed 7: every interior
+    vertex a pinch) → 4-connected equal-value region labels."""
     rng = np.random.default_rng(seed)
-    H = W = 12
     vals = rng.integers(0, 3, size=(H, W))
-    if seed == 7:  # checkerboard: every interior vertex is a pinch
+    if seed == 7:
         vals = (np.add.outer(np.arange(H), np.arange(W)) % 2).astype(int)
     base = np.arange(H * W, dtype=np.int64).reshape(H, W)
     label = np.empty((H, W), np.int64)
@@ -372,10 +450,16 @@ def test_walk_edges_batch_matches_per_label_walk(seed):
         m = vals == v
         lab = vectorize._local_cc(m, base, conn8=False)
         label[m] = lab[m]
-    # boundary-edge extraction, the per-tile convention (_SIDE_EDGES):
-    # a cell side survives iff the 4-neighbor across it has another label
-    # (out-of-grid counts as another label)
-    eas, ebs, els = [], [], []
+    return label
+
+
+def _boundary_edges(label: np.ndarray):
+    """Boundary-edge extraction, the per-tile convention (_SIDE_EDGES): a
+    cell side survives iff the 4-neighbor across it has another label
+    (out-of-grid counts as another label) → (ea, eb, label, cell row,
+    cell col) per directed edge."""
+    H, W = label.shape
+    eas, ebs, els, ers, ecs = [], [], [], [], []
     rr, cc = np.meshgrid(np.arange(H), np.arange(W), indexing="ij")
     rr, cc = rr.ravel(), cc.ravel()
     for (dr, dc), (a_off, b_off) in vectorize._SIDE_EDGES:
@@ -387,24 +471,43 @@ def test_walk_edges_batch_matches_per_label_walk(seed):
         eas.append(np.stack([cc[keep] + a_off[0], rr[keep] + a_off[1]], axis=1))
         ebs.append(np.stack([cc[keep] + b_off[0], rr[keep] + b_off[1]], axis=1))
         els.append(label[rr[keep], cc[keep]])
-    ea, eb, el = np.concatenate(eas), np.concatenate(ebs), np.concatenate(els)
+        ers.append(rr[keep])
+        ecs.append(cc[keep])
+    return tuple(np.concatenate(a) for a in (eas, ebs, els, ers, ecs))
+
+
+def _edge_paths(ea, eb):
+    """Directed edges as 2-vertex paths in ``_walk_paths_batch``'s layout."""
+    return np.stack([ea, eb], axis=1).reshape(-1, 2), np.arange(0, 2 * len(ea) + 1, 2)
+
+
+def _canon_ring(p):
+    core = [tuple(v) for v in p[:-1]]
+    i = min(range(len(core)), key=lambda k: core[k])
+    return tuple(core[i:] + core[:i])
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2, 7])
+def test_walk_edges_batch_matches_per_label_walk(seed):
+    """The vectorized successor-array walk must reproduce the per-label
+    python walk exactly — open chains as identical sequences, rings as
+    identical cycles up to rotation — on random multi-label grids dense
+    with diagonal pinch vertices (the 2-out case the turn rule resolves)."""
+    H = W = 12
+    ea, eb, el, _, _ = _boundary_edges(_region_labels(seed, H, W))
 
     def is_cut_v(xs, ys):
         return (xs == 0) | (xs == W) | (ys == 0) | (ys == H)
 
-    wl, wk, wp = vectorize._walk_edges_batch(ea, eb, el, is_cut_v)
-
-    def canon_ring(p):
-        core = [tuple(v) for v in p[:-1]]
-        i = min(range(len(core)), key=lambda k: core[k])
-        return tuple(core[i:] + core[:i])
+    g, k, v, o = vectorize._walk_paths_batch(*_edge_paths(ea, eb), el, is_cut_v)
+    wl, wk, wp = g.tolist(), k.tolist(), [v[a:b] for a, b in zip(o[:-1], o[1:])]
 
     got_chains, got_rings = {}, {}
     for lab, kind, p in zip(wl, wk, wp):
         if kind == 1:
             got_chains.setdefault(lab, set()).add(tuple(map(tuple, p)))
         else:
-            got_rings.setdefault(lab, set()).add(canon_ring(p))
+            got_rings.setdefault(lab, set()).add(_canon_ring(p))
 
     exp_chains, exp_rings = {}, {}
     order = np.argsort(el, kind="stable")
@@ -420,11 +523,89 @@ def test_walk_edges_batch_matches_per_label_walk(seed):
         for p in chains:
             exp_chains.setdefault(lab, set()).add(tuple(map(tuple, p)))
         for p in rings:
-            exp_rings.setdefault(lab, set()).add(canon_ring(np.asarray(p)))
+            exp_rings.setdefault(lab, set()).add(_canon_ring(np.asarray(p)))
         n_edges += e0 - s0
     assert n_edges > 100  # the grid actually produced boundary work
     assert got_chains == exp_chains
     assert got_rings == exp_rings
+
+
+@pytest.mark.parametrize("cut", ["super", "none"])
+@pytest.mark.parametrize("seed", [0, 3, 7])
+def test_walk_paths_batch_matches_merge_chains(seed, cut):
+    """The stitch levels run the tile level's batched walk over vertex
+    paths. On the tile chains of a multi-label grid, grouped per (label,
+    super-tile) and cut at interior super-tile lines, or grouped per label
+    with no cut, it must reproduce the per-group chain walk it replaced:
+    open paths byte-equal, rings equal after canonical rotation."""
+    H = W = 48
+    T, SF = 4, 2
+    ea, eb, el, er, ec = _boundary_edges(_region_labels(seed, H, W))
+    # level 1: one batched walk over every (label, tile), cut at tile lines
+    ntx = W // T
+    tkey, tgrp = np.unique(el * ntx * ntx + (er // T) * ntx + ec // T,
+                           return_inverse=True)
+    g, k, v, o = vectorize._walk_paths_batch(
+        *_edge_paths(ea, eb), tgrp, lambda xs, ys: (xs % T == 0) | (ys % T == 0))
+    ch = np.flatnonzero(k == 1)
+    paths = [v[o[i]:o[i + 1]] for i in ch]
+    lab, tid = tkey[g[ch]] // (ntx * ntx), tkey[g[ch]] % (ntx * ntx)
+    if cut == "super":
+        skey = lab * ntx * ntx + (tid // ntx // SF) * ntx + (tid % ntx) // SF
+        M = T * SF
+
+        def scut(xs, ys):
+            return ((xs % M == 0) & (xs > 0) & (xs < W)) | ((ys % M == 0) & (ys > 0) & (ys < H))
+    else:
+        skey = lab
+
+        def scut(xs, ys):
+            return np.zeros(len(xs), dtype=bool)
+
+    _, sgrp = np.unique(skey, return_inverse=True)
+    g2, k2, v2, o2 = vectorize._walk_paths_batch(
+        np.concatenate(paths), np.r_[0, np.cumsum([len(p) for p in paths])], sgrp, scut)
+    n_open = n_multi = 0
+    for gi in np.unique(sgrp):
+        exp_open, exp_rings = _merge_chains([paths[j] for j in np.flatnonzero(sgrp == gi)], scut)
+        mine = np.flatnonzero(g2 == gi)
+        got_open = sorted(v2[o2[j]:o2[j + 1]].tobytes() for j in mine if k2[j] == 1)
+        got_rings = sorted(_canon_ring(v2[o2[j]:o2[j + 1]]) for j in mine if k2[j] == 2)
+        assert got_open == sorted(p.tobytes() for p in exp_open), gi
+        assert got_rings == sorted(_canon_ring(p) for p in exp_rings), gi
+        n_open += len(got_open)
+        n_multi += (sgrp == gi).sum() > 1
+    assert n_multi > 50  # groups that really merge chains
+    assert (n_open > 0) == (cut == "super")
+
+
+def test_polygonize_rings_wkt_independent_of_partitioning(spark):
+    """Ring order is a total order: a polygon whose six 1-cell holes all
+    have the same area comes back as ONE WKT string per label whatever the
+    input partitioning and the shuffle partition count."""
+    rows = cols = 16
+    vals = np.ones((rows, cols))
+    for i, (r, c) in enumerate([(1, 1), (1, 9), (9, 1), (9, 9), (5, 13), (13, 5)]):
+        vals[r, c] = 2.0 + i
+    pdf = pd.DataFrame(
+        {"band": 0, "row": np.repeat(np.arange(rows), cols),
+         "col": np.tile(np.arange(cols), rows), "value": vals.ravel()}
+    )
+    g = Grid(x0=0.0, y0=16.0, cell=1.0, rows=rows, cols=cols)
+    df = spark.createDataFrame(pdf.astype({"row": "int64", "col": "int64"}))
+    seen: dict[int, set] = {}
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for shuffle in (1, 4, 13):
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+            for n in (1, 3, 7):
+                for r in vectorize.polygonize_rings(df.repartition(n), g, tile=8).collect():
+                    seen.setdefault(r.label, set()).add(r.wkt)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert len(seen) == 7
+    assert {lab: len(w) for lab, w in seen.items()} == {lab: 1 for lab in seen}
+    assert len(_parse_wkt_rings(next(iter(seen[0])))) == 7  # exterior + 6 holes
 
 
 def test_int_typed_cells_match_long_typed_on_huge_grid(spark):
