@@ -43,7 +43,7 @@ from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -385,7 +385,11 @@ def pip_join_df(
        ring table and ray-cast, batched by part inside each Arrow batch.
 
     Building the DataFrame runs exactly one Spark job: the cover
-    checkpoint.
+    checkpoint. That job also picks the plan: an ``Observation`` on the
+    cover reports whether any non-convex part has a boundary cell, and
+    when none does (an all-convex table, or an empty cover) the ray-cast
+    branch is left out, as :func:`pip_join` does — no Python node, one
+    scan of the point side.
 
     ``part_key`` is ``xxhash64(zone_id, xs, ys)`` — deterministic across
     task retries and cluster sizes (a monotonically_increasing_id would
@@ -396,9 +400,15 @@ def pip_join_df(
     rings = zones_df.select(
         "zone_id", F.xxhash64("zone_id", "xs", "ys").alias("part_key"), "xs", "ys"
     )
-    cover = zone_cover_df(rings, zoom, "intersects").localCheckpoint()
+    obs = Observation()
+    cover = (
+        zone_cover_df(rings, zoom, "intersects")
+        .observe(obs, F.max(F.col("boundary") & ~F.col("convex")).alias("hard"))
+        .localCheckpoint()
+    )
     coefs = _edge_coefs(rings, _MAX_EDGE_COLS)
-    return _pip_core(points, zoom, x, y, cover, coefs, _MAX_EDGE_COLS, rings)
+    hard = rings if obs.get["hard"] else None  # null when the cover is empty
+    return _pip_core(points, zoom, x, y, cover, coefs, _MAX_EDGE_COLS, hard)
 
 
 def salt_col(n_salt: int = 16, row_source: F.Column | None = None) -> F.Column:

@@ -370,18 +370,27 @@ def _apply_mapping(labeled: DataFrame, mapping: DataFrame) -> DataFrame:
     )
 
 
+def _has_data(v: Column) -> Column:
+    """A cell holds data unless its value is null or NaN — the absent-row
+    nodata contract of ``_blocks.sparse_cells``, which drops NaN on read.
+    A NaN cell kept as a value would match no ``vals == v`` mask of the
+    tile labeling."""
+    return v.isNotNull() & ~F.isnan(v)
+
+
 def polygonize(
     cells_df: DataFrame, grid: Grid, tile: int = 256, single_pass: bool = False
 ) -> DataFrame:
     """gdal.Polygonize region step: 4-connected equal-value components.
-    → (row, col, value, label).
+    → (row, col, value, label). Null and NaN cells are nodata: they belong
+    to no region, so they become holes of the regions around them.
 
     ``single_pass`` has :func:`cluster`'s semantics: eagerly checkpoint
     the per-tile labeling so the border/mapping pass and downstream
     consumers (the ring pipeline) scan it without re-running the tile CC
     — one execution, O(cells) block-manager storage; default False stays
     the two-scan O(1)-storage mode."""
-    return _components(cells_df, grid, tile, F.col("value").isNotNull(),
+    return _components(cells_df, grid, tile, _has_data(F.col("value")),
                        by_value=True, single_pass=single_pass)
 
 
@@ -793,8 +802,8 @@ def _polygon_rows(lab, value, n_cells, rgrp, verts, off, grid: Grid) -> pd.DataF
 def footprint(cells_df: DataFrame, grid: Grid, tile: int = 256) -> DataFrame:
     """Real-data coverage polygons: mask to a constant then polygonize
     (reference ``Dataset.footprint``, ``analysis.py:539-656``: domain cells
-    → value 2 → polygonize)."""
-    masked = cells_df.where(F.col("value").isNotNull()).withColumn(
+    → value 2 → polygonize). Null and NaN cells are outside the domain."""
+    masked = cells_df.where(_has_data(F.col("value"))).withColumn(
         "value", F.lit(2.0)
     )
     return polygonize_rings(masked, grid, tile)

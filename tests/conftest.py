@@ -1,7 +1,9 @@
+import random
+import re
+from collections import Counter
+
 import numpy as np
 import pytest
-
-import random
 
 random.seed(1337)
 np.random.seed(1337)  # reference test seed (tests/conftest.py:37-41)
@@ -34,3 +36,18 @@ def build_jobs(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+# a node name opens its line of the plan tree; Python nodes never codegen,
+# so they carry no "*(n)" stage prefix
+_PYTHON_NODE = re.compile(r"^[ :|+-]*(\w*(?:EvalPython|InPandas|InArrow)\w*)", re.M)
+
+
+def python_nodes(df) -> Counter:
+    """Python evaluation nodes in ``df``'s executed plan, counted by node
+    name: ``ArrowEvalPython``, ``BatchEvalPython``, ``MapInPandas``,
+    ``FlatMapGroupsInPandas`` and every other ``*EvalPython`` /
+    ``*InPandas`` / ``*InArrow`` node. An empty count means the plan
+    starts no Python worker."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return Counter(_PYTHON_NODE.findall(plan))

@@ -1,11 +1,14 @@
 """End-to-end PIP join + span-invariant tests (Spark vs numpy oracle)."""
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import python_nodes
 from pyramids_spark import cells, synth
 from pyramids_spark.operators import pip
 
@@ -95,11 +98,12 @@ def test_pip_join_plan_is_broadcast_no_bigside_shuffle(spark):
     scan of the points."""
     pts = synth.doc_points(spark, 1000)
     zones = synth.zone_polygons(3, "box")
-    plan = pip.pip_join(pts, zones, zoom=7)._jdf.queryExecution().executedPlan().toString()
+    df = pip.pip_join(pts, zones, zoom=7)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "Exchange hashpartitioning" not in plan  # big side never shuffles
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    assert "EvalPython" not in plan
+    assert not python_nodes(df)
     assert plan.count("Range (0, 1000") == 1
 
 
@@ -126,7 +130,7 @@ def test_pip_edge_refine_matches_udf_raycast(spark):
     pts = synth.doc_points(spark, 4000)
     zones = synth.zone_polygons(7, "hex")
     a = pip.pip_join(pts, zones, zoom=7)
-    assert "ArrowEvalPython" not in a._jdf.queryExecution().executedPlan().toString()
+    assert not python_nodes(a)
     ka = _pairs(a)
     assert ka == _oracle_pairs(4000, zones) and len(ka) > 0
 
@@ -406,21 +410,68 @@ def test_flat_refine_cap_counts_real_edges(spark):
         for df in (lst, dfp):
             assert "e16_" not in df._jdf.queryExecution().executedPlan().toString()
             assert _pairs(df) == exp, name
-        # the list path sizes the coefficients to its flat parts and builds
-        # the ray-cast branch only for the others
+        # the list path sizes the coefficients to its flat parts; both
+        # paths build the ray-cast branch only for the others
         plan = lst._jdf.queryExecution().executedPlan().toString()
         assert ("e15_xa" in plan) == flat, name
-        assert ("ArrowEvalPython" in plan) == (not flat), name
+        for df in (lst, dfp):
+            assert python_nodes(df)["ArrowEvalPython"] == (0 if flat else 1), name
+
+
+_L = np.array([[-2.0, -2.0], [2.0, -2.0], [2.0, 0.0], [0.0, 0.0], [0.0, 2.0], [-2.0, 2.0]])
 
 
 def test_pip_build_job_audit(spark, build_jobs):
     """Building the plan: pip_join runs no Spark job (cache miss or hit);
-    pip_join_df runs exactly one, the cover checkpoint."""
+    pip_join_df runs exactly one, the cover checkpoint, which also reports
+    whether the ray-cast branch is needed (here it is: the L is concave)."""
     pts = synth.doc_points(spark, 1000)
-    L = np.array([[-2.0, -2.0], [2.0, -2.0], [2.0, 0.0], [0.0, 0.0],
-                  [0.0, 2.0], [-2.0, 2.0]])
-    zones = synth.zone_polygons(5, "hex", seed=11) + [{"zone_id": 50, "parts": [L]}]
+    zones = synth.zone_polygons(5, "hex", seed=11) + [{"zone_id": 50, "parts": [_L]}]
     zdf = _zones_as_df(spark, zones)
     for i in range(2):  # the first call builds the driver sides, the second hits the cache
         assert build_jobs(lambda: pip.pip_join(pts, zones, zoom=7), f"audit-list-{i}") == 0
     assert build_jobs(lambda: pip.pip_join_df(pts, zdf, zoom=7), "audit-df") == 1
+
+
+def test_pip_join_df_plans_ray_cast_only_when_cover_needs_it(spark, build_jobs):
+    """pip_join_df plans its ray-cast branch from its cover: all-convex
+    faces get no Python node and still one build job; one concave L part
+    with boundary cells brings the node back. Pairs equal pip_join on
+    both tables, and an empty zone table joins to nothing."""
+    pts = synth.doc_points(spark, 3000, hot_frac=0.5)
+    convex = synth.zone_polygons(6, "hex", seed=11)
+    for zones, hard in ((convex, False), (convex + [{"zone_id": 50, "parts": [_L]}], True)):
+        zdf = _zones_as_df(spark, zones)
+        built = {}
+        assert build_jobs(lambda: built.setdefault("df", pip.pip_join_df(pts, zdf, zoom=7)),
+                          f"branch-{hard}") == 1
+        df = built["df"]
+        assert python_nodes(df)["ArrowEvalPython"] == (1 if hard else 0), hard
+        exp = _pairs(pip.pip_join(pts, zones, zoom=7))
+        assert _pairs(df) == exp and len(exp) > 0, hard
+    empty = spark.createDataFrame([], "zone_id long, xs array<double>, ys array<double>")
+    df = pip.pip_join_df(pts, empty, zoom=7)
+    assert not python_nodes(df)
+    assert df.count() == 0
+
+
+def test_table_open_lists_partitions_on_the_driver(spark, tmp_path, build_jobs):
+    """Opening a 64-partition parquet table runs one Spark job (the footer
+    read of schema inference), not a second distributed listing job; a
+    flagship-shaped build (read, partition filter, pip_join) runs the
+    same one."""
+    p = str(tmp_path / "docs")
+    (spark.range(1280)
+     .select((F.col("id") % 64).alias("pcell"), F.col("id").alias("key"),
+             (F.col("id") % 80 - 40).cast("double").alias("x"),
+             (F.col("id") % 60 - 30).cast("double").alias("y"))
+     .repartition(2).write.partitionBy("pcell").parquet(p))
+    assert len([d for d in os.listdir(p) if d.startswith("pcell=")]) == 64
+    assert build_jobs(lambda: spark.read.parquet(p), "open-table") == 1
+    zones = synth.zone_polygons(4, "hex", seed=11)
+
+    def flagship():
+        docs = spark.read.parquet(p).where(F.col("pcell").isin(list(range(0, 64, 3))))
+        return pip.pip_join(docs.select("x", "y"), zones, zoom=7)
+
+    assert build_jobs(flagship, "open-flagship") == 1

@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import python_nodes
 from pyramids_spark import synth
 from pyramids_spark.grid import COELLO, CROP_GRID, Grid, grid_df
 from pyramids_spark.operators import raster, reproject, vectorize
@@ -368,7 +369,7 @@ def test_polygon_ops_build_job_and_plan_audit(spark, build_jobs):
         assert build_jobs(lambda: built.__setitem__(name, build()), f"poly-{name}") == 0, name
     for name, df in built.items():
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, (name, plan)
+        assert not python_nodes(df), (name, plan)
         assert "BroadcastHashJoin" in plan, (name, plan)
     assert built["zonal_stats_raster"].where("count > 0").count() >= 2
 
@@ -499,11 +500,10 @@ def test_warp_build_job_and_plan_audit(spark, build_jobs):
             # both coordinates share one UDF call per node; the second node
             # is the join's inferred isnotnull(src_row, src_col) filter,
             # which Spark pushes below the projection and re-evaluates
-            assert plan.count("ArrowEvalPython") == 2, plan
+            assert python_nodes(df) == {"ArrowEvalPython": 2}, plan
             assert "pythonUDF0" in plan and "pythonUDF1" not in plan, plan
         else:
-            python_nodes = ("EvalPython", "InPandas", "InArrow")
-            assert not any(k in plan for k in python_nodes), (name, plan)
+            assert not python_nodes(df), (name, plan)
     nodes = spark.createDataFrame(
         [(i, COELLO.x0 + 3000.0 * i, COELLO.y0 - 2500.0 * i, float(i)) for i in range(20)],
         "node_id long, x double, y double, data double",

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import python_nodes
 from pyramids_spark import synth
 from pyramids_spark.operators import pip
 from pyramids_spark.operators.zonal import salted_agg
@@ -65,7 +66,7 @@ def test_pip_join_udf_path_under_extreme_skew(spark):
                   [0.0, 2.0], [-2.0, 2.0]])
     zones = synth.zone_polygons(4, "hull") + [{"zone_id": 50, "parts": [L]}]
     hits = pip.pip_join(pts, zones, zoom=6)
-    assert "ArrowEvalPython" in hits._jdf.queryExecution().executedPlan().toString()
+    assert python_nodes(hits)["ArrowEvalPython"] == 1
     xy = pts.select("x", "y").toPandas()
     exp = sum(
         int(cells.points_in_polygon(xy.x.to_numpy(), xy.y.to_numpy(), z["parts"][0]).sum())

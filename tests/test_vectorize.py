@@ -226,6 +226,25 @@ def test_footprint_covers_domain(spark):
     assert (out.value == 2.0).all()
 
 
+def test_nan_cells_are_nodata_holes(spark):
+    """NaN cells are nodata, like null ones: polygonize gives them no row
+    (a NaN value matches no per-value mask, so its label was read from
+    uninitialized memory), and polygonize_rings and footprint turn three
+    4-adjacent NaN cells into one hole of the surrounding region."""
+    g = Grid(x0=0.0, y0=4.0, cell=1.0, rows=4, cols=4)
+    nan = "(row = 1 AND col IN (1, 2)) OR (row = 2 AND col = 1)"
+    df = grid_df(spark, g, f"CASE WHEN {nan} THEN CAST('NaN' AS DOUBLE) ELSE 1.0D END")
+    assert df.where("isnan(value)").count() == 3
+    comp = vectorize.polygonize(df, g, tile=2).toPandas()
+    assert len(comp) == 13 and (comp.value == 1.0).all() and (comp.label == 0).all()
+    for name, out in (("rings", vectorize.polygonize_rings(df, g, tile=2)),
+                      ("footprint", vectorize.footprint(df, g, tile=2))):
+        out = out.toPandas()
+        assert len(out) == 1 and out.n_cells.iloc[0] == 13, name
+        ext, hole = _parse_wkt_rings(out.wkt.iloc[0])
+        assert (_shoelace(ext), _shoelace(hole)) == (16.0, 3.0), name
+
+
 def test_cluster_merge_never_touches_driver(spark, monkeypatch):
     """VERDICT r1 #1: the cross-tile merge must be fully distributed — no
     toPandas/collect of cell or border data anywhere in cluster/polygonize.
