@@ -106,14 +106,16 @@ def _real_edges(xs_l: list, ys_l: list) -> np.ndarray:
 def _cover_parts(zid: np.ndarray, pk: np.ndarray, xs_l: list, ys_l: list,
                  zoom: int, mode: str) -> pd.DataFrame:
     """The one cover step: ring parts (ids + vertex arrays) → rows
-    ``(zone_id, part_key, cell_id, boundary, convex)``, one
+    ``(zone_id, part_key, cell_id, boundary, convex, flat_k)``, one
     :func:`cells.polygon_cover` call per padded ring bucket. ``convex`` =
     ccw-convex with at most ``_MAX_EDGE_COLS`` real edges — the parts the
-    flat half-plane refine handles. Parts with fewer than 3 distinct
+    flat half-plane refine handles; ``flat_k`` = the real edge count of a
+    convex part, 0 otherwise. Parts with fewer than 3 distinct
     vertices (empty rings included) have no area and get no cover — the
     ray-cast refine could not even take a 1-vertex part."""
     lens = np.fromiter((len(a) for a in xs_l), np.int64, len(xs_l))
-    flat_ok = _real_edges(xs_l, ys_l) <= _MAX_EDGE_COLS
+    edges = _real_edges(xs_l, ys_l)
+    flat_ok = edges <= _MAX_EDGE_COLS
     out = []
     for sel, X, Y in cells.ring_batches(xs_l, ys_l):
         z = np.sort(X + 1j * Y, axis=1)  # the pad repeats a vertex: no new one
@@ -127,11 +129,13 @@ def _cover_parts(zid: np.ndarray, pk: np.ndarray, xs_l: list, ys_l: list,
         out.append(pd.DataFrame({
             "zone_id": zid[sel][prow], "part_key": pk[sel][prow],
             "cell_id": cell_id, "boundary": boundary, "convex": convex[prow],
+            "flat_k": np.where(convex, edges[sel], 0)[prow],
         }))
     if not out:
         return pd.DataFrame({
             c: pd.Series(dtype=bool if c in ("boundary", "convex") else np.int64)
-            for c in ("zone_id", "part_key", "cell_id", "boundary", "convex")
+            for c in ("zone_id", "part_key", "cell_id", "boundary", "convex",
+                      "flat_k")
         })
     return pd.concat(out, ignore_index=True)
 
@@ -174,6 +178,12 @@ def zone_cover_df(rings: DataFrame, zoom: int, mode: str = "intersects") -> Data
     onto the per-cell rows (a 10^5-vertex coastline × 10^4 covering cells
     would explode the cover by V×); refinement re-joins the ring table by
     (zone_id, part_key) on boundary candidates of non-convex parts only."""
+    return _cover_df(rings, zoom, mode, _COVER_SCHEMA)
+
+
+def _cover_df(rings: DataFrame, zoom: int, mode: str, schema: str) -> DataFrame:
+    """:func:`zone_cover_df` with the cover columns named by ``schema``."""
+    cols = [c.split()[0] for c in schema.split(", ")]
 
     def gen(batches):
         for pdf in batches:
@@ -183,9 +193,9 @@ def zone_cover_df(rings: DataFrame, zoom: int, mode: str = "intersects") -> Data
                 pdf["xs"].to_list(), pdf["ys"].to_list(), zoom, mode,
             )
             if len(cov):
-                yield cov
+                yield cov[cols]
 
-    return rings.select("zone_id", "part_key", "xs", "ys").mapInPandas(gen, _COVER_SCHEMA)
+    return rings.select("zone_id", "part_key", "xs", "ys").mapInPandas(gen, schema)
 
 
 def with_cell_id(points: DataFrame, zoom: int, x: str = "x", y: str = "y") -> DataFrame:
@@ -308,9 +318,7 @@ def _list_sides(spark, zones: list[dict], zoom: int) -> tuple:
     zid, xs, ys = _zone_parts(zones)
     pk = np.arange(len(zid), dtype=np.int64)
     cov = _cover_parts(zid, pk, xs, ys, zoom, "intersects")
-    flat = np.zeros(len(zid), dtype=bool)
-    flat[cov["part_key"][cov["convex"]].to_numpy()] = True
-    K = int(_real_edges(xs, ys)[flat].max(initial=0))
+    K = int(cov["flat_k"].max()) if len(cov) else 0
     rings = spark.createDataFrame(
         pd.DataFrame({"zone_id": zid, "part_key": pk,
                       "xs": [a.tolist() for a in xs], "ys": [a.tolist() for a in ys]}),
@@ -318,7 +326,7 @@ def _list_sides(spark, zones: list[dict], zoom: int) -> tuple:
     )
     hard = bool((cov["boundary"] & ~cov["convex"]).any())
     sides = (
-        F.broadcast(spark.createDataFrame(cov, _COVER_SCHEMA)),
+        F.broadcast(spark.createDataFrame(cov.drop(columns="flat_k"), _COVER_SCHEMA)),
         F.broadcast(_edge_coefs(rings, K)),
         K,
         F.broadcast(rings) if hard else None,
@@ -380,14 +388,16 @@ def pip_join_df(
        genuinely small cover at runtime; for repeated joins bucket both
        tables by ``cell_id``);
     4. refine: interior and convex-boundary candidates take the flat
-       half-plane test over ``_MAX_EDGE_COLS`` coefficient columns built
-       from the ring table; boundary candidates of other parts re-join the
-       ring table and ray-cast, batched by part inside each Arrow batch.
+       half-plane test over K coefficient quadruples built from the ring
+       table, K the largest real edge count of a convex part (at most
+       ``_MAX_EDGE_COLS``), as in :func:`pip_join`; boundary candidates
+       of other parts re-join the ring table and ray-cast, batched by
+       part inside each Arrow batch.
 
     Building the DataFrame runs exactly one Spark job: the cover
     checkpoint. That job also picks the plan: an ``Observation`` on the
-    cover reports whether any non-convex part has a boundary cell, and
-    when none does (an all-convex table, or an empty cover) the ray-cast
+    cover reports K and whether any non-convex part has a boundary cell,
+    and when none does (an all-convex table, or an empty cover) the ray-cast
     branch is left out, as :func:`pip_join` does — no Python node, one
     scan of the point side.
 
@@ -402,13 +412,15 @@ def pip_join_df(
     )
     obs = Observation()
     cover = (
-        zone_cover_df(rings, zoom, "intersects")
-        .observe(obs, F.max(F.col("boundary") & ~F.col("convex")).alias("hard"))
+        _cover_df(rings, zoom, "intersects", _COVER_SCHEMA + ", flat_k long")
+        .observe(obs, F.max(F.col("boundary") & ~F.col("convex")).alias("hard"),
+                 F.max("flat_k").alias("k"))
+        .drop("flat_k")
         .localCheckpoint()
     )
-    coefs = _edge_coefs(rings, _MAX_EDGE_COLS)
-    hard = rings if obs.get["hard"] else None  # null when the cover is empty
-    return _pip_core(points, zoom, x, y, cover, coefs, _MAX_EDGE_COLS, hard)
+    K = int(obs.get["k"] or 0)  # both null when the cover is empty
+    hard = rings if obs.get["hard"] else None
+    return _pip_core(points, zoom, x, y, cover, _edge_coefs(rings, K), K, hard)
 
 
 def salt_col(n_salt: int = 16, row_source: F.Column | None = None) -> F.Column:

@@ -48,7 +48,7 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import _blocks, blosc as _bl, dtypes as _dt, keys
@@ -341,64 +341,66 @@ def write_zarr(
     )
     os.makedirs(path, exist_ok=True)
     _clear_array_store(path)
-    n_bands_row = cells_df.select(F.max("band").alias("m")).collect()[0]
-    n_bands = int(n_bands_row["m"]) + 1 if n_bands_row["m"] is not None else 1
-    fill_json = (
-        "NaN" if math.isnan(fill)
-        else (fill if _dt.is_float(dt_name) else int(fill))
-    )
-    attrs = {"x0": grid.x0, "y0": grid.y0, "cell": grid.cell,
-             "epsg": grid.epsg, "nodata": grid.nodata}
-    if zarr_format == 2:
-        meta = {
-            "zarr_format": 2,
-            "shape": [n_bands, rows, cols],
-            "chunks": [1, ch, cw],
-            "dtype": _dt.TO_ZARR[dt_name],
-            "compressor": comp_meta,
-            "fill_value": fill_json,
-            "order": "C",
-            "filters": None,
-        }
-        with open(os.path.join(path, ".zarray"), "w") as f:
-            json.dump(meta, f)
-        with open(os.path.join(path, ".zattrs"), "w") as f:
-            json.dump(attrs, f)
-    else:
-        codecs = [{"name": "bytes", "configuration": {"endian": "little"}}]
-        if comp_meta is not None:
-            codecs.append(comp_meta)
-        if shards is not None:
-            codecs = [{
-                "name": "sharding_indexed",
-                "configuration": {
-                    "chunk_shape": [1, ch, cw],
-                    "codecs": codecs,
-                    "index_codecs": [
-                        {"name": "bytes",
-                         "configuration": {"endian": "little"}},
-                        {"name": "crc32c"},
-                    ],
-                    "index_location": "end",
-                },
-            }]
-        grid_chunk = [1, ch, cw] if shards is None else [1, sh, sw]
-        meta = {
-            "zarr_format": 3,
-            "node_type": "array",
-            "shape": [n_bands, rows, cols],
-            "data_type": dt_name,
-            "chunk_grid": {"name": "regular",
-                           "configuration": {"chunk_shape": grid_chunk}},
-            "chunk_key_encoding": {"name": "default",
-                                   "configuration": {"separator": "/"}},
-            "fill_value": fill_json,
-            "codecs": codecs,
-            "attributes": attrs,
-            "dimension_names": ["band", "y", "x"],
-        }
-        with open(os.path.join(path, "zarr.json"), "w") as f:
-            json.dump(meta, f)
+
+    def write_meta(n_bands: int) -> None:
+        """The array document, written once the encode job has observed
+        the band count."""
+        fill_json = (
+            "NaN" if math.isnan(fill)
+            else (fill if _dt.is_float(dt_name) else int(fill))
+        )
+        attrs = {"x0": grid.x0, "y0": grid.y0, "cell": grid.cell,
+                 "epsg": grid.epsg, "nodata": grid.nodata}
+        if zarr_format == 2:
+            meta = {
+                "zarr_format": 2,
+                "shape": [n_bands, rows, cols],
+                "chunks": [1, ch, cw],
+                "dtype": _dt.TO_ZARR[dt_name],
+                "compressor": comp_meta,
+                "fill_value": fill_json,
+                "order": "C",
+                "filters": None,
+            }
+            with open(os.path.join(path, ".zarray"), "w") as f:
+                json.dump(meta, f)
+            with open(os.path.join(path, ".zattrs"), "w") as f:
+                json.dump(attrs, f)
+        else:
+            codecs = [{"name": "bytes", "configuration": {"endian": "little"}}]
+            if comp_meta is not None:
+                codecs.append(comp_meta)
+            if shards is not None:
+                codecs = [{
+                    "name": "sharding_indexed",
+                    "configuration": {
+                        "chunk_shape": [1, ch, cw],
+                        "codecs": codecs,
+                        "index_codecs": [
+                            {"name": "bytes",
+                             "configuration": {"endian": "little"}},
+                            {"name": "crc32c"},
+                        ],
+                        "index_location": "end",
+                    },
+                }]
+            grid_chunk = [1, ch, cw] if shards is None else [1, sh, sw]
+            meta = {
+                "zarr_format": 3,
+                "node_type": "array",
+                "shape": [n_bands, rows, cols],
+                "data_type": dt_name,
+                "chunk_grid": {"name": "regular",
+                               "configuration": {"chunk_shape": grid_chunk}},
+                "chunk_key_encoding": {"name": "default",
+                                       "configuration": {"separator": "/"}},
+                "fill_value": fill_json,
+                "codecs": codecs,
+                "attributes": attrs,
+                "dimension_names": ["band", "y", "x"],
+            }
+            with open(os.path.join(path, "zarr.json"), "w") as f:
+                json.dump(meta, f)
 
     def _unpack(pdf: pd.DataFrame) -> pd.DataFrame:
         rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy(np.int64))
@@ -464,7 +466,11 @@ def write_zarr(
     # packed shuffle keys (guide §2.3, keys.py): the cell key rc and the
     # dense chunk/shard key cid replace four longs; the write tasks decode
     # rc exactly and fail loudly on a cell outside the grid
-    keyed = cells_df.where(F.col("value").isNotNull()).select(
+    # the band count rides on the encode job: observed before the null
+    # filter, so a band whose every cell is null is still declared
+    obs = Observation()
+    keyed = cells_df.observe(obs, F.max("band").alias("m")).where(
+        F.col("value").isNotNull()).select(
         "band",
         keys.pack_rc("row", "col").alias("rc"),
         "value",
@@ -481,6 +487,8 @@ def write_zarr(
         .sort_values(["band", "ci", "cj"])
         .reset_index(drop=True)
     )
+    m = obs.get["m"]
+    write_meta(int(m) + 1 if m is not None else 1)
     return manifest
 
 
@@ -1140,13 +1148,17 @@ def write_zarr_dataset(
 
     def patch_dims(sub: str) -> None:
         """Rename the per-variable array's dims from write_zarr's
-        band/y/x to the dataset dims (2-D drops the leading axis)."""
+        band/y/x to the dataset dims (2-D drops the leading axis) and
+        declare len(times) records, whatever records the variable's own
+        rows hold."""
         if zarr_format == 3:
             mp = os.path.join(sub, "zarr.json")
             with open(mp) as f:
                 m = json.load(f)
             m["dimension_names"] = dims
-            if not three_d:
+            if three_d:
+                m["shape"][0] = len(times)
+            else:
                 m["shape"] = m["shape"][1:]
                 cfg = m["chunk_grid"]["configuration"]
                 cfg["chunk_shape"] = cfg["chunk_shape"][1:]
@@ -1157,7 +1169,9 @@ def write_zarr_dataset(
             mp = os.path.join(sub, ".zarray")
             with open(mp) as f:
                 m = json.load(f)
-            if not three_d:
+            if three_d:
+                m["shape"][0] = len(times)
+            else:
                 m["shape"] = m["shape"][1:]
                 m["chunks"] = m["chunks"][1:]
             with open(mp, "w") as f:

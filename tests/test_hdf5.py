@@ -959,3 +959,21 @@ def test_hdf5_fractal_heap_guards(tmp_path):
             get(bytes([0x00]) + struct.pack("<IH", 500, 40) + b"\x00")
     finally:
         h5.fh.close()
+
+
+def test_netcdf4_declares_all_null_variable(spark, tmp_path):
+    """write_netcdf4(variables=None) declares a variable whose every cell
+    is null, as a variable with no chunks."""
+    from pyspark.sql import functions as F
+
+    df, _ = _cells(spark)
+    cells = df.withColumn("value", F.when(F.col("variable") == "precip",
+                                          F.col("value")))
+    p = str(tmp_path / "n.nc")
+    man = hdf5.write_netcdf4(cells, G, p, times=[10.0, 20.0, 30.0],
+                             chunk=(4, 4))
+    assert set(man["variable"]) == {"precip"}
+    back, _, meta = hdf5.read_netcdf4(spark, p)
+    assert sorted(meta["vars"]) == ["precip", "temp"]
+    assert {r.variable for r in back.select("variable").distinct()
+            .collect()} == {"precip"}

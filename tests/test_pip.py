@@ -475,3 +475,25 @@ def test_table_open_lists_partitions_on_the_driver(spark, tmp_path, build_jobs):
         return pip.pip_join(docs.select("x", "y"), zones, zoom=7)
 
     assert build_jobs(flagship, "open-flagship") == 1
+
+
+def test_pip_join_df_sizes_edge_columns_to_its_convex_parts(spark, build_jobs):
+    """pip_join_df builds K coefficient quadruples, K the largest real edge
+    count of a convex part, observed in the cover checkpoint job: hexagon
+    faces give e0…e5 and no e6, with one build job. A concave 20-edge part
+    does not raise K. Pairs equal pip_join on both tables."""
+    pts = synth.doc_points(spark, 3000, hot_frac=0.5)
+    hexes = synth.zone_polygons(6, "hex", seed=11)
+    a = np.arange(20) * np.pi / 10
+    r = np.where(np.arange(20) % 2 == 0, 0.45, 0.2)
+    star = np.stack([r * np.cos(a), r * np.sin(a)], axis=1)
+    for zones in (hexes, hexes + [{"zone_id": 60, "parts": [star]}]):
+        zdf = _zones_as_df(spark, zones)
+        built = {}
+        assert build_jobs(lambda: built.setdefault("df", pip.pip_join_df(pts, zdf, zoom=7)),
+                          f"edge-k-{len(zones)}") == 1
+        df = built["df"]
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "e5_xa" in plan and "e6_xa" not in plan, len(zones)
+        exp = _pairs(pip.pip_join(pts, zones, zoom=7))
+        assert _pairs(df) == exp and len(exp) > 0, len(zones)

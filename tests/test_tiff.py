@@ -1235,3 +1235,30 @@ def test_geotiff_parallel_staged_guards(spark, tmp_path):
     with pytest.raises(Exception, match="outside grid extent"):
         SparkDataset(bad, g).to_cog(p, levels=(), tile=(4, 4))
     assert not os.path.exists(p + "._tiles")
+
+
+def test_cog_declares_all_null_bands_and_one_band_when_empty(spark, tmp_path):
+    """to_cog declares a band whose every cell is null (two bands of
+    IFDs, two levels each) and one band for an empty input."""
+    from pyramids_spark import tiff as T
+
+    g = Grid(x0=0.0, y0=8.0, cell=1.0, rows=8, cols=8, epsg=4326,
+             nodata=-9999.0)
+    nullband = grid_df(spark, g, bands=2).select(
+        "band", "row", "col",
+        F.when(F.col("band") == 0, F.col("value")).alias("value"))
+    empty = spark.createDataFrame(
+        [], "band long, row long, col long, value double")
+    for name, df, bands in (("nullband", nullband, 2), ("empty", empty, 1)):
+        p = str(tmp_path / f"{name}.tif")
+        SparkDataset(df, g).to_cog(p, levels=(2,), tile=(4, 4))
+        assert len(T._read_ifds(p)) == 2 * bands, name
+
+
+def test_to_cog_job_audit(spark, tmp_path, build_jobs):
+    """to_cog runs its band-count probe, the encode of every level and the
+    placement job."""
+    src = grid_df(spark, COELLO, bands=2)
+    p = str(tmp_path / "c.tif")
+    assert build_jobs(lambda: SparkDataset(src, COELLO).to_cog(
+        p, levels=(2,), tile=(4, 4)), "to-cog") == 6

@@ -555,3 +555,130 @@ def test_cog_parts_keep_cells_past_row_2_21(spark, tmp_path):
     back, _, _ = tiff.read_geotiff_parts(spark, str(tmp_path / "p"))
     got = [(r.band, r.row, r.col, r.value) for r in back.collect()]
     assert got == [(0, (1 << 21) + 1, 1, 7.0)]
+
+
+_G8 = Grid(x0=0.0, y0=8.0, cell=1.0, rows=8, cols=8, epsg=4326, nodata=-9999.0)
+
+
+def _null_band_cells(spark):
+    """Two bands of the 8×8 grid; every cell of band 1 is null."""
+    return grid_df(spark, _G8, bands=2).select(
+        "band", "row", "col",
+        F.when(F.col("band") == 0, F.col("value")).alias("value"))
+
+
+def test_declared_shape_keeps_all_null_bands_and_variables(spark, tmp_path):
+    """A band or variable whose every cell is null is still declared:
+    write_zarr keeps shape [2, …] for an all-null band 1 (v2 and v3
+    sharded) and declares one band for an empty input;
+    write_zarr_dataset(variables=None) declares an all-null variable."""
+    from pyramids_spark import zarr as Z
+
+    empty = spark.createDataFrame(
+        [], "band long, row long, col long, value double")
+    for name, df, bands in (("nullband", _null_band_cells(spark), 2),
+                            ("empty", empty, 1)):
+        for doc, kw in ((".zarray", {}),
+                        ("zarr.json", dict(zarr_format=3, shards=(8, 8)))):
+            p = str(tmp_path / f"{name}{len(kw)}")
+            Z.write_zarr(df, _G8, p, chunks=(4, 4), **kw)
+            meta = json.load(open(os.path.join(p, doc)))
+            assert meta["shape"] == [bands, 8, 8], (name, doc)
+    cells = _null_band_cells(spark).select(
+        F.when(F.col("band") == 0, "a").otherwise("b").alias("variable"),
+        F.lit(0).cast("long").alias("t"), "row", "col", "value")
+    for zf in (2, 3):
+        p = str(tmp_path / f"ds{zf}")
+        Z.write_zarr_dataset(cells, _G8, p, times=[0.0], chunks=(4, 4),
+                             zarr_format=zf)
+        assert Z.list_zarr_arrays(p) == ["a", "b", "time", "x", "y"]
+        _, _, meta = Z.read_zarr_dataset(spark, p)
+        assert meta["variables"] == ["a", "b"]
+
+
+def test_zarr_dataset_declares_time_length_from_times(spark, tmp_path):
+    """Every 3-D variable is declared with len(times) records, whatever
+    records its own rows hold: variable a has rows only at t=0 and b only
+    at t=2, and both get shape [3, 8, 8]."""
+    from pyramids_spark import zarr as Z
+
+    base = grid_df(spark, _G8)
+    cells = base.select(F.lit("a").alias("variable"),
+                        F.lit(0).cast("long").alias("t"), "row", "col",
+                        "value").unionByName(
+        base.select(F.lit("b").alias("variable"),
+                    F.lit(2).cast("long").alias("t"), "row", "col", "value"))
+    for zf, doc in ((2, ".zarray"), (3, "zarr.json")):
+        p = str(tmp_path / f"t{zf}")
+        Z.write_zarr_dataset(cells, _G8, p, times=[0.0, 1.0, 2.0],
+                             chunks=(4, 4), zarr_format=zf)
+        for v in ("a", "b"):
+            meta = json.load(open(os.path.join(p, v, doc)))
+            assert meta["shape"] == [3, 8, 8], (zf, v)
+        back, _, meta = Z.read_zarr_dataset(spark, p)
+        assert meta["dims"]["time"] == 3 and meta["numrecs"] == 3
+        got = {(r.variable, r.t) for r in back.select("variable", "t")
+               .distinct().collect()}
+        assert got == {("a", 0), ("b", 2)}
+
+
+def _chunk_files(store: str) -> dict:
+    """Chunk payloads of an array store by relative path (metadata
+    documents excluded)."""
+    out = {}
+    for d, _, files in os.walk(store):
+        for f_ in files:
+            if f_ not in (".zarray", ".zattrs", "zarr.json"):
+                p = os.path.join(d, f_)
+                out[os.path.relpath(p, store)] = open(p, "rb").read()
+    return out
+
+
+def test_zarr_dataset_chunks_equal_write_zarr_chunks(spark, tmp_path):
+    """Each write_zarr_dataset variable's chunk files are byte-equal to
+    write_zarr's for the same cells (t as the band), v2 and v3. zstd, not
+    the v3 default gzip: a gzip stream stamps its write time."""
+    from pyramids_spark import zarr as Z
+
+    base = grid_df(spark, COELLO)
+    cells = base.select(F.lit("p").alias("variable"),
+                        F.lit(0).cast("long").alias("t"), "row", "col",
+                        "value").unionByName(
+        base.select(F.lit("q").alias("variable"),
+                    F.lit(1).cast("long").alias("t"), "row", "col",
+                    (F.col("value") * 3).alias("value")))
+    for zf in (2, 3):
+        ds = str(tmp_path / f"ds{zf}")
+        Z.write_zarr_dataset(cells, COELLO, ds, times=[0.0, 1.0],
+                             chunks=(5, 4), compress=3, zarr_format=zf,
+                             codec="zstd")
+        for v in ("p", "q"):
+            one = str(tmp_path / f"{v}{zf}")
+            Z.write_zarr(cells.where(F.col("variable") == v).select(
+                F.col("t").alias("band"), "row", "col", "value"),
+                COELLO, one, chunks=(5, 4), compress=3, zarr_format=zf,
+                codec="zstd")
+            want = _chunk_files(one)
+            assert want and _chunk_files(os.path.join(ds, v)) == want, (zf, v)
+
+
+def test_zarr_write_job_audit(spark, tmp_path, build_jobs):
+    """write_zarr runs the jobs of one encode, which also observes the
+    band count (unsharded and sharded alike); write_zarr_dataset with two
+    variables runs its variable listing and one write_zarr per
+    variable."""
+    from pyramids_spark import zarr as Z
+
+    cells = _null_band_cells(spark)
+    p = str(tmp_path / "z")
+    assert build_jobs(lambda: Z.write_zarr(cells, _G8, p, chunks=(4, 4)),
+                      "zarr-plain") == 2
+    assert build_jobs(lambda: Z.write_zarr(
+        cells, _G8, p, chunks=(4, 4), zarr_format=3, shards=(8, 8)),
+        "zarr-sharded") == 2
+    ds = cells.select(
+        F.when(F.col("band") == 0, "a").otherwise("b").alias("variable"),
+        F.lit(0).cast("long").alias("t"), "row", "col", "value")
+    assert build_jobs(lambda: Z.write_zarr_dataset(
+        ds, _G8, str(tmp_path / "ds"), times=[0.0], chunks=(4, 4),
+        zarr_format=3), "zarr-dataset") == 6
