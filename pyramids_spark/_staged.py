@@ -1,12 +1,13 @@
-"""Shared plumbing for the single-file sinks (netCDF-4 in ``hdf5.py``,
-GeoTIFF in ``tiff.py``), which both write through one tail: encode and
-stage each chunk or tile in the executors, collect the ``(key, nbytes)``
-manifest, lay the file out on the driver, then place the staged bytes.
-This module holds the two executor-side steps: atomic staging of one
-encoded chunk/tile, and the one-job distributed ``pwrite`` copy of the
-staged bytes into the laid-out target. One implementation so a
-robustness fix (full-write loop, retry atomicity) cannot diverge
-between the containers.
+"""Shared plumbing for the chunked raster sinks (zarr in ``zarr.py``,
+netCDF-4 in ``hdf5.py``, GeoTIFF and COG parts in ``tiff.py``). Each
+builds its output from ONE encode job (:func:`encode`), which also
+observes the declared shape (band count, variable set); the driver lays
+the metadata out from the returned manifest. The single-file sinks
+(netCDF-4, GeoTIFF) stage each encoded chunk/tile (:func:`write_staged`)
+and place the staged bytes with one distributed ``pwrite`` job
+(:func:`copy_staged`). One implementation so a robustness fix
+(full-write loop, retry atomicity) cannot diverge between the
+containers.
 
 Filesystem model (same as every pwrite sink here): the target path and
 the scratch directory must be reachable from all executors — local fs
@@ -16,7 +17,29 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+
+def encode(
+    cells: DataFrame, key, by: "list[str]", fn, schema: str,
+    observe: "dict[str, Column] | None" = None,
+) -> "tuple[pd.DataFrame, dict]":
+    """The one encode job of a sink: ``observe`` (name → aggregate) rides
+    on ``cells`` BEFORE the ``value IS NOT NULL`` filter, so a band or
+    variable whose every cell is null is still declared; ``key`` maps the
+    non-null cells to the keyed table, and ``fn`` encodes each ``by``
+    group into ``schema`` manifest rows. Returns ``(manifest as pandas,
+    observed values)``. No sort after the UDF: a range sort's sampler
+    would run every encode twice — the manifest is metadata scale, the
+    caller orders it."""
+    obs = Observation()
+    if observe:
+        cells = cells.observe(obs, *(c.alias(n) for n, c in observe.items()))
+    man = key(cells.where(F.col("value").isNotNull())).groupBy(*by) \
+        .applyInPandas(fn, schema).toPandas()
+    return man, (obs.get if observe else {})
 
 
 def write_staged(fn: str, data: bytes) -> None:

@@ -144,16 +144,14 @@ class SparkDataset:
         ``base/_utils.py:16-56``). Tiles encode and stage distributed, the
         driver lays out the header and offset arrays from the tile-size
         manifest, and one distributed job ``pwrite``\\ s the tiles into
-        the one output file (``tiff.write_geotiff``). Returns bytes
-        written."""
+        the one output file (``tiff.write_geotiff``); the band count rides
+        on the encode job, so no probe scan runs. Returns bytes written."""
         from dataclasses import replace as _replace
 
         from . import tiff as _tiff
 
         from . import dtypes as _dtypes
 
-        m = self.df.select(F.max("band").alias("m")).collect()[0]["m"]
-        n_bands = int(m) + 1 if m is not None else 1
         per = [(self.df, self.grid)]
         for lv in levels:
             ov = _raster.overview_rollup(self.df, level=lv, stat="avg").select(
@@ -172,7 +170,7 @@ class SparkDataset:
             )
             per.append((ov, g))
         return _tiff.write_geotiff(
-            per, n_bands, path, tile, compress, dtype, bigtiff, predictor,
+            per, path, tile, compress, dtype, bigtiff, predictor,
         )
 
     def to_cog_parts(
@@ -1125,8 +1123,9 @@ class SparkNetCDF:
     ):
         """Write this surface as a CF/xarray-style zarr GROUP — one
         ``(time, y, x)`` array per variable plus coordinate arrays
-        (``pyramids_spark.zarr.write_zarr_dataset``); per-variable chunk
-        jobs run distributed. Returns the chunk manifest (lineage)."""
+        (``pyramids_spark.zarr.write_zarr_dataset``); one distributed
+        encode job writes every variable's chunks and observes the
+        variable set. Returns the chunk manifest (lineage)."""
         from . import zarr as _zarr
 
         return _zarr.write_zarr_dataset(

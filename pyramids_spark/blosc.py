@@ -88,8 +88,9 @@ def raw_compress(name: str, buf: bytes, level: "int | None" = None) -> bytes:
     if name == "gzip":
         import gzip
 
+        # mtime=0: the header's time stamp would make every write differ
         return gzip.compress(
-            buf, compresslevel=6 if level is None else int(level)
+            buf, compresslevel=6 if level is None else int(level), mtime=0
         )
     if name == "blosclz":
         return blosclz_compress(buf)

@@ -146,10 +146,6 @@ def cell_id_sql(cx: str, cy: str, zoom: int) -> str:
     return f"((({cy}) << {zoom}) + ({cx}))"
 
 
-def cell_xy_np(h1: np.ndarray, h2: np.ndarray, zoom: int) -> tuple[np.ndarray, np.ndarray]:
-    return h1 >> (32 - zoom), h2 >> (32 - zoom)
-
-
 # ---------------------------------------------------------------------------
 # Geo-space cells (lon/lat doubles → grid) for engine-internal pruning
 # ---------------------------------------------------------------------------
@@ -190,19 +186,6 @@ def pack(cx, cy, zoom: int):
 
 def unpack(cell_id, zoom: int):
     return cell_id & ((1 << zoom) - 1), cell_id >> zoom
-
-
-def morton_np(cx: np.ndarray, cy: np.ndarray, zoom: int) -> np.ndarray:
-    """Z-order (Morton) interleave — the space-filling-curve shuffle key
-    (reference ``spatial_shuffle(by='morton')``, ``_lazy_collection.py:447``).
-    """
-    x = cx.astype(np.uint64)
-    y = cy.astype(np.uint64)
-    out = np.zeros_like(x)
-    for i in range(zoom):
-        out |= ((x >> np.uint64(i)) & np.uint64(1)) << np.uint64(2 * i)
-        out |= ((y >> np.uint64(i)) & np.uint64(1)) << np.uint64(2 * i + 1)
-    return out.astype(np.int64)
 
 
 def morton_col(cx: Column, cy: Column, zoom: int) -> Column:

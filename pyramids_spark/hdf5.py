@@ -788,11 +788,13 @@ def write_netcdf4(
     write takes the one tail in the module docstring (encode and stage
     distributed → ``(key, nbytes)`` manifest → driver layout →
     distributed ``pwrite``), and the data bytes never visit the driver.
-    Runs the variable listing job when ``variables`` is None, the encode
-    job and the placement job. Returns the chunk manifest (lineage):
-    ``variable, t, ci, cj, addr, nbytes`` in file order."""
-    keyed, encode_chunk, data_start, write_meta = _netcdf4_plan(
-        cells_df, grid, times, variables, dtype, compress, shuffle,
+    Runs the encode job, which observes the variable set when
+    ``variables`` is None (before the null filter, so an all-null
+    variable is still declared), and the placement job. Returns the
+    chunk manifest (lineage): ``variable, t, ci, cj, addr, nbytes`` in
+    file order."""
+    key_cells, encode_chunk, layout = _netcdf4_plan(
+        grid, times, variables, dtype, compress, shuffle,
         fletcher32, chunk, georef, btree_cap, index, fa_page_bits,
         ea_params, b2_node_size)
     scratch = path + "._chunks"
@@ -811,17 +813,20 @@ def write_netcdf4(
             {"variable": [v], "tk": [tk], "nbytes": [len(raw)]})
 
     try:
-        # no orderBy after the UDF: its range sampler would run every
-        # encode twice — the manifest is metadata scale, sort it here
-        man = keyed.groupBy("variable", "tk").applyInPandas(
-            stage, "variable string, tk long, nbytes long",
-        ).toPandas().sort_values(["variable", "tk"], ignore_index=True)
+        man, seen = _staged.encode(
+            cells_df, key_cells, ["variable", "tk"], stage,
+            "variable string, tk long, nbytes long",
+            None if variables is not None else
+            {"v": F.array_sort(F.collect_set("variable"))})
+        man = man.sort_values(["variable", "tk"], ignore_index=True)
+        data_start, write_meta = layout(
+            variables if variables is not None else seen["v"])
         nb = man["nbytes"].to_numpy(np.int64)
         man["addr"] = data_start + np.cumsum(nb) - nb
         with open(path, "wb") as fh:
             out = write_meta(fh, man)
         _staged.copy_staged(
-            keyed.sparkSession, path,
+            cells_df.sparkSession, path,
             [(chunk_file(v, tk), at, n) for v, tk, at, n in zip(
                 man["variable"], man["tk"].tolist(), man["addr"].tolist(),
                 nb.tolist())],
@@ -832,26 +837,28 @@ def write_netcdf4(
 
 
 def _netcdf4_plan(
-    cells_df: DataFrame, grid: Grid, times, variables, dtype: str,
-    compress, shuffle: bool, fletcher32: bool, chunk, georef: str,
-    btree_cap: int, index: str, fa_page_bits: int, ea_params,
-    b2_node_size: int,
+    grid: Grid, times, variables, dtype: str, compress, shuffle: bool,
+    fletcher32: bool, chunk, georef: str, btree_cap: int, index: str,
+    fa_page_bits: int, ea_params, b2_node_size: int,
 ):
-    """The set-up of :func:`write_netcdf4` (same arguments, no defaults):
-    validation, the front-matter renderer and its address map, the keyed
-    chunk table and the chunk encoder. Returns ``(keyed, encode_chunk,
-    data_start, write_meta)``:
+    """The set-up of :func:`write_netcdf4` (its arguments after the path,
+    no defaults): validation, the chunk key, the chunk encoder and the
+    front-matter layout. Returns ``(key, encode_chunk, layout)``:
 
-    - ``keyed``: ``(variable, tk, rc, value)`` — ``tk`` is the chunk key
-      ``t·n_tiles + tile_key`` (also the dense slot index), so ``(variable,
-      tk)`` order is the file's ``(variable, t, ci, cj)`` chunk order;
+    - ``key(cells)``: the non-null cells → ``(variable, tk, rc, value)``
+      — ``tk`` is the chunk key ``t·n_tiles + tile_key`` (also the dense
+      slot index), so ``(variable, tk)`` order is the file's ``(variable,
+      t, ci, cj)`` chunk order;
     - ``encode_chunk(key, pdf)``: the stored bytes of one ``(variable,
-      tk)`` group, behind the loud variable / ``t`` / extent guards;
-    - ``data_start``: the address of the first chunk;
-    - ``write_meta(fh, man)``: given the chunks' ``variable, tk, addr,
-      nbytes`` in file order, writes the superblock, the front matter and
-      the chunk indexes (after the data) and returns the lineage
-      manifest ``variable, t, ci, cj, addr, nbytes``."""
+      tk)`` group, behind the loud ``t`` / extent guards (and the
+      variable guard when ``variables`` is given);
+    - ``layout(variables)`` → ``(data_start, write_meta)``: the address of
+      the first chunk, and ``write_meta(fh, man)``, which, given the
+      chunks' ``variable, tk, addr, nbytes`` in file order, writes the
+      superblock, the front matter and the chunk indexes (after the data)
+      and returns the lineage manifest ``variable, t, ci, cj, addr,
+      nbytes``. It runs after the encode, which may observe the variable
+      set."""
     if index not in ("btree1", "fixed_array", "extensible", "btree2"):
         raise ValueError("index must be btree1, fixed_array, extensible "
                          f"or btree2, got {index}")
@@ -881,10 +888,6 @@ def _netcdf4_plan(
     three_d = times is not None
     ch, cw = min(chunk[0], rows), min(chunk[1], cols)
     flip_write = georef == "coords-ascending"
-    if variables is None:
-        variables = sorted(
-            r[0] for r in cells_df.select("variable").distinct().collect()
-        )
 
     cell = grid.cell
     xs = grid.x0 + cell / 2 + cell * np.arange(cols, dtype="<f8")
@@ -900,153 +903,26 @@ def _netcdf4_plan(
     if not three_d:
         dims = dims[1:]
     dim_names = [d[0] for d in dims]
-    names = sorted(dim_names + list(variables))
-
-    # ---- pass-independent structure --------------------------------------
-    heap_hdr0, heap_data, name_offs = _local_heap(names, 0)
-    snod_groups = [names[i:i + 2 * _LEAF_K]
-                   for i in range(0, len(names), 2 * _LEAF_K)]
-    n_gheap = len(variables) * len(dims)
-
-    def build(a: dict) -> "dict[str, bytes]":
-        """Render every front-region component against the address map
-        ``a`` (pass 1: zeros for sizing; pass 2: resolved)."""
-        out = {}
-        out["heap_hdr"], _, _ = _local_heap(names, a.get("heap_data", 0))
-        out["heap_data"] = heap_data
-        out["gbtree"] = _group_btree(
-            [a.get(f"snod{i}", 0) for i in range(len(snod_groups))],
-            [name_offs[g[-1]] for g in snod_groups],
-        )
-        for i, g in enumerate(snod_groups):
-            out[f"snod{i}"] = _snod(
-                [(name_offs[n], a.get(f"ohdr_{n}", 0)) for n in g]
-            )
-        gobjs = []
-        for v in variables:
-            for dn in dim_names:
-                gobjs.append(struct.pack("<Q", a.get(f"ohdr_{dn}", 0)))
-        out["gheap"], grefs = _gheap(gobjs, a.get("gheap", 0))
-        # root group header: symbol table + global attributes
-        gatts = [_str_attr("Conventions", "CF-1.6"),
-                 _str_attr("_NCProperties",
-                           "version=2,netcdf=pyramids-spark,hdf5=pure-numpy")]
-        if georef == "attrs":
-            gatts += [_scalar_attr("x0", grid.x0), _scalar_attr("y0", grid.y0),
-                      _scalar_attr("cell", grid.cell),
-                      _scalar_attr("epsg", int(grid.epsg))]
-            if grid.nodata is not None:
-                gatts.append(_scalar_attr("nodata", float(grid.nodata)))
-        out["ohdr_/"] = _ohdr_v1(
-            [_symtab_msg(a.get("gbtree", 0), a.get("heap_hdr", 0))] + gatts
-        )
-        fixed_dims = index == "fixed_array"  # this index needs fixed maxdims
-        for di, (dn, dsize, dvals, axes) in enumerate(dims):
-            out[f"coord_{dn}"] = dvals.tobytes()
-            maxd = ((UNDEF,) if (dn == "time" and three_d and not fixed_dims)
-                    else (dsize,))
-            msgs = [
-                _msg(0x0001, _ds_msg((dsize,), maxd)),
-                _msg(0x0003, _dt_float(8)),
-                _fill_msg(struct.pack("<d", float("nan")), False),
-                _layout_contig(a.get(f"coord_{dn}", 0), dsize * 8),
-                _str_attr("CLASS", "DIMENSION_SCALE"),
-                _str_attr("NAME", dn),
-                _scalar_attr("_Netcdf4Dimid", di),
-                _str_attr("axis", axes[0]),
-            ]
-            out[f"ohdr_{dn}"] = _ohdr_v1(msgs)
-        for vi, v in enumerate(variables):
-            shape = (nt, rows, cols) if three_d else (rows, cols)
-            maxd = ((UNDEF, rows, cols) if three_d and not fixed_dims
-                    else shape)
-            cdims = (1, ch, cw) if three_d else (ch, cw)
-            dl = b""
-            for k in range(len(dims)):
-                ga, gi = grefs[vi * len(dims) + k]
-                dl += struct.pack("<IQI", 1, ga, gi)
-            attr_msgs = [
-                _attr_msg("DIMENSION_LIST", _dt_vlen_ref(),
-                          _ds_msg((len(dims),)), dl),
-                _attr_msg("_FillValue", _dt_of(np_dt), _ds_msg(()),
-                          fill_bytes),
-            ]
-            head = [
-                _msg(0x0001, _ds_msg(shape, maxd)),
-                _msg(0x0003, _dt_of(np_dt)),
-                _fill_msg(fill_bytes, True),
-            ]
-            if shuffle or compress is not None or fletcher32 \
-                    or zstd_level is not None:
-                head.append(_filter_msg(
-                    esize if shuffle else 0, compress, fletcher32,
-                    zstd_level))
-            if fixed_dims:
-                head.append(_layout_chunked4(
-                    a.get(f"btree_{v}", UNDEF), cdims, esize, 3,
-                    info=bytes([fa_page_bits])))
-            elif index == "extensible":
-                mb, ie, me, mp, pb = ea_params or (32, 4, 16, 4, 10)
-                # layout-message param order: min POINTERS before min
-                # ELEMENTS (H5O__layout_decode) — EAHD stores the reverse
-                head.append(_layout_chunked4(
-                    a.get(f"btree_{v}", UNDEF), cdims, esize, 4,
-                    info=bytes([mb, ie, mp, me, pb])))
-            elif index == "btree2":
-                head.append(_layout_chunked4(
-                    a.get(f"btree_{v}", UNDEF), cdims, esize, 5,
-                    info=struct.pack("<IBB", b2_node_size, 100, 40)))
-            else:
-                head.append(_layout_chunked(
-                    a.get(f"btree_{v}", UNDEF), cdims, esize))
-            # attributes live in a CONTINUATION block — the layout real
-            # libhdf5 headers routinely use, so every read exercises it
-            cont = b"".join(attr_msgs)
-            head.append(_cont_msg(a.get(f"cont_{v}", 0), len(cont)))
-            # message COUNT covers both blocks; hdrsize covers block 0 only
-            pre = struct.pack(
-                "<BxHII4x", 1, len(head) + len(attr_msgs), 1,
-                sum(len(m) for m in head),
-            )
-            out[f"ohdr_{v}"] = pre + b"".join(head)
-            out[f"cont_{v}"] = cont
-        return out
-
-    comp0 = build({})
-    order = (["heap_hdr", "heap_data", "gbtree"]
-             + [f"snod{i}" for i in range(len(snod_groups))] + ["gheap"]
-             + [f"coord_{d}" for d in dim_names] + ["ohdr_/"]
-             + [x for v in dim_names for x in (f"ohdr_{v}",)]
-             + [x for v in variables for x in (f"ohdr_{v}", f"cont_{v}")])
-    addrs, pos = {}, 96
-    for k in order:
-        addrs[k] = pos
-        pos += _align8(len(comp0[k]))
-    addrs["heap_data"] = addrs["heap_hdr"] + 32  # data follows its header
-    data_start = _align8(pos)
-
     # ---- keyed chunk table ------------------------------------------------
-    # NULL cells are absent rows (nodata contract shared with the TIFF /
-    # zarr / classic-NetCDF sinks): they stay at the fill value instead of
-    # becoming NaN (float) or crashing the integer cast (int dtypes).
-    src = cells_df.where(F.col("value").isNotNull()).select(
-        "variable", "t", "row", "col", "value")
-    if flip_write:
-        src = src.withColumn("row", F.lit(rows - 1) - F.col("row"))
     # packed shuffle keys (guide §2.3 — shuffle fewer bytes, keys.py): the
     # chunk key tk = t·n_tiles + tile_key (also the dense slot index) and
     # the cell key rc replace five longs; rc decodes exactly, so the loud
     # extent guard sees what was encoded
     ny_k, nx_k = keys.n_tiles(rows, cols, ch, cw)
-    keyed = src.select(
-        "variable",
-        (F.col("t").cast("long") * (ny_k * nx_k)
-         + keys.tile_key("row", "col", ch, cw, nx_k)).alias("tk"),
-        keys.pack_rc("row", "col").alias("rc"),
-        "value",
-    )
+    row = F.lit(rows - 1) - F.col("row") if flip_write else F.col("row")
 
-    var_set = frozenset(variables)
+    def key(cells: DataFrame) -> DataFrame:
+        return cells.select(
+            "variable",
+            (F.col("t").cast("long") * (ny_k * nx_k)
+             + keys.tile_key(row, "col", ch, cw, nx_k)).alias("tk"),
+            keys.pack_rc(row, "col").alias("rc"),
+            "value",
+        )
+
+    var_set = None if variables is None else frozenset(variables)
+    filtered = bool(shuffle or compress is not None or fletcher32
+                    or zstd_level is not None)
 
     def encode_chunk(key: tuple, pdf: pd.DataFrame) -> bytes:
         v = str(key[0])
@@ -1057,7 +933,7 @@ def _netcdf4_plan(
         # would collapse distinct records onto duplicate chunk keys.
         msg = (f"cell outside file dimensions in {v!r}: t={t} "
                f"(nt={nt}), grid {rows}x{cols}")
-        if v not in var_set or not 0 <= t < nt:
+        if (var_set is not None and v not in var_set) or not 0 <= t < nt:
             raise ValueError(msg)
         rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy(np.int64))
         keys.check_extent(rr, cc, rows, cols, msg)
@@ -1077,80 +953,203 @@ def _netcdf4_plan(
             raw += struct.pack("<I", _fletcher32(raw))
         return raw
 
-    filtered = bool(shuffle or compress is not None or fletcher32
-                    or zstd_level is not None)
+    def layout(variables: "list[str]"):
+        names = sorted(dim_names + list(variables))
 
-    def write_meta(fh, man: pd.DataFrame) -> pd.DataFrame:
-        t, tid = np.divmod(man["tk"].to_numpy(np.int64), ny_k * nx_k)
-        ci, cj = np.divmod(tid, nx_k)
-        out = pd.DataFrame({"variable": man["variable"], "t": t, "ci": ci,
-                            "cj": cj, "addr": man["addr"],
-                            "nbytes": man["nbytes"]})
-        entries: "dict[str, list]" = {v: [] for v in variables}
-        for v, t_, ci_, cj_, at, nb in zip(
-                out["variable"], *(out[c].tolist() for c in
-                                   ("t", "ci", "cj", "addr", "nbytes"))):
-            offs = ((t_, ci_ * ch, cj_ * cw, 0) if three_d
-                    else (ci_ * ch, cj_ * cw, 0))
-            entries[v].append((offs, at, nb))
-        end = int(out["addr"].iloc[-1] + out["nbytes"].iloc[-1]) \
-            if len(out) else data_start
-        # ---- chunk indexes after the data, any of the four types ----------
-        max_offs = ((nt, ny_k * ch, nx_k * cw, 0) if three_d
-                    else (ny_k * ch, nx_k * cw, 0))
-        csize = ch * cw * esize
-        bblobs = []
-        pos = _align8(end)
-        for v in variables:
-            if not entries[v]:
-                addrs[f"btree_{v}"] = UNDEF
-                continue
-            if index in ("fixed_array", "extensible"):
-                slots = {}
-                for offs, at, nb in entries[v]:
-                    t0, r0, c0 = (offs[:3] if three_d
-                                  else (0,) + tuple(offs[:2]))
-                    # the same dense slot index as the shuffle key tk
-                    slots[t0 * ny_k * nx_k + int(keys.tile_key_np(
-                        r0, c0, ch, cw, nx_k))] = (at, nb, 0)
-                if index == "fixed_array":
-                    root, blob = _fixed_array_blob(
-                        slots, nt * ny_k * nx_k, csize, filtered, pos,
-                        page_bits=fa_page_bits)
-                else:
+        # ---- pass-independent structure ----------------------------------
+        _, heap_data, name_offs = _local_heap(names, 0)
+        snod_groups = [names[i:i + 2 * _LEAF_K]
+                       for i in range(0, len(names), 2 * _LEAF_K)]
+
+        def build(a: dict) -> "dict[str, bytes]":
+            """Render every front-region component against the address map
+            ``a`` (pass 1: zeros for sizing; pass 2: resolved)."""
+            out = {}
+            out["heap_hdr"], _, _ = _local_heap(names, a.get("heap_data", 0))
+            out["heap_data"] = heap_data
+            out["gbtree"] = _group_btree(
+                [a.get(f"snod{i}", 0) for i in range(len(snod_groups))],
+                [name_offs[g[-1]] for g in snod_groups],
+            )
+            for i, g in enumerate(snod_groups):
+                out[f"snod{i}"] = _snod(
+                    [(name_offs[n], a.get(f"ohdr_{n}", 0)) for n in g]
+                )
+            gobjs = []
+            for v in variables:
+                for dn in dim_names:
+                    gobjs.append(struct.pack("<Q", a.get(f"ohdr_{dn}", 0)))
+            out["gheap"], grefs = _gheap(gobjs, a.get("gheap", 0))
+            # root group header: symbol table + global attributes
+            gatts = [_str_attr("Conventions", "CF-1.6"),
+                     _str_attr("_NCProperties",
+                               "version=2,netcdf=pyramids-spark,hdf5=pure-numpy")]
+            if georef == "attrs":
+                gatts += [_scalar_attr("x0", grid.x0), _scalar_attr("y0", grid.y0),
+                          _scalar_attr("cell", grid.cell),
+                          _scalar_attr("epsg", int(grid.epsg))]
+                if grid.nodata is not None:
+                    gatts.append(_scalar_attr("nodata", float(grid.nodata)))
+            out["ohdr_/"] = _ohdr_v1(
+                [_symtab_msg(a.get("gbtree", 0), a.get("heap_hdr", 0))] + gatts
+            )
+            fixed_dims = index == "fixed_array"  # this index needs fixed maxdims
+            for di, (dn, dsize, dvals, axes) in enumerate(dims):
+                out[f"coord_{dn}"] = dvals.tobytes()
+                maxd = ((UNDEF,) if (dn == "time" and three_d and not fixed_dims)
+                        else (dsize,))
+                msgs = [
+                    _msg(0x0001, _ds_msg((dsize,), maxd)),
+                    _msg(0x0003, _dt_float(8)),
+                    _fill_msg(struct.pack("<d", float("nan")), False),
+                    _layout_contig(a.get(f"coord_{dn}", 0), dsize * 8),
+                    _str_attr("CLASS", "DIMENSION_SCALE"),
+                    _str_attr("NAME", dn),
+                    _scalar_attr("_Netcdf4Dimid", di),
+                    _str_attr("axis", axes[0]),
+                ]
+                out[f"ohdr_{dn}"] = _ohdr_v1(msgs)
+            for vi, v in enumerate(variables):
+                shape = (nt, rows, cols) if three_d else (rows, cols)
+                maxd = ((UNDEF, rows, cols) if three_d and not fixed_dims
+                        else shape)
+                cdims = (1, ch, cw) if three_d else (ch, cw)
+                dl = b""
+                for k in range(len(dims)):
+                    ga, gi = grefs[vi * len(dims) + k]
+                    dl += struct.pack("<IQI", 1, ga, gi)
+                attr_msgs = [
+                    _attr_msg("DIMENSION_LIST", _dt_vlen_ref(),
+                              _ds_msg((len(dims),)), dl),
+                    _attr_msg("_FillValue", _dt_of(np_dt), _ds_msg(()),
+                              fill_bytes),
+                ]
+                head = [
+                    _msg(0x0001, _ds_msg(shape, maxd)),
+                    _msg(0x0003, _dt_of(np_dt)),
+                    _fill_msg(fill_bytes, True),
+                ]
+                if filtered:
+                    head.append(_filter_msg(
+                        esize if shuffle else 0, compress, fletcher32,
+                        zstd_level))
+                if fixed_dims:
+                    head.append(_layout_chunked4(
+                        a.get(f"btree_{v}", UNDEF), cdims, esize, 3,
+                        info=bytes([fa_page_bits])))
+                elif index == "extensible":
                     mb, ie, me, mp, pb = ea_params or (32, 4, 16, 4, 10)
-                    root, blob = _extensible_array_blob(
-                        slots, nt * ny_k * nx_k, csize, filtered, pos,
-                        max_bits=mb, idx_elmts=ie, min_elmts=me,
-                        min_ptrs=mp, page_bits=pb)
-            elif index == "btree2":
-                recs = sorted(
-                    (((offs[0], offs[1] // ch, offs[2] // cw) if three_d
-                      else (offs[0] // ch, offs[1] // cw)), at, nb, 0)
-                    for offs, at, nb in entries[v])
-                root, blob = _btree2_blob(recs, csize, filtered, pos,
-                                          node_size=b2_node_size)
-            else:
-                root, blob = _chunk_btree(entries[v], max_offs, pos,
-                                          cap=btree_cap)
-            addrs[f"btree_{v}"] = root
-            bblobs.append((pos, blob))
-            pos += len(blob)
-        # ---- now every address is known: render + write front & indexes --
-        comp = build(addrs)
-        fh.seek(0)
-        fh.write(_superblock(pos, addrs["ohdr_/"], addrs["gbtree"],
-                             addrs["heap_hdr"]))
-        for k in order:
-            fh.seek(addrs[k])
-            fh.write(comp[k])
-        for at, blob in bblobs:
-            fh.seek(at)
-            fh.write(blob)
-        fh.truncate(pos)
-        return out
+                    # layout-message param order: min POINTERS before min
+                    # ELEMENTS (H5O__layout_decode) — EAHD stores the reverse
+                    head.append(_layout_chunked4(
+                        a.get(f"btree_{v}", UNDEF), cdims, esize, 4,
+                        info=bytes([mb, ie, mp, me, pb])))
+                elif index == "btree2":
+                    head.append(_layout_chunked4(
+                        a.get(f"btree_{v}", UNDEF), cdims, esize, 5,
+                        info=struct.pack("<IBB", b2_node_size, 100, 40)))
+                else:
+                    head.append(_layout_chunked(
+                        a.get(f"btree_{v}", UNDEF), cdims, esize))
+                # attributes live in a CONTINUATION block — the layout real
+                # libhdf5 headers routinely use, so every read exercises it
+                cont = b"".join(attr_msgs)
+                head.append(_cont_msg(a.get(f"cont_{v}", 0), len(cont)))
+                # message COUNT covers both blocks; hdrsize covers block 0 only
+                pre = struct.pack(
+                    "<BxHII4x", 1, len(head) + len(attr_msgs), 1,
+                    sum(len(m) for m in head),
+                )
+                out[f"ohdr_{v}"] = pre + b"".join(head)
+                out[f"cont_{v}"] = cont
+            return out
 
-    return keyed, encode_chunk, data_start, write_meta
+        comp0 = build({})
+        order = (["heap_hdr", "heap_data", "gbtree"]
+                 + [f"snod{i}" for i in range(len(snod_groups))] + ["gheap"]
+                 + [f"coord_{d}" for d in dim_names] + ["ohdr_/"]
+                 + [x for v in dim_names for x in (f"ohdr_{v}",)]
+                 + [x for v in variables for x in (f"ohdr_{v}", f"cont_{v}")])
+        addrs, pos = {}, 96
+        for k in order:
+            addrs[k] = pos
+            pos += _align8(len(comp0[k]))
+        addrs["heap_data"] = addrs["heap_hdr"] + 32  # data follows its header
+        data_start = _align8(pos)
+
+        def write_meta(fh, man: pd.DataFrame) -> pd.DataFrame:
+            t, tid = np.divmod(man["tk"].to_numpy(np.int64), ny_k * nx_k)
+            ci, cj = np.divmod(tid, nx_k)
+            out = pd.DataFrame({"variable": man["variable"], "t": t, "ci": ci,
+                                "cj": cj, "addr": man["addr"],
+                                "nbytes": man["nbytes"]})
+            entries: "dict[str, list]" = {v: [] for v in variables}
+            for v, t_, ci_, cj_, at, nb in zip(
+                    out["variable"], *(out[c].tolist() for c in
+                                       ("t", "ci", "cj", "addr", "nbytes"))):
+                offs = ((t_, ci_ * ch, cj_ * cw, 0) if three_d
+                        else (ci_ * ch, cj_ * cw, 0))
+                entries[v].append((offs, at, nb))
+            end = int(out["addr"].iloc[-1] + out["nbytes"].iloc[-1]) \
+                if len(out) else data_start
+            # ---- chunk indexes after the data, any of the four types ----------
+            max_offs = ((nt, ny_k * ch, nx_k * cw, 0) if three_d
+                        else (ny_k * ch, nx_k * cw, 0))
+            csize = ch * cw * esize
+            bblobs = []
+            pos = _align8(end)
+            for v in variables:
+                if not entries[v]:
+                    addrs[f"btree_{v}"] = UNDEF
+                    continue
+                if index in ("fixed_array", "extensible"):
+                    slots = {}
+                    for offs, at, nb in entries[v]:
+                        t0, r0, c0 = (offs[:3] if three_d
+                                      else (0,) + tuple(offs[:2]))
+                        # the same dense slot index as the shuffle key tk
+                        slots[t0 * ny_k * nx_k + int(keys.tile_key_np(
+                            r0, c0, ch, cw, nx_k))] = (at, nb, 0)
+                    if index == "fixed_array":
+                        root, blob = _fixed_array_blob(
+                            slots, nt * ny_k * nx_k, csize, filtered, pos,
+                            page_bits=fa_page_bits)
+                    else:
+                        mb, ie, me, mp, pb = ea_params or (32, 4, 16, 4, 10)
+                        root, blob = _extensible_array_blob(
+                            slots, nt * ny_k * nx_k, csize, filtered, pos,
+                            max_bits=mb, idx_elmts=ie, min_elmts=me,
+                            min_ptrs=mp, page_bits=pb)
+                elif index == "btree2":
+                    recs = sorted(
+                        (((offs[0], offs[1] // ch, offs[2] // cw) if three_d
+                          else (offs[0] // ch, offs[1] // cw)), at, nb, 0)
+                        for offs, at, nb in entries[v])
+                    root, blob = _btree2_blob(recs, csize, filtered, pos,
+                                              node_size=b2_node_size)
+                else:
+                    root, blob = _chunk_btree(entries[v], max_offs, pos,
+                                              cap=btree_cap)
+                addrs[f"btree_{v}"] = root
+                bblobs.append((pos, blob))
+                pos += len(blob)
+            # ---- now every address is known: render + write front & indexes --
+            comp = build(addrs)
+            fh.seek(0)
+            fh.write(_superblock(pos, addrs["ohdr_/"], addrs["gbtree"],
+                                 addrs["heap_hdr"]))
+            for k in order:
+                fh.seek(addrs[k])
+                fh.write(comp[k])
+            for at, blob in bblobs:
+                fh.seek(at)
+                fh.write(blob)
+            fh.truncate(pos)
+            return out
+
+        return data_start, write_meta
+
+    return key, encode_chunk, layout
 
 
 # ---------------------------------------------------------------------------

@@ -430,7 +430,6 @@ def _patch_arrays(fh, ifds, v: _Variant):
 
 def write_geotiff(
     per_level: "list[tuple[DataFrame, Grid]]",
-    n_bands: int,
     path: str,
     tile: tuple[int, int] = (256, 256),
     compress: "int | None" = None,
@@ -450,17 +449,21 @@ def write_geotiff(
     BIGTIFF=IF_NEEDED). One tail writes the file, the same shape as the
     netCDF-4 sink (``hdf5.py``): (1) one distributed job encodes every
     occupied tile of every level and stages it as one file under
-    ``<path>._tiles/``, returning only ``(level, band, tile, nbytes)``;
-    (2) the driver lays the manifest out in (level, band, ti, tj) order,
-    pointing every ABSENT slot at ONE shared fill tile (legal TIFF; a
-    sparse raster stores one fill tile, not one per slot), and writes
-    header + IFDs + offset/count arrays; (3) one distributed job
-    ``pwrite``\\ s the staged bytes. No driver byte stream, and the same
-    filesystem model as every pwrite sink: the target must be reachable
-    from all executors. Returns total bytes written."""
+    ``<path>._tiles/``, returning only ``(level, band, tile, nbytes)``,
+    and observes the band count ``max(band) + 1`` (before the null
+    filter, so an all-null band is still declared; an empty input
+    declares one band); (2) the driver builds the IFDs from that count,
+    lays the manifest out in (level, band, ti, tj) order, pointing every
+    ABSENT slot at ONE shared fill tile (legal TIFF; a sparse raster
+    stores one fill tile, not one per slot), and writes header + IFDs +
+    offset/count arrays; (3) one distributed job ``pwrite``\\ s the
+    staged bytes. No driver byte stream, and the same filesystem model
+    as every pwrite sink: the target must be reachable from all
+    executors. Returns total bytes written."""
     th, tw = int(tile[0]), int(tile[1])
-    base_grid = per_level[0][1]
-    nodata = base_grid.nodata
+    grids = [g for _, g in per_level]
+    n_levels = len(grids)
+    nodata = grids[0].nodata
     dt_name = _dt.resolve(dtype)
     np_dt, bits, sfmt = (
         _dt.np_dtype(dt_name), _dt.TABLE[dt_name][1], _dt.TABLE[dt_name][2]
@@ -468,41 +471,35 @@ def write_geotiff(
     _check_predictor(predictor, dt_name)
     fill = _dt.check_fill(dt_name, nodata)
 
-    ifds: list[_Ifd] = []
-    for b in range(n_bands):
-        for li, (_, g) in enumerate(per_level):
-            ifds.append(
-                _Ifd(g.rows, g.cols, th, tw, is_overview=li > 0,
+    def ifds_of(n_bands: int) -> "list[_Ifd]":
+        return [_Ifd(g.rows, g.cols, th, tw, is_overview=li > 0,
                      itemsize=np_dt.itemsize)
-            )
+                for _ in range(n_bands) for li, g in enumerate(grids)]
 
-    def bound_of(v: _Variant) -> int:
-        nod = len(_nodata_ascii(nodata, v.inline))
-        _, ds = _layout(ifds, nod, v, predictor)
+    def classic_fits(ifds: "list[_Ifd]") -> bool:
+        """Whether classic TIFF holds the raster in the worst case; raises
+        when it does not and ``bigtiff`` is False."""
+        v = _Variant(False)
+        _, ds = _layout(ifds, len(_nodata_ascii(nodata, v.inline)), v,
+                        predictor)
         b = ds + sum(f_.n_tiles * f_.tile_bytes for f_ in ifds)
         if compress == "lzw":  # LZW worst case is 12-bit codes per byte
             b = int(b * 1.51) + 4096
         elif compress is not None:  # deflate worst case adds <0.1% on raw
             b = int(b * 1.01) + 4096
-        return b
+        if bigtiff is False and b > 2**32 - 1:
+            raise ValueError(
+                f"raster needs up to {b} bytes — classic TIFF caps at 4 GiB; "
+                "pass bigtiff=True (or leave bigtiff=None to auto-switch)"
+            )
+        return b <= 2**32 - 1
 
-    if bigtiff is None:
-        bigtiff = bound_of(_Variant(False)) > 2**32 - 1
-    v = _Variant(bool(bigtiff))
-    if not v.big and bound_of(v) > 2**32 - 1:
-        raise ValueError(
-            f"raster needs up to {bound_of(v)} bytes — classic TIFF caps at "
-            "4 GiB; pass bigtiff=True (or leave bigtiff=None to auto-switch)"
-        )
-
-    nod_ascii = _nodata_ascii(nodata, v.inline)
-    ifd_pos, data_start = _layout(ifds, len(nod_ascii), v, predictor)
-
+    # checked before the encode with one band, the fewest any input
+    # declares, so a raster past the cap fails before it is encoded
+    classic_fits(ifds_of(1))
     scratch = path + "._tiles"
     shutil.rmtree(scratch, ignore_errors=True)
     os.makedirs(scratch)
-    grids = [g for _, g in per_level]
-    n_levels = len(grids)
 
     def tile_file(li: int, b: int, tk: int) -> str:
         return os.path.join(scratch, f"{li}_{b}_{tk}")
@@ -510,10 +507,10 @@ def write_geotiff(
     def stage(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         li, bb, tk = (int(k) for k in key)
         g = grids[li]
-        if not 0 <= bb < n_bands:
+        if bb < 0:
             raise ValueError(
                 f"tile block outside the declared layout at level {li}: "
-                f"band={bb} (outside {n_bands} bands)")
+                f"band={bb}")
         # out-of-extent cells would wrap via fancy indexing (negative) or
         # land in another tile's slot (beyond the grid) — fail loudly
         keys.check_extent(pdf["row"].to_numpy(), pdf["col"].to_numpy(),
@@ -529,17 +526,22 @@ def write_geotiff(
     # every level in ONE encode job: the levels' keyed cells union under
     # a level column
     keyed = functools.reduce(DataFrame.unionByName, [
-        cdf.where(F.col("value").isNotNull()).select(
+        cdf.select(
             F.lit(li).cast("long").alias("level"), "band", "row", "col",
-            "value",
-            keys.tile_key("row", "col", th, tw, ifds[li].ntx).alias("_tk"))
-        for li, (cdf, _) in enumerate(per_level)])
+            "value", keys.tile_key("row", "col", th, tw, keys.n_tiles(
+                g.rows, g.cols, th, tw)[1]).alias("_tk"))
+        for li, (cdf, g) in enumerate(per_level)])
     try:
-        # no orderBy after the UDF: its range sampler would run every
-        # encode twice — the manifest is metadata scale, lay it out here
-        man = keyed.groupBy("level", "band", "_tk").applyInPandas(
-            stage, "level long, band long, tk long, nbytes long",
-        ).toPandas()
+        man, seen = _staged.encode(
+            keyed, lambda d: d, ["level", "band", "_tk"], stage,
+            "level long, band long, tk long, nbytes long",
+            {"m": F.max("band")})
+        n_bands = int(seen["m"]) + 1 if seen["m"] is not None else 1
+        ifds = ifds_of(n_bands)
+        fits = classic_fits(ifds)
+        v = _Variant(not fits if bigtiff is None else bool(bigtiff))
+        nod_ascii = _nodata_ascii(nodata, v.inline)
+        ifd_pos, data_start = _layout(ifds, len(nod_ascii), v, predictor)
         # ---- driver: slots in (level, band, ti, tj) file order -----------
         per_band = [ifds[li].n_tiles for li in range(n_levels)]  # tiles
         first = np.cumsum([0] + [n_bands * n for n in per_band])
@@ -774,24 +776,17 @@ def write_cog_parts(
         F.lit(0).cast("long").alias("rc"),
         F.lit(None).cast("double").alias("value"),
     )
-    keyed = cells_df.where(F.col("value").isNotNull()).select(
-        "band",
-        keys.pack_rc("row", "col").alias("rc"),
-        "value",
-        keys.tile_key("row", "col", sh, sw, npj).alias("_pid"),
-    )
-    covered = keyed.unionByName(parts)
-    manifest = (
-        covered.groupBy("_pid")
-        .applyInPandas(
-            build,
-            schema="pi long, pj long, rows long, cols long, n_cells long, "
-                   "n_bytes long, file string",
-        )
-        .toPandas()
-        .sort_values(["pi", "pj"])
-        .reset_index(drop=True)
-    )
+    manifest, _ = _staged.encode(
+        cells_df, lambda d: d.select(
+            "band",
+            keys.pack_rc("row", "col").alias("rc"),
+            "value",
+            keys.tile_key("row", "col", sh, sw, npj).alias("_pid"),
+        ).unionByName(parts),
+        ["_pid"], build,
+        "pi long, pj long, rows long, cols long, n_cells long, "
+        "n_bytes long, file string")
+    manifest = manifest.sort_values(["pi", "pj"], ignore_index=True)
     with open(os.path.join(out_dir, "mosaic.json"), "w") as f:
         json.dump(manifest_meta, f)
     return manifest

@@ -48,10 +48,10 @@ import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _blocks, blosc as _bl, dtypes as _dt, keys
+from . import _blocks, _staged, blosc as _bl, dtypes as _dt, keys
 from .grid import Grid
 
 _UNDEF64 = (1 << 64) - 1  # sharding index sentinel: inner chunk missing
@@ -297,6 +297,174 @@ def _crc32c(data: bytes) -> int:
     return crc ^ 0xFFFFFFFF
 
 
+def _array_writer(
+    grid: Grid, chunks: tuple[int, int], compress: "int | None", dtype: str,
+    zarr_format: int, shards: "tuple[int, int] | None", codec: "str | None",
+):
+    """The one chunk writer of :func:`write_zarr` and
+    :func:`write_zarr_dataset`: validates the options and returns
+    ``(encode, write_meta)``.
+
+    - ``encode(cells, root, by, nt, three_d, observe)`` runs the one
+      encode job (``_staged.encode``) over ``by`` + chunk id groups — by
+      ``band`` for one array at ``root``, by ``(variable, t)`` for one
+      array per variable under ``root``. Every group is a shard: an
+      unsharded chunk is a shard of one chunk, written without the index
+      and crc footer. A record (band or t) below 0, or at ``nt`` or past
+      it, fails loudly: it would land outside the declared shape and
+      read back as nothing. ``three_d`` False writes 2-D keys (``i.j`` /
+      ``c/i/j``). Returns ``(manifest, observed)``.
+    - ``write_meta(sub, lead, attrs, dims)`` writes the array document
+      of shape ``lead + [rows, cols]``: v2 ``.zarray`` + ``.zattrs``
+      (``attrs``), or v3 ``zarr.json`` (``attrs`` minus the v2
+      ``_ARRAY_DIMENSIONS`` key, ``dims`` as ``dimension_names``)."""
+    import struct
+
+    if zarr_format not in (2, 3):
+        raise ValueError(f"zarr_format must be 2 or 3, got {zarr_format}")
+    ch, cw = int(chunks[0]), int(chunks[1])
+    sh, sw = ch, cw
+    if shards is not None:
+        sh, sw = int(shards[0]), int(shards[1])
+        if zarr_format != 3:
+            raise ValueError("shards requires zarr_format=3")
+        if sh % ch or sw % cw:
+            raise ValueError(
+                f"shard shape {(sh, sw)} must be a multiple of the chunk "
+                f"shape {(ch, cw)}"
+            )
+    rows, cols = grid.rows, grid.cols
+    dt_name = _dt.resolve(dtype)
+    fill = _dt.check_fill(dt_name, grid.nodata)
+    comp_meta, enc = _make_encoder(
+        zarr_format, codec, compress, _dt.np_dtype(dt_name).itemsize
+    )
+
+    def write_meta(sub: str, lead: "list[int]", attrs: dict,
+                   dims: "list[str]") -> None:
+        fill_json = (
+            "NaN" if math.isnan(fill)
+            else (fill if _dt.is_float(dt_name) else int(fill))
+        )
+        shape, one = lead + [rows, cols], [1] * len(lead)
+        if zarr_format == 2:
+            meta = {
+                "zarr_format": 2,
+                "shape": shape,
+                "chunks": one + [ch, cw],
+                "dtype": _dt.TO_ZARR[dt_name],
+                "compressor": comp_meta,
+                "fill_value": fill_json,
+                "order": "C",
+                "filters": None,
+            }
+            with open(os.path.join(sub, ".zarray"), "w") as f:
+                json.dump(meta, f)
+            with open(os.path.join(sub, ".zattrs"), "w") as f:
+                json.dump(attrs, f)
+            return
+        codecs = [{"name": "bytes", "configuration": {"endian": "little"}}]
+        if comp_meta is not None:
+            codecs.append(comp_meta)
+        if shards is not None:
+            codecs = [{
+                "name": "sharding_indexed",
+                "configuration": {
+                    "chunk_shape": one + [ch, cw],
+                    "codecs": codecs,
+                    "index_codecs": [
+                        {"name": "bytes",
+                         "configuration": {"endian": "little"}},
+                        {"name": "crc32c"},
+                    ],
+                    "index_location": "end",
+                },
+            }]
+        meta = {
+            "zarr_format": 3,
+            "node_type": "array",
+            "shape": shape,
+            "data_type": dt_name,
+            "chunk_grid": {"name": "regular",
+                           "configuration": {"chunk_shape": one + [sh, sw]}},
+            "chunk_key_encoding": {"name": "default",
+                                   "configuration": {"separator": "/"}},
+            "fill_value": fill_json,
+            "codecs": codecs,
+            "attributes": {k: v for k, v in attrs.items()
+                           if k != "_ARRAY_DIMENSIONS"},
+            "dimension_names": dims,
+        }
+        with open(os.path.join(sub, "zarr.json"), "w") as f:
+            json.dump(meta, f)
+
+    def encode(cells: DataFrame, root: str, by: "list[str]",
+               nt: "int | None", three_d: bool, observe: "dict | None"):
+        niy, nix = sh // ch, sw // cw
+
+        def write_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            *var, b, cid = key
+            b = int(b)
+            if b < 0 or (nt is not None and b >= nt):
+                raise ValueError(
+                    f"cell outside the declared shape: band/t={b}"
+                    + ("" if nt is None else f", {nt} records declared"))
+            si, sj, r0, c0, _, _ = keys.tile_window(cid, sh, sw, rows, cols)
+            rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy(np.int64))
+            keys.check_extent(rr, cc, rows, cols)
+            pdf = pd.DataFrame(
+                {"row": rr, "col": cc,
+                 "value": pdf["value"].to_numpy(np.float64)})
+            index = np.full((niy * nix, 2), _UNDEF64, np.uint64)
+            blobs, cur = [], 0
+            grp = pdf.groupby(
+                [(pdf["row"] - r0) // ch, (pdf["col"] - c0) // cw], sort=True
+            )
+            for (ici, icj), sub in grp:
+                block = _blocks.dense_block(
+                    sub, ch, cw, r0 + int(ici) * ch, c0 + int(icj) * cw, fill
+                )
+                data = _dt.cast_block(block, dt_name).tobytes(order="C")
+                if enc is not None:
+                    data = enc(data)
+                index[int(ici) * nix + int(icj)] = (cur, len(data))
+                blobs.append(data)
+                cur += len(data)
+            body = b"".join(blobs)
+            if shards is not None:
+                ib = index.astype("<u8").tobytes()
+                body += ib + struct.pack("<I", _crc32c(ib))
+            toks = ([b] if three_d else []) + [si, sj]
+            name = (".".join(map(str, toks)) if zarr_format == 2
+                    else "c/" + "/".join(map(str, toks)))
+            fn = os.path.join(root, *map(str, var), name)
+            os.makedirs(os.path.dirname(fn), exist_ok=True)
+            with open(fn, "wb") as f:
+                f.write(body)
+            return pd.DataFrame(
+                {**({"variable": [str(var[0])]} if var else {}),
+                 "band": [b], "ci": [si], "cj": [sj], "n_cells": [len(pdf)],
+                 "n_bytes": [len(body)], "file": [name]}
+            )
+
+        # packed shuffle keys (guide §2.3, keys.py): the cell key rc and the
+        # dense chunk/shard key cid replace four longs; the write tasks
+        # decode rc exactly and fail loudly on a cell outside the grid
+        cid = keys.tile_key("row", "col", sh, sw,
+                            keys.n_tiles(rows, cols, sh, sw)[1]).alias("cid")
+        per_var = ["variable"] if len(by) == 2 else []
+        man, seen = _staged.encode(
+            cells, lambda d: d.select(*by, keys.pack_rc("row", "col")
+                                      .alias("rc"), "value", cid),
+            by + ["cid"], write_shard,
+            "variable string, " * len(per_var) + "band long, ci long, "
+            "cj long, n_cells long, n_bytes long, file string", observe)
+        return man.sort_values(per_var + ["band", "ci", "cj"],
+                               ignore_index=True), seen
+
+    return encode, write_meta
+
+
 def write_zarr(
     cells_df: DataFrame, grid: Grid, path: str, chunks: tuple[int, int] = (256, 256),
     compress: "int | None" = None, dtype: str = "float64",
@@ -318,177 +486,22 @@ def write_zarr(
     ratio; absent inner chunks store the missing sentinel). ``dtype`` is
     the STORAGE dtype (``pyramids_spark.dtypes``; reference GDAL table
     ``base/_utils.py:16-56``) — integer stores need a representable
-    nodata and integral in-range values. Returns the chunk manifest as
-    pandas ``(band, ci, cj, n_cells, n_bytes, file)`` (shard ids when
-    sharded)."""
-    if zarr_format not in (2, 3):
-        raise ValueError(f"zarr_format must be 2 or 3, got {zarr_format}")
-    ch, cw = int(chunks[0]), int(chunks[1])
-    if shards is not None:
-        sh, sw = int(shards[0]), int(shards[1])
-        if zarr_format != 3:
-            raise ValueError("shards requires zarr_format=3")
-        if sh % ch or sw % cw:
-            raise ValueError(
-                f"shard shape {(sh, sw)} must be a multiple of the chunk "
-                f"shape {(ch, cw)}"
-            )
-    rows, cols = grid.rows, grid.cols
-    dt_name = _dt.resolve(dtype)
-    fill = _dt.check_fill(dt_name, grid.nodata)
-    comp_meta, enc = _make_encoder(
-        zarr_format, codec, compress, _dt.np_dtype(dt_name).itemsize
-    )
+    nodata and integral in-range values. One encode job writes every
+    chunk and observes the band count (before the null filter, so an
+    all-null band is still declared); the array document is written
+    after it. Returns the chunk manifest as pandas ``(band, ci, cj,
+    n_cells, n_bytes, file)`` (shard ids when sharded)."""
+    encode, write_meta = _array_writer(grid, chunks, compress, dtype,
+                                       zarr_format, shards, codec)
     os.makedirs(path, exist_ok=True)
     _clear_array_store(path)
-
-    def write_meta(n_bands: int) -> None:
-        """The array document, written once the encode job has observed
-        the band count."""
-        fill_json = (
-            "NaN" if math.isnan(fill)
-            else (fill if _dt.is_float(dt_name) else int(fill))
-        )
-        attrs = {"x0": grid.x0, "y0": grid.y0, "cell": grid.cell,
-                 "epsg": grid.epsg, "nodata": grid.nodata}
-        if zarr_format == 2:
-            meta = {
-                "zarr_format": 2,
-                "shape": [n_bands, rows, cols],
-                "chunks": [1, ch, cw],
-                "dtype": _dt.TO_ZARR[dt_name],
-                "compressor": comp_meta,
-                "fill_value": fill_json,
-                "order": "C",
-                "filters": None,
-            }
-            with open(os.path.join(path, ".zarray"), "w") as f:
-                json.dump(meta, f)
-            with open(os.path.join(path, ".zattrs"), "w") as f:
-                json.dump(attrs, f)
-        else:
-            codecs = [{"name": "bytes", "configuration": {"endian": "little"}}]
-            if comp_meta is not None:
-                codecs.append(comp_meta)
-            if shards is not None:
-                codecs = [{
-                    "name": "sharding_indexed",
-                    "configuration": {
-                        "chunk_shape": [1, ch, cw],
-                        "codecs": codecs,
-                        "index_codecs": [
-                            {"name": "bytes",
-                             "configuration": {"endian": "little"}},
-                            {"name": "crc32c"},
-                        ],
-                        "index_location": "end",
-                    },
-                }]
-            grid_chunk = [1, ch, cw] if shards is None else [1, sh, sw]
-            meta = {
-                "zarr_format": 3,
-                "node_type": "array",
-                "shape": [n_bands, rows, cols],
-                "data_type": dt_name,
-                "chunk_grid": {"name": "regular",
-                               "configuration": {"chunk_shape": grid_chunk}},
-                "chunk_key_encoding": {"name": "default",
-                                       "configuration": {"separator": "/"}},
-                "fill_value": fill_json,
-                "codecs": codecs,
-                "attributes": attrs,
-                "dimension_names": ["band", "y", "x"],
-            }
-            with open(os.path.join(path, "zarr.json"), "w") as f:
-                json.dump(meta, f)
-
-    def _unpack(pdf: pd.DataFrame) -> pd.DataFrame:
-        rr, cc = keys.unpack_rc_np(pdf["rc"].to_numpy(np.int64))
-        keys.check_extent(rr, cc, rows, cols)
-        return pd.DataFrame(
-            {"row": rr, "col": cc, "value": pdf["value"].to_numpy(np.float64)}
-        )
-
-    def write_chunks(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        b = int(key[0])
-        ci, cj, r0, c0, _, _ = keys.tile_window(key[1], ch, cw, rows, cols)
-        pdf = _unpack(pdf)
-        block = _blocks.dense_block(pdf, ch, cw, r0, c0, fill)
-        data = _dt.cast_block(block, dt_name).tobytes(order="C")
-        if zarr_format == 2:
-            name = f"{b}.{ci}.{cj}"
-        else:
-            name = f"c/{b}/{ci}/{cj}"
-            os.makedirs(os.path.join(path, f"c/{b}/{ci}"), exist_ok=True)
-        if enc is not None:
-            data = enc(data)
-        with open(os.path.join(path, name), "wb") as f:
-            f.write(data)
-        return pd.DataFrame(
-            {"band": [b], "ci": [ci], "cj": [cj], "n_cells": [len(pdf)],
-             "n_bytes": [len(data)], "file": [name]}
-        )
-
-    def write_shard(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        import struct
-
-        b = int(key[0])
-        si, sj, r0, c0, _, _ = keys.tile_window(key[1], sh, sw, rows, cols)
-        pdf = _unpack(pdf)
-        niy, nix = sh // ch, sw // cw
-        index = np.full((niy * nix, 2), _UNDEF64, np.uint64)
-        blobs, cur = [], 0
-        grp = pdf.groupby(
-            [(pdf["row"] - r0) // ch, (pdf["col"] - c0) // cw], sort=True
-        )
-        for (ici, icj), sub in grp:
-            block = _blocks.dense_block(
-                sub, ch, cw, r0 + int(ici) * ch, c0 + int(icj) * cw, fill
-            )
-            data = _dt.cast_block(block, dt_name).tobytes(order="C")
-            if enc is not None:
-                data = enc(data)
-            index[int(ici) * nix + int(icj)] = (cur, len(data))
-            blobs.append(data)
-            cur += len(data)
-        ib = index.astype("<u8").tobytes()
-        body = b"".join(blobs) + ib + struct.pack("<I", _crc32c(ib))
-        name = f"c/{b}/{si}/{sj}"
-        os.makedirs(os.path.join(path, f"c/{b}/{si}"), exist_ok=True)
-        with open(os.path.join(path, name), "wb") as f:
-            f.write(body)
-        return pd.DataFrame(
-            {"band": [b], "ci": [si], "cj": [sj], "n_cells": [len(pdf)],
-             "n_bytes": [len(body)], "file": [name]}
-        )
-
-    div_r, div_c = (ch, cw) if shards is None else (sh, sw)
-    # packed shuffle keys (guide §2.3, keys.py): the cell key rc and the
-    # dense chunk/shard key cid replace four longs; the write tasks decode
-    # rc exactly and fail loudly on a cell outside the grid
-    # the band count rides on the encode job: observed before the null
-    # filter, so a band whose every cell is null is still declared
-    obs = Observation()
-    keyed = cells_df.observe(obs, F.max("band").alias("m")).where(
-        F.col("value").isNotNull()).select(
-        "band",
-        keys.pack_rc("row", "col").alias("rc"),
-        "value",
-        keys.tile_key("row", "col", div_r, div_c,
-                      keys.n_tiles(rows, cols, div_r, div_c)[1]).alias("cid"),
-    )
-    manifest = (
-        keyed.groupBy("band", "cid")
-        .applyInPandas(
-            write_chunks if shards is None else write_shard,
-            schema="band long, ci long, cj long, n_cells long, n_bytes long, file string",
-        )
-        .toPandas()
-        .sort_values(["band", "ci", "cj"])
-        .reset_index(drop=True)
-    )
-    m = obs.get["m"]
-    write_meta(int(m) + 1 if m is not None else 1)
+    manifest, seen = encode(cells_df, path, ["band"], None, True,
+                            {"m": F.max("band")})
+    m = seen["m"]
+    write_meta(path, [int(m) + 1 if m is not None else 1],
+               {"x0": grid.x0, "y0": grid.y0, "cell": grid.cell,
+                "epsg": grid.epsg, "nodata": grid.nodata},
+               ["band", "y", "x"])
     return manifest
 
 
@@ -1046,24 +1059,31 @@ def write_zarr_dataset(
 ) -> pd.DataFrame:
     """Write the long cell table ``(variable, t, row, col, value)`` as a
     CF/xarray-style zarr GROUP: one ``(time, y, x)`` array per variable
-    (or ``(y, x)`` when ``times`` is None), 1-D ``y``/``x`` (+ ``time``)
-    coordinate arrays, dimension names on every node — the layout xarray
-    opens directly. ``georef`` "coords" georeferences via the coordinate
-    variables alone (CF; descending y); "attrs" additionally stores the
-    engine's x0/y0/cell on the group. ``mode`` "w" (default) REPLACES
-    any prior zarr state at ``path`` (the xarray ``to_zarr(mode="w")``
-    contract — stale variables/chunks/attrs of either format are
-    removed); "a" adds/overwrites only the written variables, keeping
-    siblings. Per-variable chunk writes run
-    distributed (the :func:`write_zarr` job per variable); coordinates
-    write driver-side. Returns the concatenated chunk manifest."""
-    if variables is None:
-        variables = sorted(
-            r[0] for r in cells_df.select("variable").distinct().collect()
-        )
+    (or ``(y, x)`` when ``times`` is None, with 2-D chunk keys ``i.j`` /
+    ``c/i/j``), 1-D ``y``/``x`` (+ ``time``) coordinate arrays, dimension
+    names on every node — the layout xarray opens directly. ``georef``
+    "coords" georeferences via the coordinate variables alone (CF;
+    descending y); "attrs" additionally stores the engine's x0/y0/cell
+    on the group. ``mode`` "w" (default) REPLACES any prior zarr state at
+    ``path`` (the xarray ``to_zarr(mode="w")`` contract — stale
+    variables/chunks/attrs of either format are removed); "a"
+    adds/overwrites only the written variables, keeping siblings. The
+    chunks stage under ``<path>._chunks/`` and replace each written
+    variable's chunks after the encode. ``variables`` None writes every
+    variable in the table. One encode job, keyed by (variable, t,
+    chunk), writes every variable's chunks and observes the variable set
+    (before the null filter, so an all-null variable is still declared);
+    a ``t`` outside ``times`` (or not 0 when ``times`` is None) fails
+    loudly. Array documents and coordinates write driver-side. Returns
+    the chunk manifest ``(variable, band, ci, cj, n_cells, n_bytes,
+    file)``, ``band`` holding ``t``."""
+    import shutil
+
     if mode not in ("w", "a"):
         raise ValueError(f"mode must be 'w' (replace) or 'a' (add), "
                          f"got {mode!r}")
+    encode, write_meta = _array_writer(grid, chunks, compress, dtype,
+                                       zarr_format, None, codec)
     three_d = times is not None
     dims = ["time", "y", "x"] if three_d else ["y", "x"]
     os.makedirs(path, exist_ok=True)
@@ -1074,8 +1094,8 @@ def write_zarr_dataset(
         _clear_group_store(path)
     else:
         # ADD: keep sibling arrays, but never let an old-format ROOT
-        # document shadow this write (per-variable dirs are cleared by
-        # write_zarr itself)
+        # document shadow this write (written variables' chunks are
+        # cleared when their staged chunks move in)
         stale = os.path.join(path, ".zmetadata")
         if os.path.exists(stale):
             os.remove(stale)
@@ -1146,56 +1166,34 @@ def write_zarr_dataset(
     if three_d:
         write_coord("time", np.asarray(times, "<f8"))
 
-    def patch_dims(sub: str) -> None:
-        """Rename the per-variable array's dims from write_zarr's
-        band/y/x to the dataset dims (2-D drops the leading axis) and
-        declare len(times) records, whatever records the variable's own
-        rows hold."""
-        if zarr_format == 3:
-            mp = os.path.join(sub, "zarr.json")
-            with open(mp) as f:
-                m = json.load(f)
-            m["dimension_names"] = dims
-            if three_d:
-                m["shape"][0] = len(times)
-            else:
-                m["shape"] = m["shape"][1:]
-                cfg = m["chunk_grid"]["configuration"]
-                cfg["chunk_shape"] = cfg["chunk_shape"][1:]
-            m["attributes"] = {}
-            with open(mp, "w") as f:
-                json.dump(m, f)
-        else:
-            mp = os.path.join(sub, ".zarray")
-            with open(mp) as f:
-                m = json.load(f)
-            if three_d:
-                m["shape"][0] = len(times)
-            else:
-                m["shape"] = m["shape"][1:]
-                m["chunks"] = m["chunks"][1:]
-            with open(mp, "w") as f:
-                json.dump(m, f)
-            with open(os.path.join(sub, ".zattrs"), "w") as f:
-                json.dump({"_ARRAY_DIMENSIONS": dims}, f)
-
-    manifests = []
-    for v in variables:
-        sub = os.path.join(path, v)
-        part = cells_df.where(F.col("variable") == v).select(
-            F.col("t").alias("band"), "row", "col", "value",
-        )
-        man = write_zarr(part, grid, sub, chunks, compress, dtype,
-                         zarr_format, codec=codec)
-        # 2-D layout stores chunk files as b.i.j with b=0 / c/0/i/j —
-        # readers accept both, so only the METADATA needs the 2-D shape
-        patch_dims(sub)
-        man.insert(0, "variable", v)
-        manifests.append(man)
+    # the written set may be known only after the encode, so the chunks
+    # stage beside the store and replace each variable's chunks after it
+    staged = os.path.normpath(path) + "._chunks"
+    shutil.rmtree(staged, ignore_errors=True)
+    cells = cells_df if variables is None else \
+        cells_df.where(F.col("variable").isin(list(variables)))
+    try:
+        man, seen = encode(
+            cells, staged, ["variable", "t"], len(times) if three_d else 1,
+            three_d, None if variables is not None else
+            {"v": F.array_sort(F.collect_set("variable"))})
+        declared = list(variables if variables is not None else seen["v"])
+        for v in declared:
+            sub, src = os.path.join(path, v), os.path.join(staged, v)
+            os.makedirs(sub, exist_ok=True)
+            _clear_array_store(sub)
+            for nm in os.listdir(src) if os.path.isdir(src) else ():
+                os.replace(os.path.join(src, nm), os.path.join(sub, nm))
+            write_meta(sub, [len(times)] if three_d else [],
+                       {"_ARRAY_DIMENSIONS": dims}, dims)
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
     # consolidated metadata: the xarray/cloud-store convention — one
     # GET answers discovery instead of a LIST per directory
     if zarr_format == 2:
         consolidate_metadata(path)
     else:
         consolidate_metadata_v3(path)
-    return pd.concat(manifests, ignore_index=True)
+    rank = {v: i for i, v in enumerate(declared)}
+    return man.sort_values("variable", key=lambda c: c.map(rank),
+                           kind="stable", ignore_index=True)

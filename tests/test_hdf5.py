@@ -726,9 +726,10 @@ def test_netcdf4_parallel_guards(spark, tmp_path):
 def _stream_netcdf4(cells_df, grid, path, **kw):
     """Driver-stream netCDF-4 writer, the byte-identity oracle of
     ``hdf5.write_netcdf4``: the same set-up (``hdf5._netcdf4_plan``), but
-    the encoded chunks stream through the driver in (variable, t, ci, cj)
-    order and are appended from the first data address; the front matter
-    and the chunk indexes are written last."""
+    the variable set is listed up front when not given, the encoded
+    chunks stream through the driver in (variable, t, ci, cj) order and
+    are appended from the first data address; the front matter and the
+    chunk indexes are written last."""
     import inspect
 
     import pandas as pd
@@ -737,8 +738,12 @@ def _stream_netcdf4(cells_df, grid, path, **kw):
         cells_df, grid, path, **kw)
     args.apply_defaults()
     opts = {k: v for k, v in args.arguments.items()
-            if k not in ("path", "parallel")}
-    keyed, encode_chunk, data_start, write_meta = hdf5._netcdf4_plan(**opts)
+            if k not in ("cells_df", "path", "parallel")}
+    key, encode_chunk, layout = hdf5._netcdf4_plan(**opts)
+    variables = opts["variables"] or sorted(
+        r[0] for r in cells_df.select("variable").distinct().collect())
+    data_start, write_meta = layout(variables)
+    keyed = key(cells_df.where("value IS NOT NULL"))
 
     def build_chunk(key, pdf):
         return pd.DataFrame({"variable": [str(key[0])], "tk": [int(key[1])],
@@ -794,14 +799,15 @@ def test_netcdf4_parallel_staged_byte_identical(spark, tmp_path):
 def test_netcdf4_write_job_audit(spark, tmp_path, build_jobs):
     """``write_netcdf4`` runs the encode job and the placement job (a
     range sort after the encode UDF would add a sampler job that encodes
-    every chunk again); ``variables=None`` adds the variable listing."""
+    every chunk again); with ``variables=None`` the encode job observes
+    the variable set, so no listing job runs."""
     df, _ = _cells(spark)
     kw = dict(times=[10.0, 20.0, 30.0], chunk=(4, 4))
     p = str(tmp_path / "j.nc")
     assert build_jobs(lambda: hdf5.write_netcdf4(
         df, G, p, variables=["precip", "temp"], **kw), "nc4-vars") == 3
     assert build_jobs(lambda: hdf5.write_netcdf4(df, G, p, **kw),
-                      "nc4-novars") == 5
+                      "nc4-novars") == 3
 
 
 def test_hdf5_dense_attributes_and_links(tmp_path):

@@ -451,7 +451,7 @@ def test_bigtiff_auto_switch_layout_over_4gib(spark):
     # and the single-file writer refuses classic loudly
     src = SparkDataset.create(spark, g, "CAST(1 AS DOUBLE)")
     with pytest.raises(ValueError, match="classic TIFF caps"):
-        _tiff.write_geotiff([(src.df, g)], 1, "/tmp/never.tif",
+        _tiff.write_geotiff([(src.df, g)], "/tmp/never.tif",
                             bigtiff=False)
 
 
@@ -1181,7 +1181,7 @@ def test_geotiff_parallel_staged_roundtrip(spark, tmp_path):
     ]):
         for n in (1, 2):
             p = str(tmp_path / f"f{i}_{n}.tif")
-            size = T.write_geotiff(levels[:n], 1, p, tile=(4, 4), **kw)
+            size = T.write_geotiff(levels[:n], p, tile=(4, 4), **kw)
             want = T.serialize_geotiff(arrs[:n], [g for _, g in levels[:n]],
                                        tile=(4, 4), **kw)
             got = open(p, "rb").read()
@@ -1219,12 +1219,12 @@ def test_geotiff_write_job_audit(spark, tmp_path, build_jobs):
     p = str(tmp_path / "j.tif")
     for n in (1, 2):
         assert build_jobs(lambda: T.write_geotiff(
-            levels[:n], 1, p, tile=(4, 4), compress=6), f"tif-{n}") == 3
+            levels[:n], p, tile=(4, 4), compress=6), f"tif-{n}") == 3
 
 
 def test_geotiff_parallel_staged_guards(spark, tmp_path):
-    """Out-of-extent cells fail loudly inside the encode job and leave
-    no scratch directory behind."""
+    """Out-of-extent cells and negative bands fail loudly inside the
+    encode job and leave no scratch directory behind."""
     import os
 
     g = Grid(x0=0.0, y0=8.0, cell=1.0, rows=8, cols=8, epsg=3857,
@@ -1234,6 +1234,13 @@ def test_geotiff_parallel_staged_guards(spark, tmp_path):
     p = str(tmp_path / "bad.tif")
     with pytest.raises(Exception, match="outside grid extent"):
         SparkDataset(bad, g).to_cog(p, levels=(), tile=(4, 4))
+    assert not os.path.exists(p + "._tiles")
+    # the band count is observed, so a negative band is the one band the
+    # layout cannot hold
+    neg = spark.createDataFrame(
+        [(-1, 0, 0, 1.0)], "band long, row long, col long, value double")
+    with pytest.raises(Exception, match="outside the declared layout"):
+        SparkDataset(neg, g).to_cog(p, levels=(), tile=(4, 4))
     assert not os.path.exists(p + "._tiles")
 
 
@@ -1256,9 +1263,9 @@ def test_cog_declares_all_null_bands_and_one_band_when_empty(spark, tmp_path):
 
 
 def test_to_cog_job_audit(spark, tmp_path, build_jobs):
-    """to_cog runs its band-count probe, the encode of every level and the
-    placement job."""
+    """to_cog runs the encode of every level, which also observes the
+    band count (no probe scan), and the placement job."""
     src = grid_df(spark, COELLO, bands=2)
     p = str(tmp_path / "c.tif")
     assert build_jobs(lambda: SparkDataset(src, COELLO).to_cog(
-        p, levels=(2,), tile=(4, 4)), "to-cog") == 6
+        p, levels=(2,), tile=(4, 4)), "to-cog") == 4

@@ -636,8 +636,7 @@ def _chunk_files(store: str) -> dict:
 
 def test_zarr_dataset_chunks_equal_write_zarr_chunks(spark, tmp_path):
     """Each write_zarr_dataset variable's chunk files are byte-equal to
-    write_zarr's for the same cells (t as the band), v2 and v3. zstd, not
-    the v3 default gzip: a gzip stream stamps its write time."""
+    write_zarr's for the same cells (t as the band), v2 and v3."""
     from pyramids_spark import zarr as Z
 
     base = grid_df(spark, COELLO)
@@ -662,11 +661,71 @@ def test_zarr_dataset_chunks_equal_write_zarr_chunks(spark, tmp_path):
             assert want and _chunk_files(os.path.join(ds, v)) == want, (zf, v)
 
 
+def test_zarr_dataset_2d_chunk_keys(spark, tmp_path):
+    """A 2-D dataset variable (times=None) of shape [rows, cols] names
+    its chunks with two parts, ``i.j`` (v2) and ``c/i/j`` (v3), where a
+    standard zarr reader looks; each raw chunk holds its fill-padded
+    block. Stores written with the older 3-part names (``0.i.j`` /
+    ``c/0/i/j``) still read."""
+    from pyramids_spark import zarr as Z
+
+    g = Grid(x0=0.0, y0=13.0, cell=1.0, rows=13, cols=14, epsg=4326,
+             nodata=-9999.0)
+    base = grid_df(spark, g)
+    cells = base.select(F.lit("v").alias("variable"),
+                        F.lit(0).cast("long").alias("t"), "row", "col",
+                        "value")
+    dense = np.full((16, 16), -9999.0)
+    for r in base.collect():
+        dense[r.row, r.col] = r.value
+    want = {(r.row, r.col): r.value for r in base.collect()}
+    for zf in (2, 3):
+        p = str(tmp_path / f"flat{zf}")
+        Z.write_zarr_dataset(cells, g, p, chunks=(8, 8), zarr_format=zf)
+        vdir = os.path.join(p, "v")
+        names = {f"{i}.{j}" if zf == 2 else f"c/{i}/{j}"
+                 for i in (0, 1) for j in (0, 1)}
+        assert set(_chunk_files(vdir)) == names
+        for n in names:
+            i, j = (int(x) for x in n.replace("c/", "").replace("/", ".")
+                    .split("."))
+            blk = np.frombuffer(open(os.path.join(vdir, n), "rb").read(),
+                                "<f8").reshape(8, 8)
+            assert np.array_equal(
+                blk, dense[i * 8:(i + 1) * 8, j * 8:(j + 1) * 8]), (zf, n)
+        # the older 3-part names of the same chunks
+        if zf == 2:
+            for n in names:
+                os.replace(os.path.join(vdir, n), os.path.join(vdir, "0." + n))
+        else:
+            os.replace(os.path.join(vdir, "c"), os.path.join(vdir, "c0"))
+            os.makedirs(os.path.join(vdir, "c"))
+            os.replace(os.path.join(vdir, "c0"), os.path.join(vdir, "c/0"))
+        back, _, _ = Z.read_zarr_dataset(spark, p)
+        assert {(r.row, r.col): r.value for r in back.collect()} == want
+
+
+def test_zarr_dataset_t_outside_times_fails_loudly(spark, tmp_path):
+    """A cell whose t lies outside ``times`` (or is not 0 when ``times``
+    is None) would land outside the declared shape and read back as
+    nothing: the encode fails loudly instead, as write_netcdf4 does."""
+    from pyramids_spark import zarr as Z
+
+    cells = grid_df(spark, _G8).select(
+        F.lit("v").alias("variable"), F.lit(2).cast("long").alias("t"),
+        "row", "col", "value")
+    for times in ([0.0], None):
+        with pytest.raises(Exception, match="outside the declared shape"):
+            Z.write_zarr_dataset(cells, _G8, str(tmp_path / "bad"),
+                                 times=times, chunks=(4, 4))
+    assert not os.path.exists(str(tmp_path / "bad") + "._chunks")
+
+
 def test_zarr_write_job_audit(spark, tmp_path, build_jobs):
     """write_zarr runs the jobs of one encode, which also observes the
     band count (unsharded and sharded alike); write_zarr_dataset with two
-    variables runs its variable listing and one write_zarr per
-    variable."""
+    variables runs one encode for both, which observes the variable set
+    when ``variables`` is None."""
     from pyramids_spark import zarr as Z
 
     cells = _null_band_cells(spark)
@@ -681,4 +740,7 @@ def test_zarr_write_job_audit(spark, tmp_path, build_jobs):
         F.lit(0).cast("long").alias("t"), "row", "col", "value")
     assert build_jobs(lambda: Z.write_zarr_dataset(
         ds, _G8, str(tmp_path / "ds"), times=[0.0], chunks=(4, 4),
-        zarr_format=3), "zarr-dataset") == 6
+        zarr_format=3), "zarr-dataset") == 2
+    assert build_jobs(lambda: Z.write_zarr_dataset(
+        ds, _G8, str(tmp_path / "ds"), times=[0.0], chunks=(4, 4),
+        zarr_format=3, variables=["a", "b"]), "zarr-dataset-vars") == 2
